@@ -8,6 +8,7 @@ import graft.dedup.Dedup
 import graft.multimodal.Multimodal
 import graft.sim.Similarity
 import graft.sketch.Sketches
+import graft.store.IndexCore
 import graft.text.TextOps
 
 /**
@@ -573,10 +574,10 @@ object PipelineQueries {
             .parquet(srcDir.toString),
           idx, ckpt, threshold = JaccardThreshold).awaitTermination()
       drain(s"$srcDir/ckpt")
-      val vAfter = Dedup.indexVersion(s, idx)
+      val vAfter = IndexCore.version(s, idx)
       drain(s"$srcDir/ckpt_redelivery") // fresh checkpoint = full replay
       require(
-        Dedup.indexVersion(s, idx) == vAfter,
+        IndexCore.version(s, idx) == vAfter,
         "stream redelivery must be a no-op — every batch key is committed")
       // J >= 0.9 compared band — the banded-recall envelope
       // discipline (see dedup_index_upsert / BASELINE.md round 14)
@@ -609,7 +610,7 @@ object PipelineQueries {
           "doc_id", "text", JaccardThreshold,
           deliveryKey = Some("c0"))).isFailure,
         "delivery keys must survive the fold — redelivery still rejected")
-      Dedup.indexVacuum(s, idx)
+      IndexCore.vacuum(s, idx)
       val batch = d.where(pmod(col("doc_id"), lit(60)) === 3)
         .select((col("doc_id") + 100000L).as("doc_id"),
           concat(col("text"), lit(" zz0 zz1 zz2")).as("text"))
@@ -684,7 +685,7 @@ object PipelineQueries {
       require(scala.util.Try(Dedup.indexForgetDocs(
           s, idx, deleted, key = Some("rtbf"))).isFailure,
         "the takedown key must survive compaction")
-      Dedup.indexVacuum(s, idx)
+      IndexCore.vacuum(s, idx)
       val post = Dedup.indexPairs(s, idx)
       require(post.select("a_id", "b_id").collect()
           .map(_.toString).sorted.toSeq == pre,
@@ -727,10 +728,10 @@ object PipelineQueries {
         concat(col("text"), lit(" uu0 uu1 uu2")).as("text"))
       Dedup.indexUpsertDocs(s, idx, upd, "doc_id", "text",
         JaccardThreshold, key = Some("u0"), persistPairs = true): Unit
-      val v = Dedup.indexVersion(s, idx)
+      val v = IndexCore.version(s, idx)
       Dedup.indexUpsertDocs(s, idx, upd, "doc_id", "text",
         JaccardThreshold, key = Some("u0"), persistPairs = true): Unit
-      require(Dedup.indexVersion(s, idx) == v,
+      require(IndexCore.version(s, idx) == v,
         "redelivered upsert must be a version-preserving no-op")
       // the fold-after-upsert invariants (tombstone retires, pair
       // readback preserved) are spec-pinned (IndexUpsertSpec) — the
@@ -1171,7 +1172,7 @@ object PipelineQueries {
           sub.where(pmod(col("vec_id"), lit(24)) === 10),
           key = Some("c1"))).isFailure,
         "delivery keys must survive the fold — redelivery still rejected")
-      Similarity.ivfIndexVacuum(s, idx)
+      IndexCore.vacuum(s, idx)
       Similarity.ivfIndexQuery(s, idx, sub.where(col("vec_id") < 40),
           k = 10, nProbe = 3)
         .select(col("q_id"), col("n_id"), r6(col("cos")).as("cos"), col("rank"))
@@ -1217,7 +1218,7 @@ object PipelineQueries {
       require(scala.util.Try(Similarity.ivfIndexForget(
           s, idx, deleted, key = Some("take0"))).isFailure,
         "the takedown key must survive compaction")
-      Similarity.ivfIndexVacuum(s, idx)
+      IndexCore.vacuum(s, idx)
       val post = probe()
       require(post.collect().map(_.toString).sorted.toSeq == pre,
         "compaction must not change post-delete probe answers")
@@ -1332,7 +1333,7 @@ object PipelineQueries {
           sub.where(pmod(col("vec_id"), lit(48)) === 17),
           key = Some("rb1"))).isFailure,
         "delivery keys must survive the rebuild — redelivery still rejected")
-      Similarity.ivfIndexVacuum(s, idx)
+      IndexCore.vacuum(s, idx)
       Similarity.ivfIndexQuery(s, idx, sub.where(col("vec_id") < 20),
           k = 10, nProbe = 3)
         .select(col("q_id"), col("n_id"), r6(col("cos")).as("cos"), col("rank"))
@@ -1396,12 +1397,12 @@ object PipelineQueries {
         val drifted = recall("drifted")
         require(Similarity.ivfIndexRebuild(s, idx, step, iters = 2),
           "single-writer re-train must publish")
-        val v = Similarity.ivfVersion(s, idx)
+        val v = IndexCore.version(s, idx)
         Similarity.ivfIndexUpsert(s, idx,
           base.where(pmod(col("vec_id"), lit(8)) === 1)
             .select(col("vec_id"), rot(16).as("v")),
           key = Some("u1"))
-        require(Similarity.ivfVersion(s, idx) == v,
+        require(IndexCore.version(s, idx) == v,
           "redelivered upsert wave must stay a no-op after the re-train")
         val retrained = recall("retrained")
         (drifted ++ retrained)
@@ -2067,10 +2068,10 @@ object PipelineQueries {
             .as("text"))
       graft.text.TextIndex.upsertDocs(s, idx, edited, "doc_id", "text",
         key = Some("e0"), legs = legs)
-      val v = graft.text.TextIndex.version(s, idx)
+      val v = IndexCore.version(s, idx)
       graft.text.TextIndex.upsertDocs(s, idx, edited, "doc_id", "text",
         key = Some("e0"), legs = legs)
-      require(graft.text.TextIndex.version(s, idx) == v,
+      require(IndexCore.version(s, idx) == v,
         "redelivered rule edit must be a version-preserving no-op")
       // DELETE the s=2 family: its alerts stop
       val deleted = rules.where(pmod(col("doc_id"), lit(16)) === 2)
@@ -2280,7 +2281,7 @@ object PipelineQueries {
       graft.text.TextIndex.compact(s, idx)
       require(redeliver().isFailure,
         "delivery keys must survive compaction — redelivery still rejected")
-      graft.text.TextIndex.vacuum(s, idx)
+      IndexCore.vacuum(s, idx)
       val nd = d.count()
       graft.text.TextIndex
         .searchBm25(s, idx, Seq("merge", "window", "scan"), 20,
@@ -2314,7 +2315,7 @@ object PipelineQueries {
         graft.text.TextIndex.ingestShard(s, idx,
           d.where(pmod(col("doc_id"), lit(20)) === i * 10 + 3),
           "doc_id", "text", key = Some(s"f$i"), legs = legs)
-      val vPre = graft.text.TextIndex.version(s, idx)
+      val vPre = IndexCore.version(s, idx)
       val deleted = d.where(col("doc_id") % 40 === 3)
         .select("doc_id").collect().map(_.getLong(0)).toSeq
       graft.text.TextIndex.forgetDocs(s, idx, deleted, key = Some("rtbf0"))
@@ -2327,7 +2328,7 @@ object PipelineQueries {
       // time travel: the pre-delete branch still serves a deleted doc
       val branch = java.nio.file.Files
         .createTempDirectory("graft_text_forget_br").toString
-      graft.text.TextIndex.cloneAsOf(s, idx, branch, vPre)
+      IndexCore.cloneAsOf(s, idx, branch, vPre)
       require(graft.text.TextIndex
           .docsFor(s, branch, Seq(deleted.head)).count() == 1L,
         "pre-delete clone must still serve the deleted doc")
@@ -2341,7 +2342,7 @@ object PipelineQueries {
       require(scala.util.Try(graft.text.TextIndex.forgetDocs(
           s, idx, deleted, key = Some("rtbf0"))).isFailure,
         "delete keys must survive compaction")
-      graft.text.TextIndex.vacuum(s, idx)
+      IndexCore.vacuum(s, idx)
       val post = graft.text.TextIndex
         .searchBm25(s, idx, Seq("merge", "window", "scan"), 20)
       require(post.collect().toSeq == pre,
@@ -2372,10 +2373,10 @@ object PipelineQueries {
           concat(lit("upd "), col("text")).as("text"))
       graft.text.TextIndex.upsertDocs(s, idx, upd, "doc_id", "text",
         key = Some("u0"))
-      val v = graft.text.TextIndex.version(s, idx)
+      val v = IndexCore.version(s, idx)
       graft.text.TextIndex.upsertDocs(s, idx, upd, "doc_id", "text",
         key = Some("u0"))
-      require(graft.text.TextIndex.version(s, idx) == v,
+      require(IndexCore.version(s, idx) == v,
         "redelivered upsert must be a version-preserving no-op")
       graft.text.TextIndex.compact(s, idx)
       graft.text.TextIndex
@@ -2465,7 +2466,7 @@ object PipelineQueries {
       require(graft.text.TextIndex.forgetWhere(s, idx,
           col("text").contains("window"), key = Some("gdpr1")) == 0L,
         "a second pass must resolve nothing (gone-filtered store)")
-      require(graft.text.TextIndex.hasDelivery(s, idx, "gdpr1"),
+      require(IndexCore.hasDelivery(s, idx, "gdpr1"),
         "an empty-match takedown must still ledger its key")
       graft.text.TextIndex
         .searchBm25(s, idx, Seq("merge", "scan", "table"), 20)
@@ -2528,14 +2529,14 @@ object PipelineQueries {
           .collect().forall(_.getLong(1) != victim),
         "an erased doc's vector still probes as a neighbor")
       // full redelivery: 0 docs, no version moves anywhere
-      val vs = (graft.text.TextIndex.version(s, textIdx),
-        Dedup.indexVersion(s, dedupIdx), Similarity.ivfVersion(s, annIdx))
+      val vs = (IndexCore.version(s, textIdx),
+        IndexCore.version(s, dedupIdx), IndexCore.version(s, annIdx))
       require(graft.streaming.StreamForget.forgetWhereAll(s,
           col("text").contains("scan"), "gdpr", textIdx,
           dedupIdx = Some(dedupIdx), annIdx = Some(annIdx)) == 0L &&
-        vs == (graft.text.TextIndex.version(s, textIdx),
-          Dedup.indexVersion(s, dedupIdx),
-          Similarity.ivfVersion(s, annIdx)),
+        vs == (IndexCore.version(s, textIdx),
+          IndexCore.version(s, dedupIdx),
+          IndexCore.version(s, annIdx)),
         "redelivered cross-index takedown must be a no-op everywhere")
       graft.text.TextIndex
         .searchBm25(s, textIdx, Seq("merge", "window", "table"), 20)
@@ -2845,10 +2846,10 @@ object PipelineQueries {
       require(retired == Seq(1, 1, 1, 1),
         s"audit: retirement did not retire exactly the takedown " +
           s"tombstones: $retired")
-      graft.text.TextIndex.vacuum(s, textIdx)
-      Dedup.indexVacuum(s, dedupIdx)
-      Similarity.ivfIndexVacuum(s, annIdx)
-      graft.text.TextIndex.vacuum(s, rulesIdx)
+      IndexCore.vacuum(s, textIdx)
+      IndexCore.vacuum(s, dedupIdx)
+      IndexCore.vacuum(s, annIdx)
+      IndexCore.vacuum(s, rulesIdx)
       // bytes-gone at file grain: only live commit dirs remain, and no
       // tombstone survives retirement
       val conf = s.sessionState.newHadoopConf()
@@ -3059,10 +3060,10 @@ object PipelineQueries {
             .parquet(srcDir.toString),
           idx, ckpt, maxShards = 2, fanIn = 2).awaitTermination()
       drain(s"$srcDir/ckpt")
-      val vAfter = graft.text.TextIndex.version(s, idx)
+      val vAfter = IndexCore.version(s, idx)
       drain(s"$srcDir/ckpt_redelivery") // fresh checkpoint = full replay
       require(
-        graft.text.TextIndex.version(s, idx) == vAfter,
+        IndexCore.version(s, idx) == vAfter,
         "stream redelivery must be a no-op — every batch key is committed")
       graft.text.TextIndex
         .searchBm25(s, idx, Seq("merge", "window", "scan"), 20)
@@ -3344,10 +3345,10 @@ object PipelineQueries {
             .parquet(srcDir.toString),
           idx, ckpt, centroidStep = step).awaitTermination()
       drain(s"$srcDir/ckpt")
-      val vAfter = Similarity.ivfVersion(s, idx)
+      val vAfter = IndexCore.version(s, idx)
       drain(s"$srcDir/ckpt_redelivery") // fresh checkpoint = full replay
       require(
-        Similarity.ivfVersion(s, idx) == vAfter,
+        IndexCore.version(s, idx) == vAfter,
         "stream redelivery must be a no-op — every batch key is committed")
       Similarity.ivfIndexQuery(s, idx, e.where(col("vec_id") < 10),
           k = 10, nProbe = 3)

@@ -3,6 +3,10 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.SparkSession
+
+import graft.store.{CommitLog, FsckScope, IndexCore, IndexLeg}
+import graft.store.IndexCore.isViol
 import graft.text.TextOps
 
 /**
@@ -256,155 +260,31 @@ object Dedup {
     }
   }
 
-  /**
-   * PERSISTED-LSH-INDEX incremental dedup step — the posture where the
-   * corpus is too big to ever re-read: the index stores, per ingested
-   * doc, its MinHash signature AND its df-capped shingle postings
-   * (everything candidate generation and exact verification need), so
-   * checking a new shard touches corpus TEXT never and corpus state
-   * only ∝ collisions. Per arriving shard: shingle + sign the SHARD
-   * (df-cap within the shard — the stored index is immutable, so a
-   * global df is undefinable by design), join its band buckets against
-   * the stored index's (cross collisions only; the corpus is never
-   * self-joined), estimate-prune on signatures, exact-verify on
-   * postings, then append the shard's own signatures and postings —
-   * the index maintains itself. Returns (a_id, b_id, jaccard) with
-   * `a_id` from the pre-existing index and `b_id` from the shard.
-   *
-   * Scale shape: per-shard cost is shard-linear plus collision-
-   * proportional joins on 8-byte keys; per-doc set SIZES are stored
-   * beside the signatures so verification never re-aggregates the
-   * index, and its postings scan prunes to candidate docs via a
-   * broadcast semi-join first. Index writes publish through the SAME
-   * commit protocol as the store tables (graft.store.CommitLog): both
-   * index tables stage under one immutable commit dir and one
-   * version-file create makes them visible together. The verdict
-   * is materialized via localCheckpoint BEFORE the append so the
-   * returned frame can never observe its own shard in the index.
-   *
-   * EXACTLY-ONCE: pass `deliveryKey` (e.g. the upstream batch id) and a
-   * redelivered/retried shard FAILS LOUDLY instead of re-appending its
-   * signatures and postings (which would permanently duplicate index
-   * state and double-report pairs on every later shard). Keys ride the
-   * commit log as `#txn:<key>` lines, mirroring the manifest store's
-   * ingestBatchAtomic; the duplicate check runs both up front (cheap,
-   * before any scan) and inside the commit closure (closes the race
-   * with a concurrent redelivery). Shards must ingest SEQUENTIALLY:
-   * two concurrent shards both read the old live set and never
-   * cross-check each other — the commit protocol serializes the
-   * appends but not the missed a↔b pair between them.
+  /** The dedup index's legs, declared once (this module writes all of
+   *  them; all plain parquet): per-doc signatures with stored set
+   *  sizes, df-capped shingle postings, the optional per-shard pair
+   *  report, and the tombstones' gone ids.
    */
-  /** True iff a shard with this delivery key is already committed —
-   *  the cheap up-front probe a consumer (the streaming maintainer)
-   *  makes before paying the shingle+sign cost of
-   *  [[indexCheckAndIngest]] (a redelivered shard would lose to its
-   *  own `#txn:` key anyway; the in-commit check still guards the
-   *  concurrent race).
-   */
-  def indexHasDelivery(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      key: String): Boolean =
-    new graft.store.CommitLog(s"$indexDir/_manifests")
-      .latest(spark)._2.contains("#txn:" + key)
-
-  /** Latest published version (0 = never written) — the cheap "did
-   *  anything commit?" probe a redelivery test pins on.
-   */
-  def indexVersion(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String): Long =
-    new graft.store.CommitLog(s"$indexDir/_manifests").latest(spark)._1
-
-  /** Live tombstone commits (`t-` prefix) — each one
-   *  [[indexForgetDocs]] call's gone doc-id set. */
-  private def indexTombDirs(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Seq[String] =
-    new graft.store.CommitLog(s"$indexDir/_manifests")
-      .latest(spark)._2.filter(_.startsWith("t-"))
-
-  /** The live tombstoned doc ids as one (doc_id) frame — None when no
-   *  tombstones are live, so the no-deletions case adds zero plan
-   *  nodes to the check/pair read paths. (Global union — observability
-   *  only; reads scope per commit via [[readIndexLeg]].)
-   */
-  private def indexGone(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    val ts = indexTombDirs(spark, indexDir)
-    Option.when(ts.nonEmpty)(
-      readLeg(spark, "gone", ts.map(t => s"$indexDir/data/$t/gone"))
-        .select("doc_id"))
-  }
-
-  /** Union one doc-grain index leg across live shard commits with
-   *  ORDER-SCOPED tombstones applied: a tombstone covers exactly the
-   *  commits that PRECEDE it in the commit log's live list, so a doc
-   *  re-ingested after its takedown (a re-crawl of the same id — the
-   *  StreamForget + crawl-pipeline composition) serves normally
-   *  instead of being silently killed by a global gone set (the same
-   *  scoping as the text index's readDocGrain). Commits group by
-   *  their subsequent-tombstone set — ≤ #tombstones+1 broadcast
-   *  anti-joins, zero plan nodes when none are live. `idCols` names
-   *  the column(s) carrying doc ids (pair reports carry two). Returns
-   *  None when no live commit holds the leg.
-   */
-  /** Pinned ON-DISK schema per index leg (this module writes all of
-   *  them) — passed to every leg read so Spark skips the per-read
-   *  footer-inference job (the TextIndex.legSchemas rationale).
-   */
-  private val legSchemas: Map[String, org.apache.spark.sql.types.StructType] = {
+  private val core = {
     import org.apache.spark.sql.types._
-    Map(
-      "sig" -> StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("mh", ArrayType(LongType)),
-        StructField("n", LongType))),
-      "sh" -> StructType(Seq(
-        StructField("doc_id", LongType), StructField("sh", LongType),
-        StructField("h2", LongType))),
-      "pairs" -> StructType(Seq(
-        StructField("a_id", LongType), StructField("b_id", LongType),
-        StructField("jaccard", DoubleType))),
-      "gone" -> StructType(Seq(StructField("doc_id", LongType))))
+    new IndexCore("doc_id", Map(
+      "sig" -> IndexLeg(None, "doc_id" -> LongType,
+        "mh" -> ArrayType(LongType), "n" -> LongType),
+      "sh" -> IndexLeg(None, "doc_id" -> LongType, "sh" -> LongType,
+        "h2" -> LongType),
+      "pairs" -> IndexLeg(None, "a_id" -> LongType, "b_id" -> LongType,
+        "jaccard" -> DoubleType),
+      "gone" -> IndexLeg(None, "doc_id" -> LongType)))
   }
 
-  private def readLeg(
-      spark: org.apache.spark.sql.SparkSession, leg: String,
-      paths: Seq[String]): DataFrame =
-    spark.read.schema(legSchemas(leg)).parquet(paths: _*)
+  /** The id column(s) tombstones apply to — a pair report names two. */
+  private def idCols(leg: String): Seq[String] =
+    if (leg == "pairs") Seq("a_id", "b_id") else Seq("doc_id")
 
-  private def readIndexLeg(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      sub: String, idCols: String*): Option[DataFrame] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val ordered = new graft.store.CommitLog(s"$indexDir/_manifests")
-      .latest(spark)._2
-      .filter(e => e.startsWith("c-") || e.startsWith("t-"))
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).exists(hp)
-    }
-    val withScope = ordered.zipWithIndex
-      .filter(_._1.startsWith("c-"))
-      .map { case (c, i) =>
-        (s"$indexDir/data/$c/$sub",
-          ordered.drop(i + 1).filter(_.startsWith("t-")))
-      }
-      .filter(p => exists(p._1))
-    if (withScope.isEmpty) None
-    else Some(withScope.groupBy(_._2).map { case (tombs, roots) =>
-      val base = readLeg(spark, sub, roots.map(_._1))
-      if (tombs.isEmpty) base
-      else {
-        val gone = tombs
-          .map(t => readLeg(spark, "gone", Seq(s"$indexDir/data/$t/gone")))
-          .reduce(_.unionByName(_)).select("doc_id")
-        idCols.foldLeft(base)((d, c) =>
-          d.join(broadcast(gone.select(col("doc_id").as(c))), Seq(c),
-            "left_anti"))
-      }
-    }.reduce(_.unionByName(_)))
-  }
+  /** A leg's order-scoped read; None when no live commit holds it. */
+  private def scoped(
+      spark: SparkSession, indexDir: String, leg: String): Option[DataFrame] =
+    core.scoped(spark, indexDir, leg, idCols(leg), identity)
 
   /** DOCUMENT DELETION for the persisted LSH dedup index (takedown
    *  without rebuild): ONE tombstone commit `t-<uuid>` holding the
@@ -414,9 +294,10 @@ object Dedup {
    *  pair reports stop serving pairs that mention a gone doc on
    *  either side. A FULL [[indexCompact]] physically drops the gone
    *  docs' rows from sig/sh/pairs and retires the tombstone;
-   *  [[indexVacuum]] erases the superseded bytes — the store's
-   *  forgetDataset lifecycle. A pre-delete [[indexCloneAsOf]] branch
-   *  still serves the doc until vacuum.
+   *  [[graft.store.IndexCore.vacuum]] erases the superseded bytes —
+   *  the store's forgetDataset lifecycle. A pre-delete
+   *  [[graft.store.IndexCore.cloneAsOf]] branch still serves the doc
+   *  until vacuum.
    *
    *  Unlike the text index there are NO corpus-level aggregates to
    *  delta (the index stores only doc-grain rows), so the tombstone
@@ -429,45 +310,23 @@ object Dedup {
    *  the index.
    */
   def indexForgetDocs(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
+      spark: SparkSession, indexDir: String,
       ids: Seq[Long], key: Option[String] = None): Unit = {
     require(ids.nonEmpty && ids.length <= 1000000,
       s"indexForgetDocs takes 1..1000000 ids per call (got ${ids.length})")
-    val clog = new graft.store.CommitLog(s"$indexDir/_manifests")
-    val txn = key.map { k =>
-      require(k.nonEmpty && !k.contains('\n'), s"bad delivery key: $k")
-      "#txn:" + k
-    }
-    txn.foreach { t =>
-      require(!clog.latest(spark)._2.contains(t),
-        s"delete with delivery key ${key.get} was already applied to " +
-          s"$indexDir — redelivery rejected (deletion is exactly-once)")
-    }
+    val txn = IndexCore.freshTxn(spark, indexDir, key, "delete")
     import spark.implicits._
     // keyed takedowns embed the key digest in the tombstone dir name
-    // (the keyed-commit discipline) so the applied gone set stays
-    // addressable by key — [[indexGoneForDelivery]] is what makes a
-    // multi-index takedown's replay re-read the EXACT id set the
-    // first attempt applied instead of re-deriving a drifted one
-    val name = key match {
-      case Some(dk) =>
-        s"t-k${keyDigest(dk)}-${java.util.UUID.randomUUID().toString.take(8)}"
-      case None => s"t-${java.util.UUID.randomUUID().toString.take(12)}"
-    }
+    // so the applied gone set stays addressable by key —
+    // [[indexGoneForDelivery]] is what makes a multi-index takedown's
+    // replay re-read the EXACT id set the first attempt applied
+    // instead of re-deriving a drifted one
+    val name = IndexCore.entryName("t", key)
     ids.distinct.toDF("doc_id")
-      .coalesce(1).write.parquet(s"$indexDir/data/$name/gone")
-    val published = clog.commit(spark) { now =>
-      if (txn.exists(now.contains)) None // raced redelivery
-      else Some(now :+ name :++ txn.toSeq)
-    }
-    if (!published) {
-      val p = new org.apache.hadoop.fs.Path(s"$indexDir/data/$name")
-      p.getFileSystem(spark.sessionState.newHadoopConf())
-        .delete(p, true): Unit
-      require(published,
-        s"delete with delivery key ${key.get} raced a concurrent " +
-          s"redelivery into $indexDir — this attempt's staging was dropped")
-    }
+      .coalesce(1).write.parquet(s"${IndexCore.dataDir(indexDir, name)}/gone")
+    IndexCore.publishAppend(spark, indexDir, name, txn.toSeq)(
+      s"delete with delivery key ${key.get} raced a concurrent " +
+        s"redelivery into $indexDir — this attempt's staging was dropped")
   }
 
   /** RAW id-membership probe for re-fetch routing: which of `ids` has
@@ -491,35 +350,29 @@ object Dedup {
    *  tombstone retirement has physically dropped the tombstoned rows
    *  this probe re-reads — the same "batch-grain reads precede
    *  compaction" contract as [[indexPairsForDelivery]], ENFORCEABLE
-   *  with [[indexPin]]: a live pin makes folds and retirement refuse
-   *  loudly instead of trusting this paragraph. Cost: one
-   *  pruned scan of the sig
-   *  legs semi-joined to the broadcast probe ids — the result is
-   *  probe-bounded.
+   *  with [[graft.store.IndexCore.pin]]: a live pin makes folds and
+   *  retirement refuse loudly instead of trusting this paragraph.
+   *  Cost: one pruned scan of the sig legs semi-joined to the
+   *  broadcast probe ids — the result is probe-bounded.
    */
   def indexKnownIds(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
+      spark: SparkSession, indexDir: String,
       ids: DataFrame, idCol: String,
       excludeKeys: Seq[String] = Seq.empty): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val digests = excludeKeys.map(keyDigest)
+    val digests = excludeKeys.map(CommitLog.keyDigest)
     val txns = excludeKeys.map("#txn:" + _).toSet
     def owned(e: String): Boolean =
       txns.contains(e) || digests.exists(d => e.startsWith(s"c-k$d-"))
-    val live = new graft.store.CommitLog(s"$indexDir/_manifests")
-      .latest(spark)._2
+    val live = IndexCore.live(spark, indexDir)
     val cut = live.indexWhere(owned)
     val dirs = (if (cut >= 0) live.take(cut) else live)
       .filter(_.startsWith("c-"))
-      .map(c => s"$indexDir/data/$c/sig")
-      .filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
+      .map(IndexCore.legPath(indexDir, _, "sig"))
+      .filter(IndexCore.exists(spark, _))
     if (dirs.isEmpty)
       ids.select(col(idCol)).limit(0)
     else
-      readLeg(spark, "sig", dirs).select(col("doc_id").as(idCol))
+      core.read(spark, "sig", dirs).select(col("doc_id").as(idCol))
         .join(broadcast(ids.select(col(idCol)).distinct()),
           Seq(idCol), "left_semi")
         .distinct()
@@ -574,20 +427,20 @@ object Dedup {
       // its delete key, so a redelivery would otherwise tombstone the
       // generation the first delivery just founded (the text verb's
       // guard, mirrored)
-      val hasShards = new graft.store.CommitLog(s"$indexDir/_manifests")
-        .latest(spark)._2.exists(_.startsWith("c-"))
-      if (hasShards &&
-          !delKey.exists(indexHasDelivery(spark, indexDir, _)) &&
-          !addKey.exists(indexHasDelivery(spark, indexDir, _)))
+      val hasShards =
+        IndexCore.live(spark, indexDir).exists(_.startsWith("c-"))
+      val delivered = (k: Option[String]) =>
+        k.exists(IndexCore.hasDelivery(spark, indexDir, _))
+      if (hasShards && !delivered(delKey) && !delivered(addKey))
         indexForgetDocs(spark, indexDir, ids, key = delKey)
-      if (!addKey.exists(indexHasDelivery(spark, indexDir, _)))
+      if (!delivered(addKey))
         indexCheckAndIngest(spark, indexDir, snap, idCol, textCol,
           threshold, k, bands, deliveryKey = addKey,
           persistPairs = persistPairs)
       else if (persistPairs)
         // redelivery: the original attempt's report, replay-identical
         indexPairsForDelivery(spark, indexDir, addKey.get)
-      else emptyPairs(spark)
+      else core.empty(spark, "pairs")
     } finally snap.unpersist(): Unit
   }
 
@@ -601,27 +454,12 @@ object Dedup {
    *  reads precede compaction" contract as [[indexPairsForDelivery]].
    */
   def indexGoneForDelivery(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      key: String): DataFrame = {
-    val live = new graft.store.CommitLog(s"$indexDir/_manifests")
-      .latest(spark)._2
-    require(live.contains("#txn:" + key),
-      s"no takedown with delivery key $key in $indexDir")
-    val matches = live.filter(_.startsWith(s"t-k${keyDigest(key)}-"))
-    require(matches.nonEmpty,
-      s"the tombstone of delivery key $key in $indexDir is not " +
-        "addressable by key digest — a retirement or full fold " +
-        "already consumed it (key-grain gone reads must happen " +
-        "before the tombstone retires), or it predates keyed " +
-        "tombstone naming")
-    readLeg(spark, "gone", Seq(s"$indexDir/data/${matches.head}/gone"))
-      .select("doc_id")
-  }
+      spark: SparkSession, indexDir: String, key: String): DataFrame =
+    core.goneForDelivery(spark, indexDir, key)
 
   /** Live tombstoned-doc count — compact-scheduler observability. */
-  def indexTombstoneCount(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String): Long =
-    indexGone(spark, indexDir).map(_.count()).getOrElse(0L)
+  def indexTombstoneCount(spark: SparkSession, indexDir: String): Long =
+    core.tombstoneCount(spark, indexDir)
 
   /** INDEX OBSERVABILITY: one row of folded LSH-index statistics —
    *  (n_shards, n_docs, n_postings, n_pairs) from the index's own
@@ -638,18 +476,14 @@ object Dedup {
    *  [[graft.sim.Similarity.ivfIndexStats]]. Cost: leg-grain
    *  counts — ∝ index, never corpus text.
    */
-  def indexStats(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame = {
-    val live = new graft.store.CommitLog(s"$indexDir/_manifests")
-      .latest(spark)._2
-    val shards = live.filter(_.startsWith("c-"))
+  def indexStats(spark: SparkSession, indexDir: String): DataFrame = {
+    val shards = IndexCore.live(spark, indexDir).filter(_.startsWith("c-"))
     require(shards.nonEmpty, s"no live commits in dedup index $indexDir")
-    val nDocs = readIndexLeg(spark, indexDir, "sig", "doc_id").get
+    val nDocs = scoped(spark, indexDir, "sig").get
       .agg(count(lit(1)).as("n_docs"))
-    val nPost = readIndexLeg(spark, indexDir, "sh", "doc_id").get
+    val nPost = scoped(spark, indexDir, "sh").get
       .agg(count(lit(1)).as("n_postings"))
-    val nPairs = readIndexLeg(spark, indexDir, "pairs", "a_id", "b_id")
+    val nPairs = scoped(spark, indexDir, "pairs")
       .map(_.agg(count(lit(1)).as("n_pairs")))
       .getOrElse(spark.range(1).select(lit(0L).as("n_pairs")))
     spark.range(1)
@@ -662,13 +496,12 @@ object Dedup {
    *  consistency check ([[graft.store.IndexFsck]]) compares this
    *  against the text and ANN memberships.
    */
-  def indexDocIds(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame =
-    readIndexLeg(spark, indexDir, "sig", "doc_id")
-      .getOrElse(throw new IllegalArgumentException(
-        s"requirement failed: no live commits in dedup index $indexDir"))
-      .select("doc_id")
+  def indexDocIds(spark: SparkSession, indexDir: String): DataFrame =
+    liveSig(spark, indexDir).select("doc_id")
+
+  private def liveSig(spark: SparkSession, indexDir: String): DataFrame =
+    scoped(spark, indexDir, "sig").getOrElse(throw new IllegalArgumentException(
+      s"requirement failed: no live commits in dedup index $indexDir"))
 
   /** DEEP INTEGRITY CHECK (fsck) — recompute the dedup index's
    *  derived invariants from its own tombstone-scoped readbacks and
@@ -691,21 +524,13 @@ object Dedup {
    *  the order-scoped-tombstone design. Cost ∝ index (doc- and
    *  shingle-grain joins), never corpus text.
    */
-  def indexFsck(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame = {
+  def indexFsck(spark: SparkSession, indexDir: String): DataFrame = {
     import spark.implicits._
-    val sig = readIndexLeg(spark, indexDir, "sig", "doc_id")
-      .getOrElse(throw new IllegalArgumentException(
-        s"requirement failed: no live commits in dedup index $indexDir"))
+    val sig = liveSig(spark, indexDir)
       .select(col("doc_id"), col("n")).persist()
     try {
       val nDocs = sig.select("doc_id").distinct().count()
-      // coalesce: sum over zero rows is null — a degenerate universe
-      // must report (0, 0), not NPE
-      val isViol = (c: org.apache.spark.sql.Column) =>
-        coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
-      val shCounts = readIndexLeg(spark, indexDir, "sh", "doc_id")
+      val shCounts = scoped(spark, indexDir, "sh")
         .map(_.groupBy("doc_id").agg(count(lit(1)).as("n2")))
       val checks: Seq[() => Seq[(String, Long, Long)]] = Seq(
         () => {
@@ -744,16 +569,6 @@ object Dedup {
     } finally sig.unpersist(): Unit
   }
 
-  /** Publish/advance the dedup index's fsck verified watermark (see
-   *  [[graft.store.CommitLog.FsckPrefix]]); pair with
-   *  [[indexVersion]] read BEFORE the battery.
-   */
-  def indexPublishFsckWatermark(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      v: Long): Unit =
-    new graft.store.CommitLog(s"$indexDir/_manifests")
-      .publishFsckWatermark(spark, v)
-
   /** INCREMENTAL fsck — commit-local halves of [[indexFsck]]'s
    *  invariants over only the entries that appeared after the
    *  verified watermark (cost ∝ fresh commits, never ∝ index):
@@ -766,100 +581,43 @@ object Dedup {
    *  incremental premise fails — run [[indexFsck]] and republish.
    */
   def indexFsckIncremental(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[graft.store.FsckScope] = {
-    import spark.implicits._
-    new graft.store.CommitLog(s"$indexDir/_manifests")
-      .fsckFreshEntries(spark).map { case (vNow, fresh) =>
-        val conf = spark.sessionState.newHadoopConf()
-        def exists(p: String): Boolean = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(conf).exists(hp)
+      spark: SparkSession, indexDir: String): Option[FsckScope] =
+    core.fsckIncremental(spark, indexDir) { f =>
+      val sig = f.tagged(f.commits, "sig")
+        .map(_.select(col("cmt"), col("doc_id"), col("n")).persist())
+      try {
+        val (uniqRow, parityRow, recountRow) = sig match {
+          case None => (("sig_unique", 0L, 0L), ("sig_sh_parity", 0L, 0L),
+            ("sig_n_recount", 0L, 0L))
+          case Some(sg) =>
+            val u = sg.groupBy("cmt", "doc_id").agg(count(lit(1)).as("m"))
+              .agg(isViol(col("m") > 1).as("viol"),
+                count(lit(1)).as("aud")).head()
+            val shCnt = f.tagged(f.commits, "sh").get
+              .groupBy("cmt", "doc_id").agg(count(lit(1)).as("n2"))
+            val r = sg.join(shCnt, Seq("cmt", "doc_id"), "full_outer")
+              .agg(isViol(col("n").isNull || col("n2").isNull)
+                  .as("parity"),
+                isViol(col("n").isNotNull && col("n2").isNotNull &&
+                  col("n") =!= col("n2")).as("recount"),
+                count(lit(1)).as("aud")).head()
+            (("sig_unique", u.getLong(0), u.getLong(1)),
+              ("sig_sh_parity", r.getLong(0), r.getLong(2)),
+              ("sig_n_recount", r.getLong(1), r.getLong(2)))
         }
-        def legUnion(es: Seq[String], sub: String): Option[DataFrame] = {
-          val dfs = es.map(e => (e, s"$indexDir/data/$e/$sub"))
-            .filter(p => exists(p._2))
-            .map { case (e, p) =>
-              readLeg(spark, sub, Seq(p)).withColumn("cmt", lit(e)) }
-          Option.when(dfs.nonEmpty)(dfs.reduce(_.unionByName(_)))
+        val pairsRow = f.tagged(f.commits, "pairs") match {
+          case None => ("pairs_b_membership", 0L, 0L)
+          case Some(pr) =>
+            val b = pr.select(col("cmt"), col("b_id").as("doc_id"))
+            val viol = b.join(sig.get.select("cmt", "doc_id"),
+                Seq("cmt", "doc_id"), "left_anti").count()
+            ("pairs_b_membership", viol, pr.count())
         }
-        val commits = fresh.filter(_.startsWith("c-"))
-        val tombs = fresh.filter(_.startsWith("t-"))
-        val isViol = (c: org.apache.spark.sql.Column) =>
-          coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
-        val sig = legUnion(commits, "sig")
-          .map(_.select(col("cmt"), col("doc_id"), col("n")).persist())
-        try {
-          val (uniqRow, parityRow, recountRow) = sig match {
-            case None => (("sig_unique", 0L, 0L), ("sig_sh_parity", 0L, 0L),
-              ("sig_n_recount", 0L, 0L))
-            case Some(sg) =>
-              val u = sg.groupBy("cmt", "doc_id").agg(count(lit(1)).as("m"))
-                .agg(isViol(col("m") > 1).as("viol"),
-                  count(lit(1)).as("aud")).head()
-              val shCnt = legUnion(commits, "sh").get
-                .groupBy("cmt", "doc_id").agg(count(lit(1)).as("n2"))
-              val r = sg.join(shCnt, Seq("cmt", "doc_id"), "full_outer")
-                .agg(isViol(col("n").isNull || col("n2").isNull)
-                    .as("parity"),
-                  isViol(col("n").isNotNull && col("n2").isNotNull &&
-                    col("n") =!= col("n2")).as("recount"),
-                  count(lit(1)).as("aud")).head()
-              (("sig_unique", u.getLong(0), u.getLong(1)),
-                ("sig_sh_parity", r.getLong(0), r.getLong(2)),
-                ("sig_n_recount", r.getLong(1), r.getLong(2)))
-          }
-          val pairsRow = legUnion(commits, "pairs") match {
-            case None => ("pairs_b_membership", 0L, 0L)
-            case Some(pr) =>
-              val b = pr.select(col("cmt"), col("b_id").as("doc_id"))
-              val viol = b.join(sig.get.select("cmt", "doc_id"),
-                  Seq("cmt", "doc_id"), "left_anti").count()
-              ("pairs_b_membership", viol, pr.count())
-          }
-          val goneDf = legUnion(tombs, "gone")
-          val tombRow = goneDf match {
-            case None => ("tomb_wellformed", 0L, 0L)
-            case Some(g) =>
-              val r = g.groupBy("cmt", "doc_id").agg(count(lit(1)).as("m"))
-                .agg(isViol(col("m") > 1).as("viol"),
-                  count(lit(1)).as("aud")).head()
-              ("tomb_wellformed", r.getLong(0), r.getLong(1))
-          }
-          val emptyIds = spark.emptyDataset[Long].toDF("doc_id")
-          graft.store.FsckScope(
-            vNow,
-            Seq(uniqRow, parityRow, recountRow, pairsRow, tombRow),
-            sig.map(_.select("doc_id").distinct().localCheckpoint(true))
-              .getOrElse(emptyIds),
-            goneDf.map(_.select("doc_id").distinct().localCheckpoint(true))
-              .getOrElse(emptyIds))
-        } finally sig.foreach(_.unpersist(): Unit)
-      }
-  }
-
-  /** Stable digest of a delivery key, embedded in a keyed shard's
-   *  commit-dir name (`c-k<digest>-<rand>`) so the shard's own pair
-   *  report stays ADDRESSABLE BY KEY ([[indexPairsForDelivery]]). The
-   *  random suffix keeps concurrent redelivery attempts staging into
-   *  distinct dirs — only the publish winner's dir goes live, so the
-   *  loser's cleanup can never touch committed data.
-   */
-  private def keyDigest(key: String): String =
-    graft.store.CommitLog.keyDigest(key)
-
-  /** The empty (a_id, b_id, jaccard) pair report. */
-  private def emptyPairs(
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("a_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("b_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("jaccard",
-          org.apache.spark.sql.types.DoubleType))))
+        (Seq(uniqRow, parityRow, recountRow, pairsRow, f.tombRow(_ => 0L)),
+          sig.map(_.select("doc_id").distinct().localCheckpoint(true))
+            .getOrElse(IndexCore.emptyIds(spark)))
+      } finally sig.foreach(_.unpersist(): Unit)
+    }
 
   /** ONE keyed shard's persisted pair report — the batch-grain read
    *  the streaming crawl pipeline needs: a batch's report contains
@@ -874,13 +632,11 @@ object Dedup {
    *  `persistPairs = false` reads as the empty report.
    */
   def indexPairsForDelivery(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      key: String): DataFrame = {
-    val live = new graft.store.CommitLog(s"$indexDir/_manifests")
-      .latest(spark)._2
+      spark: SparkSession, indexDir: String, key: String): DataFrame = {
+    val live = IndexCore.live(spark, indexDir)
     require(live.contains("#txn:" + key),
       s"no shard with delivery key $key in $indexDir")
-    val matches = live.filter(_.startsWith(s"c-k${keyDigest(key)}-"))
+    val matches = live.filter(_.startsWith(s"c-k${CommitLog.keyDigest(key)}-"))
     require(matches.nonEmpty,
       s"the commit of delivery key $key in $indexDir is not addressable " +
         "by key digest — either a compaction folded it (batch-grain " +
@@ -890,34 +646,14 @@ object Dedup {
         "addressable here), or the shard was committed by a version of " +
         "this library that predates key-digest commit naming; use " +
         "indexPairs for the cumulative union, which still holds every pair")
-    val conf = spark.sessionState.newHadoopConf()
     // order-scoped tombstones: only the t- entries AFTER the keyed
     // commit hide its pairs (a takedown preceding a re-ingest of the
     // same id must not hide the fresh report)
-    val ordered = live.filter(e =>
-      e.startsWith("c-") || e.startsWith("t-"))
-    val frames = matches.flatMap { d =>
-      val p = s"$indexDir/data/$d/pairs"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (!hp.getFileSystem(conf).exists(hp)) None
-      else {
-        val after = ordered.drop(ordered.indexOf(d) + 1)
-          .filter(_.startsWith("t-"))
-        val base = readLeg(spark, "pairs", Seq(p))
-        Some(
-          if (after.isEmpty) base
-          else {
-            val gone = readLeg(spark, "gone",
-                after.map(t => s"$indexDir/data/$t/gone"))
-              .select("doc_id")
-            Seq("a_id", "b_id").foldLeft(base)((df, c) =>
-              df.join(broadcast(gone.select(col("doc_id").as(c))),
-                Seq(c), "left_anti"))
-          })
-      }
-    }
-    if (frames.isEmpty) emptyPairs(spark)
-    else frames.reduce(_.unionByName(_))
+    val own = matches.map(IndexCore.dataDir(indexDir, _)).toSet
+    core.without(spark, "pairs",
+        IndexCore.scopes(indexDir, live).filter(s => own.contains(s._1)),
+        Seq("a_id", "b_id"), identity)
+      .getOrElse(core.empty(spark, "pairs"))
   }
 
   /** Union of the PERSISTED per-shard pair reports
@@ -944,9 +680,8 @@ object Dedup {
    *  permanently (round-13 ADVICE).
    */
   def indexPairsIfAny(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] =
-    readIndexLeg(spark, indexDir, "pairs", "a_id", "b_id")
+      spark: SparkSession, indexDir: String): Option[DataFrame] =
+    scoped(spark, indexDir, "pairs")
 
   /** True iff any live commit persisted a pair report. */
   def indexHasPairReports(
@@ -954,29 +689,55 @@ object Dedup {
       indexDir: String): Boolean =
     indexPairsIfAny(spark, indexDir).isDefined
 
+  /**
+   * PERSISTED-LSH-INDEX incremental dedup step — the posture where the
+   * corpus is too big to ever re-read: the index stores, per ingested
+   * doc, its MinHash signature AND its df-capped shingle postings
+   * (everything candidate generation and exact verification need), so
+   * checking a new shard touches corpus TEXT never and corpus state
+   * only ∝ collisions. Per arriving shard: shingle + sign the SHARD
+   * (df-cap within the shard — the stored index is immutable, so a
+   * global df is undefinable by design), join its band buckets against
+   * the stored index's (cross collisions only; the corpus is never
+   * self-joined), estimate-prune on signatures, exact-verify on
+   * postings, then append the shard's own signatures and postings —
+   * the index maintains itself. Returns (a_id, b_id, jaccard) with
+   * `a_id` from the pre-existing index and `b_id` from the shard.
+   *
+   * Scale shape: per-shard cost is shard-linear plus collision-
+   * proportional joins on 8-byte keys; per-doc set SIZES are stored
+   * beside the signatures so verification never re-aggregates the
+   * index, and its postings scan prunes to candidate docs via a
+   * broadcast semi-join first. Index writes publish through the
+   * shared index lifecycle (graft.store.IndexCore.publishAppend): the
+   * index tables stage under one immutable commit dir and one
+   * version-file create makes them visible together. The verdict
+   * is materialized via localCheckpoint BEFORE the append so the
+   * returned frame can never observe its own shard in the index.
+   *
+   * EXACTLY-ONCE: pass `deliveryKey` (e.g. the upstream batch id) and a
+   * redelivered/retried shard FAILS LOUDLY instead of re-appending its
+   * signatures and postings (which would permanently duplicate index
+   * state and double-report pairs on every later shard). Keys ride the
+   * commit log as `#txn:<key>` lines, mirroring the manifest store's
+   * ingestBatchAtomic; the duplicate check runs both up front (cheap,
+   * before any scan) and inside the commit closure (closes the race
+   * with a concurrent redelivery). Shards must ingest SEQUENTIALLY:
+   * two concurrent shards both read the old live set and never
+   * cross-check each other — the commit protocol serializes the
+   * appends but not the missed a↔b pair between them.
+   */
   def indexCheckAndIngest(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
+      spark: SparkSession, indexDir: String,
       shard: DataFrame, idCol: String, textCol: String, threshold: Double,
       k: Int = 64, bands: Int = 16,
       deliveryKey: Option[String] = None,
       persistPairs: Boolean = false): DataFrame = {
     import org.apache.spark.sql.graftbridge.GraftColumnBridge.{column => toCol, expression => toExpr}
-    // the index is MANIFEST-GOVERNED (graft.store.CommitLog — the same
-    // protocol as the manifest store): each shard stages its signature
-    // and postings tables under ONE immutable commit dir and publishes
-    // them with one version-file create, so a crash mid-append leaves
-    // an orphan dir, never a torn index (signatures without postings
-    // would silently produce candidates that can't verify)
-    val clog = new graft.store.CommitLog(s"$indexDir/_manifests")
-    val txn = deliveryKey.map { key =>
-      require(!key.contains('\n') && key.nonEmpty, s"bad delivery key: $key")
-      "#txn:" + key
-    }
-    txn.foreach { t =>
-      require(!clog.latest(spark)._2.contains(t),
-        s"shard with delivery key ${deliveryKey.get} was already ingested " +
-          s"into $indexDir — redelivery rejected (the index is exactly-once)")
-    }
+    // signatures and postings stage under ONE commit dir, published
+    // together (signatures without postings would silently produce
+    // candidates that can't verify)
+    val txn = IndexCore.freshTxn(spark, indexDir, deliveryKey, "shard")
     val sh = shingleSet(shard, idCol, textCol)
     // signature AND set size in ONE pass over the shingle set: the
     // stored row is (doc_id, mh, n) — everything banding, estimation,
@@ -990,8 +751,8 @@ object Dedup {
         // tombstoned docs (order-scoped: commits before their
         // tombstone) neither generate candidates nor verify — a
         // deleted doc can't gate or pair; a RE-INGESTED one can
-        readIndexLeg(spark, indexDir, "sig", "doc_id") match {
-          case None => emptyPairs(spark)
+        scoped(spark, indexDir, "sig") match {
+          case None => core.empty(spark, "pairs")
           case Some(isig) =>
           val cand = bandBuckets(isig, k, bands).as("x")
             .join(bandBuckets(sig, k, bands).as("y"),
@@ -1007,7 +768,7 @@ object Dedup {
             // postings semi-join down to candidate a_ids before the
             // intersection join, and set sizes come from the stored
             // sizes table — the index is never re-aggregated per shard
-            val aPost = readIndexLeg(spark, indexDir, "sh", "doc_id").get
+            val aPost = scoped(spark, indexDir, "sh").get
               .join(broadcast(est.select(col("a_id").as("doc_id")).distinct()),
                 Seq("doc_id"), "left_semi")
               .select(col("doc_id").as("a_id"), col("sh"))
@@ -1024,174 +785,50 @@ object Dedup {
           } finally est.unpersist(): Unit
         }
       // verdict is already eagerly checkpointed (or an empty literal
-      // frame) before the shard publishes itself. Both tables stage
-      // under ONE immutable commit dir; the version-file create is the
-      // only visibility point — no torn index on any crash. Keyed
-      // shards embed the key digest in the dir name so their pair
-      // report stays addressable by key (indexPairsForDelivery)
-      val name = deliveryKey match {
-        case Some(dk) =>
-          s"c-k${keyDigest(dk)}-${java.util.UUID.randomUUID().toString.take(8)}"
-        case None => s"c-${java.util.UUID.randomUUID().toString.take(12)}"
-      }
-      sig.write.parquet(s"$indexDir/data/$name/sig")
-      sh.write.parquet(s"$indexDir/data/$name/sh")
+      // frame) before the shard publishes itself. Keyed shards embed
+      // the key digest in the dir name so their pair report stays
+      // addressable by key (indexPairsForDelivery)
+      val name = IndexCore.entryName("c", deliveryKey)
+      val dst = IndexCore.dataDir(indexDir, name)
+      sig.write.parquet(s"$dst/sig")
+      sh.write.parquet(s"$dst/sh")
       if (persistPairs)
         // the pair REPORT rides the shard's own commit: visible iff the
         // shard is, so a replayed shard can neither re-report nor lose
         // it (repartition(1): the empty first-shard verdict is a
         // 0-partition literal frame, which would write no readable file)
-        verdict.repartition(1)
-          .write.parquet(s"$indexDir/data/$name/pairs")
-      val published = clog.commit(spark) { now =>
-        if (txn.exists(now.contains)) None // raced redelivery — abort
-        else Some(now :+ name :++ txn.toSeq)
-      }
-      if (!published) {
-        val p = new org.apache.hadoop.fs.Path(s"$indexDir/data/$name")
-        p.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(p, true): Unit
-        require(published,
-          s"shard with delivery key ${deliveryKey.get} raced a concurrent " +
-            s"redelivery into $indexDir — this attempt's staging was dropped")
-      }
+        verdict.repartition(1).write.parquet(s"$dst/pairs")
+      IndexCore.publishAppend(spark, indexDir, name, txn.toSeq)(
+        s"shard with delivery key ${deliveryKey.get} raced a concurrent " +
+          s"redelivery into $indexDir — this attempt's staging was dropped")
       verdict
     }
   }
 
-  /** SIZE-TIERED shard compaction for the persisted LSH index — the
-   *  same LSM policy as the text index and the rollup store: without
-   *  it every ingested shard adds a commit dir forever and every
-   *  check's sig/sh union grows linearly in shard count (query-
-   *  PLANNING cost ∝ history). All three legs fold by pure
-   *  concatenation — signatures and postings are doc-grain rows from
-   *  disjoint doc spaces, pair reports are append-only facts — so the
-   *  fold is one read+write of the `fanIn` smallest commits, no
-   *  aggregation at all. `#txn:` delivery keys pass through UNTOUCHED
-   *  (exactly-once survives any number of folds) and a concurrent
-   *  writer moving any input aborts the publish (never double-fold).
+  /** SIZE-TIERED shard compaction ([[graft.store.IndexCore.compactTiered]])
+   *  of the persisted LSH index: without it every ingested shard adds
+   *  a commit dir forever and every check's sig/sh union grows
+   *  linearly in shard count (query-PLANNING cost ∝ history). All
+   *  three legs fold by pure concatenation — signatures and postings
+   *  are doc-grain rows from disjoint doc spaces, pair reports are
+   *  append-only facts — so the fold is one read+write of its inputs,
+   *  no aggregation at all.
    */
-  /** REPLAY PIN (mid-replay lease) on the dedup index — the
-   *  mechanism behind the crawl/RAG pipelines' contract: while any
-   *  pin is live, folds and tombstone retirement REFUSE loudly, so
-   *  [[indexKnownIds]]'s log-position membership cut and
-   *  [[indexPairsForDelivery]]'s readback stay replay-stable. Ingest,
-   *  forget, upsert, and reads stay allowed. Ledger entry — survives
-   *  restart; idempotent both ways.
-   */
-  def indexPin(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      name: String): Unit =
-    new graft.store.CommitLog(s"$indexDir/_manifests").pin(spark, name)
-  def indexUnpin(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      name: String): Unit =
-    new graft.store.CommitLog(s"$indexDir/_manifests").unpin(spark, name)
-  def indexPins(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Seq[String] =
-    new graft.store.CommitLog(s"$indexDir/_manifests").pins(spark)
-
-  private def requireUnpinned(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      what: String): Unit =
-    new graft.store.CommitLog(s"$indexDir/_manifests")
-      .requireUnpinned(spark, s"$what on $indexDir")
-
   def indexCompactTiered(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      fanIn: Int = 8): Unit = {
-    requireUnpinned(spark, indexDir, "indexCompactTiered")
-    val clog = new graft.store.CommitLog(s"$indexDir/_manifests")
-    val (_, live) = clog.latest(spark)
-    val all = live.filter(_.startsWith("c-"))
-    val tombs = live.filter(_.startsWith("t-"))
-    // tombstones fold away ONLY in a full fold, where each commit
-    // drops exactly ITS OWN subsequent tombstones' docs (order-scoped
-    // — a doc re-ingested after its takedown survives the fold);
-    // partial folds concatenate pure WITHIN one run of consecutive
-    // shard commits and splice their output at the run's position so
-    // coverage is preserved exactly (the text index's discipline)
-    val full = fanIn >= all.size
-    val applyTombs = full && tombs.nonEmpty
-    if (all.isEmpty || (all.size <= 1 && !applyTombs)) return
-    val conf = spark.sessionState.newHadoopConf()
-    val ordered = live.filter(e =>
-      e.startsWith("c-") || e.startsWith("t-"))
-    val name = s"c-${java.util.UUID.randomUUID().toString.take(12)}"
-    // shuffle-free coalesce back to one shard's worth of files — a fold
-    // that carries the SUM of its inputs' file counts forward would
-    // defeat the small-files half of compaction's purpose
-    val nsp = spark.sessionState.conf.numShufflePartitions
-    val (dirs, scopeOf) =
-      if (full) {
-        val scopes = ordered.zipWithIndex
-          .filter(_._1.startsWith("c-"))
-          .map { case (c, i) =>
-            (c, ordered.drop(i + 1).filter(_.startsWith("t-")))
-          }.toMap
-        (all, scopes)
-      } else {
-        // runs of consecutive shard commits between tombstone
-        // boundaries; fold the fanIn smallest within the largest run
-        val runs = ordered.foldLeft(Seq(Seq.empty[String])) { (acc, e) =>
-          if (e.startsWith("t-")) acc :+ Seq.empty
-          else acc.init :+ (acc.last :+ e)
-        }
-        val run = runs.maxBy(_.size)
-        if (run.size <= 1) return
-        val picked = run.map { d =>
-          val p = new org.apache.hadoop.fs.Path(s"$indexDir/data/$d")
-          val fs = p.getFileSystem(conf)
-          (d, if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L)
-        }.sortBy(_._2).take(math.max(2, fanIn)).map(_._1)
-        (picked, picked.map(_ -> Seq.empty[String]).toMap)
-      }
-    if (dirs.size <= 1 && !applyTombs) return
-    def fold(sub: String, coalesceTo: Int, idCols: String*): Boolean = {
-      val srcs = dirs.map(d => (d, s"$indexDir/data/$d/$sub")).filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p._2)
-        hp.getFileSystem(conf).exists(hp)
-      }
-      if (srcs.isEmpty) false
-      else {
-        srcs.map { case (d, p) =>
-          val base = readLeg(spark, sub, Seq(p))
-          val ts = scopeOf.getOrElse(d, Seq.empty)
-          if (ts.isEmpty) base
-          else {
-            val gone = readLeg(spark, "gone",
-                ts.map(t => s"$indexDir/data/$t/gone"))
-              .select("doc_id")
-            idCols.foldLeft(base)((df, c) =>
-              df.join(broadcast(gone.select(col("doc_id").as(c))),
-                Seq(c), "left_anti"))
-          }
-        }.reduce(_.unionByName(_))
-          .coalesce(coalesceTo)
-          .write.parquet(s"$indexDir/data/$name/$sub")
-        true
-      }
+      spark: SparkSession, indexDir: String, fanIn: Int = 8): Unit =
+    core.compactTiered(spark, indexDir, fanIn, "indexCompactTiered") {
+      (roots, _, dst) =>
+        // shuffle-free coalesce back to one shard's worth of files — a
+        // fold that carries the SUM of its inputs' file counts forward
+        // would defeat the small-files half of compaction's purpose
+        val nsp = spark.sessionState.conf.numShufflePartitions
+        def fold(leg: String, coalesceTo: Int): Unit =
+          core.without(spark, leg, roots, idCols(leg), identity)
+            .foreach(_.coalesce(coalesceTo).write.parquet(s"$dst/$leg"))
+        fold("sig", nsp)
+        fold("sh", nsp)
+        fold("pairs", 1) // pair reports optional per shard
     }
-    fold("sig", nsp, "doc_id"): Unit
-    fold("sh", nsp, "doc_id"): Unit
-    fold("pairs", 1, "a_id", "b_id"): Unit // pair reports optional per shard
-    val replaced = dirs ++ (if (applyTombs) tombs else Seq.empty)
-    // CommitLog.spliceReplace IN BOTH BRANCHES — a tombstone published
-    // concurrently during a full fold sits after the inputs in log
-    // order; appending the folded output after it would empty its
-    // order-scoped coverage and silently resurrect the takedown (the
-    // text index's discipline). None when an input moved under us —
-    // abort, never double-fold.
-    val published = clog.commit(spark) { now =>
-      graft.store.CommitLog.unlessPinned(now)(
-        graft.store.CommitLog.spliceReplace(now, replaced, name))
-    }
-    if (!published) {
-      val p = new org.apache.hadoop.fs.Path(s"$indexDir/data/$name")
-      p.getFileSystem(conf).delete(p, true): Unit
-    }
-  }
 
   /** Full fold: every live shard commit into one (see
    *  [[indexCompactTiered]] for the steady-state tiered policy).
@@ -1200,174 +837,66 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, indexDir: String): Unit =
     indexCompactTiered(spark, indexDir, fanIn = Int.MaxValue)
 
-  /** TOMBSTONE-SCOPED RETIREMENT (the text index's
-   *  [[graft.text.TextIndex.retireOldestTombstone]] discipline on the
-   *  LSH index): retire the OLDEST live tombstone by rewriting IN
-   *  PLACE only the covered commits that actually mention its docs —
-   *  sig/sh rows of the gone ids drop, pair-report rows naming a gone
-   *  id on EITHER side drop (a pair can name a doc stored in another
-   *  commit, so the containment probe checks all three legs). Each
-   *  rewritten commit keeps its log position (and a keyed commit its
-   *  key-digest prefix, so batch-grain pair addressing survives), so
-   *  every other tombstone's coverage is untouched; commits whose
-   *  rows are all gone drop from the live list. Cost ∝ the commits
-   *  the docs live in — never the post-tombstone ingest stream, never
-   *  a whole-index rewrite. One atomic commit publishes rewrites +
-   *  retirement; concurrent c-/t- movement aborts loudly.
+  /** TOMBSTONE-SCOPED RETIREMENT
+   *  ([[graft.store.IndexCore.retireOldestTombstone]]) on the LSH
+   *  index: in each covered commit mentioning the oldest tombstone's
+   *  docs, sig/sh rows of the gone ids drop and pair-report rows
+   *  naming a gone id on EITHER side drop (a pair can name a doc
+   *  stored in another commit, so the containment probe checks all
+   *  three legs). A keyed commit keeps its key-digest prefix, so
+   *  batch-grain pair addressing survives; commits whose rows are all
+   *  gone drop from the live list.
    */
   def indexRetireOldestTombstone(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String): Boolean = {
-    requireUnpinned(spark, indexDir, "indexRetireOldestTombstone")
-    val cl = new graft.store.CommitLog(s"$indexDir/_manifests")
-    val (_, live) = cl.latest(spark)
-    val snap = live.filter(e => e.startsWith("c-") || e.startsWith("t-"))
-    val tIdx = snap.indexWhere(_.startsWith("t-"))
-    if (tIdx < 0) return false
-    val t = snap(tIdx)
-    val covered = snap.take(tIdx).filter(_.startsWith("c-"))
-    val conf = spark.sessionState.newHadoopConf()
-    val gone = broadcast(
-      readLeg(spark, "gone", Seq(s"$indexDir/data/$t/gone")).select("doc_id"))
-    def sub(c: String, s0: String): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(s"$indexDir/data/$c/$s0")
-      Option.when(p.getFileSystem(conf).exists(p))(
-        readLeg(spark, s0, Seq(p.toString)))
-    }
-    // containment probe — ONE job over every covered commit's three
-    // legs (pairs can name a doc stored in another commit, so both
-    // pair sides probe too); a per-commit loop would pay one job's
-    // fixed overhead per commit
-    val touched: Set[String] = {
-      val probes = covered.flatMap { c =>
-        Seq(sub(c, "sig").map(_.select(col("doc_id"))),
-          sub(c, "sh").map(_.select(col("doc_id"))),
-          sub(c, "pairs").map(_.select(col("a_id").as("doc_id"))),
-          sub(c, "pairs").map(_.select(col("b_id").as("doc_id"))))
-          .flatten.map(_.withColumn("cmt", lit(c)))
-      }
-      if (probes.isEmpty) Set.empty
-      else probes.reduce(_.unionByName(_))
-        .join(gone, Seq("doc_id"), "left_semi")
-        .select("cmt").distinct()
-        .collect().map(_.getString(0)).toSet
-    }
-    val rewrites = covered.flatMap { c =>
-      if (!touched.contains(c)) None
-      else {
-        val sig = sub(c, "sig")
-        val sh = sub(c, "sh")
-        val pairs = sub(c, "pairs")
-        val name = (if (c.matches("c-k[0-9a-f]{16}-.*"))
-          c.substring(0, 19) else "c") +
-          s"-${java.util.UUID.randomUUID().toString.take(12)}"
-        val dst = s"$indexDir/data/$name"
+      spark: SparkSession, indexDir: String): Boolean =
+    core.retireOldestTombstone(spark, indexDir, "indexRetireOldestTombstone") {
+      (covered, gone) =>
+        def leg(c: String, l: String) = core.at(spark, indexDir, c, l)
+        // pairs can name a doc stored in another commit, so both pair
+        // sides probe too
+        val touched = core.touched(covered, gone)(c =>
+          Seq(leg(c, "sig").map(_.select(col("doc_id"))),
+            leg(c, "sh").map(_.select(col("doc_id"))),
+            leg(c, "pairs").map(_.select(col("a_id").as("doc_id"))),
+            leg(c, "pairs").map(_.select(col("b_id").as("doc_id")))).flatten)
         val nsp = spark.sessionState.conf.numShufflePartitions
-        var any = false
-        for (df <- sig) {
-          val live2 = df.join(gone, Seq("doc_id"), "left_anti").persist()
-          if (!live2.isEmpty) {
-            live2.coalesce(nsp).write.parquet(s"$dst/sig"); any = true
+        covered.filter(touched.contains).map { c =>
+          val name = IndexCore.rewriteName(c)
+          val dst = IndexCore.dataDir(indexDir, name)
+          var any = false
+          for (l <- Seq("sig", "sh"); df <- leg(c, l)) {
+            val live2 = df.join(gone, Seq("doc_id"), "left_anti").persist()
+            if (!live2.isEmpty) {
+              live2.coalesce(nsp).write.parquet(s"$dst/$l"); any = true
+            }
+            live2.unpersist(): Unit
           }
-          live2.unpersist(): Unit
-        }
-        for (df <- sh) {
-          val live2 = df.join(gone, Seq("doc_id"), "left_anti").persist()
-          if (!live2.isEmpty) {
-            live2.coalesce(nsp).write.parquet(s"$dst/sh"); any = true
+          for (df <- leg(c, "pairs")) {
+            // written even when EMPTY (repartition(1) forces a readable
+            // file — the fold discipline): a commit's pair report leg
+            // must survive retirement so cumulative pair readback keeps
+            // at least one leg to read
+            df.join(broadcast(gone.select(col("doc_id").as("a_id"))),
+                Seq("a_id"), "left_anti")
+              .join(broadcast(gone.select(col("doc_id").as("b_id"))),
+                Seq("b_id"), "left_anti")
+              .select(df.columns.map(col): _*)
+              .repartition(1).write.parquet(s"$dst/pairs")
+            any = true
           }
-          live2.unpersist(): Unit
-        }
-        for (df <- pairs) {
-          // written even when EMPTY (repartition(1) forces a readable
-          // file — the fold discipline): a commit's pair report leg
-          // must survive retirement so cumulative pair readback keeps
-          // at least one leg to read
-          df.join(broadcast(gone.select(col("doc_id").as("a_id"))),
-              Seq("a_id"), "left_anti")
-            .join(broadcast(gone.select(col("doc_id").as("b_id"))),
-              Seq("b_id"), "left_anti")
-            .select(df.columns.map(col): _*)
-            .repartition(1).write.parquet(s"$dst/pairs")
-          any = true
-        }
-        Some(c -> (if (any) name else ""))
-      }
-    }.toMap
-    val published = cl.commit(spark) { now =>
-      if (now.filter(e => e.startsWith("c-") || e.startsWith("t-"))
-          != snap) None
-      else graft.store.CommitLog.unlessPinned(now)(Some(now.flatMap { e =>
-        if (e == t) Seq.empty
-        else rewrites.get(e) match {
-          case Some("") => Seq.empty // fully-taken-down commit dropped
-          case Some(n) => Seq(n)
-          case None => Seq(e)
-        }
-      }))
+          c -> (if (any) name else "")
+        }.toMap
     }
-    if (!published) {
-      for (n <- rewrites.values if n.nonEmpty) {
-        val p = new org.apache.hadoop.fs.Path(s"$indexDir/data/$n")
-        p.getFileSystem(conf).delete(p, true): Unit
-      }
-      throw new IllegalStateException(
-        s"indexRetireOldestTombstone raced a concurrent writer at " +
-          s"$indexDir — staging dropped; re-run against the new live set")
-    }
-    true
-  }
 
   /** Retire up to `upTo` tombstones, oldest first. Returns the number
    *  retired.
    */
   def indexRetireTombstones(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
+      spark: SparkSession, indexDir: String,
       upTo: Int = Int.MaxValue): Int = {
     var n = 0
     while (n < upTo && indexRetireOldestTombstone(spark, indexDir)) n += 1
     n
-  }
-
-  /** ZERO-COPY BRANCH of the LSH index as of a published version —
-   *  the shared CommitLog.cloneAsOf shallow clone: data hard-links,
-   *  the as-of live set (delivery keys included) becomes the branch's
-   *  first version, and the two indexes diverge independently (e.g.
-   *  re-run a dedup campaign at a different threshold against a
-   *  branch of corpus-scale stored state without copying a byte).
-   */
-  def indexCloneAsOf(
-      spark: org.apache.spark.sql.SparkSession, srcDir: String,
-      dstDir: String, version: Long): Unit =
-    new graft.store.CommitLog(s"$srcDir/_manifests").cloneAsOf(
-      spark, s"$srcDir/data", s"$dstDir/data",
-      new graft.store.CommitLog(s"$dstDir/_manifests"), version)
-
-  /** Reclaim data dirs no longer referenced by the LATEST version
-   *  (superseded by compaction) — run once in-flight readers drain.
-   *  `keepVersions` additionally bounds the MANIFEST history
-   *  (CommitLog.vacuumVersions — see its retention-floor contract).
-   */
-  /** Bound the MANIFEST history alone (CommitLog.vacuumVersions) —
-   *  version files only, safe continuously; see TextIndex.vacuumManifest.
-   */
-  def indexVacuumManifest(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      keep: Int): Unit =
-    new graft.store.CommitLog(s"$indexDir/_manifests")
-      .vacuumVersions(spark, keep)
-
-  def indexVacuum(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      keepVersions: Int = Int.MaxValue): Unit = {
-    val clog = new graft.store.CommitLog(s"$indexDir/_manifests")
-    val live = clog.latest(spark)._2.toSet
-    val dd = new org.apache.hadoop.fs.Path(s"$indexDir/data")
-    val fs = dd.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dd)) return
-    fs.listStatus(dd)
-      .filter(st => !live.contains(st.getPath.getName))
-      .foreach(st => fs.delete(st.getPath, true): Unit)
-    if (keepVersions != Int.MaxValue) clog.vacuumVersions(spark, keepVersions)
   }
 
   /**
@@ -1392,128 +921,69 @@ object Dedup {
    *
    * Contract: disjoint doc_id spaces (the shard contract), and merges
    * serialize with other writers like shards do — two concurrent
-   * merges never cross-check each other. Exactly-once composes: the
-   * source's `#txn:` keys ride into the destination's log (a shard
-   * redelivered to the MERGED index is still rejected), a source
-   * sharing any key with the destination is REFUSED (its docs are
-   * already folded here), and the merge may carry its own
-   * `deliveryKey`. The source is read-only; on failure the staging
-   * drops and both indexes stand.
+   * merges never cross-check each other. Key composition, refusals
+   * and abort cleanup are [[graft.store.IndexCore.mergeFrom]]'s.
    */
   def indexMergeFrom(
-      spark: org.apache.spark.sql.SparkSession, dstDir: String,
+      spark: SparkSession, dstDir: String,
       srcDir: String, threshold: Double, k: Int = 64, bands: Int = 16,
       deliveryKey: Option[String] = None,
-      persistPairs: Boolean = false): DataFrame = {
-    val dlog = new graft.store.CommitLog(s"$dstDir/_manifests")
-    val (srcV, srcLive) = new graft.store.CommitLog(s"$srcDir/_manifests")
-      .latest(spark)
-    val srcShards = srcLive.filter(_.startsWith("c-"))
-    require(!srcLive.exists(_.startsWith("t-")),
-      s"source index $srcDir has live tombstones — fully compact it " +
-        "first (a merge folds doc-grain legs by concatenation and " +
-        "cannot carry another index's pending deletions)")
-    // + the snapshot-identity marker: keyless sources re-merged twice
-    // must refuse too (graft.store.CommitLog.sourceIdentity)
-    val srcTxn = srcLive.filter(_.startsWith("#txn:")) :+
-      graft.store.CommitLog.sourceIdentity(srcV, srcLive)
-    require(srcShards.nonEmpty, s"nothing to merge: $srcDir has no live shards")
-    val txn = deliveryKey.map { key =>
-      require(!key.contains('\n') && key.nonEmpty, s"bad delivery key: $key")
-      "#txn:" + key
-    }
-    val dstNow = dlog.latest(spark)._2
-    (srcTxn ++ txn).foreach { t =>
-      require(!dstNow.contains(t),
-        s"merge of $srcDir into $dstDir rejected: delivery key " +
-          s"${t.stripPrefix("#txn:")} already lives in the destination — " +
-          "its docs are already folded here (merging again would " +
-          "duplicate signatures and postings)")
-    }
-    val conf = spark.sessionState.newHadoopConf()
-    srcShards.foreach { d =>
-      val hp = new org.apache.hadoop.fs.Path(s"$srcDir/data/$d")
-      require(hp.getFileSystem(conf).exists(hp),
-        s"source commit $d vanished mid-merge (concurrent vacuum?) — " +
-          "re-read the source and retry")
-    }
-    def live(root: String, entries: Seq[String], sub: String): Seq[String] =
-      entries.filter(_.startsWith("c-")).map(d => s"$root/data/$d/$sub")
-    val dstSigDirs = live(dstDir, dstNow, "sig")
-    val dstShDirs = live(dstDir, dstNow, "sh")
-    val srcSig = readLeg(spark, "sig", live(srcDir, srcLive, "sig"))
-    val srcSh = readLeg(spark, "sh", live(srcDir, srcLive, "sh"))
-    val verdict =
-      if (dstSigDirs.isEmpty)
-        emptyPairs(spark)
-      else {
+      persistPairs: Boolean = false): DataFrame =
+    core.mergeFrom(spark, dstDir, srcDir, deliveryKey) { (srcCommits, dst) =>
+      val roots = srcCommits.map((_, Seq.empty[String]))
+      def src(leg: String): Option[DataFrame] =
+        core.without(spark, leg, roots, Seq.empty, identity)
+      val (srcSig, srcSh) = (src("sig").get, src("sh").get)
+      val verdict =
         // dst tombstones apply (order-scoped): a deleted destination
         // doc must not pair with (or gate) the incoming corpus
-        val dstSig = readIndexLeg(spark, dstDir, "sig", "doc_id").get
-        val cand = bandBuckets(dstSig, k, bands).as("x")
-          .join(bandBuckets(srcSig, k, bands).as("y"),
-            col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
-          .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-          .distinct()
-        val est = estimatePrune(cand, dstSig.unionByName(srcSig), k,
-          minEst = threshold / 2).persist()
-        try {
-          // both posting scans semi-join down to candidate docs before
-          // the intersection join — index-merge cost is collision-
-          // proportional, never corpus-proportional
-          val aPost = readIndexLeg(spark, dstDir, "sh", "doc_id").get
-            .join(broadcast(est.select(col("a_id").as("doc_id")).distinct()),
-              Seq("doc_id"), "left_semi")
-            .select(col("doc_id").as("a_id"), col("sh"))
-          val bPost = srcSh
-            .join(broadcast(est.select(col("b_id").as("doc_id")).distinct()),
-              Seq("doc_id"), "left_semi")
-            .select(col("doc_id").as("b_id"), col("sh"))
-          val inter = est
-            .join(aPost, Seq("a_id"))
-            .join(bPost, Seq("b_id", "sh"))
-            .groupBy("a_id", "b_id").agg(count(lit(1)).as("i"))
-          jaccardOf(inter,
-            dstSig.unionByName(srcSig).select("doc_id", "n"))
-            .where(col("jaccard") >= threshold)
-            .select(col("a_id"), col("b_id"), col("jaccard"))
-            .localCheckpoint(true)
-        } finally est.unpersist(): Unit
-      }
-    // stage the source's state (normalized to one commit dir) plus the
-    // pairs leg; ONE version-file create publishes them together. The
-    // pairs leg = the SOURCE'S OWN pair history (append-only facts —
-    // they must ride the merge or indexPairs(dst) silently loses the
-    // source's intra-corpus findings, the same rule indexCompactTiered
-    // applies when folding) ∪ the cross-corpus report when requested
-    val name = s"c-${java.util.UUID.randomUUID().toString.take(12)}"
-    srcSig.write.parquet(s"$dstDir/data/$name/sig")
-    srcSh.write.parquet(s"$dstDir/data/$name/sh")
-    val srcPairDirs = srcShards.map(d => s"$srcDir/data/$d/pairs")
-      .filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
-    val stagedPairs =
-      (srcPairDirs.map(d => readLeg(spark, "pairs", Seq(d))) ++
-        (if (persistPairs) Seq(verdict) else Nil))
+        scoped(spark, dstDir, "sig") match {
+          case None => core.empty(spark, "pairs")
+          case Some(dstSig) =>
+            val cand = bandBuckets(dstSig, k, bands).as("x")
+              .join(bandBuckets(srcSig, k, bands).as("y"),
+                col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
+              .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
+              .distinct()
+            val est = estimatePrune(cand, dstSig.unionByName(srcSig), k,
+              minEst = threshold / 2).persist()
+            try {
+              // both posting scans semi-join down to candidate docs
+              // before the intersection join — index-merge cost is
+              // collision-proportional, never corpus-proportional
+              val aPost = scoped(spark, dstDir, "sh").get
+                .join(broadcast(est.select(col("a_id").as("doc_id")).distinct()),
+                  Seq("doc_id"), "left_semi")
+                .select(col("doc_id").as("a_id"), col("sh"))
+              val bPost = srcSh
+                .join(broadcast(est.select(col("b_id").as("doc_id")).distinct()),
+                  Seq("doc_id"), "left_semi")
+                .select(col("doc_id").as("b_id"), col("sh"))
+              val inter = est
+                .join(aPost, Seq("a_id"))
+                .join(bPost, Seq("b_id", "sh"))
+                .groupBy("a_id", "b_id").agg(count(lit(1)).as("i"))
+              jaccardOf(inter,
+                dstSig.unionByName(srcSig).select("doc_id", "n"))
+                .where(col("jaccard") >= threshold)
+                .select(col("a_id"), col("b_id"), col("jaccard"))
+                .localCheckpoint(true)
+            } finally est.unpersist(): Unit
+        }
+      // stage the source's state (normalized to one commit dir) plus
+      // the pairs leg. The pairs leg = the SOURCE'S OWN pair history
+      // (append-only facts — they must ride the merge or
+      // indexPairs(dst) silently loses the source's intra-corpus
+      // findings, the same rule indexCompactTiered applies when
+      // folding) ∪ the cross-corpus report when requested
+      srcSig.write.parquet(s"$dst/sig")
+      srcSh.write.parquet(s"$dst/sh")
+      (src("pairs").toSeq ++ (if (persistPairs) Seq(verdict) else Nil))
         .reduceOption(_.unionByName(_))
-    stagedPairs.foreach(_.repartition(1)
-      .write.parquet(s"$dstDir/data/$name/pairs"))
-    val published = dlog.commit(spark) { now =>
-      if ((srcTxn ++ txn).exists(now.contains)) None // raced duplicate
-      else Some(now :+ name :++ srcTxn :++ txn.toSeq)
+        .foreach(_.repartition(1).write.parquet(s"$dst/pairs"))
+      verdict
     }
-    if (!published) {
-      val p = new org.apache.hadoop.fs.Path(s"$dstDir/data/$name")
-      p.getFileSystem(conf).delete(p, true): Unit
-      require(published,
-        s"merge of $srcDir into $dstDir raced a concurrent writer that " +
-          "committed one of its delivery keys — this attempt's staging " +
-          "was dropped")
-    }
-    verdict
-  }
+
 
   /**
    * Connected components over an undirected near-dup pair list —

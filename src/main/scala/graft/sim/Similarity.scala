@@ -1,8 +1,11 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.store.{FsckScope, IndexCore, IndexLeg}
+import graft.store.IndexCore.isViol
 
 /**
  * Similarity search over an embedding column (`Array[Float]` cast to
@@ -254,169 +257,45 @@ object Similarity {
    *  its nProbe cell directories — at 100 TB that is the difference
    *  between scanning ~nProbe/256 of the corpus and all of it.
    *  Centroid drift as the corpus grows is the accepted tradeoff of
-   *  every frozen ANN index; the rebuild IS a new index.
+   *  every frozen ANN index; the rebuild IS a new index. Legs: `post`
+   *  (cell-partitioned), `centroids` (one generation, owned by the
+   *  founding or rebuilt commit) and the tombstones' `gone` vec ids.
    */
-  private def ivfLog(dir: String) = new graft.store.CommitLog(s"$dir/_manifests")
-
-  /** True iff a batch with this delivery key is already committed —
-   *  the cheap up-front probe a consumer (the streaming maintainer)
-   *  makes before paying the assignment+staging cost of an append (a
-   *  redelivered batch would lose to its own `#txn:` key anyway; the
-   *  in-commit check still guards the concurrent race).
-   */
-  def ivfHasDelivery(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      key: String): Boolean =
-    ivfLog(dir).latest(spark)._2.contains("#txn:" + key)
-
-  /** Latest published version (0 = never written) — the cheap "did
-   *  anything commit?" probe; also how the streaming maintainer picks
-   *  found-vs-append for a batch.
-   */
-  def ivfVersion(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Long =
-    ivfLog(dir).latest(spark)._1
-
-  /** One ledger snapshot (version, live entries) serving BOTH the
-   *  delivery probe and the founded probe — the streaming RAG
-   *  pipeline's per-batch read, so a batch pays one log resolution
-   *  for the ANN leg instead of two.
-   */
-  def ivfLedger(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Long, Seq[String]) =
-    ivfLog(dir).latest(spark)
-
-  private def ivfTxn(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      key: Option[String]): Option[String] = {
-    val txn = key.map { k =>
-      require(k.nonEmpty && !k.contains('\n'), s"bad delivery key: $k")
-      "#txn:" + k
-    }
-    txn.foreach { t =>
-      require(!ivfLog(dir).latest(spark)._2.contains(t),
-        s"batch with delivery key ${key.get} was already ingested into " +
-          s"$dir — redelivery rejected (the index is exactly-once)")
-    }
-    txn
-  }
-
-  private def ivfPublish(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      name: String, txn: Option[String], key: Option[String]): Unit = {
-    val published = ivfLog(dir).commit(spark) { now =>
-      if (txn.exists(now.contains)) None // raced redelivery — abort
-      else Some(now :+ name :++ txn.toSeq)
-    }
-    if (!published) {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/data/$name")
-      p.getFileSystem(spark.sessionState.newHadoopConf())
-        .delete(p, true): Unit
-      require(published,
-        s"batch with delivery key ${key.get} raced a concurrent " +
-          s"redelivery into $dir — this attempt's staging was dropped")
-    }
-  }
-
-  private def ivfLiveSub(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      sub: String): Seq[String] = {
-    val conf = spark.sessionState.newHadoopConf()
-    ivfLog(dir).latest(spark)._2.filter(_.startsWith("c-"))
-      .map(d => s"$dir/data/$d/$sub")
-      .filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
-  }
-
-  /** Live tombstone commits (`t-` prefix) — each one
-   *  [[ivfIndexForget]] call's gone vec-id set. */
-  private def ivfTombDirs(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Seq[String] =
-    ivfLog(dir).latest(spark)._2.filter(_.startsWith("t-"))
-
-  /** Pinned ON-DISK schema per IVF leg (this module writes all of
-   *  them) — passed to every leg read so Spark skips the per-read
-   *  footer-inference job (the TextIndex.legSchemas rationale).
-   */
-  private val legSchemas: Map[String, org.apache.spark.sql.types.StructType] = {
+  private val core = {
     import org.apache.spark.sql.types._
-    Map(
-      "post" -> StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("v", ArrayType(DoubleType)),
-        StructField("cell", LongType))),
-      "centroids" -> StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("v", ArrayType(DoubleType)))),
-      "gone" -> StructType(Seq(StructField("vec_id", LongType))))
+    new IndexCore("vec_id", Map(
+      "post" -> IndexLeg(Some("cell"), "vec_id" -> LongType,
+        "v" -> ArrayType(DoubleType), "cell" -> LongType),
+      "centroids" -> IndexLeg(None, "vec_id" -> LongType,
+        "v" -> ArrayType(DoubleType)),
+      "gone" -> IndexLeg(None, "vec_id" -> LongType)))
   }
 
-  /** PER-ROOT reads unioned by name, never one multi-root read: the
-   *  post leg is cell=-partitioned, and multi-root partition-structure
-   *  inference throws CONFLICTING_DIRECTORY_STRUCTURES whenever ≥2
-   *  partitioned roots (or mixed layouts) land in one call — e.g.
-   *  ivfIndexMerge over a source index with ≥2 live posting commits.
+  /** Publish a staged batch commit with its optional delivery key. */
+  private def ivfPublish(
+      spark: SparkSession, dir: String, name: String, txn: Option[String],
+      key: Option[String]): Unit =
+    IndexCore.publishAppend(spark, dir, name, txn.toSeq)(
+      s"batch with delivery key ${key.get} raced a concurrent " +
+        s"redelivery into $dir — this attempt's staging was dropped")
+
+  /** The live centroid generation, collected to the driver (bounded —
+   *  every probe ships it as a literal).
    */
-  private def readLeg(
-      spark: org.apache.spark.sql.SparkSession, leg: String,
-      paths: Seq[String]): DataFrame = {
-    val s = legSchemas(leg)
-    paths.map(p => spark.read.schema(s).parquet(p)).reduce(_.unionByName(_))
-  }
+  private def liveCentroids(
+      spark: SparkSession, dir: String): Array[(Long, Array[Double])] =
+    collectBounded(core.readLive(spark, dir, "centroids"),
+      "the stored centroid set must stay index-small")
 
-  /** The live tombstoned vec ids as one (vec_id) frame — None when no
-   *  tombstones are live (zero plan overhead without deletions). */
-  private def ivfGone(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[DataFrame] = {
-    val ts = ivfTombDirs(spark, dir)
-    Option.when(ts.nonEmpty)(
-      readLeg(spark, "gone", ts.map(t => s"$dir/data/$t/gone"))
-        .select("vec_id"))
-  }
-
-  /** Union the live posting commits with ORDER-SCOPED tombstones
-   *  applied: a tombstone covers exactly the commits that PRECEDE it
-   *  in the commit log's live list, so a vec_id re-appended after its
-   *  takedown (a re-embed of a refreshed doc) serves normally instead
-   *  of being silently killed by a global gone set (the text index's
-   *  readDocGrain discipline). Commits group by subsequent-tombstone
-   *  set — ≤ #tombstones+1 broadcast anti-joins, zero plan nodes when
-   *  none are live. `perCommit` shapes each commit read (the query
-   *  path pushes its static cell filter there). None when no live
-   *  commit holds postings.
+  /** The live postings, order-scoped ([[graft.store.IndexCore.scoped]]);
+   *  `perCommit` shapes each per-commit read (the query path pushes its
+   *  static cell filter there). None when no live commit holds
+   *  postings.
    */
-  private def readIvfPosts(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      perCommit: DataFrame => DataFrame = identity): Option[DataFrame] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val ordered = ivfLog(dir).latest(spark)._2
-      .filter(e => e.startsWith("c-") || e.startsWith("t-"))
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).exists(hp)
-    }
-    val withScope = ordered.zipWithIndex
-      .filter(_._1.startsWith("c-"))
-      .map { case (c, i) =>
-        (s"$dir/data/$c/post",
-          ordered.drop(i + 1).filter(_.startsWith("t-")))
-      }
-      .filter(p => exists(p._1))
-    if (withScope.isEmpty) None
-    else Some(withScope.groupBy(_._2).map { case (tombs, roots) =>
-      val base = roots.map(r => perCommit(readLeg(spark, "post", Seq(r._1))))
-        .reduce(_.unionByName(_))
-      if (tombs.isEmpty) base
-      else base.join(
-        broadcast(readLeg(spark, "gone", tombs.map(t => s"$dir/data/$t/gone"))
-          .select("vec_id")),
-        Seq("vec_id"), "left_anti")
-    }.reduce(_.unionByName(_)))
-  }
+  private def livePosts(
+      spark: SparkSession, dir: String,
+      perCommit: DataFrame => DataFrame): Option[DataFrame] =
+    core.scoped(spark, dir, "post", Seq("vec_id"), perCommit)
 
   /** VECTOR DELETION for the persisted IVF index (takedown without
    *  rebuild): ONE tombstone commit `t-<uuid>` holding the gone vec
@@ -426,11 +305,11 @@ object Similarity {
    *  next FULL [[ivfIndexCompact]] or [[ivfIndexRebuild]] physically
    *  drops the rows and retires the tombstone (the rebuild's
    *  whole-live-set swap keeps only `#txn:` keys, so tombstones fold
-   *  into it for free); [[ivfIndexVacuum]] erases the superseded
-   *  bytes. A pre-delete [[ivfIndexCloneAsOf]] branch still serves
-   *  the vector until vacuum. Centroids are NOT retrained by a
-   *  delete — cell geometry drifts exactly as under appends, and the
-   *  same imbalance monitor decides when to rebuild.
+   *  into it for free); [[graft.store.IndexCore.vacuum]] erases the
+   *  superseded bytes. A pre-delete [[graft.store.IndexCore.cloneAsOf]]
+   *  branch still serves the vector until vacuum. Centroids are NOT
+   *  retrained by a delete — cell geometry drifts exactly as under
+   *  appends, and the same imbalance monitor decides when to rebuild.
    *
    *  The tombstone is a pure idempotent set (no corpus-level
    *  aggregates to delta): re-deleting a gone or never-ingested id
@@ -439,25 +318,20 @@ object Similarity {
    *  takedown is refused loudly, keys survive folds. Cost: O(ids).
    */
   def ivfIndexForget(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
+      spark: SparkSession, dir: String,
       ids: Seq[Long], key: Option[String] = None): Unit = {
     require(ids.nonEmpty && ids.length <= 1000000,
       s"ivfIndexForget takes 1..1000000 ids per call (got ${ids.length})")
-    val txn = ivfTxn(spark, dir, key)
+    val txn = IndexCore.freshTxn(spark, dir, key, "batch")
     import spark.implicits._
     // keyed takedowns embed the key digest in the tombstone dir name
     // (the dedup index's discipline) so the applied gone set stays
     // addressable by key — [[ivfGoneForDelivery]] lets a multi-index
     // takedown WITHOUT a dedup leg re-read the exact id set its first
     // attempt applied instead of re-deriving a drifted one
-    val name = key match {
-      case Some(dk) =>
-        s"t-k${graft.store.CommitLog.keyDigest(dk)}-" +
-          java.util.UUID.randomUUID().toString.take(8)
-      case None => s"t-${java.util.UUID.randomUUID().toString.take(12)}"
-    }
+    val name = IndexCore.entryName("t", key)
     ids.distinct.toDF("vec_id")
-      .coalesce(1).write.parquet(s"$dir/data/$name/gone")
+      .coalesce(1).write.parquet(s"${IndexCore.dataDir(dir, name)}/gone")
     ivfPublish(spark, dir, name, txn, key)
   }
 
@@ -467,24 +341,11 @@ object Similarity {
    *  [[graft.dedup.Dedup.indexGoneForDelivery]]. Loud if the key
    *  never delivered or its tombstone already retired/folded
    *  (key-grain gone reads precede compaction — the standing
-   *  contract, enforceable with [[ivfIndexPin]]).
+   *  contract, enforceable with [[graft.store.IndexCore.pin]]).
    */
   def ivfGoneForDelivery(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      key: String): DataFrame = {
-    val live = ivfLog(dir).latest(spark)._2
-    require(live.contains("#txn:" + key),
-      s"no takedown with delivery key $key in $dir")
-    val matches = live.filter(
-      _.startsWith(s"t-k${graft.store.CommitLog.keyDigest(key)}-"))
-    require(matches.nonEmpty,
-      s"the tombstone of delivery key $key in $dir is not addressable " +
-        "by key digest — a retirement or full fold already consumed it " +
-        "(key-grain gone reads must happen before the tombstone " +
-        "retires), or it predates keyed tombstone naming")
-    readLeg(spark, "gone", Seq(s"$dir/data/${matches.head}/gone"))
-      .select("vec_id")
-  }
+      spark: SparkSession, dir: String, key: String): DataFrame =
+    core.goneForDelivery(spark, dir, key)
 
   /** VECTOR UPSERT for the persisted IVF index (the re-embed / crawl
    *  re-fetch lifecycle op, mirroring
@@ -524,11 +385,11 @@ object Similarity {
    *  whole-index re-train belongs in-line is a deployment decision.
    */
   def ivfIndexUpsert(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
+      spark: SparkSession, dir: String,
       batch: DataFrame, key: Option[String] = None,
       rebalanceAbovePpm: Option[Long] = None,
       rebalanceSampleStep: Option[Long] = None): Unit = {
-    require(ivfLog(dir).latest(spark)._2.exists(_.startsWith("c-")),
+    require(IndexCore.live(spark, dir).exists(_.startsWith("c-")),
       s"ivfIndexUpsert needs a founded index at $dir — ivfIndexBuild first")
     require(rebalanceAbovePpm.forall(_ >= 1000000L),
       "rebalanceAbovePpm below 1e6 (perfect balance) would re-train " +
@@ -544,9 +405,11 @@ object Similarity {
         s"ivfIndexUpsert takes 1..65536 distinct ids per call " +
           s"(got ${ids.length}); batch larger re-embed waves")
       val (delKey, addKey) = (key.map(_ + ".del"), key.map(_ + ".add"))
-      if (!delKey.exists(ivfHasDelivery(spark, dir, _)))
+      val delivered = (k: Option[String]) =>
+        k.exists(IndexCore.hasDelivery(spark, dir, _))
+      if (!delivered(delKey))
         ivfIndexForget(spark, dir, ids, key = delKey)
-      if (!addKey.exists(ivfHasDelivery(spark, dir, _)))
+      if (!delivered(addKey))
         ivfIndexAppend(spark, dir, snap, key = addKey)
     } finally snap.unpersist(): Unit
     rebalanceAbovePpm.foreach { cut =>
@@ -575,26 +438,24 @@ object Similarity {
   }
 
   /** Live tombstoned-vector count — fold-scheduler observability. */
-  def ivfTombstoneCount(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Long =
-    ivfGone(spark, dir).map(_.count()).getOrElse(0L)
+  def ivfTombstoneCount(spark: SparkSession, dir: String): Long =
+    core.tombstoneCount(spark, dir)
 
   def ivfIndexBuild(
       spark: org.apache.spark.sql.SparkSession, dir: String, founding: DataFrame,
       centroidStep: Long, key: Option[String] = None): Unit = {
     // centroids + founding postings stage under ONE commit dir and
-    // publish with one version-file create (graft.store.CommitLog, the
-    // store tables' protocol) — a crash cannot leave centroids without
-    // postings or vice versa. `key` mirrors the dedup/text indexes'
-    // `#txn:` exactly-once discipline.
-    val txn = ivfTxn(spark, dir, key)
-    val name = s"c-${java.util.UUID.randomUUID().toString.take(12)}"
+    // publish together — a crash cannot leave centroids without
+    // postings or vice versa
+    val txn = IndexCore.freshTxn(spark, dir, key, "batch")
+    val name = IndexCore.entryName("c", None)
+    val dst = IndexCore.dataDir(dir, name)
     val centFrame = founding.where(col("vec_id") % centroidStep === 0)
       .select(col("vec_id"), col("v"))
-    centFrame.coalesce(1).write.parquet(s"$dir/data/$name/centroids")
+    centFrame.coalesce(1).write.parquet(s"$dst/centroids")
     val cents = collectBounded(centFrame,
       "raise centroidStep for this founding shard")
-    writePostings(s"$dir/data/$name/post", founding,
+    writePostings(s"$dst/post", founding,
       cents.map(_._1), cents.flatMap(_._2))
     ivfPublish(spark, dir, name, txn, key)
   }
@@ -604,14 +465,12 @@ object Similarity {
    *  index is never re-read or rewritten.
    */
   def ivfIndexAppend(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
+      spark: SparkSession, dir: String,
       batch: DataFrame, key: Option[String] = None): Unit = {
-    val txn = ivfTxn(spark, dir, key)
-    val cents = collectBounded(
-      readLeg(spark, "centroids", ivfLiveSub(spark, dir, "centroids")),
-      "the stored centroid set must stay index-small")
-    val name = s"c-${java.util.UUID.randomUUID().toString.take(12)}"
-    writePostings(s"$dir/data/$name/post", batch,
+    val txn = IndexCore.freshTxn(spark, dir, key, "batch")
+    val cents = liveCentroids(spark, dir)
+    val name = IndexCore.entryName("c", None)
+    writePostings(s"${IndexCore.dataDir(dir, name)}/post", batch,
       cents.map(_._1), cents.flatMap(_._2))
     ivfPublish(spark, dir, name, txn, key)
   }
@@ -627,66 +486,20 @@ object Similarity {
    *  (cells are centroid indexes of the OTHER index) and are simply
    *  dropped by the re-assignment.
    *
-   *  Contract: disjoint vec_id spaces. Exactly-once composes: the
-   *  source's `#txn:` keys ride into the destination's log (a batch
-   *  redelivered to the MERGED index is still rejected), a source
-   *  sharing any key with the destination is REFUSED (double-insert),
-   *  and the merge may carry its own `key`. The source is read-only;
-   *  on failure the staging drops and both indexes stand.
+   *  Contract: disjoint vec_id spaces. Key composition, refusals and
+   *  abort cleanup are [[graft.store.IndexCore.mergeFrom]]'s.
    */
   def ivfIndexMergeFrom(
-      spark: org.apache.spark.sql.SparkSession, dstDir: String,
-      srcDir: String, key: Option[String] = None): Unit = {
-    val (srcV, srcLive) = ivfLog(srcDir).latest(spark)
-    val srcShards = srcLive.filter(_.startsWith("c-"))
-    require(!srcLive.exists(_.startsWith("t-")),
-      s"source index $srcDir has live tombstones — fully compact (or " +
-        "rebuild) it first; a merge folds postings by concatenation " +
-        "and cannot carry another index's pending deletions")
-    // + the snapshot-identity marker: keyless sources re-merged twice
-    // must refuse too (graft.store.CommitLog.sourceIdentity)
-    val srcTxn = srcLive.filter(_.startsWith("#txn:")) :+
-      graft.store.CommitLog.sourceIdentity(srcV, srcLive)
-    require(srcShards.nonEmpty, s"nothing to merge: $srcDir has no live commits")
-    val txn = ivfTxn(spark, dstDir, key)
-    val dstNow = ivfLog(dstDir).latest(spark)._2.toSet
-    srcTxn.foreach { t =>
-      require(!dstNow.contains(t),
-        s"merge of $srcDir into $dstDir rejected: delivery key " +
-          s"${t.stripPrefix("#txn:")} already lives in the destination — " +
-          "its vectors are already folded here (merging again would " +
-          "double-insert them)")
+      spark: SparkSession, dstDir: String,
+      srcDir: String, key: Option[String] = None): Unit =
+    core.mergeFrom(spark, dstDir, srcDir, key) { (srcCommits, dst) =>
+      val cents = liveCentroids(spark, dstDir)
+      writePostings(s"$dst/post",
+        core.read(spark, "post",
+          srcCommits.map(c => s"$c/post").filter(IndexCore.exists(spark, _)))
+          .select(col("vec_id"), col("v")),
+        cents.map(_._1), cents.flatMap(_._2))
     }
-    val conf = spark.sessionState.newHadoopConf()
-    val srcPosts = srcShards.map(d => s"$srcDir/data/$d/post")
-      .filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
-    require(srcPosts.size == srcShards.size,
-      s"a source commit vanished mid-merge (concurrent vacuum?) — " +
-        "re-read the source and retry")
-    val cents = collectBounded(
-      readLeg(spark, "centroids", ivfLiveSub(spark, dstDir, "centroids")),
-      "the stored centroid set must stay index-small")
-    val name = s"c-${java.util.UUID.randomUUID().toString.take(12)}"
-    writePostings(s"$dstDir/data/$name/post",
-      readLeg(spark, "post", srcPosts)
-        .select(col("vec_id"), col("v")),
-      cents.map(_._1), cents.flatMap(_._2))
-    val published = ivfLog(dstDir).commit(spark) { now =>
-      if ((srcTxn ++ txn).exists(now.contains)) None // raced duplicate
-      else Some(now :+ name :++ srcTxn :++ txn.toSeq)
-    }
-    if (!published) {
-      val p = new org.apache.hadoop.fs.Path(s"$dstDir/data/$name")
-      p.getFileSystem(conf).delete(p, true): Unit
-      require(published,
-        s"merge of $srcDir into $dstDir raced a concurrent writer that " +
-          "committed one of its delivery keys — this attempt's staging " +
-          "was dropped")
-    }
-  }
 
   private def writePostings(
       path: String, batch: DataFrame,
@@ -706,15 +519,15 @@ object Similarity {
    *  never a mix (cell ids are centroid indexes; mixed-generation
    *  cells would be meaningless). This is the production "reindex"
    *  answer to centroid drift under appends; superseded dirs stay on
-   *  disk for in-flight readers until [[ivfIndexVacuum]]. Returns
-   *  false (and drops its staging) if ANY concurrent writer — append
-   *  included — moved the live set; the caller retries against the
-   *  fresh snapshot.
+   *  disk for in-flight readers until [[graft.store.IndexCore.vacuum]].
+   *  Returns false (and drops its staging) if ANY concurrent writer —
+   *  append included — moved the live set; the caller retries against
+   *  the fresh snapshot.
    */
   def ivfIndexRebuild(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
+      spark: SparkSession, dir: String,
       centroidStep: Long, iters: Int = 2, sampleStep: Long = 1L): Boolean =
-    ivfIndexRebuildFrom(spark, dir, ivfLog(dir).latest(spark)._2,
+    ivfIndexRebuildFrom(spark, dir, IndexCore.live(spark, dir),
       centroidStep, iters, sampleStep)
 
   /** [[ivfIndexRebuild]] against an explicit observed snapshot — the
@@ -722,22 +535,17 @@ object Similarity {
    *  snapshot read and the publish, pinning the abort path.
    */
   private[graft] def ivfIndexRebuildFrom(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
+      spark: SparkSession, dir: String,
       live: Seq[String], centroidStep: Long, iters: Int,
       sampleStep: Long): Boolean = {
-    requireUnpinned(spark, dir, "ivfIndexRebuild")
-    val conf = spark.sessionState.newHadoopConf()
-    val dirs = live.filter(_.startsWith("c-")).map(d => s"$dir/data/$d/post")
+    IndexCore.requireUnpinned(spark, dir, "ivfIndexRebuild")
+    val roots = IndexCore.scopes(dir, live)
     // a missing live dir PROVES the observed snapshot is stale (vacuum
     // only reclaims superseded dirs): the commit below would lose the
     // race anyway, so abort NOW — silently filtering would k-means a
-    // partial corpus (and an all-vacuumed snapshot would die in
-    // .reduce on empty instead of reporting the lost race cleanly)
-    val anyMissing = dirs.exists { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      !hp.getFileSystem(conf).exists(hp)
-    }
-    if (anyMissing || dirs.isEmpty) return false
+    // partial corpus
+    if (roots.isEmpty || roots.exists(r => !IndexCore.exists(spark, s"${r._1}/post")))
+      return false
     // the observed snapshot's tombstones fold into the rebuild with
     // ORDER SCOPING (each commit drops only its subsequent tombstones'
     // vectors — a re-appended id's fresh rows survive): gone vectors
@@ -745,32 +553,20 @@ object Similarity {
     // whole-live-set swap below retires the `t-` entries (only `#txn:`
     // keys carry through) — a rebuild IS the physical-erasure point
     // for deletions, same as a full compact
-    val ordered = live.filter(e =>
-      e.startsWith("c-") || e.startsWith("t-"))
-    val corpus = ordered.zipWithIndex
-      .filter(_._1.startsWith("c-"))
-      .map { case (c, i) =>
-        val base = readLeg(spark, "post", Seq(s"$dir/data/$c/post"))
-          .select(col("vec_id"), col("v"))
-        val ts = ordered.drop(i + 1).filter(_.startsWith("t-"))
-        if (ts.isEmpty) base
-        else base.join(
-          broadcast(readLeg(spark, "gone", ts.map(t => s"$dir/data/$t/gone"))
-            .select("vec_id")),
-          Seq("vec_id"), "left_anti")
-      }
-      .reduce(_.unionByName(_))
+    val corpus = core.without(spark, "post", roots, Seq("vec_id"), identity).get
+      .select(col("vec_id"), col("v"))
       .localCheckpoint(true) // frozen input: the commit swap must not
     // invalidate this plan's source dirs mid-write
     val cents = kmeansCentroids(corpus, centroidStep, iters, sampleStep)
-    val name = s"c-${java.util.UUID.randomUUID().toString.take(12)}"
+    val name = IndexCore.entryName("c", None)
+    val dst = IndexCore.dataDir(dir, name)
     import spark.implicits._
     cents.toSeq.map { case (i, v) => (i, v.toSeq) }
       .toDF("vec_id", "v")
-      .coalesce(1).write.parquet(s"$dir/data/$name/centroids")
-    writePostings(s"$dir/data/$name/post", corpus,
+      .coalesce(1).write.parquet(s"$dst/centroids")
+    writePostings(s"$dst/post", corpus,
       cents.map(_._1), cents.flatMap(_._2))
-    val published = ivfLog(dir).commit(spark) { now =>
+    val published = IndexCore.log(dir).commit(spark) { now =>
       // ANY concurrent write is a lost race — including an APPEND: its
       // postings were assigned against the OLD centroids, so letting it
       // pass through the swap would publish mixed-generation cell ids
@@ -785,272 +581,81 @@ object Similarity {
         Some(name +: now.filter(_.startsWith("#")))
       else None // index moved under us — abort, caller retries
     }
-    if (!published) {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/data/$name")
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true): Unit
-    }
+    if (!published) IndexCore.dropStaging(spark, dir, Seq(name))
     published
   }
 
-  /** SIZE-TIERED commit compaction for the persisted IVF index — the
-   *  same LSM policy as the text and dedup indexes: every append adds
-   *  a commit dir forever and [[ivfIndexQuery]]'s per-commit union
-   *  grows linearly in append count. Postings fold by pure
-   *  concatenation (cell ids are indexes into the ONE live centroid
-   *  generation, identical across commits by the rebuild invariant),
-   *  re-clustered so each cell lands in one file instead of
-   *  commits × cells. If the founding (or rebuilt) commit is among the
-   *  folded inputs its centroid table carries through — the index
-   *  always keeps exactly one centroids leg. `#txn:` keys pass through
-   *  untouched; a concurrent writer moving any input aborts the
-   *  publish.
+  /** SIZE-TIERED commit compaction ([[graft.store.IndexCore.compactTiered]])
+   *  of the persisted IVF index: every append adds a commit dir
+   *  forever and [[ivfIndexQuery]]'s per-commit union grows linearly
+   *  in append count. Postings fold by pure concatenation (cell ids
+   *  are indexes into the ONE live centroid generation, identical
+   *  across commits by the rebuild invariant), re-clustered so each
+   *  cell lands in one file instead of commits × cells. If the
+   *  founding (or rebuilt) commit is among the folded inputs its
+   *  centroid table carries through — the index always keeps exactly
+   *  one centroids leg.
    */
-  /** REPLAY PIN (mid-replay lease) on the IVF index: while any pin
-   *  is live, folds, tombstone retirement, and the rebuild/re-train
-   *  REFUSE loudly — the pipelines' replay stability depends on the
-   *  commit layout they re-read. Appends, forgets, upserts, and reads
-   *  stay allowed. Ledger entry — survives restart; idempotent.
-   */
-  def ivfIndexPin(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      name: String): Unit = ivfLog(dir).pin(spark, name)
-  def ivfIndexUnpin(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      name: String): Unit = ivfLog(dir).unpin(spark, name)
-  def ivfIndexPins(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Seq[String] =
-    ivfLog(dir).pins(spark)
-
-  private def requireUnpinned(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      what: String): Unit =
-    ivfLog(dir).requireUnpinned(spark, s"$what on $dir")
-
   def ivfIndexCompactTiered(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      fanIn: Int = 8): Unit = {
-    requireUnpinned(spark, dir, "ivfIndexCompactTiered")
-    val cl = ivfLog(dir)
-    val (_, live) = cl.latest(spark)
-    val all = live.filter(_.startsWith("c-"))
-    val tombs = live.filter(_.startsWith("t-"))
-    // tombstones fold away ONLY in a full fold, where each commit
-    // drops exactly ITS OWN subsequent tombstones' vectors (order-
-    // scoped — a re-appended id's fresh rows survive); partial folds
-    // concatenate pure WITHIN one run of consecutive commits and
-    // splice at the run's position (coverage preserved exactly)
-    val full = fanIn >= all.size
-    val applyTombs = full && tombs.nonEmpty
-    if (all.isEmpty || (all.size <= 1 && !applyTombs)) return
-    val conf = spark.sessionState.newHadoopConf()
-    val ordered = live.filter(e =>
-      e.startsWith("c-") || e.startsWith("t-"))
-    val (dirs, scopeOf) =
-      if (full) {
-        val scopes = ordered.zipWithIndex
-          .filter(_._1.startsWith("c-"))
-          .map { case (c, i) =>
-            (c, ordered.drop(i + 1).filter(_.startsWith("t-")))
-          }.toMap
-        (all, scopes)
-      } else {
-        val runs = ordered.foldLeft(Seq(Seq.empty[String])) { (acc, e) =>
-          if (e.startsWith("t-")) acc :+ Seq.empty
-          else acc.init :+ (acc.last :+ e)
+      spark: SparkSession, dir: String, fanIn: Int = 8): Unit =
+    core.compactTiered(spark, dir, fanIn, "ivfIndexCompactTiered") {
+      (roots, _, dst) =>
+        core.without(spark, "post", roots, Seq("vec_id"), identity)
+          .foreach(_.select(col("vec_id"), col("v"), col("cell"))
+            .repartition(col("cell"))
+            .write.partitionBy("cell").parquet(s"$dst/post"))
+        roots.map(r => s"${r._1}/centroids").filter(IndexCore.exists(spark, _)) match {
+          case Seq(c) => core.read(spark, "centroids", Seq(c))
+            .coalesce(1).write.parquet(s"$dst/centroids")
+          case Seq() => ()
+          case many => throw new IllegalStateException(
+            s"index $dir has ${many.size} centroid legs among " +
+              s"${roots.map(_._1)} — one generation must own exactly one")
         }
-        val run = runs.maxBy(_.size)
-        if (run.size <= 1) return
-        val picked = run.map { d =>
-          val p = new org.apache.hadoop.fs.Path(s"$dir/data/$d")
-          val fs = p.getFileSystem(conf)
-          (d, if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L)
-        }.sortBy(_._2).take(math.max(2, fanIn)).map(_._1)
-        (picked, picked.map(_ -> Seq.empty[String]).toMap)
-      }
-    if (dirs.size <= 1 && !applyTombs) return
-    val name = s"c-${java.util.UUID.randomUUID().toString.take(12)}"
-    val posts = dirs.map(d => (d, s"$dir/data/$d/post")).filter { p =>
-      val hp = new org.apache.hadoop.fs.Path(p._2)
-      hp.getFileSystem(conf).exists(hp)
     }
-    if (posts.nonEmpty)
-      posts.map { case (d, p) =>
-        val base = readLeg(spark, "post", Seq(p))
-          .select(col("vec_id"), col("v"), col("cell"))
-        val ts = scopeOf.getOrElse(d, Seq.empty)
-        if (ts.isEmpty) base
-        else base.join(
-          broadcast(readLeg(spark, "gone", ts.map(t => s"$dir/data/$t/gone"))
-            .select("vec_id")),
-          Seq("vec_id"), "left_anti")
-      }.reduce(_.unionByName(_))
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(s"$dir/data/$name/post")
-    val cents = dirs.map(d => s"$dir/data/$d/centroids").filter { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).exists(hp)
-    }
-    cents match {
-      case Seq(c) => readLeg(spark, "centroids", Seq(c))
-        .coalesce(1).write.parquet(s"$dir/data/$name/centroids")
-      case Seq() => ()
-      case many => throw new IllegalStateException(
-        s"index $dir has ${many.size} centroid legs among $dirs — " +
-          "one generation must own exactly one")
-    }
-    val replaced = dirs ++ (if (applyTombs) tombs else Seq.empty)
-    // CommitLog.spliceReplace IN BOTH BRANCHES — a tombstone published
-    // concurrently during a full fold sits after the inputs in log
-    // order; appending the folded output after it would empty its
-    // order-scoped coverage and silently resurrect the takedown (the
-    // text index's discipline). None when an input moved under us —
-    // abort, never double-fold.
-    val published = cl.commit(spark) { now =>
-      graft.store.CommitLog.unlessPinned(now)(
-        graft.store.CommitLog.spliceReplace(now, replaced, name))
-    }
-    if (!published) {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/data/$name")
-      p.getFileSystem(conf).delete(p, true): Unit
-    }
-  }
 
-  /** TOMBSTONE-SCOPED RETIREMENT (the text index's
-   *  [[graft.text.TextIndex.retireOldestTombstone]] discipline on the
-   *  IVF index): retire the OLDEST live tombstone by rewriting IN
-   *  PLACE only the covered commits whose postings mention its ids.
-   *  Rewritten commits keep their log position (other tombstones'
-   *  coverage untouched) and their cell partitioning (cell ids index
-   *  the frozen centroid generation — unchanged). The founding
+  /** TOMBSTONE-SCOPED RETIREMENT
+   *  ([[graft.store.IndexCore.retireOldestTombstone]]) on the IVF
+   *  index: covered commits whose postings mention the oldest
+   *  tombstone's ids rewrite keeping their cell partitioning (cell ids
+   *  index the frozen centroid generation — unchanged). The founding
    *  commit's centroid leg carries through even when its postings
    *  empty out; a posting-only commit whose rows are all gone drops
-   *  from the live list. Cost ∝ the commits the ids live in — never
-   *  the post-tombstone append stream, never a whole-index rewrite
-   *  (that is [[ivfIndexRebuild]]'s job, which also re-centers).
+   *  from the live list. A whole-index rewrite is [[ivfIndexRebuild]]'s
+   *  job, which also re-centers.
    */
   def ivfIndexRetireOldestTombstone(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
-    requireUnpinned(spark, dir, "ivfIndexRetireOldestTombstone")
-    val cl = ivfLog(dir)
-    val (_, live) = cl.latest(spark)
-    val snap = live.filter(e => e.startsWith("c-") || e.startsWith("t-"))
-    val tIdx = snap.indexWhere(_.startsWith("t-"))
-    if (tIdx < 0) return false
-    val t = snap(tIdx)
-    val covered = snap.take(tIdx).filter(_.startsWith("c-"))
-    val conf = spark.sessionState.newHadoopConf()
-    val gone = broadcast(
-      readLeg(spark, "gone", Seq(s"$dir/data/$t/gone")).select("vec_id"))
-    def exists(c: String, s0: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/data/$c/$s0")
-      p.getFileSystem(conf).exists(p)
+      spark: SparkSession, dir: String): Boolean =
+    core.retireOldestTombstone(spark, dir, "ivfIndexRetireOldestTombstone") {
+      (covered, gone) =>
+        val touched = core.touched(covered, gone)(c =>
+          core.at(spark, dir, c, "post").map(_.select(col("vec_id"))).toSeq)
+        covered.filter(touched.contains).map { c =>
+          val name = IndexCore.rewriteName(c)
+          val dst = IndexCore.dataDir(dir, name)
+          val live2 = core.at(spark, dir, c, "post").get
+            .select(col("vec_id"), col("v"), col("cell"))
+            .join(gone, Seq("vec_id"), "left_anti").persist()
+          val anyPost = !live2.isEmpty
+          if (anyPost)
+            live2.repartition(col("cell"))
+              .write.partitionBy("cell").parquet(s"$dst/post")
+          live2.unpersist(): Unit
+          val cents = core.at(spark, dir, c, "centroids")
+          cents.foreach(_.coalesce(1).write.parquet(s"$dst/centroids"))
+          c -> (if (anyPost || cents.nonEmpty) name else "")
+        }.toMap
     }
-    // containment probe — ONE job over every covered commit (a per-
-    // commit loop would pay one job's fixed overhead per commit)
-    val touched: Set[String] = {
-      val probes = covered.flatMap(c => Option.when(exists(c, "post"))(
-        readLeg(spark, "post", Seq(s"$dir/data/$c/post"))
-          .select(col("vec_id")).withColumn("cmt", lit(c))))
-      if (probes.isEmpty) Set.empty
-      else probes.reduce(_.unionByName(_))
-        .join(gone, Seq("vec_id"), "left_semi")
-        .select("cmt").distinct()
-        .collect().map(_.getString(0)).toSet
-    }
-    val rewrites = covered.flatMap { c =>
-      if (!touched.contains(c)) None
-      else {
-        val post = Option.when(exists(c, "post"))(
-          readLeg(spark, "post", Seq(s"$dir/data/$c/post"))
-            .select(col("vec_id"), col("v"), col("cell")))
-        val name = s"c-${java.util.UUID.randomUUID().toString.take(12)}"
-        val dst = s"$dir/data/$name"
-        val live2 = post.get.join(gone, Seq("vec_id"), "left_anti")
-          .persist()
-        val anyPost = !live2.isEmpty
-        if (anyPost)
-          live2.repartition(col("cell"))
-            .write.partitionBy("cell").parquet(s"$dst/post")
-        live2.unpersist(): Unit
-        val hasCents = exists(c, "centroids")
-        if (hasCents)
-          readLeg(spark, "centroids", Seq(s"$dir/data/$c/centroids"))
-            .coalesce(1).write.parquet(s"$dst/centroids")
-        Some(c -> (if (anyPost || hasCents) name else ""))
-      }
-    }.toMap
-    val published = cl.commit(spark) { now =>
-      if (now.filter(e => e.startsWith("c-") || e.startsWith("t-"))
-          != snap) None
-      else graft.store.CommitLog.unlessPinned(now)(Some(now.flatMap { e =>
-        if (e == t) Seq.empty
-        else rewrites.get(e) match {
-          case Some("") => Seq.empty // fully-taken-down commit dropped
-          case Some(n) => Seq(n)
-          case None => Seq(e)
-        }
-      }))
-    }
-    if (!published) {
-      for (n <- rewrites.values if n.nonEmpty) {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/data/$n")
-        p.getFileSystem(conf).delete(p, true): Unit
-      }
-      throw new IllegalStateException(
-        s"ivfIndexRetireOldestTombstone raced a concurrent writer at " +
-          s"$dir — staging dropped; re-run against the new live set")
-    }
-    true
-  }
 
   /** Retire up to `upTo` tombstones, oldest first. Returns the number
    *  retired.
    */
   def ivfIndexRetireTombstones(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
+      spark: SparkSession, dir: String,
       upTo: Int = Int.MaxValue): Int = {
     var n = 0
     while (n < upTo && ivfIndexRetireOldestTombstone(spark, dir)) n += 1
     n
-  }
-
-  /** ZERO-COPY BRANCH of the IVF index as of a published version —
-   *  the shared CommitLog.cloneAsOf shallow clone: postings and the
-   *  centroid leg hard-link, delivery keys branch with the data, and
-   *  the branch can rebuild (re-center) or append independently of
-   *  the source (e.g. trial a re-centering on a branch before
-   *  swapping production).
-   */
-  def ivfIndexCloneAsOf(
-      spark: org.apache.spark.sql.SparkSession, srcDir: String,
-      dstDir: String, version: Long): Unit =
-    ivfLog(srcDir).cloneAsOf(
-      spark, s"$srcDir/data", s"$dstDir/data", ivfLog(dstDir), version)
-
-  /** Delete index data dirs no published version references (run after
-   *  a rebuild once in-flight readers of the old generation drain).
-   */
-  /** Bound the MANIFEST history alone (CommitLog.vacuumVersions) —
-   *  version files only, safe continuously; see TextIndex.vacuumManifest.
-   */
-  def ivfIndexVacuumManifest(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      keep: Int): Unit =
-    ivfLog(dir).vacuumVersions(spark, keep)
-
-  def ivfIndexVacuum(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      keepVersions: Int = Int.MaxValue): Unit = {
-    val live = ivfLog(dir).latest(spark)._2.toSet
-    val dd = new org.apache.hadoop.fs.Path(s"$dir/data")
-    val fs = dd.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dd)) return
-    fs.listStatus(dd)
-      .filter(st => !live.contains(st.getPath.getName))
-      .foreach(st => fs.delete(st.getPath, true): Unit)
-    // bound the MANIFEST history too (CommitLog.vacuumVersions)
-    if (keepVersions != Int.MaxValue)
-      ivfLog(dir).vacuumVersions(spark, keepVersions)
   }
 
   /** Probe the stored postings: queries rank exactly within their
@@ -1060,9 +665,7 @@ object Similarity {
   def ivfIndexQuery(
       spark: org.apache.spark.sql.SparkSession, dir: String, queries: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
-    val cents = collectBounded(
-      readLeg(spark, "centroids", ivfLiveSub(spark, dir, "centroids")),
-      "the stored centroid set must stay index-small")
+    val cents = liveCentroids(spark, dir)
     val (ids, vecs) = (cents.map(_._1), cents.flatMap(_._2))
     val probes = queries.select(
       col("vec_id").as("q_id"), col("v").as("qv"),
@@ -1082,7 +685,7 @@ object Similarity {
     // per-commit roots each carry their own cell=N partition tree — a
     // multi-root partitioned read conflicts, so read per commit and
     // union (same leaf files either way)
-    val postings = readIvfPosts(spark, dir, perCommit = df =>
+    val postings = livePosts(spark, dir, df =>
       df.where(
         col("cell").isin(probedCells.map(java.lang.Long.valueOf): _*)))
       .getOrElse(throw new IllegalArgumentException(
@@ -1108,7 +711,7 @@ object Similarity {
    */
   def ivfIndexStats(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val posts = readIvfPosts(spark, dir)
+    val posts = livePosts(spark, dir, identity)
     require(posts.nonEmpty, s"no live commits in IVF index $dir")
     val cellSizes = posts.get
       .groupBy("cell").agg(count(lit(1)).as("n"))
@@ -1132,7 +735,7 @@ object Similarity {
    */
   def ivfVecIds(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    readIvfPosts(spark, dir)
+    livePosts(spark, dir, identity)
       .getOrElse(throw new IllegalArgumentException(
         s"requirement failed: no live posting commits in IVF index $dir"))
       .select("vec_id")
@@ -1162,18 +765,12 @@ object Similarity {
   def ivfIndexFsck(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cents = collectBounded(
-      readLeg(spark, "centroids", ivfLiveSub(spark, dir, "centroids")),
-      "the stored centroid set must stay index-small")
+    val cents = liveCentroids(spark, dir)
     val (ids, vecs) = (cents.map(_._1), cents.flatMap(_._2))
     val dim = cents.head._2.length
-    val posts = readIvfPosts(spark, dir)
+    val posts = livePosts(spark, dir, identity)
       .getOrElse(throw new IllegalArgumentException(
         s"no live posting commits in IVF index $dir"))
-    // coalesce: sum over zero rows is null — a fully-tombstoned (but
-    // live-commit-bearing) index must report (0, 0), not NPE
-    val isViol = (c: Column) =>
-      coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
     // ONE doc-grain pass computes all three: per-vec multiplicity via
     // the groupBy, assignment and dim checked per row and max'd up
     val r = posts
@@ -1199,15 +796,6 @@ object Similarity {
       .toDF("check", "violations", "audited")
   }
 
-  /** Publish/advance the IVF index's fsck verified watermark (see
-   *  [[graft.store.CommitLog.FsckPrefix]]); pair with [[ivfVersion]]
-   *  read BEFORE the battery.
-   */
-  def ivfPublishFsckWatermark(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      v: Long): Unit =
-    ivfLog(dir).publishFsckWatermark(spark, v)
-
   /** INCREMENTAL fsck — [[ivfIndexFsck]]'s invariants over only the
    *  posting commits that appeared after the verified watermark
    *  (`vec_unique` per fresh commit, `cell_assignment` /
@@ -1222,35 +810,13 @@ object Similarity {
    *  incremental premise fails — run [[ivfIndexFsck]] and republish.
    */
   def ivfFsckIncremental(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[graft.store.FsckScope] = {
-    import spark.implicits._
-    ivfLog(dir).fsckFreshEntries(spark).map { case (vNow, fresh) =>
-      val conf = spark.sessionState.newHadoopConf()
-      def exists(p: String): Boolean = {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
-      def legUnion(es: Seq[String], sub: String): Option[DataFrame] = {
-        val dfs = es.map(e => (e, s"$dir/data/$e/$sub"))
-          .filter(p => exists(p._2))
-          .map { case (e, p) =>
-            readLeg(spark, sub, Seq(p)).withColumn("cmt", lit(e)) }
-        Option.when(dfs.nonEmpty)(dfs.reduce(_.unionByName(_)))
-      }
-      val commits = fresh.filter(_.startsWith("c-"))
-      val tombs = fresh.filter(_.startsWith("t-"))
-      val isViol = (c: Column) =>
-        coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
-      val posts = legUnion(commits, "post")
-      val emptyIds = spark.emptyDataset[Long].toDF("doc_id")
-      val (dupRow, cellRow, dimRow, added) = posts match {
+      spark: SparkSession, dir: String): Option[FsckScope] =
+    core.fsckIncremental(spark, dir) { f =>
+      val (dupRow, cellRow, dimRow, added) = f.tagged(f.commits, "post") match {
         case None => (("vec_unique", 0L, 0L), ("cell_assignment", 0L, 0L),
-          ("dim_uniform", 0L, 0L), emptyIds)
+          ("dim_uniform", 0L, 0L), IndexCore.emptyIds(spark))
         case Some(p) =>
-          val cents = collectBounded(
-            readLeg(spark, "centroids", ivfLiveSub(spark, dir, "centroids")),
-            "the stored centroid set must stay index-small")
+          val cents = liveCentroids(spark, dir)
           val (ids, vecs) = (cents.map(_._1), cents.flatMap(_._2))
           val dim = cents.head._2.length
           val r = p
@@ -1274,24 +840,9 @@ object Similarity {
             p.select(col("vec_id").as("doc_id")).distinct()
               .localCheckpoint(true))
       }
-      val goneDf = legUnion(tombs, "gone")
-      val tombRow = goneDf match {
-        case None => ("tomb_wellformed", 0L, 0L)
-        case Some(g) =>
-          val r = g.groupBy("cmt", "vec_id").agg(count(lit(1)).as("m"))
-            .agg(isViol(col("m") > 1).as("viol"),
-              count(lit(1)).as("aud")).head()
-          ("tomb_wellformed", r.getLong(0), r.getLong(1))
-      }
-      graft.store.FsckScope(
-        vNow,
-        Seq(cellRow, dimRow, tombRow, dupRow),
-        added,
-        goneDf.map(_.select(col("vec_id").as("doc_id")).distinct()
-            .localCheckpoint(true))
-          .getOrElse(emptyIds))
+      (Seq(cellRow, dimRow, f.tombRow(_ => 0L), dupRow), added)
     }
-  }
+
 
   /** Hard-negative mining for contrastive training: per query, the
    *  top-k MOST similar candidates inside the band (loCos, hiCos) —

@@ -72,6 +72,15 @@ object CommitLog {
     java.security.MessageDigest.getInstance("SHA-1")
       .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
 
+  /** The `#txn:` ledger entry of a delivery key — the ONE validity
+   *  check every keyed verb shares: a key must be non-empty and carry
+   *  no newline (a version file lists one entry per line).
+   */
+  def txnEntry(key: String): String = {
+    require(key.nonEmpty && !key.contains('\n'), s"bad delivery key: $key")
+    "#txn:" + key
+  }
+
   /** SOURCE-IDENTITY marker for federated merges: a `#txn:` entry
    *  derived from the source's published snapshot (version + live
    *  entries), recorded in the DESTINATION's log by every mergeFrom

@@ -154,7 +154,7 @@ object IndexFsck {
       // POST-zero-norm-filter row count, never the raw diff size
       val addDApplied =
         if (addD.nonEmpty && !delivered(
-            graft.dedup.Dedup.indexHasDelivery(spark, dedupDir, _),
+            IndexCore.hasDelivery(spark, dedupDir, _),
             "dedup.add")) {
           // persistPairs passes through: in a persistPairs deployment
           // a repaired doc with NO pair report would let its near-dup
@@ -168,7 +168,7 @@ object IndexFsck {
         } else 0L
       val delDApplied =
         if (delD.nonEmpty && !delivered(
-            graft.dedup.Dedup.indexHasDelivery(spark, dedupDir, _),
+            IndexCore.hasDelivery(spark, dedupDir, _),
             "dedup.del")) {
           graft.dedup.Dedup.indexForgetDocs(spark, dedupDir, delD,
             key = key.map(_ + ".dedup.del"))
@@ -181,7 +181,7 @@ object IndexFsck {
         val delA = diffIds(vecIds, text, "ann∖text")
         val addAApplied =
           if (addA.nonEmpty && !delivered(
-              graft.sim.Similarity.ivfHasDelivery(spark, a, _),
+              IndexCore.hasDelivery(spark, a, _),
               "ann.add")) {
             // a zero-norm embedding has no cosine direction:
             // appending it would poison cell assignment with 0/0 —
@@ -203,7 +203,7 @@ object IndexFsck {
           } else 0L
         val delAApplied =
           if (delA.nonEmpty && !delivered(
-              graft.sim.Similarity.ivfHasDelivery(spark, a, _),
+              IndexCore.hasDelivery(spark, a, _),
               "ann.del")) {
             graft.sim.Similarity.ivfIndexForget(spark, a, delA,
               key = key.map(_ + ".ann.del"))
@@ -255,18 +255,18 @@ object IndexFsck {
   def certify(
       spark: SparkSession, textDir: String, dedupDir: String,
       annDir: Option[String] = None): DataFrame = {
-    val vT = graft.text.TextIndex.logVersion(spark, textDir)
-    val vD = graft.dedup.Dedup.indexVersion(spark, dedupDir)
-    val vA = annDir.map(a => graft.sim.Similarity.ivfVersion(spark, a))
+    val vT = IndexCore.version(spark, textDir)
+    val vD = IndexCore.version(spark, dedupDir)
+    val vA = annDir.map(a => IndexCore.version(spark, a))
     val rep = report(spark, textDir, dedupDir, annDir)
       .localCheckpoint(true)
     val bad = rep.agg(coalesce(sum("violations"), lit(0L)))
       .head().getLong(0)
     if (bad == 0L) {
-      graft.text.TextIndex.publishFsckWatermark(spark, textDir, vT)
-      graft.dedup.Dedup.indexPublishFsckWatermark(spark, dedupDir, vD)
+      IndexCore.publishFsckWatermark(spark, textDir, vT)
+      IndexCore.publishFsckWatermark(spark, dedupDir, vD)
       annDir.zip(vA).foreach { case (a, v) =>
-        graft.sim.Similarity.ivfPublishFsckWatermark(spark, a, v) }
+        IndexCore.publishFsckWatermark(spark, a, v) }
     }
     rep
   }
@@ -326,10 +326,10 @@ object IndexFsck {
         sA.toSeq.flatMap(_.rows.map { case (c, v, a) => ("ann", c, v, a) })
     val all = tierRows ++ crossRows
     if (all.forall(_._3 == 0L)) {
-      graft.text.TextIndex.publishFsckWatermark(spark, textDir, sT.vNow)
-      graft.dedup.Dedup.indexPublishFsckWatermark(spark, dedupDir, sD.vNow)
+      IndexCore.publishFsckWatermark(spark, textDir, sT.vNow)
+      IndexCore.publishFsckWatermark(spark, dedupDir, sD.vNow)
       annDir.zip(sA).foreach { case (a, s) =>
-        graft.sim.Similarity.ivfPublishFsckWatermark(spark, a, s.vNow) }
+        IndexCore.publishFsckWatermark(spark, a, s.vNow) }
     }
     all.toDF("tier", "check", "violations", "audited")
   }

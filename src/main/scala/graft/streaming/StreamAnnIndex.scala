@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sim.Similarity
+import graft.store.IndexCore
 
 /**
  * Streaming maintenance of the persisted IVF ANN index
@@ -20,13 +21,13 @@ import graft.sim.Similarity
  * Streaming replays an uncommitted batch after a crash with the SAME
  * deterministic id, so keying each commit's `#txn:` entry by that id
  * makes ingest idempotent — a replayed batch short-circuits on the
- * cheap `ivfHasDelivery` probe, a full fresh-checkpoint redelivery is
+ * cheap `IndexCore.hasDelivery` probe, a full fresh-checkpoint redelivery is
  * a version-preserving no-op, and the in-commit check still guards the
  * concurrent race. Delivery keys survive `ivfIndexRebuild` (the
  * re-centered index CONTAINS every folded batch, so a post-rebuild
  * replay must still be rejected — re-appending would double-insert).
  *
- * Found-vs-append is decided by `ivfVersion == 0`, NOT by batch id 0:
+ * Found-vs-append is decided by `IndexCore.version == 0`, NOT by batch id 0:
  * if the founding batch commits and the stream crashes before the
  * checkpoint advances, the replayed batch 0 is caught by its delivery
  * key; if it crashes before the commit, the replay re-founds — either
@@ -93,7 +94,7 @@ object StreamAnnIndex {
         val key = s"b$id"
         // one ledger snapshot answers both the delivery probe and
         // found-vs-append (the StreamRagPipeline discipline)
-        val (version, live) = Similarity.ivfLedger(s, indexDir)
+        val (version, live) = IndexCore.ledger(s, indexDir)
         if (!live.contains("#txn:" + key) && !b.isEmpty) {
           val batch = b.select("vec_id", "v")
           if (version == 0L)
@@ -103,7 +104,7 @@ object StreamAnnIndex {
             Similarity.ivfIndexAppend(s, indexDir, batch, key = Some(key))
           // manifest retention — version files only, safe per batch
           if (keepVersions != Int.MaxValue)
-            Similarity.ivfIndexVacuumManifest(s, indexDir, keepVersions)
+            IndexCore.vacuumManifest(s, indexDir, keepVersions)
           // opt-in drift policy: measure, re-train past the threshold.
           // A lost publish race (external writer) is fine — the next
           // batch re-measures. Superseded dirs are NOT vacuumed here:

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.Dedup
+import graft.store.IndexCore
 import graft.text.TextIndex
 
 /**
@@ -44,7 +45,7 @@ import graft.text.TextIndex
  *    split it started from (contract: don't run full compactions OR
  *    tombstone retirements on the dedup index while a crawl batch
  *    may be mid-replay — both physically drop the tombstoned rows
- *    the probe re-reads; [[graft.dedup.Dedup.indexPin]] turns the
+ *    the probe re-reads; [[IndexCore.pin]] turns the
  *    contract into a checkable lease — pinned folds/retirement
  *    refuse loudly);
  *  - every mutation is guarded by its own delivery key.
@@ -87,7 +88,7 @@ object StreamCrawlPipeline {
    */
   def release(
       spark: org.apache.spark.sql.SparkSession, dedupDir: String): Unit =
-    Dedup.indexUnpin(spark, dedupDir, LeaseName)
+    IndexCore.unpin(spark, dedupDir, LeaseName)
 
   def maintain(
       docsStream: DataFrame, dedupDir: String, textDir: String,
@@ -101,7 +102,7 @@ object StreamCrawlPipeline {
     // may replay. Pinned before the stream starts — idempotent across
     // restarts, held across crashes BY DESIGN — released explicitly
     // via [[release]] once the checkpoint is decommissioned.
-    Dedup.indexPin(docsStream.sparkSession, dedupDir, LeaseName)
+    IndexCore.pin(docsStream.sparkSession, dedupDir, LeaseName)
     docsStream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -140,12 +141,12 @@ object StreamCrawlPipeline {
 
           // ---- fresh leg: the classic gate-then-ingest path ----
           if (allFresh || !fresh.isEmpty) {
-            if (!Dedup.indexHasDelivery(s, dedupDir, key))
+            if (!IndexCore.hasDelivery(s, dedupDir, key))
               Dedup.indexCheckAndIngest(
                 s, dedupDir, fresh, idCol, textCol,
                 threshold, deliveryKey = Some(key),
                 persistPairs = true): Unit
-            if (!TextIndex.hasDelivery(s, textDir, key)) {
+            if (!IndexCore.hasDelivery(s, textDir, key)) {
               // survivors from THIS BATCH'S persisted report (committed
               // just above or by a pre-crash attempt) — identical on
               // first run and on replay, and bounded by the batch
@@ -177,8 +178,8 @@ object StreamCrawlPipeline {
             // forgetDocs needs a docs leg to exist — the skip is
             // replay-safe because the tadd guard above covers the
             // only ordering that could go wrong)
-            if (!TextIndex.hasDelivery(s, textDir, s"$key.up.tdel") &&
-                !TextIndex.hasDelivery(s, textDir, s"$key.up.tadd") &&
+            if (!IndexCore.hasDelivery(s, textDir, s"$key.up.tdel") &&
+                !IndexCore.hasDelivery(s, textDir, s"$key.up.tadd") &&
                 TextIndex.liveShardCount(s, textDir) > 0) {
               val ids = refetch.select(col(idCol).cast("long"))
                 .distinct().limit(65537)
@@ -191,7 +192,7 @@ object StreamCrawlPipeline {
             }
             // ...and the gate's survivors ingest the new text (from
             // the upsert's persisted report — replay-identical)
-            if (!TextIndex.hasDelivery(s, textDir, s"$key.up.tadd")) {
+            if (!IndexCore.hasDelivery(s, textDir, s"$key.up.tadd")) {
               val dups = Dedup
                 .indexPairsForDelivery(s, dedupDir, s"$key.up.add")
                 .select(col("b_id").as(idCol)).distinct()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.Dedup
+import graft.store.IndexCore
 
 /**
  * Streaming maintenance of the persisted LSH dedup index
@@ -18,7 +19,7 @@ import graft.dedup.Dedup
  *
  * Exactly-once is the same contract as [[StreamTextIndex]] /
  * [[StreamAnnIndex]]: the `#txn:b<batchId>` delivery key makes a
- * crash-recovered replay short-circuit on the cheap `indexHasDelivery`
+ * crash-recovered replay short-circuit on the cheap `IndexCore.hasDelivery`
  * probe, and a full fresh-checkpoint redelivery is a
  * version-preserving no-op. Because the pair REPORT rides the shard's
  * commit, exactly-once extends to the report itself: a replayed batch
@@ -58,13 +59,13 @@ object StreamDedupIndex {
       .foreachBatch { (b: DataFrame, id: Long) =>
         val s = b.sparkSession
         val key = s"b$id"
-        if (!Dedup.indexHasDelivery(s, indexDir, key) && !b.isEmpty) {
+        if (!IndexCore.hasDelivery(s, indexDir, key) && !b.isEmpty) {
           Dedup.indexCheckAndIngest(
             s, indexDir, b.select(idCol, textCol), idCol, textCol,
             threshold, deliveryKey = Some(key), persistPairs = true): Unit
           // manifest retention — version files only, safe per batch
           if (keepVersions != Int.MaxValue)
-            Dedup.indexVacuumManifest(s, indexDir, keepVersions)
+            IndexCore.vacuumManifest(s, indexDir, keepVersions)
         }
       }
       .start()

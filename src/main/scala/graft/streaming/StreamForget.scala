@@ -140,7 +140,7 @@ object StreamForget {
       annIdx: Option[String] = None,
       includeNearDups: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    require(key.nonEmpty && !key.contains('\n'), s"bad delivery key: $key")
+    graft.store.CommitLog.txnEntry(key): Unit
     require(!includeNearDups || dedupIdx.nonEmpty,
       "includeNearDups expands from the dedup pair ledgers — pass dedupIdx")
     // SELF-MANAGED MID-REPLAY LEASE: between the first tombstoning leg
@@ -158,19 +158,19 @@ object StreamForget {
     // races the window defers (IllegalStateException, the counted
     // class) instead of corrupting replay.
     def pinAuthority(): Unit = dedupIdx match {
-      case Some(d) => graft.dedup.Dedup.indexPin(spark, d, s"fwa:$key")
+      case Some(d) => graft.store.IndexCore.pin(spark, d, s"fwa:$key")
       case None => annIdx.foreach(a =>
-        graft.sim.Similarity.ivfIndexPin(spark, a, s"fwa:$key"))
+        graft.store.IndexCore.pin(spark, a, s"fwa:$key"))
     }
     def unpinAuthority(): Unit = dedupIdx match {
-      case Some(d) => graft.dedup.Dedup.indexUnpin(spark, d, s"fwa:$key")
+      case Some(d) => graft.store.IndexCore.unpin(spark, d, s"fwa:$key")
       case None => annIdx.foreach(a =>
-        graft.sim.Similarity.ivfIndexUnpin(spark, a, s"fwa:$key"))
+        graft.store.IndexCore.unpin(spark, a, s"fwa:$key"))
     }
     // completion marker: the text leg is last, so its key being
     // ledgered means every leg already applied — release any pin a
     // crashed attempt left and probe as done
-    if (graft.text.TextIndex.hasDelivery(spark, textIdx, s"$key.text")) {
+    if (graft.store.IndexCore.hasDelivery(spark, textIdx, s"$key.text")) {
       unpinAuthority()
       return 0L
     }
@@ -198,13 +198,13 @@ object StreamForget {
     // past this block.
     val allIds: Seq[Long] = try dedupIdx match {
       case Some(dir)
-          if graft.dedup.Dedup.indexHasDelivery(spark, dir, s"$key.dedup") =>
+          if graft.store.IndexCore.hasDelivery(spark, dir, s"$key.dedup") =>
         // the dedup leg already committed: ITS keyed tombstone is the
         // authoritative resolved set — never re-derive on a replay
         bounded(graft.dedup.Dedup
           .indexGoneForDelivery(spark, dir, s"$key.dedup"), "replay")
       case None if annIdx.exists(a =>
-          graft.sim.Similarity.ivfHasDelivery(spark, a, s"$key.ann")) =>
+          graft.store.IndexCore.hasDelivery(spark, a, s"$key.ann")) =>
         // no dedup leg targeted: the ANN leg ran FIRST, so its keyed
         // tombstone is the authoritative record — re-resolving the
         // predicate on replay would drift if matching content landed
@@ -255,17 +255,17 @@ object StreamForget {
       // above and that call would be tombstoned in the text leg only
       // (the dedup/ANN legs were already skipped as empty), a
       // permanent cross-index divergence no redelivery could repair.
-      graft.text.TextIndex.ledgerDelivery(spark, textIdx, s"$key.text")
+      graft.store.IndexCore.ledgerDelivery(spark, textIdx, s"$key.text")
       unpinAuthority()
       return 0L
     }
     dedupIdx.foreach { dir =>
-      if (!graft.dedup.Dedup.indexHasDelivery(spark, dir, s"$key.dedup"))
+      if (!graft.store.IndexCore.hasDelivery(spark, dir, s"$key.dedup"))
         graft.dedup.Dedup.indexForgetDocs(spark, dir, allIds,
           key = Some(s"$key.dedup"))
     }
     annIdx.foreach { dir =>
-      if (!graft.sim.Similarity.ivfHasDelivery(spark, dir, s"$key.ann"))
+      if (!graft.store.IndexCore.hasDelivery(spark, dir, s"$key.ann"))
         graft.sim.Similarity.ivfIndexForget(spark, dir, allIds,
           key = Some(s"$key.ann"))
     }
@@ -311,7 +311,7 @@ object StreamForget {
             "stream (a tombstone is a bounded driver-side set)")
         if (ids.nonEmpty) {
           textIdx.foreach { dir =>
-            if (!graft.text.TextIndex.hasDelivery(s, dir, key)) {
+            if (!graft.store.IndexCore.hasDelivery(s, dir, key)) {
               // forgetDocs stale-aborts when the live c-/t- set moved
               // between its delta computation and its publish — since
               // round 13 that includes ANY concurrent shard ingest
@@ -322,7 +322,7 @@ object StreamForget {
               // case the racer committed OUR key. Persistent loss
               // after the bound is a genuine wedge and fails loudly.
               var attempts = 0
-              var done = graft.text.TextIndex.hasDelivery(s, dir, key)
+              var done = graft.store.IndexCore.hasDelivery(s, dir, key)
               while (!done) {
                 attempts += 1
                 try {
@@ -331,7 +331,7 @@ object StreamForget {
                   done = true
                 } catch {
                   case e: IllegalStateException =>
-                    done = graft.text.TextIndex.hasDelivery(s, dir, key)
+                    done = graft.store.IndexCore.hasDelivery(s, dir, key)
                     if (!done && attempts >= 5) throw e
                     if (!done)
                       // randomized backoff: without it all 5 attempts
@@ -353,7 +353,7 @@ object StreamForget {
             }
           }
           dedupIdx.foreach { dir =>
-            if (!graft.dedup.Dedup.indexHasDelivery(s, dir, key)) {
+            if (!graft.store.IndexCore.hasDelivery(s, dir, key)) {
               // NO retry wrapper here, BY DESIGN (asymmetric with the
               // text leg above): a dedup tombstone is a pure gone-id
               // set with no corpus-level deltas, so indexForgetDocs
@@ -373,7 +373,7 @@ object StreamForget {
             }
           }
           annIdx.foreach { dir =>
-            if (!graft.sim.Similarity.ivfHasDelivery(s, dir, key)) {
+            if (!graft.store.IndexCore.hasDelivery(s, dir, key)) {
               // NO retry wrapper, same reasoning as the dedup leg: an
               // IVF tombstone is a pure gone-vec-id set (no deltas, no
               // stale-abort); only a raced redelivery of this key can

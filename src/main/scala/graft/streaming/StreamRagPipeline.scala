@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.Dedup
 import graft.sim.Similarity
+import graft.store.IndexCore
 import graft.text.TextIndex
 
 /**
@@ -40,7 +41,7 @@ import graft.text.TextIndex
  * [[Dedup.indexKnownIds]] (log-position cutoff + tombstone-blind, so
  * the split is replay-stable — contract: no full compactions or
  * tombstone retirements on the dedup index while a batch may be
- * mid-replay; ENFORCEABLE via [[Dedup.indexPin]] — a live pin makes
+ * mid-replay; ENFORCEABLE via [[IndexCore.pin]] — a live pin makes
  * those verbs refuse loudly instead of trusting prose).
  * Re-fetched docs UPSERT all three
  * tiers: the dedup index replaces their signatures in place (gated
@@ -85,7 +86,7 @@ object StreamRagPipeline {
    */
   def release(
       spark: org.apache.spark.sql.SparkSession, dedupDir: String): Unit =
-    Dedup.indexUnpin(spark, dedupDir, LeaseName)
+    IndexCore.unpin(spark, dedupDir, LeaseName)
 
   def maintain(
       docsStream: DataFrame, dedupDir: String, textDir: String,
@@ -97,7 +98,7 @@ object StreamRagPipeline {
     // SELF-REGISTERED MID-REPLAY LEASE (the crawl pipeline's
     // discipline): pinned before the stream starts, held across
     // crashes, released via [[release]] once the checkpoint is done
-    Dedup.indexPin(docsStream.sparkSession, dedupDir, LeaseName)
+    IndexCore.pin(docsStream.sparkSession, dedupDir, LeaseName)
     docsStream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -136,7 +137,7 @@ object StreamRagPipeline {
             try {
             val freshN = if (allFresh) bN else fresh.count()
             if (freshN > 0) {
-            if (!Dedup.indexHasDelivery(s, dedupDir, key))
+            if (!IndexCore.hasDelivery(s, dedupDir, key))
               Dedup.indexCheckAndIngest(
                 s, dedupDir, fresh, idCol, textCol,
                 threshold, deliveryKey = Some(key), persistPairs = true): Unit
@@ -145,10 +146,10 @@ object StreamRagPipeline {
             // bounded by the batch; MATERIALIZED ONCE and shared by both
             // derived legs (each leg would otherwise re-read the pair
             // report and re-run the anti-join)
-            val needText = !TextIndex.hasDelivery(s, textDir, key)
+            val needText = !IndexCore.hasDelivery(s, textDir, key)
             // one ANN ledger snapshot answers BOTH "already delivered?"
             // and "founded yet?" — the old path resolved the log twice
-            val (annVersion, annLive) = Similarity.ivfLedger(s, annDir)
+            val (annVersion, annLive) = IndexCore.ledger(s, annDir)
             val needAnn = !annLive.contains("#txn:" + key)
             if (needText || needAnn) {
               val dups = Dedup.indexPairsForDelivery(s, dedupDir, key)
@@ -197,13 +198,13 @@ object StreamRagPipeline {
               // text: superseded postings retire for EVERY re-fetched
               // id (tdel never runs after tadd committed; skip while
               // the text index is still empty — nothing to retire)
-              if (!TextIndex.hasDelivery(s, textDir, s"$key.up.tdel") &&
-                  !TextIndex.hasDelivery(s, textDir, s"$key.up.tadd") &&
+              if (!IndexCore.hasDelivery(s, textDir, s"$key.up.tdel") &&
+                  !IndexCore.hasDelivery(s, textDir, s"$key.up.tadd") &&
                   TextIndex.liveShardCount(s, textDir) > 0)
                 TextIndex.forgetDocs(s, textDir, ids,
                   key = Some(s"$key.up.tdel"))
               // ANN: superseded vectors retire likewise (pure gone-set)
-              val (annV2, annLive2) = Similarity.ivfLedger(s, annDir)
+              val (annV2, annLive2) = IndexCore.ledger(s, annDir)
               if (!annLive2.contains(s"#txn:$key.up.adel") &&
                   !annLive2.contains(s"#txn:$key.up.aadd") &&
                   annV2 > 0L)
@@ -212,8 +213,8 @@ object StreamRagPipeline {
               // survivors of the upsert's gate (from ITS persisted
               // report — replay-identical) carry the new content into
               // both retrieval tiers
-              val needT2 = !TextIndex.hasDelivery(s, textDir, s"$key.up.tadd")
-              val (annV3, annLive3) = Similarity.ivfLedger(s, annDir)
+              val needT2 = !IndexCore.hasDelivery(s, textDir, s"$key.up.tadd")
+              val (annV3, annLive3) = IndexCore.ledger(s, annDir)
               val needA2 = !annLive3.contains(s"#txn:$key.up.aadd")
               if (needT2 || needA2) {
                 val dups2 = Dedup

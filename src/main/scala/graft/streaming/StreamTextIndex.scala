@@ -63,7 +63,7 @@ object StreamTextIndex {
       .foreachBatch { (b: DataFrame, id: Long) =>
         val s = b.sparkSession
         val key = s"b$id"
-        if (!graft.text.TextIndex.hasDelivery(s, indexDir, key) &&
+        if (!graft.store.IndexCore.hasDelivery(s, indexDir, key) &&
             !b.isEmpty) {
           graft.text.TextIndex.ingestShard(
             s, indexDir, b.select(idCol, textCol), idCol, textCol,
@@ -75,7 +75,7 @@ object StreamTextIndex {
           // at a 10 s trigger) — version-file-only vacuum is safe per
           // batch (live set, data dirs, delivery keys untouched)
           if (keepVersions != Int.MaxValue)
-            graft.text.TextIndex.vacuumManifest(s, indexDir, keepVersions)
+            graft.store.IndexCore.vacuumManifest(s, indexDir, keepVersions)
         }
       }
       .start()

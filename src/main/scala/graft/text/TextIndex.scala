@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.store.{IndexCore, IndexLeg}
+import IndexCore.{dataDir, isViol, legPath}
+
 /**
  * PERSISTED INVERTED TEXT INDEX — the full-text-search sibling of the
  * persisted dedup and IVF indexes: a corpus too big to re-scan per
@@ -81,62 +84,31 @@ object TextIndex {
     val Minimal = LegProfile(pos = false, del = false, docs = false)
   }
 
-  private def clog(dir: String) =
-    new graft.store.CommitLog(s"$dir/_manifests")
-
-  /** Pinned ON-DISK schema per index leg — this module writes every
-   *  leg, so the shape is static truth. Passed to every leg read via
-   *  [[readLeg]] so Spark skips the per-read footer-inference job
-   *  (measured ~40-100 ms each; a probe battery pays it dozens of
-   *  times). Bucket columns (tb/db/fb) are LONG (pmod(xxhash64)), and
-   *  the schema resolves them whether they sit in partition dirs
-   *  (bucketed layout) or as data columns (the compact-to-plain empty
-   *  edge case) — Spark matches user-schema fields by name on both
-   *  sides.
+  /** The index's legs, declared once — this module writes every leg,
+   *  so the on-disk shape is static truth. Bucket columns (tb/db/fb)
+   *  are LONG (pmod(xxhash64)); the doc-grain legs and `del` are
+   *  bucket-partitioned, the token/corpus-grain legs and the tombstone
+   *  legs (gone, dvocab, dstats) are plain.
    */
-  private val legSchemas: Map[String, org.apache.spark.sql.types.StructType] = {
+  private val core = {
     import org.apache.spark.sql.types._
-    Map(
-      "post" -> StructType(Seq(
-        StructField("token", StringType), StructField("doc_id", LongType),
-        StructField("tf", LongType), StructField("dl", LongType),
-        StructField("tb", LongType))),
-      "pos" -> StructType(Seq(
-        StructField("token", StringType), StructField("doc_id", LongType),
-        StructField("positions", ArrayType(IntegerType)),
-        StructField("tb", LongType))),
-      "vocab" -> StructType(Seq(
-        StructField("token", StringType), StructField("df", LongType))),
-      "stats" -> StructType(Seq(
-        StructField("nd", LongType), StructField("tl", LongType))),
-      "docs" -> StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("fb", LongType))),
-      "del" -> StructType(Seq(
-        StructField("variant", StringType), StructField("token", StringType),
-        StructField("db", LongType))),
-      "gone" -> StructType(Seq(StructField("doc_id", LongType))),
-      "dvocab" -> StructType(Seq(
-        StructField("token", StringType), StructField("df", LongType))),
-      "dstats" -> StructType(Seq(
-        StructField("nd", LongType), StructField("tl", LongType))))
+    new IndexCore("doc_id", Map(
+      "post" -> IndexLeg(Some("tb"), "token" -> StringType,
+        "doc_id" -> LongType, "tf" -> LongType, "dl" -> LongType,
+        "tb" -> LongType),
+      "pos" -> IndexLeg(Some("tb"), "token" -> StringType,
+        "doc_id" -> LongType, "positions" -> ArrayType(IntegerType),
+        "tb" -> LongType),
+      "docs" -> IndexLeg(Some("fb"), "doc_id" -> LongType,
+        "text" -> StringType, "fb" -> LongType),
+      "del" -> IndexLeg(Some("db"), "variant" -> StringType,
+        "token" -> StringType, "db" -> LongType),
+      "vocab" -> IndexLeg(None, "token" -> StringType, "df" -> LongType),
+      "stats" -> IndexLeg(None, "nd" -> LongType, "tl" -> LongType),
+      "gone" -> IndexLeg(None, "doc_id" -> LongType),
+      "dvocab" -> IndexLeg(None, "token" -> StringType, "df" -> LongType),
+      "dstats" -> IndexLeg(None, "nd" -> LongType, "tl" -> LongType)))
   }
-
-  /** Leg read with the pinned schema (leg name = last path segment).
-   *  PER-ROOT reads unioned by name, never one multi-root read: legs
-   *  are hive-partitioned (tb/db/fb) except the empty-compaction
-   *  plain rewrite, and Spark's partition-structure inference across
-   *  roots with mixed layouts throws CONFLICTING_DIRECTORY_STRUCTURES
-   *  before the pinned schema is even consulted. A per-root read
-   *  keeps the footer-inference skip AND scopes directory discovery
-   *  to one commit's uniform layout.
-   */
-  private def readLeg(
-      spark: SparkSession, leg: String, paths: Seq[String]): DataFrame = {
-    val s = legSchemas(leg)
-    paths.map(p => spark.read.schema(s).parquet(p)).reduce(_.unionByName(_))
-  }
-
   /** Empty result frame with the given (name, type) columns — the
    *  shared zero-rows constructor behind every probe whose candidate
    *  stage can legitimately come up empty (fuzzy suggest with an empty
@@ -152,133 +124,47 @@ object TextIndex {
         org.apache.spark.sql.types.StructField(n, t)
       }))
 
-  private def liveSub(
-      spark: SparkSession, dir: String, sub: String): Seq[String] = {
-    val conf = spark.sessionState.newHadoopConf()
-    clog(dir).latest(spark)._2.filter(_.startsWith("c-"))
-      .map(d => s"$dir/data/$d/$sub")
-      .filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
-  }
-
-  /** Live TOMBSTONE commits (`t-` prefix): each is one [[forgetDocs]]
-   *  call's (gone doc ids, exact negative vocab/stats deltas). They
-   *  ride the same commit log as shard commits — one version-file
-   *  create makes a deletion visible atomically across every leg —
-   *  and a FULL compaction folds them away (physical erasure follows
-   *  at vacuum, exactly the store's forget discipline).
+  /** A doc-grain leg (post/pos/docs) across the live shard commits
+   *  with tombstoned docs dropped — order-scoped
+   *  ([[IndexCore.scoped]]), typed-empty when no commit
+   *  holds the leg. Every query path reads postings through here, so a
+   *  deleted doc can never resurrect in search, phrase, proximity,
+   *  containment, or forward-store results.
    */
-  private def tombDirs(spark: SparkSession, dir: String): Seq[String] =
-    clog(dir).latest(spark)._2.filter(_.startsWith("t-"))
+  private def docGrain(
+      spark: SparkSession, dir: String, leg: String): DataFrame =
+    core.scoped(spark, dir, leg, Seq("doc_id"), identity)
+      .getOrElse(core.empty(spark, leg))
 
-  /** The live tombstoned doc ids as one (doc_id) frame — None when no
-   *  tombstones are live, so the common no-deletions case adds ZERO
-   *  plan nodes to every read path.
+  /** An aggregate leg (vocab/stats) across live commits INCLUDING the
+   *  live tombstones' delta rows (negative df / nd / tl) — a [[forgetDocs]]
+   *  call's exact deltas make `sum` over these rows equal the
+   *  never-ingested-those-docs value, so BM25 idf/avgdl are exact
+   *  after a delete, not stale-until-compaction. A token whose folded
+   *  df reaches 0 must be dropped by the caller (`where df > 0`).
    */
-  private def goneDocs(
-      spark: SparkSession, dir: String): Option[DataFrame] = {
-    val ts = tombDirs(spark, dir)
-    Option.when(ts.nonEmpty)(
-      readLeg(spark, "gone", ts.map(t => s"$dir/data/$t/gone"))
-        .select("doc_id"))
-  }
-
-  /** Union a DOC-GRAIN leg (post/pos/docs) across live shard commits
-   *  with tombstoned docs dropped — a broadcast anti-join against the
-   *  gone set (bounded: tombstones accumulate only between
-   *  compactions; a full fold retires them, so the broadcast never
-   *  grows with delete history). Every query path reads postings
-   *  through here, so a deleted doc can never resurrect in search,
-   *  phrase, proximity, containment, or forward-store results.
-   *
-   *  A tombstone is ORDER-SCOPED: it covers exactly the shard commits
-   *  that PRECEDE it in the commit log's (insertion-ordered) live
-   *  list. A doc re-ingested AFTER its takedown (the [[upsertDocs]]
-   *  add leg, or any later re-crawl of the same id) lands in a commit
-   *  after the tombstone and is served normally — a global gone set
-   *  would silently kill the fresh rows too (re-ingest "succeeds" but
-   *  never answers), the silent-loss trap this scoping exists to
-   *  close. Commits are read in groups sharing the same
-   *  subsequent-tombstone set — at most (#live tombstones + 1) groups,
-   *  each paying one broadcast anti-join; zero extra plan nodes when
-   *  no tombstones are live.
-   */
-  private def readDocGrain(
-      spark: SparkSession, dir: String, sub: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val ordered = clog(dir).latest(spark)._2
-      .filter(e => e.startsWith("c-") || e.startsWith("t-"))
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).exists(hp)
-    }
-    // each commit's applicable tombstones = the t- entries AFTER it
-    val withScope: Seq[(String, Seq[String])] = ordered.zipWithIndex
-      .filter(_._1.startsWith("c-"))
-      .map { case (c, i) =>
-        (s"$dir/data/$c/$sub",
-          ordered.drop(i + 1).filter(_.startsWith("t-")))
-      }
-      .filter(p => exists(p._1))
-    withScope.groupBy(_._2).map { case (tombs, roots) =>
-      val base = readLeg(spark, sub, roots.map(_._1))
-      if (tombs.isEmpty) base
-      else {
-        val gone = readLeg(spark, "gone", tombs.map(t => s"$dir/data/$t/gone"))
-          .select("doc_id")
-        base.join(broadcast(gone), Seq("doc_id"), "left_anti")
-      }
-    }.reduce(_.unionByName(_))
-  }
-
-  /** Vocab rows ACROSS live commits INCLUDING tombstone delta rows
-   *  (negative df) — callers fold `sum(df)` exactly as before and the
-   *  deltas make the fold equal the never-ingested-those-docs df; a
-   *  token whose folded df reaches 0 must be dropped by the caller
-   *  (`where df > 0`) so fully-deleted tokens stop suggesting.
-   */
-  private def vocabRows(spark: SparkSession, dir: String): DataFrame = {
-    val base = readLeg(spark, "vocab", liveSub(spark, dir, "vocab"))
-    val ts = tombDirs(spark, dir)
+  private def withDeltas(
+      spark: SparkSession, dir: String, leg: String): DataFrame = {
+    val base = core.readLive(spark, dir, leg)
+    val ts = IndexCore.live(spark, dir).filter(_.startsWith("t-"))
     if (ts.isEmpty) base
     else base.unionByName(
-      readLeg(spark, "dvocab", ts.map(t => s"$dir/data/$t/dvocab")))
+      core.read(spark, s"d$leg", ts.map(legPath(dir, _, s"d$leg"))))
   }
+  private def vocabRows(spark: SparkSession, dir: String): DataFrame =
+    withDeltas(spark, dir, "vocab")
+  private def statsRows(spark: SparkSession, dir: String): DataFrame =
+    withDeltas(spark, dir, "stats")
 
-  /** Stats rows including tombstone deltas (negative nd/tl) — callers
-   *  `agg(sum)` exactly as before; post-delete (nd, tl) equal the
-   *  never-ingested values, so BM25 idf/avgdl are EXACT after a
-   *  delete, not stale-until-compaction.
-   */
-  private def statsRows(spark: SparkSession, dir: String): DataFrame = {
-    val base = readLeg(spark, "stats", liveSub(spark, dir, "stats"))
-    val ts = tombDirs(spark, dir)
-    if (ts.isEmpty) base
-    else base.unionByName(
-      readLeg(spark, "dstats", ts.map(t => s"$dir/data/$t/dstats")))
-  }
-
-  /** True iff EVERY live shard commit carries the optional leg `sub` —
-   *  the uniformity probe behind the pruned/positional/forward paths
-   *  (a partial leg would silently answer from part of the corpus;
-   *  all-or-nothing keeps wrong answers impossible). Driver-side
-   *  metadata: one log read + one existence probe per live commit.
-   */
-  private def legOnAllCommits(
-      spark: SparkSession, dir: String, sub: String): Boolean = {
-    val commits = clog(dir).latest(spark)._2.filter(_.startsWith("c-"))
-    commits.nonEmpty && liveSub(spark, dir, sub).size == commits.size
-  }
-
-  /** Leg-presence probes callers route on: a pre-leg index answers
-   *  phrase/fuzzy/forward reads by the corpus-parameter paths instead.
+  /** Leg-presence probes callers route on (every live commit carries
+   *  the leg — a partial leg would silently answer from part of the
+   *  corpus): a pre-leg index answers phrase/fuzzy/forward reads by the
+   *  corpus-parameter paths instead.
    */
   def hasPositionalLeg(spark: SparkSession, dir: String): Boolean =
-    legOnAllCommits(spark, dir, "pos")
+    core.onAllCommits(spark, dir, "pos")
   def hasDocsLeg(spark: SparkSession, dir: String): Boolean =
-    legOnAllCommits(spark, dir, "docs")
+    core.onAllCommits(spark, dir, "docs")
 
   /** FORWARD-STORE POINT LOOKUP: (doc_id, text) for a bounded id set,
    *  from the index's own `docs` legs — fb partition-directory pruning
@@ -299,7 +185,7 @@ object TextIndex {
     val buckets = ids.toDF("i")
       .select(hashBucket(col("i"))).distinct()
       .collect().map(_.getLong(0)).toSeq
-    readDocGrain(spark, dir, "docs")
+    docGrain(spark, dir, "docs")
       .where(col("fb").isin(buckets: _*) && col("doc_id").isin(ids: _*))
       .select(col("doc_id"), col("text"))
   }
@@ -350,70 +236,12 @@ object TextIndex {
     all.toSeq.sorted
   }
 
-  /** True iff a shard with this delivery key is already committed —
-   *  the cheap up-front probe a CONSUMER makes before paying the
-   *  tokenize+stage cost of [[ingestShard]] (a redelivered shard would
-   *  lose to its own `#txn:` key anyway; the in-commit check still
-   *  guards the concurrent race). The streaming maintainer's replay
-   *  path depends on this: a crash-recovered micro-batch re-arrives
-   *  with the SAME batch id, and this probe turns the replay into a
-   *  no-op instead of an exception.
-   */
-  def hasDelivery(spark: SparkSession, dir: String, key: String): Boolean =
-    clog(dir).latest(spark)._2.contains("#txn:" + key)
-
-  /** REPLAY PIN (mid-replay lease): while any pin is live, compaction
-   *  folds, tombstone retirement, and the direct rebuild REFUSE loudly
-   *  — they consume or reposition the commits whose layout a
-   *  mid-replay pipeline's membership cut depends on. Ingest, forget,
-   *  upsert, and every read path stay allowed. The pin is a ledger
-   *  entry (`#pin:<name>`), so it survives restart and folds; release
-   *  with [[unpin]]. Idempotent both ways.
-   */
-  def pin(spark: SparkSession, dir: String, name: String): Unit =
-    clog(dir).pin(spark, name)
-  def unpin(spark: SparkSession, dir: String, name: String): Unit =
-    clog(dir).unpin(spark, name)
-  def pins(spark: SparkSession, dir: String): Seq[String] =
-    clog(dir).pins(spark)
-
-  /** The loud half of the pin contract — throws IllegalStateException
-   *  (the "re-run later" class: StreamForget's opportunistic
-   *  retirement defers and counts it, a takedown stream never fails)
-   *  when a lease is live.
-   */
-  private def requireUnpinned(
-      spark: SparkSession, dir: String, what: String): Unit =
-    clog(dir).requireUnpinned(spark, s"$what on $dir")
-
-  /** Ledger a delivery key with NO data commit — the empty-hit
-   *  discipline [[forgetDocs]] applies when nothing live matches,
-   *  exposed for COMPOSITE verbs (the cross-index takedown's
-   *  empty-resolution path) that must mark completion WITHOUT
-   *  re-evaluating their predicate: a store that moved since the
-   *  verb's one resolution would resolve differently, and acting on
-   *  the re-resolution in only one leg leaves a permanent cross-index
-   *  divergence. Idempotent — an already-ledgered key is a no-op.
-   */
-  def ledgerDelivery(spark: SparkSession, dir: String, key: String): Unit = {
-    require(key.nonEmpty && !key.contains('\n'), s"bad delivery key: $key")
-    val t = "#txn:" + key
-    clog(dir).commit(spark)(now =>
-      if (now.contains(t)) None else Some(now :+ t)): Unit
-  }
-
   /** Number of live shard commits (compaction-trigger input: the read
    *  path unions one parquet root per live commit, so this is also the
    *  query-planning fan-in). Driver-side metadata only.
    */
   def liveShardCount(spark: SparkSession, dir: String): Int =
-    clog(dir).latest(spark)._2.count(_.startsWith("c-"))
-
-  /** Latest published version (0 = never written) — the cheap
-   *  "did anything commit?" probe a redelivery test pins on.
-   */
-  def version(spark: SparkSession, dir: String): Long =
-    clog(dir).latest(spark)._1
+    IndexCore.live(spark, dir).count(_.startsWith("c-"))
 
   /** Ingest one document shard: stage postings (dl denormalized),
    *  positional postings, shard vocabulary, the vocabulary's
@@ -440,16 +268,7 @@ object TextIndex {
       spark: SparkSession, dir: String, docs: DataFrame,
       idCol: String, textCol: String, key: Option[String] = None,
       legs: LegProfile = LegProfile.Serving): Unit = {
-    val cl = clog(dir)
-    val txn = key.map { k =>
-      require(k.nonEmpty && !k.contains('\n'), s"bad delivery key: $k")
-      "#txn:" + k
-    }
-    txn.foreach { t =>
-      require(!cl.latest(spark)._2.contains(t),
-        s"shard with delivery key ${key.get} was already ingested into " +
-          s"$dir — redelivery rejected (the index is exactly-once)")
-    }
+    val txn = IndexCore.freshTxn(spark, dir, key, "shard")
     // forward-store snapshot: when the docs leg is requested the input
     // is materialized ONCE up front and every leg (tp included)
     // derives from that snapshot — a nondeterministic source (sampled/
@@ -490,7 +309,7 @@ object TextIndex {
       // one count here makes the six writes read, not recompute
       tp.count(): Unit
       val dl = tp.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-      val name = s"c-${java.util.UUID.randomUUID().toString.take(12)}"
+      val name = IndexCore.entryName("c", None)
       // the legs all derive from the persisted tp and land under
       // ONE not-yet-visible commit dir — write them concurrently (the
       // ManifestStore.ingestBatchAtomic discipline): atomicity comes
@@ -545,18 +364,9 @@ object TextIndex {
       ).flatten
       Await.result(
         Future.sequence(writes.map(w => Future(w()))), Duration.Inf): Unit
-      val published = cl.commit(spark) { now =>
-        if (txn.exists(now.contains)) None // raced redelivery — abort
-        else Some(now :+ name :++ txn.toSeq)
-      }
-      if (!published) {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/data/$name")
-        p.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(p, true): Unit
-        require(published,
-          s"shard with delivery key ${key.get} raced a concurrent " +
-            s"redelivery into $dir — this attempt's staging was dropped")
-      }
+      IndexCore.publishAppend(spark, dir, name, txn.toSeq)(
+        s"shard with delivery key ${key.get} raced a concurrent " +
+          s"redelivery into $dir — this attempt's staging was dropped")
     } finally {
       tp.unpersist(): Unit
       snap.foreach(_.unpersist(): Unit)
@@ -589,9 +399,11 @@ object TextIndex {
    *  LOGICAL deletion (immediate, atomic — one version-file create);
    *  a FULL [[compact]] physically drops the docs' rows from every
    *  leg, folds the deltas into vocab/stats, and retires the
-   *  tombstone; [[vacuum]] then erases the superseded bytes — the
-   *  compliance clock is the caller's compact+vacuum schedule, and a
-   *  pre-delete [[cloneAsOf]] branch still sees the doc until vacuum.
+   *  tombstone; [[graft.store.IndexCore.vacuum]] then erases the
+   *  superseded bytes — the compliance clock is the caller's
+   *  compact+vacuum schedule, and a pre-delete
+   *  [[graft.store.IndexCore.cloneAsOf]] branch still sees the doc
+   *  until vacuum.
    *
    *  Exactly-once: `key` rides the same `#txn:` ledger as ingest — a
    *  redelivered delete is refused loudly (and keys survive
@@ -615,16 +427,7 @@ object TextIndex {
     require(ids.nonEmpty && ids.length <= 65536,
       s"forgetDocs takes 1..65536 ids per call (got ${ids.length}); " +
         "batch larger takedowns")
-    val cl = clog(dir)
-    val txn = key.map { k =>
-      require(k.nonEmpty && !k.contains('\n'), s"bad delivery key: $k")
-      "#txn:" + k
-    }
-    txn.foreach { t =>
-      require(!cl.latest(spark)._2.contains(t),
-        s"delete with delivery key ${key.get} was already applied to " +
-          s"$dir — redelivery rejected (deletion is exactly-once)")
-    }
+    val txn = IndexCore.freshTxn(spark, dir, key, "delete")
     require(hasDocsLeg(spark, dir),
       s"index $dir has no forward docs leg on every live commit — " +
         "forgetDocs computes its exact df/stats deltas from the " +
@@ -642,8 +445,8 @@ object TextIndex {
     // order-scoped coverage would hide the fresh rows while the
     // deltas never subtracted that commit's vocab/stats contribution
     // (permanent df/nd/tl over-count after the next full fold)
-    val liveSnap = cl.latest(spark)._2
-      .filter(e => e.startsWith("c-") || e.startsWith("t-"))
+    val liveSnap = IndexCore.live(spark, dir)
+      .filter(IndexCore.isData)
     // gone-filtered point lookup: ids already tombstoned (or never
     // ingested) vanish here, so the deltas below never double-subtract
     val hit = docsFor(spark, dir, ids.distinct).persist()
@@ -651,7 +454,7 @@ object TextIndex {
       if (hit.isEmpty) {
         // nothing live to delete — still ledger the delivery key so a
         // redelivered (already-applied) takedown probes as done
-        key.foreach(ledgerDelivery(spark, dir, _))
+        key.foreach(IndexCore.ledgerDelivery(spark, dir, _))
         return
       }
       val tp = hit
@@ -659,7 +462,7 @@ object TextIndex {
           explode(TextOps.tokens(col("text"))).as("token"))
         .where(length(col("token")) > 0)
         .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      val name = s"t-${java.util.UUID.randomUUID().toString.take(12)}"
+      val name = IndexCore.entryName("t", None)
       hit.select(col("doc_id"))
         .coalesce(1).write.parquet(s"$dir/data/$name/gone")
       tp.groupBy("token").agg((-count(lit(1))).as("df"))
@@ -686,7 +489,7 @@ object TextIndex {
     require(hasDocsLeg(spark, dir),
       s"index $dir has no forward docs leg on every live commit — " +
         "a content-predicate scan needs the index's own forward store")
-    readDocGrain(spark, dir, "docs")
+    docGrain(spark, dir, "docs")
       .where(predicate)
       .select(col("doc_id"), col("text"))
   }
@@ -707,16 +510,7 @@ object TextIndex {
   def forgetWhere(
       spark: SparkSession, dir: String, predicate: Column,
       key: Option[String] = None): Long = {
-    val cl = clog(dir)
-    val txn = key.map { k =>
-      require(k.nonEmpty && !k.contains('\n'), s"bad delivery key: $k")
-      "#txn:" + k
-    }
-    txn.foreach { t =>
-      require(!cl.latest(spark)._2.contains(t),
-        s"delete with delivery key ${key.get} was already applied to " +
-          s"$dir — redelivery rejected (deletion is exactly-once)")
-    }
+    IndexCore.freshTxn(spark, dir, key, "delete"): Unit
     require(hasDocsLeg(spark, dir),
       s"index $dir has no forward docs leg on every live commit — " +
         "forgetWhere resolves its ids from the index's own forward " +
@@ -731,10 +525,7 @@ object TextIndex {
     if (ids.isEmpty) {
       // nothing matched — still ledger the key so a redelivered
       // takedown probes as done (forgetDocs' empty-hit discipline)
-      txn.foreach { t =>
-        cl.commit(spark)(now =>
-          if (now.contains(t)) None else Some(now :+ t)): Unit
-      }
+      key.foreach(IndexCore.ledgerDelivery(spark, dir, _))
       0L
     } else {
       forgetDocs(spark, dir, ids, key)
@@ -797,11 +588,12 @@ object TextIndex {
       // index, tombstone the generation the first delivery just
       // founded, and skip the re-ingest — silently deleting the
       // upserted content
-      if (liveShardCount(spark, dir) > 0 &&
-          !delKey.exists(hasDelivery(spark, dir, _)) &&
-          !addKey.exists(hasDelivery(spark, dir, _)))
+      val delivered = (k: Option[String]) =>
+        k.exists(IndexCore.hasDelivery(spark, dir, _))
+      if (liveShardCount(spark, dir) > 0 && !delivered(delKey) &&
+          !delivered(addKey))
         forgetDocs(spark, dir, ids, key = delKey)
-      if (!addKey.exists(hasDelivery(spark, dir, _)))
+      if (!delivered(addKey))
         ingestShard(spark, dir, snap, idCol, textCol, key = addKey,
           legs = legs)
     } finally snap.unpersist(): Unit
@@ -822,17 +614,14 @@ object TextIndex {
       spark: SparkSession, dir: String, name: String,
       txn: Option[String], liveSnap: Seq[String]): Unit = {
     val snapSet = liveSnap.toSet
-    val published = clog(dir).commit(spark) { now =>
+    val published = IndexCore.log(dir).commit(spark) { now =>
       if (txn.exists(now.contains)) None // raced redelivery
-      else if (now.filter(e =>
-          e.startsWith("c-") || e.startsWith("t-")).toSet != snapSet)
+      else if (now.filter(IndexCore.isData).toSet != snapSet)
         None // live c-/t- set moved — deltas or coverage may be stale
       else Some(now :+ name :++ txn.toSeq)
     }
     if (!published) {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/data/$name")
-      p.getFileSystem(spark.sessionState.newHadoopConf())
-        .delete(p, true): Unit
+      IndexCore.dropStaging(spark, dir, Seq(name))
       throw new IllegalStateException(
         s"forgetDocs raced a concurrent forget/ingest/compaction at $dir — " +
           "this attempt's staging was dropped; rerun against the " +
@@ -845,7 +634,7 @@ object TextIndex {
    *  broadcast anti-join input to every read).
    */
   def tombstoneCount(spark: SparkSession, dir: String): Long =
-    goneDocs(spark, dir).map(_.count()).getOrElse(0L)
+    core.tombstoneCount(spark, dir)
 
   /** BM25 top-k over the stored index for a bag of query terms.
    *  Corpus stats and per-term df fold across shards by sum (driver-
@@ -905,7 +694,10 @@ object TextIndex {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
     val stats = Await.result(statsF, Duration.Inf)
-    val (nd, tl) = (stats.getLong(0), stats.getLong(1))
+    // sums over zero stats rows are null: an index with no live
+    // commits folds to (0, 0) and every probe answers empty
+    val (nd, tl) =
+      if (stats.isNullAt(0)) (0L, 0L) else (stats.getLong(0), stats.getLong(1))
     val avgdl = tl.toDouble / nd
     val dfByTerm = Await.result(dfF, Duration.Inf)
     // survivors: indexed (df exists) and under the stop-word cap —
@@ -922,7 +714,7 @@ object TextIndex {
       else kept.toDF("t")
         .select(tokenBucket(col("t"))).distinct()
         .collect().map(_.getLong(0)).toSeq
-    val posts = readDocGrain(spark, dir, "post")
+    val posts = docGrain(spark, dir, "post")
       .where(col("tb").isin(termBuckets: _*) &&
         col("token").isin(kept: _*))
     (avgdl, kept, idf, posts)
@@ -978,7 +770,7 @@ object TextIndex {
    *  exactly recomputable, so the oracle proves the whole ingest fold.
    */
   def stats(spark: SparkSession, dir: String): DataFrame = {
-    val shards = liveSub(spark, dir, "stats")
+    val shards = core.liveRoots(spark, dir, "stats")
     require(shards.nonEmpty, s"no live shards in text index $dir")
     val st = statsRows(spark, dir)
       .agg(lit(shards.size.toLong).as("n_shards"),
@@ -987,7 +779,7 @@ object TextIndex {
       .groupBy("token").agg(sum("df").as("df"))
       .where(col("df") > 0)
       .agg(count(lit(1)).as("vocab_size"))
-    val posts = readDocGrain(spark, dir, "post")
+    val posts = docGrain(spark, dir, "post")
       .agg(count(lit(1)).as("n_postings"))
     st.crossJoin(vocab).crossJoin(posts)
   }
@@ -1002,8 +794,8 @@ object TextIndex {
    */
   def liveDocIds(spark: SparkSession, dir: String): DataFrame =
     if (hasDocsLeg(spark, dir))
-      readDocGrain(spark, dir, "docs").select("doc_id")
-    else readDocGrain(spark, dir, "post").select("doc_id").distinct()
+      docGrain(spark, dir, "docs").select("doc_id")
+    else docGrain(spark, dir, "post").select("doc_id").distinct()
 
   /** DEEP INTEGRITY CHECK (fsck) — recompute every derived leg from
    *  the doc-grain source of truth (the tombstone-scoped posting
@@ -1031,17 +823,12 @@ object TextIndex {
    */
   def fsck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    require(liveSub(spark, dir, "post").nonEmpty,
+    require(core.liveRoots(spark, dir, "post").nonEmpty,
       s"no live shards in text index $dir")
-    val post = readDocGrain(spark, dir, "post")
+    val post = docGrain(spark, dir, "post")
       .select(col("token"), col("doc_id"), col("tf")).persist()
     try {
       post.count(): Unit // populate before the concurrent check jobs
-      // coalesce: sum over ZERO rows is null, and a degenerate-but-
-      // legal universe (all docs tombstoned) must report (0, 0), not
-      // NPE — fsck exists precisely for post-incident states
-      val isViol = (c: Column) =>
-        coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
       val checks: Seq[() => (String, Long, Long)] = Seq(
         Some(() => {
           val folded = vocabRows(spark, dir).groupBy("token")
@@ -1067,7 +854,7 @@ object TextIndex {
             e.getLong(0))
         }),
         Option.when(hasPositionalLeg(spark, dir))(() => {
-          val pos = readDocGrain(spark, dir, "pos")
+          val pos = docGrain(spark, dir, "pos")
             .select(col("token"), col("doc_id"),
               size(col("positions")).cast("long").as("np"))
           val r = post.join(pos, Seq("token", "doc_id"), "full_outer")
@@ -1077,7 +864,7 @@ object TextIndex {
           ("pos_post_parity", r.getLong(0), r.getLong(1))
         }),
         Option.when(hasDocsLeg(spark, dir))(() => {
-          val fwd = readDocGrain(spark, dir, "docs")
+          val fwd = docGrain(spark, dir, "docs")
             .select("doc_id").distinct()
           val r = post.select("doc_id").distinct()
             .join(fwd.withColumn("has", lit(1)), Seq("doc_id"), "left_outer")
@@ -1086,7 +873,7 @@ object TextIndex {
           ("docs_coverage", r.getLong(0), r.getLong(1))
         }),
         Option.when(hasDocsLeg(spark, dir))(() => {
-          val r = readDocGrain(spark, dir, "docs")
+          val r = docGrain(spark, dir, "docs")
             .groupBy("doc_id").agg(count(lit(1)).as("m"))
             .agg(isViol(col("m") > 1).as("viol"),
               count(lit(1)).as("aud")).head()
@@ -1096,18 +883,6 @@ object TextIndex {
         .toDF("check", "violations", "audited")
     } finally post.unpersist(): Unit
   }
-
-  /** Manifest version the index's log currently reads at — read this
-   *  BEFORE a full battery so the published watermark never covers
-   *  entries the battery didn't see (racing commits stay unverified,
-   *  the safe direction).
-   */
-  def logVersion(spark: SparkSession, dir: String): Long =
-    clog(dir).latest(spark)._1
-
-  /** Publish/advance the index's fsck verified watermark. */
-  def publishFsckWatermark(spark: SparkSession, dir: String, v: Long): Unit =
-    clog(dir).publishFsckWatermark(spark, v)
 
   /** INCREMENTAL fsck — the scheduled posture: verify only the
    *  entries that appeared AFTER the last verified watermark
@@ -1139,33 +914,17 @@ object TextIndex {
    *  [[fsck]] and republish instead.
    */
   def fsckIncremental(
-      spark: SparkSession, dir: String): Option[graft.store.FsckScope] = {
-    import spark.implicits._
-    clog(dir).fsckFreshEntries(spark).map { case (vNow, fresh) =>
-      val conf = spark.sessionState.newHadoopConf()
-      def exists(p: String): Boolean = {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
-      def legUnion(es: Seq[String], sub: String): Option[DataFrame] = {
-        val dfs = es.map(e => (e, s"$dir/data/$e/$sub"))
-          .filter(p => exists(p._2))
-          .map { case (e, p) =>
-            readLeg(spark, sub, Seq(p)).withColumn("cmt", lit(e)) }
-        Option.when(dfs.nonEmpty)(dfs.reduce(_.unionByName(_)))
-      }
-      val commits = fresh.filter(_.startsWith("c-"))
-      val tombs = fresh.filter(_.startsWith("t-"))
-      val isViol = (c: Column) =>
-        coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
-      val post = legUnion(commits, "post")
+      spark: SparkSession, dir: String): Option[graft.store.FsckScope] =
+    core.fsckIncremental(spark, dir) { f =>
+      val commits = f.commits
+      val post = f.tagged(commits, "post")
         .map(_.select(col("cmt"), col("token"), col("doc_id"), col("tf"))
           .persist())
       try {
         val vocabRow = post match {
           case None => ("vocab_df", 0L, 0L)
           case Some(p) =>
-            val folded = legUnion(commits, "vocab").get
+            val folded = f.tagged(commits, "vocab").get
               .groupBy("cmt", "token").agg(sum("df").as("df"))
             val recount = p.groupBy("cmt", "token")
               .agg(count(lit(1)).as("df2"))
@@ -1181,7 +940,7 @@ object TextIndex {
             val e = p.groupBy("cmt", "doc_id").agg(sum("tf").as("dl"))
               .groupBy("cmt").agg(count(lit(1)).as("nd2"),
                 sum("dl").as("tl2"))
-            val g = legUnion(commits, "stats").get
+            val g = f.tagged(commits, "stats").get
               .groupBy("cmt").agg(coalesce(sum("nd"), lit(0L)).as("nd"),
                 coalesce(sum("tl"), lit(0L)).as("tl"))
             val r = e.join(g, Seq("cmt"), "full_outer")
@@ -1191,12 +950,12 @@ object TextIndex {
                 coalesce(sum("nd2"), lit(0L)).as("aud")).head()
             ("stats_local", r.getLong(0), r.getLong(1))
         }
-        val posCs = commits.filter(c => exists(s"$dir/data/$c/pos"))
+        val posCs = commits.filter(f.has(_, "pos"))
         val posRow =
           if (posCs.isEmpty || post.isEmpty) ("pos_post_parity", 0L, 0L)
           else {
             val pp = post.get.where(col("cmt").isin(posCs: _*))
-            val pos = legUnion(posCs, "pos").get
+            val pos = f.tagged(posCs, "pos").get
               .select(col("cmt"), col("token"), col("doc_id"),
                 size(col("positions")).cast("long").as("np"))
             val r = pp.join(pos, Seq("cmt", "token", "doc_id"), "full_outer")
@@ -1205,12 +964,12 @@ object TextIndex {
                 count(lit(1)).as("aud")).head()
             ("pos_post_parity", r.getLong(0), r.getLong(1))
           }
-        val docCs = commits.filter(c => exists(s"$dir/data/$c/docs"))
+        val docCs = commits.filter(f.has(_, "docs"))
         val (covRow, uniqRow) =
           if (docCs.isEmpty || post.isEmpty)
             (("docs_coverage", 0L, 0L), ("docs_unique", 0L, 0L))
           else {
-            val fwd = legUnion(docCs, "docs").get
+            val fwd = f.tagged(docCs, "docs").get
               .select("cmt", "doc_id")
             val cov = post.get.where(col("cmt").isin(docCs: _*))
               .select("cmt", "doc_id").distinct()
@@ -1225,40 +984,29 @@ object TextIndex {
             (("docs_coverage", cov.getLong(0), cov.getLong(1)),
               ("docs_unique", u.getLong(0), u.getLong(1)))
           }
-        val goneDf = legUnion(tombs, "gone")
-        val tombRow = goneDf match {
-          case None => ("tomb_wellformed", 0L, 0L)
-          case Some(g) =>
-            val dup = g.groupBy("cmt", "doc_id").agg(count(lit(1)).as("m"))
-              .agg(isViol(col("m") > 1).as("viol"),
-                count(lit(1)).as("aud")).head()
-            val dvViol = legUnion(tombs, "dvocab")
-              .map(_.agg(isViol(col("df") > 0)).head().getLong(0))
-              .getOrElse(0L)
-            val gcnt = g.groupBy("cmt").agg(count(lit(1)).as("gn"))
-            val dsViol = legUnion(tombs, "dstats")
-              .map(_.groupBy("cmt")
-                .agg(coalesce(sum("nd"), lit(0L)).as("nd"),
-                  coalesce(sum("tl"), lit(0L)).as("tl"))
-                .join(gcnt, Seq("cmt"), "left_outer")
-                .agg(isViol(col("nd") > 0 || col("tl") > 0 ||
-                  -col("nd") > coalesce(col("gn"), lit(0L)))).head()
-                .getLong(0))
-              .getOrElse(0L)
-            ("tomb_wellformed", dup.getLong(0) + dvViol + dsViol,
-              dup.getLong(1))
+        // a tombstone's deltas are negative and subtract at most one
+        // doc per gone id
+        val tombRow = f.tombRow { g =>
+          val dvViol = f.tagged(f.tombs, "dvocab")
+            .map(_.agg(isViol(col("df") > 0)).head().getLong(0))
+            .getOrElse(0L)
+          val gcnt = g.groupBy("cmt").agg(count(lit(1)).as("gn"))
+          val dsViol = f.tagged(f.tombs, "dstats")
+            .map(_.groupBy("cmt")
+              .agg(coalesce(sum("nd"), lit(0L)).as("nd"),
+                coalesce(sum("tl"), lit(0L)).as("tl"))
+              .join(gcnt, Seq("cmt"), "left_outer")
+              .agg(isViol(col("nd") > 0 || col("tl") > 0 ||
+                -col("nd") > coalesce(col("gn"), lit(0L)))).head()
+              .getLong(0))
+            .getOrElse(0L)
+          dvViol + dsViol
         }
-        val emptyIds = spark.emptyDataset[Long].toDF("doc_id")
-        graft.store.FsckScope(
-          vNow,
-          Seq(vocabRow, statsRow, posRow, covRow, uniqRow, tombRow),
+        (Seq(vocabRow, statsRow, posRow, covRow, uniqRow, tombRow),
           post.map(_.select("doc_id").distinct().localCheckpoint(true))
-            .getOrElse(emptyIds),
-          goneDf.map(_.select("doc_id").distinct().localCheckpoint(true))
-            .getOrElse(emptyIds))
+            .getOrElse(IndexCore.emptyIds(spark)))
       } finally post.foreach(_.unpersist(): Unit)
     }
-  }
 
   /** PREFIX SUGGESTION (autocomplete): top-`k` indexed tokens starting
    *  with `prefix`, ranked by folded document frequency (ties by
@@ -1364,7 +1112,7 @@ object TextIndex {
       maxDist: Int, k: Int): DataFrame = {
     require(term.nonEmpty && maxDist >= 1 && k > 0,
       s"bad term/maxDist/k: '$term'/$maxDist/$k")
-    val pruned = maxDist <= DelMaxDist && legOnAllCommits(spark, dir, "del")
+    val pruned = maxDist <= DelMaxDist && core.onAllCommits(spark, dir, "del")
     val scored =
       if (!pruned)
         vocabRows(spark, dir)
@@ -1382,7 +1130,7 @@ object TextIndex {
         // candidate tokens = the vocab inside the term's edit ball —
         // verified by the same Levenshtein before touching vocab df,
         // so the df probe's literal filter is survivor-small
-        val cands = readLeg(spark, "del", liveSub(spark, dir, "del"))
+        val cands = core.readLive(spark, dir, "del")
           .where(col("db").isin(vBuckets: _*) &&
             col("variant").isin(variants: _*))
           .select("token").distinct()
@@ -1452,7 +1200,7 @@ object TextIndex {
       toks.zipWithIndex.map { case (t, j) => (t, j.toLong) }
         .toDF("token", "off"))
     val n = toks.size
-    readDocGrain(spark, dir, "pos")
+    docGrain(spark, dir, "pos")
       .where(col("tb").isin(termBuckets: _*) &&
         col("token").isin(terms: _*))
       .select(col("token"), col("doc_id"),
@@ -1512,7 +1260,7 @@ object TextIndex {
     val termBuckets = terms.toDF("t")
       .select(tokenBucket(col("t"))).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val candIds = readDocGrain(spark, dir, "post")
+    val candIds = docGrain(spark, dir, "post")
       .where(col("tb").isin(termBuckets: _*) &&
         col("token").isin(terms: _*))
       .groupBy("doc_id")
@@ -1574,7 +1322,7 @@ object TextIndex {
     val termBuckets = terms.toDF("t")
       .select(tokenBucket(col("t"))).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val pos = readDocGrain(spark, dir, "pos")
+    val pos = docGrain(spark, dir, "pos")
       .where(col("tb").isin(termBuckets: _*) &&
         col("token").isin(terms: _*))
       .select(col("doc_id"), explode(col("positions")).as("pos"),
@@ -1622,7 +1370,7 @@ object TextIndex {
     val termBuckets = terms.toDF("t")
       .select(tokenBucket(col("t"))).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val pos = readDocGrain(spark, dir, "pos")
+    val pos = docGrain(spark, dir, "pos")
       .where(col("tb").isin(termBuckets: _*) &&
         col("token").isin(terms: _*))
       .select(col("doc_id"), explode(col("positions")).as("pos"),
@@ -1816,17 +1564,6 @@ object TextIndex {
   def containmentProbe(
       spark: SparkSession, dir: String, bench: DataFrame,
       idCol: String, textCol: String, maxDf: Long, minPpm: Long): DataFrame = {
-    // an index with no live shard commits probes to the empty result
-    // (nothing can be contained in nothing) — without this guard the
-    // per-commit union below is an empty .reduce and throws a bare
-    // UnsupportedOperationException instead of answering
-    if (liveSub(spark, dir, "post").isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          Seq("bench_id", "doc_id", "n_kept", "overlap", "containment_ppm")
-            .map(org.apache.spark.sql.types.StructField(_,
-              org.apache.spark.sql.types.LongType))))
     val bt = bench
       .select(col(idCol).as("bench_id"),
         explode(TextOps.tokens(col(textCol))).as("token"))
@@ -1855,7 +1592,7 @@ object TextIndex {
         }
       // postings are unique per (token, doc): shards partition docs and
       // compaction concatenates, so count(*) IS the distinct-token overlap
-      val posts = readDocGrain(spark, dir, "post")
+      val posts = docGrain(spark, dir, "post")
         .where(col("tb").isin(termBuckets: _*) &&
           col("token").isin(kept: _*))
       posts.select("token", "doc_id")
@@ -1936,7 +1673,7 @@ object TextIndex {
       // candidate rules' phrase lengths: dl rides every posting row
       // (dl = the rule-document's token count), pruned by the batch's
       // tokens — rule-grain rows, only for rules sharing vocabulary
-      val rlen = readDocGrain(spark, dir, "post")
+      val rlen = docGrain(spark, dir, "post")
         .where(col("tb").isin(buckets: _*) &&
           col("token").isin(dtok: _*))
         .select(col("doc_id").as("query_id"), col("dl").as("n"))
@@ -1944,7 +1681,7 @@ object TextIndex {
       // reconstruct each candidate rule's phrase from its pruned
       // positional rows; rules missing any token (absent from the
       // batch) reconstruct short and fail the completeness check
-      val rphrase = readDocGrain(spark, dir, "pos")
+      val rphrase = docGrain(spark, dir, "pos")
         .where(col("tb").isin(buckets: _*) &&
           col("token").isin(dtok: _*))
         .select(col("doc_id").as("query_id"), col("token"),
@@ -1987,78 +1724,61 @@ object TextIndex {
     } finally dtk.unpersist(): Unit
   }
 
-  /** Fold `roots` (absolute commit dirs) into the staged commit dir
-   *  `dst` — the ONE leg-fold implementation compaction and federated
-   *  merge share. Core legs (post/vocab/stats) are mandatory; the
-   *  optional legs (pos/del/docs) fold iff present on EVERY input and
-   *  refuse loudly on a mixed set (a partial leg would silently answer
-   *  from part of the corpus). All folds are the legs' own monoids:
-   *  postings/positions/docs concatenate (tb/db/fb are pure functions
-   *  of their key, identical across shards, so bucket layout is
-   *  preserved), vocab df and stats (nd, tl) sum, del keys
-   *  set-union (the same (variant, token) pair recurs when shards
-   *  share a token — folding dedups so the leg stays vocabulary-grain
-   *  instead of growing with shard history).
+  /** Fold `roots` — (commit dir, the tombstone dirs it must apply) —
+   *  into the staged commit dir `dst`: the ONE leg-fold body
+   *  compaction and federated merge share. Core legs (post/vocab/
+   *  stats) are mandatory; the optional legs (pos/del/docs) fold iff
+   *  present on EVERY input and refuse loudly on a mixed set (a partial
+   *  leg would silently answer from part of the corpus). All folds are
+   *  the legs' own monoids: postings/positions/docs concatenate
+   *  (tb/db/fb are pure functions of their key, identical across
+   *  shards, so bucket layout is preserved), vocab df and stats
+   *  (nd, tl) sum, del keys set-union (the same (variant, token) pair
+   *  recurs when shards share a token — folding dedups so the leg
+   *  stays vocabulary-grain instead of growing with shard history).
+   *
+   *  Tombstone application (full folds only): each root's doc-grain
+   *  rows drop its own tombstones' docs; vocab/stats fold the retired
+   *  tombstones' (`tombs`) negative deltas in and keep df > 0, and del
+   *  keys semi-join the surviving vocab so fully-deleted tokens stop
+   *  key-probing.
    */
   private def foldLegs(
-      spark: SparkSession, rootsGone: Seq[(String, Seq[String])],
-      dst: String, tombRoots: Seq[String] = Seq.empty): Unit = {
-    val roots = rootsGone.map(_._1)
-    val scopeByRoot = rootsGone.toMap
-    val conf = spark.sessionState.newHadoopConf()
+      spark: SparkSession, roots: Seq[(String, Seq[String])],
+      tombs: Seq[String], dst: String): Unit = {
     def having(sub: String): Seq[String] =
-      roots.map(r => s"$r/$sub").filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
-    def uniform(sub: String): Option[Seq[String]] = {
-      val h = having(sub)
-      require(h.isEmpty || h.size == roots.size,
-        s"cannot fold: leg '$sub' exists on ${h.size} of ${roots.size} " +
+      roots.map(r => s"${r._1}/$sub").filter(IndexCore.exists(spark, _))
+    def uniform(sub: String): Boolean = {
+      val h = having(sub).size
+      require(h == 0 || h == roots.size,
+        s"cannot fold: leg '$sub' exists on $h of ${roots.size} " +
           "input commits — a mixed-generation fold would publish a " +
           "partial leg that silently answers from part of the corpus; " +
           "re-ingest the pre-leg shards (or fold them separately) first")
-      if (h.isEmpty) None else Some(h)
+      h > 0
     }
-    def read(sub: String, paths: Seq[String]): DataFrame =
-      readLeg(spark, sub, paths)
-    // tombstone application (FULL folds only — compactTiered guards):
-    // each root's doc-grain rows drop ITS OWN scope's gone docs (a
-    // tombstone covers only the commits that precede it, so a doc
-    // re-ingested after its takedown survives the fold — physical
-    // erasure of the OLD rows lands here, vacuum reclaims the dirs);
-    // vocab/stats fold the global negative deltas in and keep df > 0,
-    // del keys semi-join the surviving vocab so fully-deleted tokens
-    // stop key-probing
-    def readScoped(sub: String, paths: Seq[String]): DataFrame =
-      paths.map { p =>
-        val df = readLeg(spark, sub, Seq(p))
-        val ts = scopeByRoot.getOrElse(p.stripSuffix(s"/$sub"), Seq.empty)
-        if (ts.isEmpty) df
-        else df.join(
-          broadcast(readLeg(spark, "gone", ts.map(t => s"$t/gone"))
-            .select("doc_id")),
-          Seq("doc_id"), "left_anti")
-      }.reduce(_.unionByName(_))
-    def foldedVocab: DataFrame = {
-      val base = read("vocab", having("vocab"))
-      val all =
-        if (tombRoots.isEmpty) base
-        else base.unionByName(read("dvocab", tombRoots.map(t => s"$t/dvocab")))
-      all.groupBy("token").agg(sum(col("df")).as("df"))
+    def scoped(sub: String): DataFrame =
+      core.without(spark, sub, roots, Seq("doc_id"), identity)
+        .getOrElse(core.empty(spark, sub))
+    def withDelta(sub: String): DataFrame = {
+      val base = core.read(spark, sub, having(sub))
+      if (tombs.isEmpty) base
+      else base.unionByName(core.read(spark, s"d$sub", tombs.map(t => s"$t/d$sub")))
+    }
+    def foldedVocab: DataFrame =
+      withDelta("vocab").groupBy("token").agg(sum(col("df")).as("df"))
         .where(col("df") > 0)
-    }
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     val jobs = Seq(
       Some(() =>
-        readScoped("post", having("post"))
+        scoped("post")
           .select(col("token"), col("doc_id"), col("tf"), col("dl"), col("tb"))
           .repartition(TokenBuckets, col("tb"))
           .write.partitionBy("tb").parquet(s"$dst/post")),
-      uniform("pos").map(ps => () =>
-        readScoped("pos", ps)
+      Option.when(uniform("pos"))(() =>
+        scoped("pos")
           .select(col("token"), col("doc_id"), col("positions"), col("tb"))
           .repartition(TokenBuckets, col("tb"))
           .write.partitionBy("tb").parquet(s"$dst/pos")),
@@ -2066,28 +1786,24 @@ object TextIndex {
         foldedVocab
           .coalesce(4)
           .write.parquet(s"$dst/vocab")),
-      uniform("del").map(ds => () => {
-        val base = read("del", ds)
+      Option.when(uniform("del"))(() => {
+        val base = core.read(spark, "del", having("del"))
           .select(col("variant"), col("token"), col("db"))
           .dropDuplicates("variant", "token")
         val live =
-          if (tombRoots.isEmpty) base
+          if (tombs.isEmpty) base
           else base.join(foldedVocab.select("token"), Seq("token"),
             "left_semi")
         live
           .repartition(TokenBuckets, col("db"))
           .write.partitionBy("db").parquet(s"$dst/del")
       }),
-      Some(() => {
-        val base = read("stats", having("stats"))
-        val all =
-          if (tombRoots.isEmpty) base
-          else base.unionByName(read("dstats", tombRoots.map(t => s"$t/dstats")))
-        all.agg(sum(col("nd")).as("nd"), sum(col("tl")).as("tl"))
-          .coalesce(1).write.parquet(s"$dst/stats")
-      }),
-      uniform("docs").map(ds => () =>
-        readScoped("docs", ds)
+      Some(() =>
+        withDelta("stats")
+          .agg(sum(col("nd")).as("nd"), sum(col("tl")).as("tl"))
+          .coalesce(1).write.parquet(s"$dst/stats")),
+      Option.when(uniform("docs"))(() =>
+        scoped("docs")
           .select(col("doc_id"), col("text"), col("fb"))
           .repartition(TokenBuckets, col("fb"))
           .write.partitionBy("fb").parquet(s"$dst/docs"))
@@ -2103,146 +1819,29 @@ object TextIndex {
   def compact(spark: SparkSession, dir: String): Unit =
     compactTiered(spark, dir, fanIn = Int.MaxValue)
 
-  /** SIZE-TIERED shard compaction — the same LSM policy as the rollup
-   *  store's compactTiered, applied to the index's three legs, which
-   *  all fold associatively: postings CONCATENATE (tb is a pure
-   *  function of token, identical across shards, so bucket layout is
-   *  preserved), vocab df and stats (nd, tl) are sum monoids. Without
-   *  this, every ingested shard adds a commit dir forever and
+  /** SIZE-TIERED shard compaction ([[graft.store.IndexCore.compactTiered]])
+   *  of the index's legs, which all fold associatively ([[foldLegs]]).
+   *  Without it every ingested shard adds a commit dir forever and
    *  [[searchBm25]]'s per-commit union grows linearly in shard count —
-   *  query-PLANNING cost ∝ history, the small-files problem in index
-   *  clothing. Folding only the `fanIn` smallest commits bounds write
-   *  amplification (a commit's bytes are rewritten O(log N)-ish times
-   *  over its life, not once per trigger).
-   *
-   *  Atomicity rides the same CommitLog swap as ingest: the folded
-   *  output is invisible until the version-file create, `#txn:`
-   *  delivery keys pass through UNTOUCHED (exactly-once survives any
-   *  number of compactions), and if a concurrent writer moved any
-   *  input commit the publish ABORTS and drops its staging — folding
-   *  an already-folded input would double-count df/nd/tl.
+   *  query-PLANNING cost ∝ history. Folding only the `fanIn` smallest
+   *  commits bounds write amplification (a commit's bytes are
+   *  rewritten O(log N)-ish times over its life, not once per
+   *  trigger).
    */
-  def compactTiered(spark: SparkSession, dir: String, fanIn: Int = 8): Unit = {
-    requireUnpinned(spark, dir, "compactTiered")
-    val cl = clog(dir)
-    val (_, live) = cl.latest(spark)
-    val all = live.filter(_.startsWith("c-"))
-    val tombs = live.filter(_.startsWith("t-"))
-    // tombstones fold away ONLY in a full fold: a partial fold cannot
-    // know a gone doc's rows all sit inside its inputs, and folding
-    // the dvocab/dstats deltas while the doc's postings survive in an
-    // unfolded commit would subtract twice — partial folds concatenate
-    // pure, fold WITHIN one run of consecutive shard commits (no
-    // tombstone between them), and SPLICE their output at the run's
-    // position so every commit keeps exactly its original
-    // subsequent-tombstone coverage
-    val full = fanIn >= all.size
-    val applyTombs = full && tombs.nonEmpty
-    if (all.isEmpty || (all.size <= 1 && !applyTombs)) return
-    val conf = spark.sessionState.newHadoopConf()
-    val name = s"c-${java.util.UUID.randomUUID().toString.take(12)}"
-    if (full) {
-      // scoped application: each shard drops the gone sets of the
-      // tombstones AFTER it; every tombstone retires (its deltas fold
-      // into the one output's vocab/stats)
-      val ordered = live.filter(e =>
-        e.startsWith("c-") || e.startsWith("t-"))
-      val rootsGone = ordered.zipWithIndex
-        .filter(_._1.startsWith("c-"))
-        .map { case (c, i) =>
-          (s"$dir/data/$c", ordered.drop(i + 1)
-            .filter(_.startsWith("t-")).map(t => s"$dir/data/$t"))
-        }
-      foldLegs(spark, rootsGone, s"$dir/data/$name",
-        tombRoots = tombs.map(t => s"$dir/data/$t"))
-      val replaced = all ++ tombs
-      // CommitLog.spliceReplace, never append: a tombstone published
-      // concurrently during the fold (its stale-abort only watches
-      // the c-/t- set it observed, so against a pre-fold snapshot it
-      // lands fine) sits AFTER this fold's inputs in log order —
-      // appending the folded output after it would empty that
-      // tombstone's order-scoped coverage, silently resurrecting the
-      // acknowledged takedown while its dvocab/dstats deltas still
-      // fold globally. Aborts (None) if an input moved — never
-      // double-fold.
-      val published = cl.commit(spark) { now =>
-        graft.store.CommitLog.unlessPinned(now)(
-          graft.store.CommitLog.spliceReplace(now, replaced, name))
-      }
-      if (!published) {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/data/$name")
-        p.getFileSystem(conf).delete(p, true): Unit
-      }
-    } else {
-      // runs of consecutive c- commits between tombstone boundaries;
-      // fold the fanIn smallest within the largest run
-      val ordered = live.filter(e =>
-        e.startsWith("c-") || e.startsWith("t-"))
-      val runs = ordered.foldLeft(Seq(Seq.empty[String])) { (acc, e) =>
-        if (e.startsWith("t-")) acc :+ Seq.empty
-        else acc.init :+ (acc.last :+ e)
-      }
-      val run = runs.maxBy(_.size)
-      if (run.size <= 1) return
-      val dirs = run.map { d =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/data/$d")
-        val fs = p.getFileSystem(conf)
-        (d, if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L)
-      }.sortBy(_._2).take(math.max(2, fanIn)).map(_._1)
-      if (dirs.size <= 1) return
-      foldLegs(spark, dirs.map(d => (s"$dir/data/$d", Seq.empty[String])),
-        s"$dir/data/$name")
-      // splice at the first input's position — the output stays
-      // inside its run, keeping the same tombstone coverage; None
-      // when an input moved under us (abort, never double-fold)
-      val published = cl.commit(spark) { now =>
-        graft.store.CommitLog.unlessPinned(now)(
-          graft.store.CommitLog.spliceReplace(now, dirs, name))
-      }
-      if (!published) {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/data/$name")
-        p.getFileSystem(conf).delete(p, true): Unit
-      }
-    }
-  }
+  def compactTiered(spark: SparkSession, dir: String, fanIn: Int = 8): Unit =
+    core.compactTiered(spark, dir, fanIn, "compactTiered")(
+      foldLegs(spark, _, _, _))
 
-  /** TOMBSTONE-SCOPED RETIREMENT — the takedown-stream answer to "only
-   *  a FULL fold retires tombstones": retire the OLDEST live tombstone
-   *  by rewriting IN PLACE only the covered commits that actually
-   *  contain its rows. Order-scoping already knows the covered set
-   *  (every commit before the tombstone); a containment probe (one
-   *  gone-semi-join per covered commit's postings) skips commits that
-   *  hold none of the gone docs, so cost is ∝ the commits the docs
-   *  live in — never the post-tombstone ingest stream, never a
-   *  whole-index rewrite. Each rewritten commit keeps its LOG
-   *  POSITION (spliced in place), so every other tombstone's coverage
-   *  is untouched, and its vocab/stats are RECOMPUTED from its
-   *  surviving postings — exactly the state a full fold would have
-   *  produced, so the tombstone's dvocab/dstats deltas are consumed
-   *  and the tombstone entry drops. One atomic commit publishes all
-   *  rewrites + the retirement; any concurrent c-/t- movement aborts
-   *  (staging dropped) and the caller re-runs.
-   *
-   *  Under a steady right-to-be-forgotten stream this bounds read
-   *  fan-in at cost ∝ covered commits per retirement, where the old
-   *  policy ([[compact]]) re-read the WHOLE stored index; commits
-   *  after the oldest tombstone — the live ingest frontier — are
-   *  never rewritten. Returns true when a tombstone was retired;
-   *  false when none are live. [[retireTombstones]] loops it.
-   */
-  /** The shared per-commit in-place rewrite behind tombstone
-   *  retirement AND the Minimal-profile direct delete: ONE
-   *  containment-probe job over `covered` (a per-commit probe loop
-   *  would pay one job's fixed overhead per commit and dominate at
-   *  high commit counts), then each touched commit rewrites WITHOUT
-   *  the gone docs — doc-grain legs anti-join the gone set;
-   *  vocab/stats RECOMPUTE from the surviving postings (df = live
-   *  posting rows per token, nd/tl = live docs / token total — the
-   *  ingest-time invariants, which exact-delta folds preserve); del
-   *  keys semi-join the surviving vocab so fully-deleted tokens stop
-   *  key-probing. Returns old-name -> new-name ("" = every doc gone,
-   *  drop the commit); the caller owns the atomic publish and the
-   *  abort cleanup.
+  /** The per-commit in-place rewrite behind tombstone retirement AND
+   *  the Minimal-profile direct delete: each `covered` commit holding
+   *  any `gone` doc rewrites WITHOUT them — doc-grain legs anti-join
+   *  the gone set; vocab/stats RECOMPUTE from the surviving postings
+   *  (df = live posting rows per token, nd/tl = live docs / token
+   *  total — the ingest-time invariants, which exact-delta folds
+   *  preserve); del keys semi-join the surviving vocab so
+   *  fully-deleted tokens stop key-probing. Returns old-name ->
+   *  new-name ("" = every doc gone, drop the commit); the caller owns
+   *  the atomic publish.
    *
    *  ZERO-TOKEN DOCS (text that tokenizes to nothing) live ONLY in
    *  the forward docs leg — ingest writes docs rows for every doc but
@@ -2257,47 +1856,27 @@ object TextIndex {
    *  whose postings empty but whose docs survive rewrites with
    *  zero-row token-grain legs written UNPARTITIONED (an empty
    *  partitionBy write creates no files and is unreadable; a plain
-   *  empty write keeps one schema-bearing file) — every read path
-   *  unions per-commit and filters tb/db as a column, so layout can
-   *  differ per commit.
+   *  empty write keeps one schema-bearing file) — every read of a
+   *  partitioned leg is per commit ([[graft.store.IndexCore.read]]),
+   *  so layout can differ per commit.
    */
   private def rewriteCommitsWithout(
       spark: SparkSession, dir: String, gone: DataFrame,
       covered: Seq[String]): Map[String, String] = {
-    val conf = spark.sessionState.newHadoopConf()
-    def has(c: String, sub: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/data/$c/$sub")
-      p.getFileSystem(conf).exists(p)
+    val touched = core.touched(covered, gone) { c =>
+      // docs ∪ post: zero-token docs appear in the docs leg only
+      Seq(core.at(spark, dir, c, "post"), core.at(spark, dir, c, "docs"))
+        .flatten.map(_.select(col("doc_id")))
     }
-    val touched: Set[String] =
-      if (covered.isEmpty) Set.empty
-      else covered.map { c =>
-          val p = readLeg(spark, "post", Seq(s"$dir/data/$c/post"))
-            .select(col("doc_id"))
-          // docs ∪ post: zero-token docs appear in the docs leg only
-          (if (has(c, "docs"))
-            p.unionByName(readLeg(spark, "docs", Seq(s"$dir/data/$c/docs"))
-              .select(col("doc_id")))
-          else p).withColumn("cmt", lit(c))
-        }
-        .reduce(_.unionByName(_))
-        .join(gone, Seq("doc_id"), "left_semi")
-        .select("cmt").distinct()
-        .collect().map(_.getString(0)).toSet
     covered.flatMap { c =>
       if (!touched.contains(c)) None
       else {
-        val post = readLeg(spark, "post", Seq(s"$dir/data/$c/post"))
-        // keep a keyed commit's key-digest prefix so batch-grain pair/
-        // report addressing survives the rewrite
-        val name = (if (c.matches("c-k[0-9a-f]{16}-.*"))
-          c.substring(0, 19) else "c") +
-          s"-${java.util.UUID.randomUUID().toString.take(12)}"
-        val dst = s"$dir/data/$name"
-        val post2 = post.join(gone, Seq("doc_id"), "left_anti").persist()
-        val docs2 = Option.when(has(c, "docs"))(
-          readLeg(spark, "docs", Seq(s"$dir/data/$c/docs"))
-            .join(gone, Seq("doc_id"), "left_anti").persist())
+        val name = IndexCore.rewriteName(c)
+        val dst = dataDir(dir, name)
+        val post2 = core.at(spark, dir, c, "post").get
+          .join(gone, Seq("doc_id"), "left_anti").persist()
+        val docs2 = core.at(spark, dir, c, "docs")
+          .map(_.join(gone, Seq("doc_id"), "left_anti").persist())
         try {
           val postEmpty = post2.isEmpty
           if (postEmpty && docs2.forall(_.isEmpty))
@@ -2307,11 +1886,10 @@ object TextIndex {
             Some(c -> "")
           else {
             // concurrent leg writes off the materialized post2/docs2
-            // caches — the foldLegs discipline (the isEmpty probes
-            // above already populated them). When the postings all
-            // died but forward docs survive (zero-token docs), the
-            // token-grain legs are zero rows: write them plain — an
-            // empty partitionBy write has no files and is unreadable
+            // caches (the isEmpty probes above already populated
+            // them). When the postings all died but forward docs
+            // survive (zero-token docs), the token-grain legs are zero
+            // rows: write them plain
             val vocab2 = post2.groupBy("token")
               .agg(count(lit(1)).as("df"))
             def bucketed(df: DataFrame, bcol: String, leg: String): Unit =
@@ -2333,9 +1911,8 @@ object TextIndex {
                 .agg(count(lit(1)).as("nd"),
                   coalesce(sum(col("dl")), lit(0L)).as("tl"))
                 .coalesce(1).write.parquet(s"$dst/stats")),
-              Option.when(has(c, "pos"))(() =>
-                bucketed(readLeg(spark, "pos", Seq(s"$dir/data/$c/pos"))
-                  .join(gone, Seq("doc_id"), "left_anti")
+              core.at(spark, dir, c, "pos").map(pos => () =>
+                bucketed(pos.join(gone, Seq("doc_id"), "left_anti")
                   .select(col("token"), col("doc_id"), col("positions"),
                     col("tb")), "tb", "pos")),
               docs2.map(d => () =>
@@ -2344,8 +1921,8 @@ object TextIndex {
                 d.select(col("doc_id"), col("text"), col("fb"))
                   .repartition(TokenBuckets, col("fb"))
                   .write.partitionBy("fb").parquet(s"$dst/docs")),
-              Option.when(has(c, "del"))(() =>
-                bucketed(readLeg(spark, "del", Seq(s"$dir/data/$c/del"))
+              core.at(spark, dir, c, "del").map(del => () =>
+                bucketed(del
                   .join(vocab2.select("token"), Seq("token"), "left_semi")
                   .select(col("variant"), col("token"), col("db")),
                   "db", "del"))
@@ -2362,57 +1939,22 @@ object TextIndex {
     }.toMap
   }
 
-  /** Publish a rewriteCommitsWithout result atomically: apply the
-   *  old->new mapping in place, drop `alsoDrop` entries, append
-   *  `append` entries; abort (staging dropped, loud) when the live
-   *  c-/t- set moved from `snap`.
+  /** TOMBSTONE-SCOPED RETIREMENT
+   *  ([[graft.store.IndexCore.retireOldestTombstone]]) — the
+   *  takedown-stream answer to "only a FULL fold retires tombstones":
+   *  the covered commits holding the oldest tombstone's docs are
+   *  rewritten in place ([[rewriteCommitsWithout]]) with vocab/stats
+   *  RECOMPUTED from their surviving postings — exactly the state a
+   *  full fold would have produced, so the tombstone's dvocab/dstats
+   *  deltas are consumed and the tombstone entry drops. Under a steady
+   *  right-to-be-forgotten stream this bounds read fan-in at cost ∝
+   *  covered commits per retirement, where [[compact]] re-reads the
+   *  WHOLE stored index. Returns false when no tombstone is live;
+   *  [[retireTombstones]] loops it.
    */
-  private def publishRewrites(
-      spark: SparkSession, dir: String, snap: Seq[String],
-      rewrites: Map[String, String], alsoDrop: Set[String],
-      append: Seq[String], what: String): Unit = {
-    val published = clog(dir).commit(spark) { now =>
-      if (now.filter(e => e.startsWith("c-") || e.startsWith("t-"))
-          != snap) None // live set moved under us — abort, re-run
-      else graft.store.CommitLog.unlessPinned(now)(Some(now.flatMap { e =>
-        if (alsoDrop.contains(e)) Seq.empty
-        else rewrites.get(e) match {
-          case Some("") => Seq.empty // fully-taken-down commit dropped
-          case Some(n) => Seq(n) // rewritten in place — coverage intact
-          case None => Seq(e)
-        }
-      } :++ append))
-    }
-    if (!published) {
-      val conf = spark.sessionState.newHadoopConf()
-      for (n <- rewrites.values if n.nonEmpty) {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/data/$n")
-        p.getFileSystem(conf).delete(p, true): Unit
-      }
-      throw new IllegalStateException(
-        s"$what raced a concurrent writer at $dir — " +
-          "staging dropped; re-run against the new live set")
-    }
-  }
-
-  def retireOldestTombstone(spark: SparkSession, dir: String): Boolean = {
-    requireUnpinned(spark, dir, "retireOldestTombstone")
-    val cl = clog(dir)
-    val (_, live) = cl.latest(spark)
-    val snap = live.filter(e => e.startsWith("c-") || e.startsWith("t-"))
-    val tIdx = snap.indexWhere(_.startsWith("t-"))
-    if (tIdx < 0) return false
-    val t = snap(tIdx)
-    val covered = snap.take(tIdx).filter(_.startsWith("c-"))
-    val gone = broadcast(
-      readLeg(spark, "gone", Seq(s"$dir/data/$t/gone")).select("doc_id"))
-    val rewrites = rewriteCommitsWithout(spark, dir, gone, covered)
-    // t retired: its rows are physically out, its deltas are consumed
-    // by the recomputed vocab/stats
-    publishRewrites(spark, dir, snap, rewrites, alsoDrop = Set(t),
-      append = Seq.empty, what = "retireOldestTombstone")
-    true
-  }
+  def retireOldestTombstone(spark: SparkSession, dir: String): Boolean =
+    core.retireOldestTombstone(spark, dir, "retireOldestTombstone")(
+      (covered, gone) => rewriteCommitsWithout(spark, dir, gone, covered))
 
   /** DIRECT in-place deletion — the Minimal-profile answer to
    *  [[forgetDocs]] (which needs the forward docs leg for its exact
@@ -2435,19 +1977,9 @@ object TextIndex {
       key: Option[String] = None): Unit = {
     require(ids.nonEmpty && ids.length <= 65536,
       s"forgetDocsRebuild takes 1..65536 ids per call (got ${ids.length})")
-    requireUnpinned(spark, dir, "forgetDocsRebuild")
-    val cl = clog(dir)
-    val txn = key.map { k =>
-      require(k.nonEmpty && !k.contains('\n'), s"bad delivery key: $k")
-      "#txn:" + k
-    }
-    txn.foreach { t =>
-      require(!cl.latest(spark)._2.contains(t),
-        s"delete with delivery key ${key.get} was already applied to " +
-          s"$dir — redelivery rejected (deletion is exactly-once)")
-    }
-    val (_, live) = cl.latest(spark)
-    val snap = live.filter(e => e.startsWith("c-") || e.startsWith("t-"))
+    IndexCore.requireUnpinned(spark, dir, "forgetDocsRebuild")
+    val txn = IndexCore.freshTxn(spark, dir, key, "delete")
+    val snap = IndexCore.live(spark, dir).filter(IndexCore.isData)
     require(!snap.exists(_.startsWith("t-")),
       s"index $dir has live tombstones — their deltas were computed " +
         "against the rows this rebuild would erase (retiring them " +
@@ -2456,7 +1988,7 @@ object TextIndex {
     val gone = broadcast(ids.distinct.toDF("doc_id"))
     val rewrites = rewriteCommitsWithout(spark, dir, gone,
       snap.filter(_.startsWith("c-")))
-    publishRewrites(spark, dir, snap, rewrites, alsoDrop = Set.empty,
+    IndexCore.publishRewrites(spark, dir, snap, rewrites, drop = Set.empty,
       append = txn.toSeq, what = "forgetDocsRebuild")
   }
 
@@ -2471,130 +2003,23 @@ object TextIndex {
     n
   }
 
-  /** FEDERATED MERGE: fold ANOTHER index instance's live shards into
-   *  this one as ONE commit — the operation that unifies indexes built
-   *  independently (per-region crawls, per-tenant corpora, a backfill
-   *  job's private index) WITHOUT re-reading any corpus text. All
-   *  three legs fold by the same monoids compaction uses — postings
-   *  concatenate (tb is a pure function of token, identical in every
-   *  instance, so bucket layout is preserved), vocab df and stats
-   *  (nd, tl) sum — so merge cost is ∝ the SOURCE INDEX bytes (the
-   *  tokenized projection of its corpus), never a re-tokenize. At
-   *  100 TB this is the difference between unifying two regional
-   *  crawl indexes overnight and re-indexing a region.
+  /** FEDERATED MERGE ([[graft.store.IndexCore.mergeFrom]]): fold
+   *  ANOTHER index instance's live shards into this one as ONE commit
+   *  — the operation that unifies indexes built independently
+   *  (per-region crawls, per-tenant corpora, a backfill job's private
+   *  index) WITHOUT re-reading any corpus text. The legs fold by the
+   *  same monoids compaction uses ([[foldLegs]]), so merge cost is ∝
+   *  the SOURCE INDEX bytes (the tokenized projection of its corpus),
+   *  never a re-tokenize.
    *
    *  Contract: the two instances index DISJOINT doc_id spaces — the
    *  same contract two shards of one index already live under (df/nd/
    *  tl sums and posting concat are only meaningful then).
-   *
-   *  Exactly-once COMPOSES across the merge: the source's `#txn:`
-   *  delivery keys ride into the destination's commit log, so a shard
-   *  redelivered to the MERGED index is still rejected; conversely the
-   *  merge REFUSES a source that shares any delivery key with the
-   *  destination (those docs are already here — folding them would
-   *  double-count df/nd/tl and duplicate postings). The merge itself
-   *  may carry its own `key`, making a redelivered merge a loud no-op
-   *  too. The source is read-only throughout — on any failure the
-   *  destination's staging is dropped and BOTH indexes stand.
    */
   def mergeFrom(
       spark: SparkSession, dstDir: String, srcDir: String,
-      key: Option[String] = None): Unit = {
-    val cl = clog(dstDir)
-    val (srcV, srcLive) = clog(srcDir).latest(spark)
-    val srcShards = srcLive.filter(_.startsWith("c-"))
-    require(!srcLive.exists(_.startsWith("t-")),
-      s"source index $srcDir has live tombstones — fully compact it " +
-        "first (a merge folds shard legs by concatenation and cannot " +
-        "carry another index's pending deletions)")
-    // + the snapshot-identity marker: keyless sources re-merged twice
-    // must refuse too (graft.store.CommitLog.sourceIdentity)
-    val srcTxn = srcLive.filter(_.startsWith("#txn:")) :+
-      graft.store.CommitLog.sourceIdentity(srcV, srcLive)
-    require(srcShards.nonEmpty, s"nothing to merge: $srcDir has no live shards")
-    val txn = key.map { k =>
-      require(k.nonEmpty && !k.contains('\n'), s"bad delivery key: $k")
-      "#txn:" + k
+      key: Option[String] = None): Unit =
+    core.mergeFrom(spark, dstDir, srcDir, key) { (srcCommits, dst) =>
+      foldLegs(spark, srcCommits.map((_, Seq.empty[String])), Seq.empty, dst)
     }
-    val dstNow = cl.latest(spark)._2.toSet
-    (srcTxn ++ txn).foreach { t =>
-      require(!dstNow.contains(t),
-        s"merge of $srcDir into $dstDir rejected: delivery key " +
-          s"${t.stripPrefix("#txn:")} already lives in the destination — " +
-          "its shard is already folded here (merging again would " +
-          "double-count df/nd/tl)")
-    }
-    // a missing live dir proves the source snapshot went stale under a
-    // concurrent source-side compact+vacuum — abort before staging, the
-    // strict-snapshot discipline of ivfIndexRebuildFrom
-    val conf = spark.sessionState.newHadoopConf()
-    srcShards.foreach { d =>
-      val hp = new org.apache.hadoop.fs.Path(s"$srcDir/data/$d")
-      require(hp.getFileSystem(conf).exists(hp),
-        s"source commit $d vanished mid-merge (concurrent vacuum?) — " +
-          "re-read the source and retry")
-    }
-    val name = s"c-${java.util.UUID.randomUUID().toString.take(12)}"
-    foldLegs(spark,
-      srcShards.map(d => (s"$srcDir/data/$d", Seq.empty[String])),
-      s"$dstDir/data/$name")
-    val published = cl.commit(spark) { now =>
-      if ((srcTxn ++ txn).exists(now.contains)) None // raced duplicate
-      else Some(now :+ name :++ srcTxn :++ txn.toSeq)
-    }
-    if (!published) {
-      val p = new org.apache.hadoop.fs.Path(s"$dstDir/data/$name")
-      p.getFileSystem(conf).delete(p, true): Unit
-      require(published,
-        s"merge of $srcDir into $dstDir raced a concurrent writer that " +
-          "committed one of its delivery keys — this attempt's staging " +
-          "was dropped")
-    }
-  }
-
-  /** ZERO-COPY BRANCH of the index as of a published version — the
-   *  same shallow clone the store offers (CommitLog.cloneAsOf): data
-   *  files hard-link, the as-of live set (delivery keys included)
-   *  becomes the branch's first version, and the two indexes diverge
-   *  independently from there — experiment with a different
-   *  compaction policy, df cap, or shard mix on a branch of a corpus-
-   *  scale index without copying a byte. A shard folded before the
-   *  branch point still rejects redelivery on the branch; one
-   *  ingested only after it lands normally.
-   */
-  def cloneAsOf(
-      spark: SparkSession, srcDir: String, dstDir: String,
-      version: Long): Unit =
-    clog(srcDir).cloneAsOf(
-      spark, s"$srcDir/data", s"$dstDir/data", clog(dstDir), version)
-
-  /** Reclaim data dirs no longer referenced by the LATEST version
-   *  (superseded by compaction). Run once in-flight readers of older
-   *  snapshots drain — after vacuum, an as-of read of a superseded
-   *  version fails loudly at the existence filter, never silently
-   *  partially.
-   */
-  /** Bound the MANIFEST history alone (CommitLog.vacuumVersions):
-   *  version files only — the live set, data dirs, and delivery keys
-   *  are untouched, so this is safe to run CONTINUOUSLY (the
-   *  streaming maintainer calls it per batch when asked; data-dir
-   *  vacuum stays a separate, explicitly-scheduled action because it
-   *  races in-flight readers of superseded snapshots).
-   */
-  def vacuumManifest(spark: SparkSession, dir: String, keep: Int): Unit =
-    clog(dir).vacuumVersions(spark, keep)
-
-  def vacuum(spark: SparkSession, dir: String,
-      keepVersions: Int = Int.MaxValue): Unit = {
-    val live = clog(dir).latest(spark)._2.toSet
-    val dd = new org.apache.hadoop.fs.Path(s"$dir/data")
-    val fs = dd.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dd)) return
-    fs.listStatus(dd)
-      .filter(st => !live.contains(st.getPath.getName))
-      .foreach(st => fs.delete(st.getPath, true): Unit)
-    // bound the MANIFEST history too (CommitLog.vacuumVersions)
-    if (keepVersions != Int.MaxValue)
-      clog(dir).vacuumVersions(spark, keepVersions)
-  }
 }

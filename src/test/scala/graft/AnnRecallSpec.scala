@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sim.Similarity
+import graft.store.IndexCore
 
 /**
  * Characterizes the LSH ANN path against the brute-force exact baseline
@@ -216,19 +217,19 @@ class AnnRecallSpec extends AnyFunSuite {
     // exactly the upsert's own two commits (tombstone + append) land
     val scatter = (16L until 32L)
       .map(i => (i, vec(4, Some(((i % 4).toInt, 0.2))))).toDF("vec_id", "v")
-    val v0 = Similarity.ivfVersion(spark, idx)
+    val v0 = IndexCore.version(spark, idx)
     Similarity.ivfIndexUpsert(spark, idx, scatter, key = Some("w1"),
       rebalanceAbovePpm = Some(1500000L))
-    assert(Similarity.ivfVersion(spark, idx) == v0 + 2,
+    assert(IndexCore.version(spark, idx) == v0 + 2,
       "a balanced wave below the threshold must not re-train")
     // hot-cell wave: 20 identical e5 vectors are orthogonal to every
     // frozen centroid — ties collapse them ALL into the first cell,
     // imbalance 28*4/52 ≈ 2.15e6 crosses the 2e6 threshold
     val hot = (32L until 52L).map(i => (i, vec(5))).toDF("vec_id", "v")
-    val v1 = Similarity.ivfVersion(spark, idx)
+    val v1 = IndexCore.version(spark, idx)
     Similarity.ivfIndexUpsert(spark, idx, hot, key = Some("w2"),
       rebalanceAbovePpm = Some(2000000L))
-    assert(Similarity.ivfVersion(spark, idx) == v1 + 3,
+    assert(IndexCore.version(spark, idx) == v1 + 3,
       "the threshold crossing must append exactly one re-train commit " +
         "after the upsert's two")
     // frozen-centroid imbalance was 28·4/52 ≈ 2.15e6 (that's what
@@ -245,9 +246,9 @@ class AnnRecallSpec extends AnyFunSuite {
     assert(got == (32L until 42L).toSet,
       s"post-trigger recall must be 10/10 on the hot direction: $got")
     // delivery keys survive the triggered re-train
-    val v2 = Similarity.ivfVersion(spark, idx)
+    val v2 = IndexCore.version(spark, idx)
     Similarity.ivfIndexUpsert(spark, idx, hot, key = Some("w2"))
-    assert(Similarity.ivfVersion(spark, idx) == v2,
+    assert(IndexCore.version(spark, idx) == v2,
       "redelivered wave must stay a no-op after the triggered re-train")
   }
 

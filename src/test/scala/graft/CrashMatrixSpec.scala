@@ -7,6 +7,7 @@ import graft.dedup.Dedup
 import graft.sim.Similarity
 import graft.streaming.StreamForget
 import graft.text.TextIndex
+import graft.store.IndexCore
 
 /**
  * Kill-point matrix for the paired-key verbs: every multi-commit verb
@@ -94,7 +95,7 @@ class CrashMatrixSpec extends AnyFunSuite {
       verb = idx => TextIndex.upsertDocs(spark, idx, newDocs,
         "doc_id", "text", key = Some("u")),
       digest = textDigest,
-      version = TextIndex.version(spark, _))
+      version = IndexCore.version(spark, _))
   }
 
   test("text upsertDocs FOUNDING: the add-committed kill point must " +
@@ -110,7 +111,7 @@ class CrashMatrixSpec extends AnyFunSuite {
         TextIndex.docsFor(spark, idx, newText.keys.toSeq)
           .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq,
         Seq(TextIndex.tombstoneCount(spark, idx))),
-      version = TextIndex.version(spark, _))
+      version = IndexCore.version(spark, _))
   }
 
   test("dedup indexUpsertDocs: every kill point converges; the gate " +
@@ -134,7 +135,7 @@ class CrashMatrixSpec extends AnyFunSuite {
       verb = idx => Dedup.indexUpsertDocs(spark, idx, newDocs,
         "doc_id", "text", 0.6, key = Some("u")): Unit,
       digest = digest,
-      version = Dedup.indexVersion(spark, _))
+      version = IndexCore.version(spark, _))
   }
 
   test("ivf ivfIndexUpsert: every kill point converges; probes equal " +
@@ -162,7 +163,7 @@ class CrashMatrixSpec extends AnyFunSuite {
       verb = idx => Similarity.ivfIndexUpsert(spark, idx, wave,
         key = Some("u")),
       digest = digest,
-      version = Similarity.ivfVersion(spark, _))
+      version = IndexCore.version(spark, _))
   }
 
   test("repairFromText: every direction-boundary kill point " +
@@ -220,15 +221,15 @@ class CrashMatrixSpec extends AnyFunSuite {
       repair(root).count(): Unit // the replay
       assert(digest(root) == want,
         s"repair kill-point k=$k did not converge")
-      val vs = (TextIndex.version(spark, s"$root/text"),
-        Dedup.indexVersion(spark, s"$root/dedup"),
-        Similarity.ivfVersion(spark, s"$root/ann"))
+      val vs = (IndexCore.version(spark, s"$root/text"),
+        IndexCore.version(spark, s"$root/dedup"),
+        IndexCore.version(spark, s"$root/ann"))
       val again = repair(root)
       assert(again.agg(sum("violations")).head().getLong(0) == 0L,
         s"repair kill-point k=$k: redelivery applied something")
-      assert(vs == (TextIndex.version(spark, s"$root/text"),
-        Dedup.indexVersion(spark, s"$root/dedup"),
-        Similarity.ivfVersion(spark, s"$root/ann")),
+      assert(vs == (IndexCore.version(spark, s"$root/text"),
+        IndexCore.version(spark, s"$root/dedup"),
+        IndexCore.version(spark, s"$root/ann")),
         s"repair kill-point k=$k: redelivery moved an index")
     }
   }
@@ -288,15 +289,15 @@ class CrashMatrixSpec extends AnyFunSuite {
         s"forgetWhereAll kill-point k=$k reported $n")
       assert(digest(root) == want,
         s"forgetWhereAll kill-point k=$k did not converge")
-      val vs = (TextIndex.version(spark, s"$root/text"),
-        Dedup.indexVersion(spark, s"$root/dedup"),
-        Similarity.ivfVersion(spark, s"$root/ann"))
+      val vs = (IndexCore.version(spark, s"$root/text"),
+        IndexCore.version(spark, s"$root/dedup"),
+        IndexCore.version(spark, s"$root/ann"))
       assert(StreamForget.forgetWhereAll(spark,
         col("text").contains("window"), "g", s"$root/text",
         dedupIdx = Some(s"$root/dedup"), annIdx = Some(s"$root/ann")) == 0L)
-      assert(vs == (TextIndex.version(spark, s"$root/text"),
-        Dedup.indexVersion(spark, s"$root/dedup"),
-        Similarity.ivfVersion(spark, s"$root/ann")),
+      assert(vs == (IndexCore.version(spark, s"$root/text"),
+        IndexCore.version(spark, s"$root/dedup"),
+        IndexCore.version(spark, s"$root/ann")),
         s"forgetWhereAll kill-point k=$k: redelivery moved an index")
     }
   }

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.sim.Similarity
+import graft.store.IndexCore
 
 /**
  * Document/vector deletion on the persisted dedup (LSH) and ANN (IVF)
@@ -70,7 +71,7 @@ class IndexForgetSpec extends AnyFunSuite {
         s"gone doc's $sub rows survived the full fold")
     assert(spark.read.parquet(s"$idx/data/$c/pairs")
       .where(col("a_id") === 0L || col("b_id") === 0L).count() == 0L)
-    Dedup.indexVacuum(spark, idx)
+    IndexCore.vacuum(spark, idx)
     assert(Dedup.indexCheckAndIngest(spark, idx,
       Seq((30L, doc)).toDF("doc_id", "text"), "doc_id", "text", 0.6)
       .orderBy("a_id").collect().map(_.getLong(0)).toSeq == Seq(10L, 20L))
@@ -83,7 +84,7 @@ class IndexForgetSpec extends AnyFunSuite {
     Dedup.indexCheckAndIngest(spark, src,
       Seq((0L, doc)).toDF("doc_id", "text"), "doc_id", "text", 0.6,
       deliveryKey = Some("m0")): Unit
-    val vPre = Dedup.indexVersion(spark, src)
+    val vPre = IndexCore.version(spark, src)
     Dedup.indexForgetDocs(spark, src, Seq(0L))
     Dedup.indexCheckAndIngest(spark, dst,
       Seq((50L, doc + " tail")).toDF("doc_id", "text"),
@@ -93,7 +94,7 @@ class IndexForgetSpec extends AnyFunSuite {
     }.getMessage.contains("live tombstones"))
     // the pre-delete branch still gates on doc 0
     val branch = TestSpark.tmpDir("lsh_forget_br") + "/b"
-    Dedup.indexCloneAsOf(spark, src, branch, vPre)
+    IndexCore.cloneAsOf(spark, src, branch, vPre)
     assert(Dedup.indexCheckAndIngest(spark, branch,
       Seq((60L, doc)).toDF("doc_id", "text"), "doc_id", "text", 0.6)
       .collect().map(_.getLong(0)).toSeq == Seq(0L))

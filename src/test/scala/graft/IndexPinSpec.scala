@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.Dedup
 import graft.sim.Similarity
 import graft.text.TextIndex
+import graft.store.IndexCore
 
 /**
  * The replay pin (mid-replay lease): the mechanism that turns "no
@@ -38,12 +39,12 @@ class IndexPinSpec extends AnyFunSuite {
       TextIndex.ingestShard(spark, idx,
         corpus.where(pmod(col("doc_id"), lit(2)) === i),
         "doc_id", "text", key = Some(s"w$i"))
-    TextIndex.pin(spark, idx, "crawl-pipeline")
-    TextIndex.pin(spark, idx, "crawl-pipeline") // idempotent
-    assert(TextIndex.pins(spark, idx) == Seq("crawl-pipeline"))
+    IndexCore.pin(spark, idx, "crawl-pipeline")
+    IndexCore.pin(spark, idx, "crawl-pipeline") // idempotent
+    assert(IndexCore.pins(spark, idx) == Seq("crawl-pipeline"))
     // a second, independent lease coexists
-    TextIndex.pin(spark, idx, "rag-pipeline")
-    assert(TextIndex.pins(spark, idx).toSet ==
+    IndexCore.pin(spark, idx, "rag-pipeline")
+    assert(IndexCore.pins(spark, idx).toSet ==
       Set("crawl-pipeline", "rag-pipeline"))
     // ingest / forget / reads are NOT blocked — a pin only stops the
     // consumers that reposition or erase existing commits
@@ -66,14 +67,14 @@ class IndexPinSpec extends AnyFunSuite {
     assert(new graft.store.CommitLog(s"$idx/_manifests")
       .pins(spark) == Seq("crawl-pipeline", "rag-pipeline"))
     // releasing ONE lease is not enough — the other still holds
-    TextIndex.unpin(spark, idx, "crawl-pipeline")
+    IndexCore.unpin(spark, idx, "crawl-pipeline")
     assert(intercept[IllegalStateException](
       TextIndex.retireTombstones(spark, idx))
       .getMessage.contains("rag-pipeline"))
     // full release unblocks: retirement retires, compaction folds
-    TextIndex.unpin(spark, idx, "rag-pipeline")
-    TextIndex.unpin(spark, idx, "rag-pipeline") // idempotent
-    assert(TextIndex.pins(spark, idx).isEmpty)
+    IndexCore.unpin(spark, idx, "rag-pipeline")
+    IndexCore.unpin(spark, idx, "rag-pipeline") // idempotent
+    assert(IndexCore.pins(spark, idx).isEmpty)
     assert(TextIndex.retireTombstones(spark, idx) == 1)
     TextIndex.compact(spark, idx)
     assert(TextIndex.liveShardCount(spark, idx) == 1)
@@ -86,7 +87,7 @@ class IndexPinSpec extends AnyFunSuite {
     val idx = TestSpark.tmpDir("pin_dedup")
     Dedup.indexCheckAndIngest(spark, idx, corpus, "doc_id", "text", 0.6,
       deliveryKey = Some("s0"), persistPairs = true): Unit
-    Dedup.indexPin(spark, idx, "rag")
+    IndexCore.pin(spark, idx, "rag")
     // the gate (ingest) and takedown verbs still run under the pin
     Dedup.indexCheckAndIngest(spark, idx,
       Seq((10L, "fresh pinned-era words")).toDF("doc_id", "text"),
@@ -96,7 +97,7 @@ class IndexPinSpec extends AnyFunSuite {
       Dedup.indexCompact(spark, idx)).getMessage.contains("rag"))
     assert(intercept[IllegalStateException](
       Dedup.indexRetireTombstones(spark, idx)).getMessage.contains("rag"))
-    Dedup.indexUnpin(spark, idx, "rag")
+    IndexCore.unpin(spark, idx, "rag")
     assert(Dedup.indexRetireTombstones(spark, idx) == 1)
     Dedup.indexCompact(spark, idx)
   }
@@ -111,7 +112,7 @@ class IndexPinSpec extends AnyFunSuite {
     }.toDF("vec_id", "v")
     Similarity.ivfIndexBuild(spark, idx, vecs.where(col("vec_id") < 4),
       centroidStep = 2L, key = Some("f"))
-    Similarity.ivfIndexPin(spark, idx, "embed-stream")
+    IndexCore.pin(spark, idx, "embed-stream")
     Similarity.ivfIndexAppend(spark, idx,
       vecs.where(col("vec_id") >= 4), key = Some("a"))
     Similarity.ivfIndexForget(spark, idx, Seq(0L), key = Some("t"))
@@ -130,7 +131,7 @@ class IndexPinSpec extends AnyFunSuite {
       Similarity.ivfIndexRetireTombstones(spark, idx): Unit)
     assert(graft.streaming.StreamForget.deferredRetirements(idx)
       == before + 1, "a pinned retirement must count as deferred")
-    Similarity.ivfIndexUnpin(spark, idx, "embed-stream")
+    IndexCore.unpin(spark, idx, "embed-stream")
     assert(Similarity.ivfIndexRetireTombstones(spark, idx) == 1)
     assert(Similarity.ivfIndexRebuild(spark, idx, centroidStep = 2L))
   }

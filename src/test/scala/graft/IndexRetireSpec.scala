@@ -312,6 +312,30 @@ class IndexRetireSpec extends AnyFunSuite {
       TextIndex.hasDocsLeg(spark, idx))
     assert(bm25(idx, Seq("zebra")).isEmpty,
       "zebra lived only in the erased doc")
+    // MIXED LAYOUTS: a commit whose postings all die while a zero-token
+    // doc survives is rewritten with PLAIN-layout token-grain legs (the
+    // tokenizer splits on spaces, so doc 200's tabs are tokens and B
+    // kept its postings); one more tb-partitioned commit after it makes
+    // the live set 1 plain + 3 partitioned posting roots, and every
+    // read path must answer over them before a fold normalizes layout
+    TextIndex.ingestShard(spark, idx,
+      Seq((400L, "   "), (401L, "quartz quartz")).toDF("doc_id", "text"),
+      "doc_id", "text")
+    TextIndex.forgetDocs(spark, idx, Seq(401L))
+    assert(TextIndex.retireTombstones(spark, idx) == 1)
+    val fresh = Seq((300L, "merge scan window")).toDF("doc_id", "text")
+    TextIndex.ingestShard(spark, idx, fresh, "doc_id", "text")
+    val plain = liveCommits(idx).filter { c =>
+      new java.io.File(s"$idx/data/$c/post").listFiles()
+        .forall(!_.getName.startsWith("tb="))
+    }
+    assert(plain.size == 1 && liveCommits(idx).size == 4,
+      s"expected 1 plain + 3 partitioned posting roots: ${liveCommits(idx)}")
+    assert(bm25(idx, Seq("merge", "scan")).map(_._2).toSet == Set(2L, 300L))
+    assert(TextIndex.fsck(spark, idx).collect().forall(_.getLong(1) == 0L),
+      "fsck over mixed layouts reports violations")
+    assert(TextIndex.stats(spark, idx).select("n_shards", "nd").head() ==
+      org.apache.spark.sql.Row(4L, 3L))
     // stats equal a never-ingested reference, and a subsequent FULL
     // fold over the empty-posting commit works
     TextIndex.compact(spark, idx)
@@ -319,6 +343,7 @@ class IndexRetireSpec extends AnyFunSuite {
     TextIndex.ingestShard(spark, ref,
       Seq((2L, "merge window table"), (200L, "\t \t"))
         .toDF("doc_id", "text"), "doc_id", "text")
+    TextIndex.ingestShard(spark, ref, fresh, "doc_id", "text")
     assert(TextIndex.stats(spark, idx)
         .select("nd", "tl", "vocab_size", "n_postings").head() ==
       TextIndex.stats(spark, ref)

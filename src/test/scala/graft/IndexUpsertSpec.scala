@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.sim.Similarity
+import graft.store.IndexCore
 
 /**
  * Document/vector UPSERT on the persisted dedup (LSH) and ANN (IVF)
@@ -67,11 +68,11 @@ class IndexUpsertSpec extends AnyFunSuite {
     assert(gate(91L, novel + " x") == Seq(0L, 1L))
     // full redelivery: version-preserving no-op returning the same
     // persisted report
-    val v = Dedup.indexVersion(spark, idx)
+    val v = IndexCore.version(spark, idx)
     val re = Dedup.indexUpsertDocs(spark, idx,
       Seq((0L, novel + " tail")).toDF("doc_id", "text"),
       "doc_id", "text", 0.6, key = Some("u0"), persistPairs = true)
-    assert(Dedup.indexVersion(spark, idx) == v,
+    assert(IndexCore.version(spark, idx) == v,
       "redelivered upsert must be a version-preserving no-op")
     assert(re.select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 0L)),
@@ -103,17 +104,17 @@ class IndexUpsertSpec extends AnyFunSuite {
       "doc_id", "text", 0.6, key = Some("f0")): Unit
     assert(Dedup.indexTombstoneCount(spark, idx) == 0L,
       "a founding upsert must not write a tombstone")
-    assert(Dedup.indexHasDelivery(spark, idx, "f0.add") &&
-      !Dedup.indexHasDelivery(spark, idx, "f0.del"))
+    assert(IndexCore.hasDelivery(spark, idx, "f0.add") &&
+      !IndexCore.hasDelivery(spark, idx, "f0.del"))
     // REDELIVERY of the founding upsert: the delete key was never
     // ledgered (nothing to delete), so the guard must key off the
     // COMMITTED add leg — without it the redelivery would tombstone
     // the generation the first delivery just founded
-    val vF = Dedup.indexVersion(spark, idx)
+    val vF = IndexCore.version(spark, idx)
     Dedup.indexUpsertDocs(spark, idx,
       Seq((0L, oldText), (1L, novel)).toDF("doc_id", "text"),
       "doc_id", "text", 0.6, key = Some("f0")): Unit
-    assert(Dedup.indexVersion(spark, idx) == vF,
+    assert(IndexCore.version(spark, idx) == vF,
       "redelivered FOUNDING upsert must be a version-preserving no-op")
     assert(Dedup.indexTombstoneCount(spark, idx) == 0L,
       "redelivered founding upsert tombstoned the founded generation")
@@ -121,11 +122,11 @@ class IndexUpsertSpec extends AnyFunSuite {
     // the key the upsert will use), the add leg did not — the replay
     // must skip the delete and complete the add only
     Dedup.indexForgetDocs(spark, idx, Seq(0L), key = Some("g0.del"))
-    val vMid = Dedup.indexVersion(spark, idx)
+    val vMid = IndexCore.version(spark, idx)
     Dedup.indexUpsertDocs(spark, idx,
       Seq((0L, "replacement words for document zero")).toDF("doc_id", "text"),
       "doc_id", "text", 0.6, key = Some("g0")): Unit
-    assert(Dedup.indexVersion(spark, idx) == vMid + 1,
+    assert(IndexCore.version(spark, idx) == vMid + 1,
       "replay must publish exactly the missing add leg")
     assert(Dedup.indexTombstoneCount(spark, idx) == 1L,
       "replay must not re-tombstone")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.text.{TextIndex, TextOps}
+import graft.store.IndexCore
 
 /**
  * Indexed phrase percolation: phrase rules stored as a text index
@@ -103,11 +104,11 @@ class PercolateIndexedSpec extends AnyFunSuite {
     assert(after.contains((104L, 3L, 2L)),
       "edited rule must match its new phrase (2 overlapping starts)")
     assert(after.exists(_._1 == 100L), "unrelated rules must survive")
-    val v = TextIndex.version(spark, idx)
+    val v = IndexCore.version(spark, idx)
     TextIndex.upsertDocs(spark, idx,
       Seq((104L, "panic panic")).toDF("doc_id", "text"),
       "doc_id", "text", key = Some("edit104"))
-    assert(TextIndex.version(spark, idx) == v,
+    assert(IndexCore.version(spark, idx) == v,
       "redelivered rule edit must be a version-preserving no-op")
     // a pos-only registry (no docs leg) deletes via the direct rewrite
     val min = TestSpark.tmpDir("perc_idx_min")

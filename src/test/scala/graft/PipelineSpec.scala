@@ -7,6 +7,7 @@ import graft.dedup.Dedup
 import graft.multimodal.Multimodal
 import graft.sim.Similarity
 import graft.text.TextOps
+import graft.store.IndexCore
 
 /**
  * LLM-pipeline operator semantics on small constructed corpora: exact
@@ -197,7 +198,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("already ingested"))
 
     // vacuum leaves exactly the live commit dirs
-    Dedup.indexVacuum(spark, idx)
+    IndexCore.vacuum(spark, idx)
     val remaining = new java.io.File(s"$idx/data").listFiles().map(_.getName)
     assert(remaining.toSet ==
       clog.latest(spark)._2.filter(_.startsWith("c-")).toSet,
@@ -245,7 +246,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("already ingested"))
 
-    Similarity.ivfIndexVacuum(spark, idx)
+    IndexCore.vacuum(spark, idx)
     val remaining = new java.io.File(s"$idx/data").listFiles().map(_.getName)
     assert(remaining.toSet == Set(onlyCommit), s"vacuum left ${remaining.toSeq}")
   }
@@ -261,7 +262,7 @@ class PipelineSpec extends AnyFunSuite {
     Dedup.indexCheckAndIngest(spark, dsrc,
       Seq((10L, doc + " tail")).toDF("doc_id", "text"), "doc_id", "text", 0.6,
       deliveryKey = Some("b1")): Unit
-    Dedup.indexCloneAsOf(spark, dsrc, dbr, version = 1L)
+    IndexCore.cloneAsOf(spark, dsrc, dbr, version = 1L)
     // the pre-branch key rejects on the branch
     val ex = intercept[IllegalArgumentException] {
       Dedup.indexCheckAndIngest(spark, dbr,
@@ -274,7 +275,7 @@ class PipelineSpec extends AnyFunSuite {
         Seq((20L, doc)).toDF("doc_id", "text"), "doc_id", "text", 0.6)
       .collect().map(_.getLong(0)).toSeq
     assert(r == Seq(0L), s"branch leaked post-branch state: $r")
-    assert(Dedup.indexVersion(spark, dsrc) == 2L, "branch writes hit the source")
+    assert(IndexCore.version(spark, dsrc) == 2L, "branch writes hit the source")
 
     // IVF: branch at v1 = founding commit; a key the SOURCE folded at
     // v2 ingests normally on the branch (true divergence)
@@ -289,7 +290,7 @@ class PipelineSpec extends AnyFunSuite {
       all.where(col("vec_id") % 2 === 0), centroidStep = 7L, key = Some("f0"))
     Similarity.ivfIndexAppend(spark, isrc,
       all.where(col("vec_id") % 2 === 1), key = Some("a0"))
-    Similarity.ivfIndexCloneAsOf(spark, isrc, ibr, version = 1L)
+    IndexCore.cloneAsOf(spark, isrc, ibr, version = 1L)
     Similarity.ivfIndexAppend(spark, ibr,
       all.where(col("vec_id") % 2 === 1), key = Some("a0")) // accepted: branched at v1
     def run(idx: String) = Similarity
@@ -298,7 +299,7 @@ class PipelineSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq
     assert(run(ibr) == run(isrc),
       "branch + its own append must equal the source's build+append")
-    assert(Similarity.ivfVersion(spark, isrc) == 2L, "branch writes hit the source")
+    assert(IndexCore.version(spark, isrc) == 2L, "branch writes hit the source")
   }
 
   test("indexMergeFrom: cross-corpus pairs from stored state; keys compose; " +
@@ -390,6 +391,25 @@ class PipelineSpec extends AnyFunSuite {
     // source untouched: one live commit, its key still its own
     val srcLive = new graft.store.CommitLog(s"$src/_manifests").latest(spark)._2
     assert(srcLive.count(_.startsWith("c-")) == 1 && srcLive.contains("#txn:O0"))
+
+    // a source holding >= 2 cell-partitioned posting commits merges too
+    // (its posting roots are read per commit, never as one multi-root
+    // partitioned read)
+    val src2 = TestSpark.tmpDir("ivf_msrc2")
+    val more = Similarity.asDouble(
+      (40L until 60L).map(i =>
+        (i, Array.tabulate(8)(d => math.sin(i * 2.1 + d).toFloat)))
+        .toDF("vec_id", "embedding"),
+      "vec_id", "embedding")
+    Similarity.ivfIndexBuild(spark, src2, more.where(col("vec_id") < 50L),
+      centroidStep = 5L)
+    Similarity.ivfIndexAppend(spark, src2, more.where(col("vec_id") >= 50L))
+    assert(new graft.store.CommitLog(s"$src2/_manifests").latest(spark)._2
+      .count(_.startsWith("c-")) == 2)
+    Similarity.ivfIndexMergeFrom(spark, dst, src2)
+    Similarity.ivfIndexAppend(spark, ref, more)
+    assert(run(dst) == run(ref),
+      "a multi-commit source must merge like appending its raw vectors")
   }
 
   test("ivfIndexRebuild aborts when a concurrent append moved the live set") {
@@ -433,7 +453,7 @@ class PipelineSpec extends AnyFunSuite {
     // dirs), so no partial-corpus k-means runs and no staging is
     // written — previously this path died in .reduce on an
     // all-vacuumed snapshot and burned a full rebuild on a partial one
-    Similarity.ivfIndexVacuum(spark, idx)
+    IndexCore.vacuum(spark, idx)
     val liveNow = clog.latest(spark)._2
     val before = new java.io.File(s"$idx/data").listFiles().map(_.getName).toSet
     assert(!Similarity.ivfIndexRebuildFrom(spark, idx, liveWithAppend,
@@ -491,7 +511,7 @@ class PipelineSpec extends AnyFunSuite {
       .orderBy("q_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq
     assert(rebuilt == krefTopK, "rebuilt index diverged from one-shot k-means")
-    Similarity.ivfIndexVacuum(spark, idx)
+    IndexCore.vacuum(spark, idx)
     val remaining = new java.io.File(s"$idx/data").listFiles().map(_.getName)
     assert(remaining.toSet == liveAfter.toSet,
       s"vacuum must leave exactly the live generation: ${remaining.toSeq}")

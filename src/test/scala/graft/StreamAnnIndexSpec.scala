@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sim.Similarity
 import graft.streaming.StreamAnnIndex
+import graft.store.IndexCore
 
 /**
  * Streaming IVF-index maintainer: the first micro-batch founds the
@@ -68,14 +69,14 @@ class StreamAnnIndexSpec extends AnyFunSuite {
       s"3 batches must publish 3 commits: $live")
     assert((0 until 3).forall(i => live.contains(s"#txn:b$i")),
       s"every batch key must be recorded: $live")
-    val vAfter = Similarity.ivfVersion(spark, idx)
+    val vAfter = IndexCore.version(spark, idx)
 
     // full redelivery under a FRESH checkpoint: batch ids restart at 0
     // over the same mtime-ordered files, every key is already
     // committed, and nothing may publish (a leaked re-found would also
     // fork the centroid set)
     drain(s"$srcDir/ckpt2")
-    assert(Similarity.ivfVersion(spark, idx) == vAfter,
+    assert(IndexCore.version(spark, idx) == vAfter,
       "redelivered stream must not move the index version")
 
     // streamed == one-shot: same founding slice + centroidStep freeze
@@ -103,9 +104,9 @@ class StreamAnnIndexSpec extends AnyFunSuite {
     assert(liveReb.count(_.startsWith("c-")) == 1 &&
       (0 until 3).forall(i => liveReb.contains(s"#txn:b$i")),
       s"rebuild must fold commits but preserve keys: $liveReb")
-    val vReb = Similarity.ivfVersion(spark, idx)
+    val vReb = IndexCore.version(spark, idx)
     drain(s"$srcDir/ckpt3")
-    assert(Similarity.ivfVersion(spark, idx) == vReb,
+    assert(IndexCore.version(spark, idx) == vReb,
       "post-rebuild redelivery must still be rejected by the kept keys")
   }
 
@@ -168,9 +169,9 @@ class StreamAnnIndexSpec extends AnyFunSuite {
     val live = new graft.store.CommitLog(s"$rebIdx/_manifests").latest(spark)._2
     assert((0 until 3).forall(i => live.contains(s"#txn:b$i")),
       s"delivery keys must survive in-stream re-trains: $live")
-    val v = Similarity.ivfVersion(spark, rebIdx)
+    val v = IndexCore.version(spark, rebIdx)
     drain(rebIdx, s"$srcDir/ck_rb2", Some(1200000L))
-    assert(Similarity.ivfVersion(spark, rebIdx) == v,
+    assert(IndexCore.version(spark, rebIdx) == v,
       "redelivery must be a no-op on the auto-rebalanced index")
   }
 

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.Dedup
 import graft.streaming.StreamCrawlPipeline
 import graft.text.TextIndex
+import graft.store.IndexCore
 
 /**
  * Composed crawl pipeline: one stream near-dup-gates each micro-batch
@@ -78,14 +79,14 @@ class StreamCrawlPipelineSpec extends AnyFunSuite {
       corpus.where(!col("doc_id").isin(1L, 5L)), "doc_id", "text")
     assert(search(textIdx) == search(oneShot),
       "text index must hold exactly the dedup survivors")
-    val vD = Dedup.indexVersion(spark, dedupIdx)
-    val vT = TextIndex.version(spark, textIdx)
+    val vD = IndexCore.version(spark, dedupIdx)
+    val vT = IndexCore.version(spark, textIdx)
 
     // full redelivery under a FRESH checkpoint: both ledgers reject
     // every batch, neither index version moves
     drain(dedupIdx, textIdx, s"$srcDir/ckpt2")
-    assert(Dedup.indexVersion(spark, dedupIdx) == vD &&
-      TextIndex.version(spark, textIdx) == vT,
+    assert(IndexCore.version(spark, dedupIdx) == vD &&
+      IndexCore.version(spark, textIdx) == vT,
       "redelivered stream must be a no-op on BOTH indexes")
 
     // crash between the two commits: batch 0's dedup append committed
@@ -100,14 +101,14 @@ class StreamCrawlPipelineSpec extends AnyFunSuite {
       corpus.where(pmod(col("doc_id"), lit(3)) === 0),
       "doc_id", "text", 0.6, deliveryKey = Some("b0"),
       persistPairs = true): Unit
-    val vD2 = Dedup.indexVersion(spark, dedup2)
+    val vD2 = IndexCore.version(spark, dedup2)
     drain(dedup2, text2, s"$srcDir/ckpt3")
     val live2 = new graft.store.CommitLog(s"$dedup2/_manifests").latest(spark)._2
     assert(live2.count(_.startsWith("c-")) == 3,
       s"replayed b0 must not re-append to the dedup index: $live2")
     // +3 = the pipeline's replay-lease pin + batches 1 and 2 (batch
     // 0's data commits were pre-applied by the "crash")
-    assert(Dedup.indexVersion(spark, dedup2) == vD2 + 3,
+    assert(IndexCore.version(spark, dedup2) == vD2 + 3,
       "only the lease pin and batches 1/2 may publish after the crash")
     assert(search(text2) == search(oneShot),
       "post-crash recovery must converge to the uncrashed text index")
@@ -265,10 +266,10 @@ class StreamCrawlPipelineSpec extends AnyFunSuite {
     // no-op on BOTH indexes — this also re-derives the fresh/re-fetch
     // split post-mutation, pinning indexKnownIds' replay stability
     val (vD, vT) =
-      (Dedup.indexVersion(spark, dedupIdx), TextIndex.version(spark, textIdx))
+      (IndexCore.version(spark, dedupIdx), IndexCore.version(spark, textIdx))
     drain(s"$srcDir/ckpt2")
-    assert(Dedup.indexVersion(spark, dedupIdx) == vD &&
-      TextIndex.version(spark, textIdx) == vT,
+    assert(IndexCore.version(spark, dedupIdx) == vD &&
+      IndexCore.version(spark, textIdx) == vT,
       "redelivered re-crawl stream must be a no-op on BOTH indexes")
   }
 }

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.streaming.StreamDedupIndex
+import graft.store.IndexCore
 
 /**
  * Streaming dedup-index maintainer: each micro-batch checks against
@@ -71,14 +72,14 @@ class StreamDedupIndexSpec extends AnyFunSuite {
     assert(live.count(_.startsWith("c-")) == 3 &&
       (0 until 3).forall(i => live.contains(s"#txn:b$i")),
       s"3 batches, 3 commits, 3 keys: $live")
-    val vAfter = Dedup.indexVersion(spark, idx)
+    val vAfter = IndexCore.version(spark, idx)
 
     // full redelivery under a FRESH checkpoint: batch ids restart at 0
     // over the same mtime-ordered files, every key is already
     // committed, and nothing may publish — the pair reports in
     // particular must not double
     drain(s"$srcDir/ckpt2")
-    assert(Dedup.indexVersion(spark, idx) == vAfter,
+    assert(IndexCore.version(spark, idx) == vAfter,
       "redelivered stream must not move the index version")
 
     def pairsOf(d: String) = Dedup.indexPairs(spark, d)

@@ -7,6 +7,7 @@ import graft.dedup.Dedup
 import graft.sim.Similarity
 import graft.streaming.StreamForget
 import graft.text.TextIndex
+import graft.store.IndexCore
 
 /**
  * Streaming takedown queue: deletion requests drain as micro-batches
@@ -89,18 +90,18 @@ class StreamForgetSpec extends AnyFunSuite {
       s"deleted vectors still probe as neighbors: $nn")
     // every ledger carries both batch keys
     for (k <- Seq("b0", "b1")) {
-      assert(TextIndex.hasDelivery(spark, textIdx, k))
-      assert(Dedup.indexHasDelivery(spark, dedupIdx, k))
-      assert(Similarity.ivfHasDelivery(spark, annIdx, k))
+      assert(IndexCore.hasDelivery(spark, textIdx, k))
+      assert(IndexCore.hasDelivery(spark, dedupIdx, k))
+      assert(IndexCore.hasDelivery(spark, annIdx, k))
     }
     // fresh-checkpoint redelivery: version-preserving no-op everywhere
-    val vs = (TextIndex.version(spark, textIdx),
-      Dedup.indexVersion(spark, dedupIdx),
-      Similarity.ivfVersion(spark, annIdx))
+    val vs = (IndexCore.version(spark, textIdx),
+      IndexCore.version(spark, dedupIdx),
+      IndexCore.version(spark, annIdx))
     drain(s"$srcDir/ckpt_redelivery")
-    assert((TextIndex.version(spark, textIdx),
-      Dedup.indexVersion(spark, dedupIdx),
-      Similarity.ivfVersion(spark, annIdx)) == vs,
+    assert((IndexCore.version(spark, textIdx),
+      IndexCore.version(spark, dedupIdx),
+      IndexCore.version(spark, annIdx)) == vs,
       "redelivered takedown stream must be a no-op on every index")
   }
 
@@ -118,7 +119,7 @@ class StreamForgetSpec extends AnyFunSuite {
     // simulate the crash gap: the text tombstone for batch 0 committed,
     // the ANN one did not (the stream died in between)
     TextIndex.forgetDocs(spark, textIdx, Seq(0L), key = Some("b0"))
-    val vText = TextIndex.version(spark, textIdx)
+    val vText = IndexCore.version(spark, textIdx)
     val srcDir = java.nio.file.Files.createTempDirectory("sfg_gap_src")
     writeBatches(srcDir, Seq(Seq(0L)))
     val schema = spark.read.parquet(s"$srcDir/b0.parquet").schema
@@ -128,11 +129,11 @@ class StreamForgetSpec extends AnyFunSuite {
         .parquet(srcDir.toString),
       s"$srcDir/ckpt", textIdx = Some(textIdx),
       annIdx = Some(annIdx)).awaitTermination()
-    assert(TextIndex.version(spark, textIdx) == vText,
+    assert(IndexCore.version(spark, textIdx) == vText,
       "replayed batch re-applied to the already-committed text leg")
     assert(Similarity.ivfTombstoneCount(spark, annIdx) == 1L,
       "the missing ANN leg did not complete on replay")
-    assert(Similarity.ivfHasDelivery(spark, annIdx, "b0"))
+    assert(IndexCore.hasDelivery(spark, annIdx, "b0"))
   }
 
   test("forgetWhereAll erases everything matching a content predicate " +
@@ -165,21 +166,21 @@ class StreamForgetSpec extends AnyFunSuite {
     assert(!nn.contains(0L) && !nn.contains(4L),
       s"deleted vectors still probe as neighbors: $nn")
     // redelivery: 0, no version moves anywhere
-    val vs = (TextIndex.version(spark, textIdx),
-      Dedup.indexVersion(spark, dedupIdx),
-      Similarity.ivfVersion(spark, annIdx))
+    val vs = (IndexCore.version(spark, textIdx),
+      IndexCore.version(spark, dedupIdx),
+      IndexCore.version(spark, annIdx))
     assert(StreamForget.forgetWhereAll(spark,
       col("text").contains("fox"), "gdpr1", textIdx,
       dedupIdx = Some(dedupIdx), annIdx = Some(annIdx)) == 0L)
-    assert(vs == (TextIndex.version(spark, textIdx),
-      Dedup.indexVersion(spark, dedupIdx),
-      Similarity.ivfVersion(spark, annIdx)),
+    assert(vs == (IndexCore.version(spark, textIdx),
+      IndexCore.version(spark, dedupIdx),
+      IndexCore.version(spark, annIdx)),
       "redelivered cross-index takedown must be a version-preserving no-op")
     // a predicate matching nothing LIVE still ledgers its marker —
     // ('fox' docs are already gone, so a fresh key resolves nothing)
     assert(StreamForget.forgetWhereAll(spark,
       col("text").contains("fox"), "gdpr2", textIdx) == 0L)
-    assert(TextIndex.hasDelivery(spark, textIdx, "gdpr2.text"))
+    assert(IndexCore.hasDelivery(spark, textIdx, "gdpr2.text"))
     // crash gap: the dedup leg committed (with the ids the crashed
     // attempt resolved), text/ANN did not — the replay must
     // re-resolve the SAME ids (text store untouched) and complete
@@ -294,7 +295,7 @@ class StreamForgetSpec extends AnyFunSuite {
     assert(TextIndex.searchBm25(spark, textIdx, Seq("fox"), 10)
       .collect().map(_.getLong(1)).toSeq == Seq(4L))
     for (k <- Seq("b0", "b1"))
-      assert(TextIndex.hasDelivery(spark, textIdx, k),
+      assert(IndexCore.hasDelivery(spark, textIdx, k),
         s"key $k lost in the mid-stream fold")
   }
 
@@ -311,7 +312,7 @@ class StreamForgetSpec extends AnyFunSuite {
       persistPairs = true): Unit
     def dedupData() = new graft.store.CommitLog(s"$dedupIdx/_manifests")
       .latest(spark)._2.filterNot(_.startsWith("#pin:")).toSet
-    val (vT, eD) = (TextIndex.version(spark, textIdx), dedupData())
+    val (vT, eD) = (IndexCore.version(spark, textIdx), dedupData())
     assert(StreamForget.forgetWhereAll(spark,
       col("text").contains("fox"), "e1", textIdx,
       dedupIdx = Some(dedupIdx), includeNearDups = true) == 0L)
@@ -320,12 +321,12 @@ class StreamForgetSpec extends AnyFunSuite {
     // pin/unpin lease commits) — the old path re-ran the predicate
     // through forgetWhere, which against a store that moved since the
     // resolution could tombstone the text leg alone
-    assert(TextIndex.version(spark, textIdx) == vT + 1)
-    assert(TextIndex.hasDelivery(spark, textIdx, "e1.text"))
+    assert(IndexCore.version(spark, textIdx) == vT + 1)
+    assert(IndexCore.hasDelivery(spark, textIdx, "e1.text"))
     assert(TextIndex.tombstoneCount(spark, textIdx) == 0L,
       "empty-resolution takedown must not create a tombstone")
     assert(dedupData() == eD)
-    assert(Dedup.indexPins(spark, dedupIdx).isEmpty,
+    assert(IndexCore.pins(spark, dedupIdx).isEmpty,
       "the empty-resolution path must release its lease")
     // content matching the predicate ingested AFTER the verb completed
     // is a NEW generation: the ledgered key must keep redeliveries
@@ -421,7 +422,7 @@ class StreamForgetSpec extends AnyFunSuite {
       0.6, deliveryKey = Some("w0")): Unit
     // the crashed attempt's EXACT on-disk state: the verb pinned at
     // entry, committed the dedup leg, then died before the text leg
-    Dedup.indexPin(spark, dedupIdx, "fwa:g")
+    IndexCore.pin(spark, dedupIdx, "fwa:g")
     Dedup.indexForgetDocs(spark, dedupIdx, Seq(1L, 2L),
       key = Some("g.dedup"))
     // maintenance racing the window DEFERS loudly instead of consuming
@@ -435,7 +436,7 @@ class StreamForgetSpec extends AnyFunSuite {
     assert(StreamForget.forgetWhereAll(spark,
       col("text").contains("window"), "g", textIdx,
       dedupIdx = Some(dedupIdx)) == 2L)
-    assert(Dedup.indexPins(spark, dedupIdx).isEmpty,
+    assert(IndexCore.pins(spark, dedupIdx).isEmpty,
       "completion must release the lease")
     assert(Dedup.indexRetireTombstones(spark, dedupIdx) == 1,
       "the window is closed — retirement proceeds")
@@ -443,12 +444,12 @@ class StreamForgetSpec extends AnyFunSuite {
     assert(StreamForget.forgetWhereAll(spark,
       col("text").contains("fox"), "g2", textIdx,
       dedupIdx = Some(dedupIdx)) == 2L)
-    assert(Dedup.indexPins(spark, dedupIdx).isEmpty)
+    assert(IndexCore.pins(spark, dedupIdx).isEmpty)
     // and a redelivery probe (marker present) stays pin-free
     assert(StreamForget.forgetWhereAll(spark,
       col("text").contains("fox"), "g2", textIdx,
       dedupIdx = Some(dedupIdx)) == 0L)
-    assert(Dedup.indexPins(spark, dedupIdx).isEmpty)
+    assert(IndexCore.pins(spark, dedupIdx).isEmpty)
   }
 
   test("deferred-retirement observability: consecutive lost publishes " +

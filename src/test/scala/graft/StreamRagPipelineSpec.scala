@@ -8,6 +8,7 @@ import graft.dedup.Dedup
 import graft.sim.Similarity
 import graft.streaming.StreamRagPipeline
 import graft.text.TextIndex
+import graft.store.IndexCore
 
 /**
  * Full RAG ingest pipeline: one stream, three persisted indexes.
@@ -110,12 +111,12 @@ class StreamRagPipelineSpec extends AnyFunSuite {
     assert(search(textIdx) == search(oneShotText))
 
     // full fresh-checkpoint redelivery: no version moves anywhere
-    val (vD, vT, vA) = (Dedup.indexVersion(spark, dedupIdx),
-      TextIndex.version(spark, textIdx), Similarity.ivfVersion(spark, annIdx))
+    val (vD, vT, vA) = (IndexCore.version(spark, dedupIdx),
+      IndexCore.version(spark, textIdx), IndexCore.version(spark, annIdx))
     drain(dedupIdx, textIdx, annIdx, s"$srcDir/ckpt2")
-    assert(Dedup.indexVersion(spark, dedupIdx) == vD &&
-      TextIndex.version(spark, textIdx) == vT &&
-      Similarity.ivfVersion(spark, annIdx) == vA,
+    assert(IndexCore.version(spark, dedupIdx) == vD &&
+      IndexCore.version(spark, textIdx) == vT &&
+      IndexCore.version(spark, annIdx) == vA,
       "redelivered stream must be a no-op on ALL THREE indexes")
 
     // crash AFTER text, BEFORE ANN on batch 0 (simulated by
@@ -130,13 +131,13 @@ class StreamRagPipelineSpec extends AnyFunSuite {
       deliveryKey = Some("b0"), persistPairs = true): Unit
     TextIndex.ingestShard(spark, text2, b0, "doc_id", "text",
       key = Some("b0"))
-    val (vD2, vT2) = (Dedup.indexVersion(spark, dedup2),
-      TextIndex.version(spark, text2))
+    val (vD2, vT2) = (IndexCore.version(spark, dedup2),
+      IndexCore.version(spark, text2))
     drain(dedup2, text2, ann2, s"$srcDir/ckpt3")
     // dedup +3 = the pipeline's replay-lease pin + batches 1/2; text
     // is not leased, so exactly the two batch commits
-    assert(Dedup.indexVersion(spark, dedup2) == vD2 + 3 &&
-      TextIndex.version(spark, text2) == vT2 + 2,
+    assert(IndexCore.version(spark, dedup2) == vD2 + 3 &&
+      IndexCore.version(spark, text2) == vT2 + 2,
       "replayed b0 must not re-commit the dedup or text legs")
     assert(probe(ann2) == probe(ref),
       "post-crash recovery must converge to the reference ANN index")
@@ -209,12 +210,12 @@ class StreamRagPipelineSpec extends AnyFunSuite {
       Seq((90L, "rewritten zz yy xx ww vv uu qq")).toDF("doc_id", "text"),
       "doc_id", "text", 0.6).collect().map(_.getLong(0)).toSeq == Seq(0L))
     // full redelivery: version-preserving no-op on all three
-    val (vD, vT, vA) = (Dedup.indexVersion(spark, dedupIdx),
-      TextIndex.version(spark, textIdx), Similarity.ivfVersion(spark, annIdx))
+    val (vD, vT, vA) = (IndexCore.version(spark, dedupIdx),
+      IndexCore.version(spark, textIdx), IndexCore.version(spark, annIdx))
     drain(s"$srcDir/ckpt2")
-    assert(Dedup.indexVersion(spark, dedupIdx) == vD &&
-      TextIndex.version(spark, textIdx) == vT &&
-      Similarity.ivfVersion(spark, annIdx) == vA,
+    assert(IndexCore.version(spark, dedupIdx) == vD &&
+      IndexCore.version(spark, textIdx) == vT &&
+      IndexCore.version(spark, annIdx) == vA,
       "redelivered re-fetch stream must be a no-op on ALL THREE indexes")
   }
 

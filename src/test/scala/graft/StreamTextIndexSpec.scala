@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamTextIndex
 import graft.text.TextIndex
+import graft.store.IndexCore
 
 /**
  * Streaming text-index maintainer: one shard per micro-batch under a
@@ -67,13 +68,13 @@ class StreamTextIndexSpec extends AnyFunSuite {
     // fanIn=2 fold ran, leaving 2 live shards
     assert(TextIndex.liveShardCount(spark, idx) == 2,
       "third shard must have triggered the tiered fold")
-    val vAfter = TextIndex.version(spark, idx)
+    val vAfter = IndexCore.version(spark, idx)
 
     // full redelivery under a FRESH checkpoint: batch ids restart at 0
     // over the same mtime-ordered files, every key is already
     // committed, and nothing may publish
     drain(s"$srcDir/ckpt2")
-    assert(TextIndex.version(spark, idx) == vAfter,
+    assert(IndexCore.version(spark, idx) == vAfter,
       "redelivered stream must not move the index version")
 
     TextIndex.ingestShard(spark, oneShot, corpus, "doc_id", "text")
@@ -106,11 +107,11 @@ class StreamTextIndexSpec extends AnyFunSuite {
         java.nio.file.Paths.get(s"$idx/_manifests")).toArray.map(_.toString)
       .count(_.matches(".*/v\\d{12}"))
     assert(vFiles == 1, s"keepVersions=1 must retain 1 version file, got $vFiles")
-    assert(TextIndex.version(spark, idx) == 3L)
+    assert(IndexCore.version(spark, idx) == 3L)
     // delivery keys live in the LATEST version — replay rejection and
     // search are untouched by manifest retention
     drain(s"$srcDir/ckpt2")
-    assert(TextIndex.version(spark, idx) == 3L,
+    assert(IndexCore.version(spark, idx) == 3L,
       "redelivery after manifest retention must stay a no-op")
     val oneShot = TestSpark.tmpDir("sti_oneshot2")
     TextIndex.ingestShard(spark, oneShot, corpus, "doc_id", "text")

@@ -7,6 +7,7 @@ import graft.dedup.Dedup
 import graft.sim.Similarity
 import graft.streaming.StreamForget
 import graft.text.TextIndex
+import graft.store.IndexCore
 
 /**
  * The erasure contract at BYTE grain: after a cross-index takedown +
@@ -108,9 +109,9 @@ class TakedownAuditSpec extends AnyFunSuite {
       assert(TextIndex.retireTombstones(spark, textIdx) == 1)
       assert(Dedup.indexRetireTombstones(spark, dedupIdx) == 1)
       assert(Similarity.ivfIndexRetireTombstones(spark, annIdx) == 1)
-      TextIndex.vacuum(spark, textIdx)
-      Dedup.indexVacuum(spark, dedupIdx)
-      Similarity.ivfIndexVacuum(spark, annIdx)
+      IndexCore.vacuum(spark, textIdx)
+      IndexCore.vacuum(spark, dedupIdx)
+      IndexCore.vacuum(spark, annIdx)
 
       // BYTES GONE: no file of any index carries the sentinel
       for (idx <- Seq(textIdx, dedupIdx, annIdx)) {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.text.TextIndex
+import graft.store.IndexCore
 
 /**
  * Document deletion on the persisted text index: a tombstone commit
@@ -96,14 +97,14 @@ class TextIndexForgetSpec extends AnyFunSuite {
       "gone doc's postings must be physically dropped by the fold")
     // both the ingest keys and the DELETE key survived the fold
     for (k <- Seq("comp0", "comp1", "take4"))
-      assert(TextIndex.hasDelivery(spark, idx, k), s"key $k lost in fold")
+      assert(IndexCore.hasDelivery(spark, idx, k), s"key $k lost in fold")
     // redelivered delete still refused post-compaction
     val ex = intercept[IllegalArgumentException] {
       TextIndex.forgetDocs(spark, idx, Seq(4L), key = Some("take4"))
     }
     assert(ex.getMessage.contains("redelivery rejected"))
     // vacuum reclaims the superseded dirs; answers stand
-    TextIndex.vacuum(spark, idx)
+    IndexCore.vacuum(spark, idx)
     assert(bm25(idx, Seq("merge", "scan")) == bm25(ref, Seq("merge", "scan")))
   }
 
@@ -136,8 +137,8 @@ class TextIndexForgetSpec extends AnyFunSuite {
     assert(TextIndex.stats(spark, idx).head() == stAfter,
       "re-delete double-subtracted df/nd/tl")
     // the no-op still LEDGERED its key (replay probes as done)
-    assert(TextIndex.hasDelivery(spark, idx, "again"))
-    assert(TextIndex.version(spark, idx) > 0)
+    assert(IndexCore.hasDelivery(spark, idx, "again"))
+    assert(IndexCore.version(spark, idx) > 0)
   }
 
   test("stale publish aborts and drops its staging: the live tombstone " +
@@ -231,12 +232,12 @@ class TextIndexForgetSpec extends AnyFunSuite {
     assert(TextIndex.docsFor(spark, idx, Seq(1L)).head().getString(1) ==
       "merge merge merge sort")
     // both leg keys ledgered; a FULL redelivery of the upsert no-ops
-    assert(TextIndex.hasDelivery(spark, idx, "u1.del"))
-    assert(TextIndex.hasDelivery(spark, idx, "u1.add"))
-    val v = TextIndex.version(spark, idx)
+    assert(IndexCore.hasDelivery(spark, idx, "u1.del"))
+    assert(IndexCore.hasDelivery(spark, idx, "u1.add"))
+    val v = IndexCore.version(spark, idx)
     TextIndex.upsertDocs(spark, idx, newText, "doc_id", "text",
       key = Some("u1"))
-    assert(TextIndex.version(spark, idx) == v,
+    assert(IndexCore.version(spark, idx) == v,
       "redelivered upsert must be a version-preserving no-op")
     // crash-gap replay: delete leg committed, add leg missing — the
     // replay completes ONLY the add
@@ -261,10 +262,10 @@ class TextIndexForgetSpec extends AnyFunSuite {
     TextIndex.upsertDocs(spark, idx3, newText, "doc_id", "text",
       key = Some("f0"))
     assert(bm25(idx3, Seq("seven")).map(_._2) == Seq(7L))
-    val vF = TextIndex.version(spark, idx3)
+    val vF = IndexCore.version(spark, idx3)
     TextIndex.upsertDocs(spark, idx3, newText, "doc_id", "text",
       key = Some("f0"))
-    assert(TextIndex.version(spark, idx3) == vF,
+    assert(IndexCore.version(spark, idx3) == vF,
       "redelivered FOUNDING upsert must be a version-preserving no-op")
     assert(TextIndex.tombstoneCount(spark, idx3) == 0L,
       "redelivered founding upsert tombstoned the founded generation")
@@ -274,10 +275,10 @@ class TextIndexForgetSpec extends AnyFunSuite {
   test("time travel: a pre-delete cloneAsOf branch still serves the " +
       "deleted doc until vacuum erases the superseded bytes") {
     val idx = freshIdx("tt", corpus)
-    val vPre = TextIndex.version(spark, idx)
+    val vPre = IndexCore.version(spark, idx)
     TextIndex.forgetDocs(spark, idx, Seq(1L))
     val branch = TestSpark.tmpDir("text_forget_branch")
-    TextIndex.cloneAsOf(spark, idx, branch, vPre)
+    IndexCore.cloneAsOf(spark, idx, branch, vPre)
     // the branch sees the pre-delete world
     assert(TextIndex.docsFor(spark, branch, Seq(1L)).count() == 1L)
     assert(TextIndex.searchBm25(spark, branch, Seq("window"), 10)
@@ -293,7 +294,7 @@ class TextIndexForgetSpec extends AnyFunSuite {
     // compact + vacuum on the main index completes physical erasure
     // without touching the branch (clone = hard links to its own refs)
     TextIndex.compact(spark, idx)
-    TextIndex.vacuum(spark, idx)
+    IndexCore.vacuum(spark, idx)
     assert(TextIndex.docsFor(spark, branch, Seq(1L)).count() == 1L)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.text.TextIndex
+import graft.store.IndexCore
 
 /**
  * Persisted inverted text index: sharded ingest folds df/stats
@@ -101,7 +102,7 @@ class TextIndexSpec extends AnyFunSuite {
     // vacuum reclaims the superseded shard dirs; the live index answers
     val dd = new java.io.File(s"$idx/data")
     assert(dd.listFiles().length > 1, "superseded dirs should linger pre-vacuum")
-    TextIndex.vacuum(spark, idx)
+    IndexCore.vacuum(spark, idx)
     assert(dd.listFiles().map(_.getName).toSet ==
       live.filter(_.startsWith("c-")).toSet)
     assert(run() == before, "vacuum broke the live index")
@@ -181,7 +182,7 @@ class TextIndexSpec extends AnyFunSuite {
 
     // branch at v2 = shards 0-1: a pre-branch key rejects there, the
     // post-branch shard (s2, the source's v3) ingests — true divergence
-    TextIndex.cloneAsOf(spark, src, br, version = 2L)
+    IndexCore.cloneAsOf(spark, src, br, version = 2L)
     val ex = intercept[IllegalArgumentException] {
       TextIndex.ingestShard(spark, br,
         corpus.where(col("doc_id") < 2), "doc_id", "text", key = Some("s0"))
@@ -191,12 +192,12 @@ class TextIndexSpec extends AnyFunSuite {
       corpus.where(col("doc_id") === 4), "doc_id", "text", key = Some("s2"))
     assert(run(br) == run(src),
       "branch + its own s2 ingest must equal the source's full index")
-    assert(TextIndex.version(spark, src) == 3L, "branch writes hit the source")
+    assert(IndexCore.version(spark, src) == 3L, "branch writes hit the source")
 
     // compact + vacuum the SOURCE: the branch's hard-linked names keep
     // the shared inodes alive
     TextIndex.compact(spark, src)
-    TextIndex.vacuum(spark, src)
+    IndexCore.vacuum(spark, src)
     assert(run(br) == run(src), "source vacuum reached the branch")
 
     // branch-then-source-retention: a branch from a version whose
@@ -204,13 +205,13 @@ class TextIndexSpec extends AnyFunSuite {
     // manifest retention reclaims the version FILES the refusal names
     // the retention floor
     val ex2 = intercept[IllegalArgumentException] {
-      TextIndex.cloneAsOf(spark, src,
+      IndexCore.cloneAsOf(spark, src,
         TestSpark.tmpDir("text_idx_bv") + "/b", version = 1L)
     }
     assert(ex2.getMessage.contains("vacuumed"))
-    TextIndex.vacuum(spark, src, keepVersions = 1)
+    IndexCore.vacuum(spark, src, keepVersions = 1)
     val ex3 = intercept[IllegalArgumentException] {
-      TextIndex.cloneAsOf(spark, src,
+      IndexCore.cloneAsOf(spark, src,
         TestSpark.tmpDir("text_idx_bf") + "/b", version = 1L)
     }
     assert(ex3.getMessage.contains("retention floor"))
@@ -251,7 +252,7 @@ class TextIndexSpec extends AnyFunSuite {
 
     // the source was never written to
     assert(TextIndex.liveShardCount(spark, src) == 1)
-    assert(TextIndex.version(spark, src) == 1L)
+    assert(IndexCore.version(spark, src) == 1L)
 
     // the merged commit folds like any other shard
     TextIndex.compact(spark, dst)
@@ -266,7 +267,7 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.ingestShard(spark, src, corpus.where(col("doc_id").between(2, 3)),
       "doc_id", "text")
     TextIndex.mergeFrom(spark, dst, src) // keyless on both sides
-    val after = TextIndex.version(spark, dst)
+    val after = IndexCore.version(spark, dst)
     // the EXACT same source snapshot re-merged must refuse — delivery
     // keys can't catch this (there are none); the identity marker does
     val ex = intercept[IllegalArgumentException] {
@@ -274,7 +275,7 @@ class TextIndexSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("already lives in the destination"),
       s"keyless re-merge must refuse: ${ex.getMessage}")
-    assert(TextIndex.version(spark, dst) == after,
+    assert(IndexCore.version(spark, dst) == after,
       "refused keyless re-merge mutated the destination")
     // a source that ADVANCED is a NEW snapshot: merging it again is the
     // caller's call (and would re-fold the old entries — the documented
@@ -283,7 +284,7 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.ingestShard(spark, src, corpus.where(col("doc_id") === 4),
       "doc_id", "text")
     TextIndex.mergeFrom(spark, dst, src)
-    assert(TextIndex.version(spark, dst) == after + 1)
+    assert(IndexCore.version(spark, dst) == after + 1)
   }
 
   test("searchBm25Batch: a batch of one equals searchBm25; per-query ranks are independent; maxDf parity") {
@@ -420,6 +421,14 @@ class TextIndexSpec extends AnyFunSuite {
       corpus.limit(1), "doc_id", "text", maxDf = 100L, minPpm = 1L)
     assert(out.columns.toSeq ==
       Seq("bench_id", "doc_id", "n_kept", "overlap", "containment_ppm"))
+    assert(out.count() == 0L)
+  }
+
+  test("searchBm25 on an index with no live commits answers zero rows with the ranking schema") {
+    val idx = TestSpark.tmpDir("text_idx_empty_bm25")
+    val out = TextIndex.searchBm25(spark, idx, Seq("merge", "window"), 10)
+    assert(out.columns.toSeq == Seq("rank", "doc_id", "score_ppm", "n_terms"))
+    assert(out.schema.forall(_.dataType == org.apache.spark.sql.types.LongType))
     assert(out.count() == 0L)
   }
 
