@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.ingest.Melt
 import graft.model.Fidelity
 import graft.query.{RangeQuery, Search}
-import graft.store.{CommentStore, ManifestStore, Tables}
+import graft.store.{CommentStore, ManifestStore}
 
 /**
  * Thin engine façade mirroring the reference's HTTP surface
@@ -17,44 +17,15 @@ import graft.store.{CommentStore, ManifestStore, Tables}
  * operator modules; this layer does exactly what the Flask layer does —
  * validation, routing, id assignment, and counters.
  *
- * `manifestRollups` (DEFAULT) runs BOTH tables on the
- * manifest-committed store via `ManifestStore.ingestBatchAtomic`: each
- * put publishes its raw rows and rollup partials under ONE atomic
- * version (no snapshot can see the two tables out of step), with O(1)
- * commits and size-tiered compaction for sustained high-cardinality
- * ingest — the 100 TB-correct write path, and ~2× faster than the
- * dynamic-overwrite backend on the identical ingest workload. Set it
- * false for the partitioned-table backend; the two are interchangeable
- * behind this façade (comments are identical in both modes), and the
- * flip is proven by ApiSpec running the same flow through both.
- *
- * `autoRollupRewrite = true` registers this store with the
- * materialized-view rewrite (graft.plans.RollupRewriteRule) and
- * installs the rule on the session, so a USER-written tumbling-window
- * min/max/sum/count aggregate over the store's raw table — DataFrame
- * or SQL — is optimizer-rewritten to a scan of the maintained rollup
- * level (~10^d× less data, no aggregation). `getData` already routes
- * to rollups explicitly; the flag extends the same guarantee to ad-hoc
- * aggregates that never went through the façade. Partitioned-table
- * backend only: the manifest store's merge-on-read fold is not a plain
- * parquet relation the rule can substitute.
+ * Both tables live on the manifest-committed store
+ * ([[graft.store.ManifestStore]], the façade's one backend): each put
+ * publishes its raw rows and rollup partials under ONE atomic version
+ * via `ManifestStore.ingestBatchAtomic` (no snapshot can see the two
+ * tables out of step), with O(1) commits and size-tiered compaction
+ * for sustained high-cardinality ingest — the 100 TB-correct write
+ * path.
  */
-final class GraftApi(
-    spark: SparkSession, root: String, commentsPath: String,
-    manifestRollups: Boolean = true,
-    autoRollupRewrite: Boolean = false) {
-
-  require(!(autoRollupRewrite && manifestRollups),
-    "autoRollupRewrite requires the partitioned-table rollup backend")
-  if (autoRollupRewrite) {
-    graft.plans.RollupCatalog.register(root)
-    // idempotent across instances sharing the session
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[graft.plans.RollupRewriteRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.RollupRewriteRule(spark)
-  }
+final class GraftApi(spark: SparkSession, root: String, commentsPath: String) {
 
   // A9 — engine counters, fed back as series by flushSelfMetrics
   // (reference: src/index.py:97-98, 110, 198; src/metrics/loop.py:52-78)
@@ -62,38 +33,30 @@ final class GraftApi(
   private val numGets = new AtomicLong(0L)
 
   /** GET /api/data/<dataset_id>?start&end[&fidelity] (server.py:63-73).
-   *  The per-series READERS are used (readRawFor/readRollupFor): they
-   *  inject the series' hash-bucket predicate so the scan statically
-   *  prunes to 1/DsBuckets of the partition dirs — a bare dataset_id
-   *  filter above the reader could not imply the bucket.
+   *  The per-series READERS are used (readRawFor/readLevelRange): they
+   *  apply the series' hash-bucket and bucket bounds BELOW the
+   *  merge-on-read fold, riding the commit files' row-group stats — a
+   *  bare dataset_id filter above the fold would aggregate the whole
+   *  level first. With `asOf`, both legs resolve the SAME published
+   *  version — the chart shows one consistent instant whatever
+   *  fidelity the span routes to.
    */
   def getData(
       datasetId: String, startUs: Long, endUs: Long,
       fidelity: Option[Fidelity] = None,
       asOf: Option[Long] = None): DataFrame = {
     Melt.requireLegalId(datasetId)
-    require(asOf.isEmpty || manifestRollups,
-      "time-travel reads require the manifest backend")
     numGets.incrementAndGet()
-    // ONE routing dispatch for both backends (RangeQuery.getWith); the
-    // backends differ only in the aggregate-level reader — the manifest
-    // store needs the series/bucket bounds BELOW its merge-on-read fold
-    // (readLevelRange), the partitioned table injects its hash-bucket
-    // predicate (readRollupFor). With `asOf`, both legs resolve the
-    // SAME published version — the chart shows one consistent instant
-    // whatever fidelity the span routes to.
     RangeQuery.getWith(
-      _ => (manifestRollups, asOf) match {
-        case (true, Some(v)) => ManifestStore.readRawForAsOf(spark, root, datasetId, v)
-        case (true, None) => ManifestStore.readRawFor(spark, root, datasetId)
-        case _ => Tables.readRawFor(spark, root, datasetId)
+      _ => asOf match {
+        case Some(v) => ManifestStore.readRawForAsOf(spark, root, datasetId, v)
+        case None => ManifestStore.readRawFor(spark, root, datasetId)
       },
-      (f, startS, endS) => (manifestRollups, asOf) match {
-        case (true, Some(v)) =>
+      (f, startS, endS) => asOf match {
+        case Some(v) =>
           ManifestStore.readLevelRangeAsOf(spark, root, f, datasetId, startS, endS, v)
-        case (true, None) =>
+        case None =>
           ManifestStore.readLevelRange(spark, root, f, datasetId, startS, endS)
-        case _ => Tables.readRollupFor(spark, root, f, datasetId)
       },
       datasetId, startUs, endUs, fidelity)
   }
@@ -104,16 +67,12 @@ final class GraftApi(
    */
   def putData(batchLong: DataFrame): Unit = {
     numPuts.incrementAndGet()
-    if (manifestRollups)
-      ManifestStore.ingestBatchAtomic(spark, root, batchLong): Unit
-    else Tables.ingestBatch(spark, root, batchLong)
+    ManifestStore.ingestBatchAtomic(spark, root, batchLong): Unit
   }
 
   /** GET /api/datasets?text=q (server.py:57-60, index.py:219-239). */
   def datasets(query: String, maxCount: Int = 300): DataFrame =
-    Search.datasets(
-      if (manifestRollups) ManifestStore.readRaw(spark, root)
-      else Tables.readRaw(spark, root), query, maxCount)
+    Search.datasets(ManifestStore.readRaw(spark, root), query, maxCount)
 
   /** POST /api/comment/new — EPOCH-nanosecond id assigned HERE, never
    *  inside a distributed job (marks.py:82 uses `time.time_ns()`:
@@ -389,9 +348,7 @@ final class GraftApi(
       ("index.num_puts", tsUs, numPuts.get().toDouble),
       ("index.num_gets", tsUs, numGets.get().toDouble))
       .toDF("dataset_id", "ts_us", "value")
-    if (manifestRollups)
-      ManifestStore.ingestBatchAtomic(spark, root, rows): Unit
-    else Tables.ingestBatch(spark, root, rows)
+    ManifestStore.ingestBatchAtomic(spark, root, rows): Unit
   }
 }
 

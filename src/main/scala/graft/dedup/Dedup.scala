@@ -311,23 +311,8 @@ object Dedup {
    */
   def indexForgetDocs(
       spark: SparkSession, indexDir: String,
-      ids: Seq[Long], key: Option[String] = None): Unit = {
-    require(ids.nonEmpty && ids.length <= 1000000,
-      s"indexForgetDocs takes 1..1000000 ids per call (got ${ids.length})")
-    val txn = IndexCore.freshTxn(spark, indexDir, key, "delete")
-    import spark.implicits._
-    // keyed takedowns embed the key digest in the tombstone dir name
-    // so the applied gone set stays addressable by key —
-    // [[indexGoneForDelivery]] is what makes a multi-index takedown's
-    // replay re-read the EXACT id set the first attempt applied
-    // instead of re-deriving a drifted one
-    val name = IndexCore.entryName("t", key)
-    ids.distinct.toDF("doc_id")
-      .coalesce(1).write.parquet(s"${IndexCore.dataDir(indexDir, name)}/gone")
-    IndexCore.publishAppend(spark, indexDir, name, txn.toSeq)(
-      s"delete with delivery key ${key.get} raced a concurrent " +
-        s"redelivery into $indexDir — this attempt's staging was dropped")
-  }
+      ids: Seq[Long], key: Option[String] = None): Unit =
+    core.forgetIds(spark, indexDir, ids, key, "indexForgetDocs")
 
   /** RAW id-membership probe for re-fetch routing: which of `ids` has
    *  a signature row in a live shard commit published BEFORE the
@@ -360,7 +345,7 @@ object Dedup {
       ids: DataFrame, idCol: String,
       excludeKeys: Seq[String] = Seq.empty): DataFrame = {
     val digests = excludeKeys.map(CommitLog.keyDigest)
-    val txns = excludeKeys.map("#txn:" + _).toSet
+    val txns = excludeKeys.map(CommitLog.txnEntry).toSet
     def owned(e: String): Boolean =
       txns.contains(e) || digests.exists(d => e.startsWith(s"c-k$d-"))
     val live = IndexCore.live(spark, indexDir)
@@ -410,38 +395,18 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String, threshold: Double,
       k: Int = 64, bands: Int = 16, key: Option[String] = None,
       persistPairs: Boolean = false): DataFrame = {
-    // ONE materialization feeds both legs: a nondeterministic source
-    // evaluated twice could tombstone ids it never re-adds
-    val snap = docs.select(col(idCol).cast("long").as(idCol),
-      col(textCol).cast("string").as(textCol)).persist()
-    try {
-      val ids = snap.select(col(idCol)).distinct()
-        .limit(65537).collect().map(_.getLong(0)).toSeq
-      require(ids.nonEmpty && ids.length <= 65536,
-        s"indexUpsertDocs takes 1..65536 distinct ids per call " +
-          s"(got ${ids.length}); batch larger re-fetch waves")
-      val (delKey, addKey) = (key.map(_ + ".del"), key.map(_ + ".add"))
-      // an empty index has nothing to delete — the first upsert is a
-      // plain founding shard. The delete leg must ALSO skip when the
-      // ADD leg already committed: a founding upsert never ledgers
-      // its delete key, so a redelivery would otherwise tombstone the
-      // generation the first delivery just founded (the text verb's
-      // guard, mirrored)
-      val hasShards =
-        IndexCore.live(spark, indexDir).exists(_.startsWith("c-"))
-      val delivered = (k: Option[String]) =>
-        k.exists(IndexCore.hasDelivery(spark, indexDir, _))
-      if (hasShards && !delivered(delKey) && !delivered(addKey))
-        indexForgetDocs(spark, indexDir, ids, key = delKey)
-      if (!delivered(addKey))
-        indexCheckAndIngest(spark, indexDir, snap, idCol, textCol,
-          threshold, k, bands, deliveryKey = addKey,
-          persistPairs = persistPairs)
-      else if (persistPairs)
-        // redelivery: the original attempt's report, replay-identical
-        indexPairsForDelivery(spark, indexDir, addKey.get)
-      else core.empty(spark, "pairs")
-    } finally snap.unpersist(): Unit
+    IndexCore.upsert(spark, indexDir,
+      docs.select(col(idCol).cast("long").as(idCol),
+        col(textCol).cast("string").as(textCol)),
+      idCol, key, "indexUpsertDocs")(
+      del = (ids, delKey) => indexForgetDocs(spark, indexDir, ids, delKey),
+      add = (snap, addKey) => indexCheckAndIngest(spark, indexDir, snap,
+        idCol, textCol, threshold, k, bands, deliveryKey = addKey,
+        persistPairs = persistPairs),
+      // redelivery: the original attempt's report, replay-identical
+      replayed = addKey =>
+        if (persistPairs) indexPairsForDelivery(spark, indexDir, addKey)
+        else core.empty(spark, "pairs"))
   }
 
   /** ONE keyed takedown's applied gone set — the replay-stable record
@@ -634,7 +599,7 @@ object Dedup {
   def indexPairsForDelivery(
       spark: SparkSession, indexDir: String, key: String): DataFrame = {
     val live = IndexCore.live(spark, indexDir)
-    require(live.contains("#txn:" + key),
+    require(live.contains(CommitLog.txnEntry(key)),
       s"no shard with delivery key $key in $indexDir")
     val matches = live.filter(_.startsWith(s"c-k${CommitLog.keyDigest(key)}-"))
     require(matches.nonEmpty,
@@ -798,9 +763,7 @@ object Dedup {
         // it (repartition(1): the empty first-shard verdict is a
         // 0-partition literal frame, which would write no readable file)
         verdict.repartition(1).write.parquet(s"$dst/pairs")
-      IndexCore.publishAppend(spark, indexDir, name, txn.toSeq)(
-        s"shard with delivery key ${deliveryKey.get} raced a concurrent " +
-          s"redelivery into $indexDir — this attempt's staging was dropped")
+      IndexCore.publishAppend(spark, indexDir, name, txn, "shard")
       verdict
     }
   }
@@ -929,60 +892,62 @@ object Dedup {
       srcDir: String, threshold: Double, k: Int = 64, bands: Int = 16,
       deliveryKey: Option[String] = None,
       persistPairs: Boolean = false): DataFrame =
-    core.mergeFrom(spark, dstDir, srcDir, deliveryKey) { (srcCommits, dst) =>
-      val roots = srcCommits.map((_, Seq.empty[String]))
-      def src(leg: String): Option[DataFrame] =
-        core.without(spark, leg, roots, Seq.empty, identity)
-      val (srcSig, srcSh) = (src("sig").get, src("sh").get)
-      val verdict =
-        // dst tombstones apply (order-scoped): a deleted destination
-        // doc must not pair with (or gate) the incoming corpus
-        scoped(spark, dstDir, "sig") match {
-          case None => core.empty(spark, "pairs")
-          case Some(dstSig) =>
-            val cand = bandBuckets(dstSig, k, bands).as("x")
-              .join(bandBuckets(srcSig, k, bands).as("y"),
-                col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
-              .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-              .distinct()
-            val est = estimatePrune(cand, dstSig.unionByName(srcSig), k,
-              minEst = threshold / 2).persist()
-            try {
-              // both posting scans semi-join down to candidate docs
-              // before the intersection join — index-merge cost is
-              // collision-proportional, never corpus-proportional
-              val aPost = scoped(spark, dstDir, "sh").get
-                .join(broadcast(est.select(col("a_id").as("doc_id")).distinct()),
-                  Seq("doc_id"), "left_semi")
-                .select(col("doc_id").as("a_id"), col("sh"))
-              val bPost = srcSh
-                .join(broadcast(est.select(col("b_id").as("doc_id")).distinct()),
-                  Seq("doc_id"), "left_semi")
-                .select(col("doc_id").as("b_id"), col("sh"))
-              val inter = est
-                .join(aPost, Seq("a_id"))
-                .join(bPost, Seq("b_id", "sh"))
-                .groupBy("a_id", "b_id").agg(count(lit(1)).as("i"))
-              jaccardOf(inter,
-                dstSig.unionByName(srcSig).select("doc_id", "n"))
-                .where(col("jaccard") >= threshold)
-                .select(col("a_id"), col("b_id"), col("jaccard"))
-                .localCheckpoint(true)
-            } finally est.unpersist(): Unit
-        }
-      // stage the source's state (normalized to one commit dir) plus
-      // the pairs leg. The pairs leg = the SOURCE'S OWN pair history
-      // (append-only facts — they must ride the merge or
-      // indexPairs(dst) silently loses the source's intra-corpus
-      // findings, the same rule indexCompactTiered applies when
-      // folding) ∪ the cross-corpus report when requested
-      srcSig.write.parquet(s"$dst/sig")
-      srcSh.write.parquet(s"$dst/sh")
-      (src("pairs").toSeq ++ (if (persistPairs) Seq(verdict) else Nil))
-        .reduceOption(_.unionByName(_))
-        .foreach(_.repartition(1).write.parquet(s"$dst/pairs"))
-      verdict
-    }
+    IndexCore.mergeFrom(spark, dstDir, srcDir, deliveryKey)(srcEntries =>
+      IndexCore.stageCommit(dstDir) { dst =>
+        val roots =
+          srcEntries.map(c => (IndexCore.dataDir(srcDir, c), Seq.empty[String]))
+        def src(leg: String): Option[DataFrame] =
+          core.without(spark, leg, roots, Seq.empty, identity)
+        val (srcSig, srcSh) = (src("sig").get, src("sh").get)
+        val verdict =
+          // dst tombstones apply (order-scoped): a deleted destination
+          // doc must not pair with (or gate) the incoming corpus
+          scoped(spark, dstDir, "sig") match {
+            case None => core.empty(spark, "pairs")
+            case Some(dstSig) =>
+              val cand = bandBuckets(dstSig, k, bands).as("x")
+                .join(bandBuckets(srcSig, k, bands).as("y"),
+                  col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
+                .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
+                .distinct()
+              val est = estimatePrune(cand, dstSig.unionByName(srcSig), k,
+                minEst = threshold / 2).persist()
+              try {
+                // both posting scans semi-join down to candidate docs
+                // before the intersection join — index-merge cost is
+                // collision-proportional, never corpus-proportional
+                val aPost = scoped(spark, dstDir, "sh").get
+                  .join(broadcast(est.select(col("a_id").as("doc_id")).distinct()),
+                    Seq("doc_id"), "left_semi")
+                  .select(col("doc_id").as("a_id"), col("sh"))
+                val bPost = srcSh
+                  .join(broadcast(est.select(col("b_id").as("doc_id")).distinct()),
+                    Seq("doc_id"), "left_semi")
+                  .select(col("doc_id").as("b_id"), col("sh"))
+                val inter = est
+                  .join(aPost, Seq("a_id"))
+                  .join(bPost, Seq("b_id", "sh"))
+                  .groupBy("a_id", "b_id").agg(count(lit(1)).as("i"))
+                jaccardOf(inter,
+                  dstSig.unionByName(srcSig).select("doc_id", "n"))
+                  .where(col("jaccard") >= threshold)
+                  .select(col("a_id"), col("b_id"), col("jaccard"))
+                  .localCheckpoint(true)
+              } finally est.unpersist(): Unit
+          }
+        // stage the source's state (normalized to one commit dir) plus
+        // the pairs leg. The pairs leg = the SOURCE'S OWN pair history
+        // (append-only facts — they must ride the merge or
+        // indexPairs(dst) silently loses the source's intra-corpus
+        // findings, the same rule indexCompactTiered applies when
+        // folding) ∪ the cross-corpus report when requested
+        srcSig.write.parquet(s"$dst/sig")
+        srcSh.write.parquet(s"$dst/sh")
+        (src("pairs").toSeq ++ (if (persistPairs) Seq(verdict) else Nil))
+          .reduceOption(_.unionByName(_))
+          .foreach(_.repartition(1).write.parquet(s"$dst/pairs"))
+        verdict
+      })
 
 
   /**

@@ -272,13 +272,6 @@ object Similarity {
   }
 
   /** Publish a staged batch commit with its optional delivery key. */
-  private def ivfPublish(
-      spark: SparkSession, dir: String, name: String, txn: Option[String],
-      key: Option[String]): Unit =
-    IndexCore.publishAppend(spark, dir, name, txn.toSeq)(
-      s"batch with delivery key ${key.get} raced a concurrent " +
-        s"redelivery into $dir — this attempt's staging was dropped")
-
   /** The live centroid generation, collected to the driver (bounded —
    *  every probe ships it as a literal).
    */
@@ -319,21 +312,8 @@ object Similarity {
    */
   def ivfIndexForget(
       spark: SparkSession, dir: String,
-      ids: Seq[Long], key: Option[String] = None): Unit = {
-    require(ids.nonEmpty && ids.length <= 1000000,
-      s"ivfIndexForget takes 1..1000000 ids per call (got ${ids.length})")
-    val txn = IndexCore.freshTxn(spark, dir, key, "batch")
-    import spark.implicits._
-    // keyed takedowns embed the key digest in the tombstone dir name
-    // (the dedup index's discipline) so the applied gone set stays
-    // addressable by key — [[ivfGoneForDelivery]] lets a multi-index
-    // takedown WITHOUT a dedup leg re-read the exact id set its first
-    // attempt applied instead of re-deriving a drifted one
-    val name = IndexCore.entryName("t", key)
-    ids.distinct.toDF("vec_id")
-      .coalesce(1).write.parquet(s"${IndexCore.dataDir(dir, name)}/gone")
-    ivfPublish(spark, dir, name, txn, key)
-  }
+      ids: Seq[Long], key: Option[String] = None): Unit =
+    core.forgetIds(spark, dir, ids, key, "ivfIndexForget")
 
   /** ONE keyed takedown's applied gone set — the replay-stable record
    *  the cross-index takedown re-reads when the IVF leg is its FIRST
@@ -394,24 +374,12 @@ object Similarity {
     require(rebalanceAbovePpm.forall(_ >= 1000000L),
       "rebalanceAbovePpm below 1e6 (perfect balance) would re-train " +
         "on every upsert")
-    // ONE materialization feeds both legs: a nondeterministic source
-    // evaluated twice could tombstone ids it never re-appends
-    val snap = batch.select(col("vec_id").cast("long").as("vec_id"),
-      col("v")).persist()
-    try {
-      val ids = snap.select(col("vec_id")).distinct()
-        .limit(65537).collect().map(_.getLong(0)).toSeq
-      require(ids.nonEmpty && ids.length <= 65536,
-        s"ivfIndexUpsert takes 1..65536 distinct ids per call " +
-          s"(got ${ids.length}); batch larger re-embed waves")
-      val (delKey, addKey) = (key.map(_ + ".del"), key.map(_ + ".add"))
-      val delivered = (k: Option[String]) =>
-        k.exists(IndexCore.hasDelivery(spark, dir, _))
-      if (!delivered(delKey))
-        ivfIndexForget(spark, dir, ids, key = delKey)
-      if (!delivered(addKey))
-        ivfIndexAppend(spark, dir, snap, key = addKey)
-    } finally snap.unpersist(): Unit
+    IndexCore.upsert(spark, dir,
+      batch.select(col("vec_id").cast("long").as("vec_id"), col("v")),
+      "vec_id", key, "ivfIndexUpsert")(
+      del = (ids, delKey) => ivfIndexForget(spark, dir, ids, delKey),
+      add = (snap, addKey) => ivfIndexAppend(spark, dir, snap, addKey),
+      replayed = _ => ())
     rebalanceAbovePpm.foreach { cut =>
       val st = ivfIndexStats(spark, dir).head()
       if (st.getLong(3) > cut) {
@@ -457,7 +425,7 @@ object Similarity {
       "raise centroidStep for this founding shard")
     writePostings(s"$dst/post", founding,
       cents.map(_._1), cents.flatMap(_._2))
-    ivfPublish(spark, dir, name, txn, key)
+    IndexCore.publishAppend(spark, dir, name, txn, "batch")
   }
 
   /** Assign a new batch against the FROZEN centroids and publish its
@@ -472,7 +440,7 @@ object Similarity {
     val name = IndexCore.entryName("c", None)
     writePostings(s"${IndexCore.dataDir(dir, name)}/post", batch,
       cents.map(_._1), cents.flatMap(_._2))
-    ivfPublish(spark, dir, name, txn, key)
+    IndexCore.publishAppend(spark, dir, name, txn, "batch")
   }
 
   /** FEDERATED MERGE: fold ANOTHER IVF index's postings into this one
@@ -492,14 +460,16 @@ object Similarity {
   def ivfIndexMergeFrom(
       spark: SparkSession, dstDir: String,
       srcDir: String, key: Option[String] = None): Unit =
-    core.mergeFrom(spark, dstDir, srcDir, key) { (srcCommits, dst) =>
-      val cents = liveCentroids(spark, dstDir)
-      writePostings(s"$dst/post",
-        core.read(spark, "post",
-          srcCommits.map(c => s"$c/post").filter(IndexCore.exists(spark, _)))
-          .select(col("vec_id"), col("v")),
-        cents.map(_._1), cents.flatMap(_._2))
-    }
+    IndexCore.mergeFrom(spark, dstDir, srcDir, key)(src =>
+      IndexCore.stageCommit(dstDir) { dst =>
+        val cents = liveCentroids(spark, dstDir)
+        writePostings(s"$dst/post",
+          core.read(spark, "post",
+            src.map(IndexCore.legPath(srcDir, _, "post"))
+              .filter(IndexCore.exists(spark, _)))
+            .select(col("vec_id"), col("v")),
+          cents.map(_._1), cents.flatMap(_._2))
+      })
 
   private def writePostings(
       path: String, batch: DataFrame,

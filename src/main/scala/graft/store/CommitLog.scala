@@ -72,13 +72,23 @@ object CommitLog {
     java.security.MessageDigest.getInstance("SHA-1")
       .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
 
+  /** Ledger prefix of a DELIVERY KEY: `#txn:<key>` lines ride the
+   *  same atomically-published version file as the data they guard and
+   *  pass through folds untouched, so a duplicate check can never race
+   *  or be garbage-collected away from a redelivery.
+   */
+  val TxnPrefix = "#txn:"
+
+  /** True iff ledger entry `e` is a delivery key. */
+  def isTxn(e: String): Boolean = e.startsWith(TxnPrefix)
+
   /** The `#txn:` ledger entry of a delivery key — the ONE validity
    *  check every keyed verb shares: a key must be non-empty and carry
    *  no newline (a version file lists one entry per line).
    */
   def txnEntry(key: String): String = {
     require(key.nonEmpty && !key.contains('\n'), s"bad delivery key: $key")
-    "#txn:" + key
+    TxnPrefix + key
   }
 
   /** SOURCE-IDENTITY marker for federated merges: a `#txn:` entry
@@ -97,7 +107,7 @@ object CommitLog {
     val md = java.security.MessageDigest.getInstance("SHA-1")
     val bytes =
       md.digest((version.toString + "\n" + live.mkString("\n")).getBytes("UTF-8"))
-    "#txn:merge-src=" + bytes.map("%02x".format(_)).mkString.take(16)
+    txnEntry("merge-src=" + bytes.map("%02x".format(_)).mkString.take(16))
   }
 
   /** The COMPACTION-PUBLISH splice all three persisted indexes (text /

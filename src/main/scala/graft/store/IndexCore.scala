@@ -19,9 +19,14 @@ object IndexLeg {
 }
 
 /**
- * THE COMMIT-LOG INDEX LIFECYCLE — the one implementation the three
- * persisted indexes (the text index, the MinHash dedup index and the
- * IVF index) share instead of each hand-copying it.
+ * THE COMMIT-LOG LIFECYCLE — the one implementation every
+ * manifest-governed dataset shares instead of hand-copying it: the
+ * three persisted indexes (the text index, the MinHash dedup index and
+ * the IVF index) and the rollup store ([[ManifestStore]], whose `r-`
+ * raw commits are data entries like `c-`). The store uses the ledger,
+ * layout, keyed publish, merge, clone and vacuum verbs in the object
+ * below; the class adds what only the indexes need (legs, tombstones,
+ * folds, retirement, fsck).
  *
  * Layout of an index dir: `_manifests/` holds the [[CommitLog]];
  * `data/<entry>/<leg>/` holds each live entry's legs. Ledger entries:
@@ -201,12 +206,7 @@ final class IndexCore(val idCol: String, legs: Map[String, IndexLeg]) {
         }
         val run = runs.maxBy(_.size)
         if (run.size <= 1) return
-        val conf = spark.sessionState.newHadoopConf()
-        run.map { c =>
-          val p = new Path(dataDir(dir, c))
-          val fs = p.getFileSystem(conf)
-          (c, if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L)
-        }.sortBy(_._2).take(math.max(2, fanIn)).map(_._1)
+        smallest(spark, dir, run, fanIn)
       }
     val retired = if (full) tombs else Seq.empty
     val name = entryName("c", None)
@@ -261,51 +261,26 @@ final class IndexCore(val idCol: String, legs: Map[String, IndexLeg]) {
       .collect().map(_.getString(0)).toSet
   }
 
-  /** FEDERATED MERGE preamble and publish: fold ANOTHER index's live
-   *  commits into this one as ONE commit. `stage(srcCommitDirs, dst)`
-   *  writes the merged legs into the staged dir `dst`; its result is
-   *  returned. The source is read-only; it must carry no live
-   *  tombstones (a merge concatenates and cannot carry pending
-   *  deletions). Exactly-once composes: the source's `#txn:` keys plus
-   *  its [[CommitLog.sourceIdentity]] marker (keyless sources re-merged
-   *  twice refuse too) and the merge's own `key` ride into the
-   *  destination's log, and a merge whose keys already live there is
-   *  refused. A source commit that vanished (a concurrent source-side
-   *  compact + vacuum) aborts before staging; on any failure the
-   *  staging drops and both indexes stand.
+  /** ID-SET TOMBSTONE — the takedown of an index whose tombstones
+   *  carry ids only (no aggregate deltas): ONE `t-` entry whose `gone`
+   *  leg lists the distinct ids. A pure idempotent set — re-deleting a
+   *  gone or never-ingested id is harmless and concurrent forgets
+   *  compose — so no stale-abort is needed. A keyed takedown embeds
+   *  the key digest in the tombstone's name, so [[goneForDelivery]]
+   *  re-reads exactly the applied set; the `#txn:` key refuses a
+   *  redelivery. `verb` names the caller in the size refusal.
+   *  Cost: O(ids).
    */
-  def mergeFrom[T](spark: SparkSession, dstDir: String, srcDir: String,
-      key: Option[String])(stage: (Seq[String], String) => T): T = {
-    val (srcV, srcLive) = log(srcDir).latest(spark)
-    val srcCommits = srcLive.filter(_.startsWith("c-"))
-    require(!srcLive.exists(_.startsWith("t-")),
-      s"source index $srcDir has live tombstones — fully compact it " +
-        "first (a merge folds commit legs by concatenation and cannot " +
-        "carry another index's pending deletions)")
-    require(srcCommits.nonEmpty, s"nothing to merge: $srcDir has no live shards")
-    val keys = srcLive.filter(_.startsWith("#txn:")) ++
-      Seq(CommitLog.sourceIdentity(srcV, srcLive)) ++
-      key.map(CommitLog.txnEntry)
-    val dstNow = live(spark, dstDir).toSet
-    keys.foreach { t =>
-      require(!dstNow.contains(t),
-        s"merge of $srcDir into $dstDir rejected: delivery key " +
-          s"${t.stripPrefix("#txn:")} already lives in the destination — " +
-          "its data is already folded here (merging again would count " +
-          "it twice)")
-    }
-    srcCommits.foreach { d =>
-      require(exists(spark, dataDir(srcDir, d)),
-        s"source commit $d vanished mid-merge (concurrent vacuum?) — " +
-          "re-read the source and retry")
-    }
-    val name = entryName("c", None)
-    val out = stage(srcCommits.map(dataDir(srcDir, _)), dataDir(dstDir, name))
-    publishAppend(spark, dstDir, name, keys)(
-      s"merge of $srcDir into $dstDir raced a concurrent writer that " +
-        "committed one of its delivery keys — this attempt's staging " +
-        "was dropped")
-    out
+  def forgetIds(spark: SparkSession, dir: String, ids: Seq[Long],
+      key: Option[String], verb: String): Unit = {
+    require(ids.nonEmpty && ids.length <= 1000000,
+      s"$verb takes 1..1000000 ids per call (got ${ids.length})")
+    val txn = freshTxn(spark, dir, key, "delete")
+    val name = entryName("t", key)
+    import spark.implicits._
+    ids.distinct.toDF(idCol)
+      .coalesce(1).write.parquet(legPath(dir, name, "gone"))
+    publishAppend(spark, dir, name, txn, "delete")
   }
 
   /** ONE keyed takedown's applied gone set, addressed by the key
@@ -316,7 +291,7 @@ final class IndexCore(val idCol: String, legs: Map[String, IndexLeg]) {
    */
   def goneForDelivery(spark: SparkSession, dir: String, key: String): DataFrame = {
     val entries = live(spark, dir)
-    require(entries.contains("#txn:" + key),
+    require(entries.contains(CommitLog.txnEntry(key)),
       s"no takedown with delivery key $key in $dir")
     val matches =
       entries.filter(_.startsWith(s"t-k${CommitLog.keyDigest(key)}-"))
@@ -385,7 +360,8 @@ final class IndexCore(val idCol: String, legs: Map[String, IndexLeg]) {
 
 object IndexCore {
 
-  def log(dir: String): CommitLog = new CommitLog(s"$dir/_manifests")
+  def manifestDir(dir: String): String = s"$dir/_manifests"
+  def log(dir: String): CommitLog = new CommitLog(manifestDir(dir))
   def dataDir(dir: String, entry: String): String = s"$dir/data/$entry"
   def legPath(dir: String, entry: String, leg: String): String =
     s"$dir/data/$entry/$leg"
@@ -433,6 +409,31 @@ object IndexCore {
     (if (c.matches("c-k[0-9a-f]{16}-.*")) c.substring(0, 19) else "c") +
       s"-${java.util.UUID.randomUUID().toString.take(12)}"
 
+  /** SIZE-TIERED selection: the `fanIn` (at least 2) smallest of
+   *  `entries` by data-dir bytes — one driver-side listing per entry,
+   *  no data read; all of `entries`, in log order, when `fanIn` covers
+   *  them.
+   */
+  def smallest(spark: SparkSession, dir: String, entries: Seq[String],
+      fanIn: Int): Seq[String] =
+    if (fanIn >= entries.size) entries
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      entries.map { c =>
+        val p = new Path(dataDir(dir, c))
+        val fs = p.getFileSystem(conf)
+        (c, if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L)
+      }.sortBy(_._2).take(math.max(2, fanIn)).map(_._1)
+    }
+
+  /** Stage ONE fresh `c-` entry in `dir` for [[IndexCore.mergeFrom]]:
+   *  `write` fills its data dir.
+   */
+  def stageCommit[T](dir: String)(write: String => T): (Seq[String], T) = {
+    val name = entryName("c", None)
+    (Seq(name), write(dataDir(dir, name)))
+  }
+
   /** Delete staged entry dirs an aborted publish left behind. */
   def dropStaging(spark: SparkSession, dir: String, names: Seq[String]): Unit =
     names.foreach { n =>
@@ -461,19 +462,121 @@ object IndexCore {
     txn
   }
 
-  /** APPEND publish: the staged entry `name` plus `keys` go live with
-   *  one version-file create, so a crash mid-stage leaves an invisible
-   *  orphan, never a torn index. A key that raced in aborts the
-   *  publish; the staging is dropped and the call fails with `raced`.
+  /** KEYED APPEND publish: the staged entries `names` plus `keys` go
+   *  live with one version-file create, so a crash mid-stage leaves an
+   *  invisible orphan, never a torn dataset. A key already live (a
+   *  raced or repeated delivery) aborts the publish: the staging is
+   *  dropped and the result is false.
+   */
+  def publish(spark: SparkSession, dir: String, names: Seq[String],
+      keys: Seq[String]): Boolean = {
+    val published = log(dir).commit(spark)(now =>
+      if (keys.exists(now.contains)) None else Some(now :++ names :++ keys))
+    if (!published) dropStaging(spark, dir, names)
+    published
+  }
+
+  /** [[publish]] of one entry under an optional `#txn:` entry, loud: a
+   *  lost race with a concurrent redelivery fails naming `what` (the
+   *  published unit).
    */
   def publishAppend(spark: SparkSession, dir: String, name: String,
-      keys: Seq[String])(raced: => String): Unit = {
-    val published = log(dir).commit(spark)(now =>
-      if (keys.exists(now.contains)) None else Some(now :+ name :++ keys))
-    if (!published) {
-      dropStaging(spark, dir, Seq(name))
-      require(published, raced)
+      txn: Option[String], what: String): Unit =
+    require(publish(spark, dir, Seq(name), txn.toSeq),
+      s"$what with delivery key ${txn.get.stripPrefix(CommitLog.TxnPrefix)} " +
+        s"raced a concurrent redelivery into $dir — this attempt's " +
+        "staging was dropped")
+
+  /** FEDERATED MERGE preamble and publish: fold ANOTHER dataset's
+   *  live data entries (every non-`#`, non-`t-` entry) into this one
+   *  under ONE version. `stage(srcEntries)` stages the merged entries
+   *  in this dir and returns their names with its result. The source
+   *  is read-only; it must carry no live tombstones (a merge
+   *  concatenates and cannot carry pending deletions). Exactly-once
+   *  composes: the source's `#txn:` keys plus its
+   *  [[CommitLog.sourceIdentity]] marker (keyless sources re-merged
+   *  twice refuse too) and the merge's own `key` ride into the
+   *  destination's log, and a merge whose keys already live there is
+   *  refused. A source entry that vanished (a concurrent source-side
+   *  compact + vacuum) aborts before staging; a lost publish drops
+   *  the staging and both datasets stand.
+   */
+  def mergeFrom[T](spark: SparkSession, dstDir: String, srcDir: String,
+      key: Option[String])(stage: Seq[String] => (Seq[String], T)): T = {
+    val (srcV, srcLive) = log(srcDir).latest(spark)
+    require(!srcLive.exists(_.startsWith("t-")),
+      s"source index $srcDir has live tombstones — fully compact it " +
+        "first (a merge folds commit legs by concatenation and cannot " +
+        "carry another index's pending deletions)")
+    val srcData = srcLive.filterNot(_.startsWith("#"))
+    require(srcData.nonEmpty, s"nothing to merge: $srcDir has no live commits")
+    val keys = srcLive.filter(CommitLog.isTxn) ++
+      Seq(CommitLog.sourceIdentity(srcV, srcLive)) ++
+      key.map(CommitLog.txnEntry)
+    val dstNow = live(spark, dstDir).toSet
+    keys.foreach { t =>
+      require(!dstNow.contains(t),
+        s"merge of $srcDir into $dstDir rejected: delivery key " +
+          s"${t.stripPrefix(CommitLog.TxnPrefix)} already lives in the " +
+          "destination — its data is already folded here (merging again " +
+          "would count it twice)")
     }
+    srcData.foreach { d =>
+      require(exists(spark, dataDir(srcDir, d)),
+        s"source commit $d vanished mid-merge (concurrent vacuum?) — " +
+          "re-read the source and retry")
+    }
+    val (names, out) = stage(srcData)
+    require(publish(spark, dstDir, names, keys),
+      s"merge of $srcDir into $dstDir raced a concurrent writer that " +
+        "committed one of its delivery keys — this attempt's staging " +
+        "was dropped")
+    out
+  }
+
+  /** The two ledger sub-keys a two-leg verb fans a delivery key out
+   *  to: (`<key>.del` for its delete leg, `<key>.add` for its add leg).
+   */
+  def upsertKeys(key: String): (String, String) = (s"$key.del", s"$key.add")
+
+  /** UPSERT — the two-commit replace every index shares: up to 65536
+   *  ids' content replaced in place by one delete leg (`del`: a
+   *  tombstone retiring the old rows) followed by one add leg (`add`:
+   *  an ordinary ingest of the new rows). `rows` is the caller's
+   *  projected frame, id column `id` (long); it is materialized ONCE
+   *  and feeds both legs — a nondeterministic source evaluated twice
+   *  could delete ids it never re-adds. Order-scoped tombstones make
+   *  the re-added generation serve immediately.
+   *
+   *  Exactly-once across the two commits: `key` fans out to
+   *  [[upsertKeys]] and each leg short-circuits on its own committed
+   *  key — a crash between the legs replays with the delete leg a
+   *  no-op and the add leg completing; a full redelivery is a
+   *  version-preserving no-op answering `replayed(addKey)`. The delete
+   *  leg skips on an index with no live commit (the first upsert is a
+   *  plain founding add) and ALSO once the add leg committed: a
+   *  founding upsert never ledgers its delete key, so a redelivery
+   *  would otherwise tombstone the generation it founded.
+   */
+  def upsert[T](spark: SparkSession, dir: String, rows: DataFrame,
+      id: String, key: Option[String], verb: String)(
+      del: (Seq[Long], Option[String]) => Unit,
+      add: (DataFrame, Option[String]) => T,
+      replayed: String => T): T = {
+    val snap = rows.persist()
+    try {
+      val ids = snap.select(col(id)).distinct()
+        .limit(65537).collect().map(_.getLong(0)).toSeq
+      require(ids.nonEmpty && ids.length <= 65536,
+        s"$verb takes 1..65536 distinct ids per call " +
+          s"(got ${ids.length}); batch larger waves")
+      val (delKey, addKey) = key.map(upsertKeys).unzip
+      val delivered = (k: Option[String]) => k.exists(hasDelivery(spark, dir, _))
+      if (live(spark, dir).exists(_.startsWith("c-")) &&
+          !delivered(delKey) && !delivered(addKey))
+        del(ids, delKey)
+      if (delivered(addKey)) replayed(addKey.get) else add(snap, addKey)
+    } finally snap.unpersist(): Unit
   }
 
   /** Publish in-place rewrites atomically: each old → new mapping is
@@ -541,7 +644,7 @@ object IndexCore {
    *  same key turns into a no-op instead of an exception.
    */
   def hasDelivery(spark: SparkSession, dir: String, key: String): Boolean =
-    live(spark, dir).contains("#txn:" + key)
+    live(spark, dir).contains(CommitLog.txnEntry(key))
 
   /** Ledger a delivery key with NO data commit — for composite verbs
    *  that must mark completion WITHOUT re-evaluating their predicate
@@ -601,19 +704,26 @@ object IndexCore {
     log(dir).vacuumVersions(spark, keep)
 
   /** Reclaim data dirs the LATEST version no longer references
-   *  (superseded by folds, retirements, rebuilds). Run once in-flight
-   *  readers of older snapshots drain — afterwards an as-of read of a
-   *  superseded version fails loudly, never partially. `keepVersions`
-   *  also bounds the manifest history ([[vacuumManifest]]).
+   *  (superseded by folds, retirements, rebuilds) and older than
+   *  `minAgeMs`. Run once in-flight readers of older snapshots drain —
+   *  afterwards an as-of read of a superseded version fails loudly,
+   *  never partially. The age floor is what makes an unattended vacuum
+   *  safe against writers that have staged a dir but not yet published
+   *  it and readers still resolving a superseded snapshot (both live
+   *  in a bounded window; 0 = everything is known drained).
+   *  `keepVersions` also bounds the manifest history
+   *  ([[vacuumManifest]]).
    */
-  def vacuum(spark: SparkSession, dir: String,
+  def vacuum(spark: SparkSession, dir: String, minAgeMs: Long = 0L,
       keepVersions: Int = Int.MaxValue): Unit = {
     val entries = live(spark, dir).toSet
     val dd = new Path(s"$dir/data")
     val fs = dd.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(dd)) {
+      val cutoff = System.currentTimeMillis() - minAgeMs
       fs.listStatus(dd)
-        .filter(st => !entries.contains(st.getPath.getName))
+        .filter(st => !entries.contains(st.getPath.getName) &&
+          st.getModificationTime <= cutoff)
         .foreach(st => fs.delete(st.getPath, true): Unit)
       if (keepVersions != Int.MaxValue) vacuumManifest(spark, dir, keepVersions)
     }

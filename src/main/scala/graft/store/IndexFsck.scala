@@ -141,8 +141,12 @@ object IndexFsck {
               "fresh key) until the reported counts reach zero")
         out.take(65536)
       }
-      def delivered(probe: String => Boolean, k: String): Boolean =
-        key.exists(base => probe(s"$base.$k"))
+      // each repair direction is a delete or add leg under `<key>.dedup`
+      // / `<key>.ann`
+      val (dDel, dAdd) = key.map(k => IndexCore.upsertKeys(s"$k.dedup")).unzip
+      val (aDel, aAdd) = key.map(k => IndexCore.upsertKeys(s"$k.ann")).unzip
+      def delivered(dir: String, k: Option[String]): Boolean =
+        k.exists(IndexCore.hasDelivery(spark, dir, _))
       val dedupIds = graft.dedup.Dedup.indexDocIds(spark, dedupDir)
         .distinct()
       val addD = diffIds(text, dedupIds, "text∖dedup")
@@ -153,25 +157,21 @@ object IndexFsck {
       // but the work was not performed), and for the ANN add leg the
       // POST-zero-norm-filter row count, never the raw diff size
       val addDApplied =
-        if (addD.nonEmpty && !delivered(
-            IndexCore.hasDelivery(spark, dedupDir, _),
-            "dedup.add")) {
+        if (addD.nonEmpty && !delivered(dedupDir, dAdd)) {
           // persistPairs passes through: in a persistPairs deployment
           // a repaired doc with NO pair report would let its near-dup
           // copies escape a later includeNearDups takedown
           graft.dedup.Dedup.indexCheckAndIngest(spark, dedupDir,
             graft.text.TextIndex.docsFor(spark, textDir, addD),
             "doc_id", "text", threshold,
-            deliveryKey = key.map(_ + ".dedup.add"),
+            deliveryKey = dAdd,
             persistPairs = persistPairs): Unit
           addD.length.toLong
         } else 0L
       val delDApplied =
-        if (delD.nonEmpty && !delivered(
-            IndexCore.hasDelivery(spark, dedupDir, _),
-            "dedup.del")) {
+        if (delD.nonEmpty && !delivered(dedupDir, dDel)) {
           graft.dedup.Dedup.indexForgetDocs(spark, dedupDir, delD,
-            key = key.map(_ + ".dedup.del"))
+            key = dDel)
           delD.length.toLong
         } else 0L
       val annRows = annDir.toSeq.flatMap { a =>
@@ -180,9 +180,7 @@ object IndexFsck {
         val addA = diffIds(text, vecIds, "text∖ann")
         val delA = diffIds(vecIds, text, "ann∖text")
         val addAApplied =
-          if (addA.nonEmpty && !delivered(
-              IndexCore.hasDelivery(spark, a, _),
-              "ann.add")) {
+          if (addA.nonEmpty && !delivered(a, aAdd)) {
             // a zero-norm embedding has no cosine direction:
             // appending it would poison cell assignment with 0/0 —
             // filter it out (the doc stays visible as a text_vs_ann
@@ -197,16 +195,14 @@ object IndexFsck {
               val n = add.count()
               if (n > 0)
                 graft.sim.Similarity.ivfIndexAppend(spark, a, add,
-                  key = key.map(_ + ".ann.add"))
+                  key = aAdd)
               n
             } finally add.unpersist(): Unit
           } else 0L
         val delAApplied =
-          if (delA.nonEmpty && !delivered(
-              IndexCore.hasDelivery(spark, a, _),
-              "ann.del")) {
+          if (delA.nonEmpty && !delivered(a, aDel)) {
             graft.sim.Similarity.ivfIndexForget(spark, a, delA,
-              key = key.map(_ + ".ann.del"))
+              key = aDel)
             delA.length.toLong
           } else 0L
         Seq(("ann", "repaired_added", addAApplied, audited),

@@ -1,8 +1,5 @@
 package graft.store
 
-import java.util.UUID
-
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -43,6 +40,15 @@ import graft.model.Fidelity
  * protocol cheap — while preserving the same pruning the partitioned
  * table gets from its directory tree.
  *
+ * The store is an [[IndexCore]] dataset rooted at `$root/mrollup`:
+ * IndexCore owns its commit log, data-dir layout, keyed publish,
+ * staging cleanup, merge preamble, clone and vacuum; this object keeps
+ * what is rollup-specific — the merge-on-read monoid, range / as-of /
+ * CDC reads, the fold and rewrite bodies (whose abort rule is weaker
+ * than the indexes' snapshot equality: a fold or rewrite needs only
+ * its own inputs still live, so concurrent appends proceed) and the
+ * write-audit-publish ingest.
+ *
  * Atomicity relies on create-no-overwrite of the version file: atomic
  * on HDFS, a conditional PUT on S3 (the same caveat every
  * manifest-based table format carries), and check-then-create on a
@@ -73,9 +79,11 @@ import graft.model.Fidelity
  */
 object ManifestStore {
 
-  private def tableRoot(root: String) = s"$root/mrollup"
-  private def dataDir(root: String) = s"${tableRoot(root)}/data"
-  private def manifestDir(root: String) = s"${tableRoot(root)}/_manifests"
+  /** The store's [[IndexCore]] dataset dir under `root`. */
+  def storeDir(root: String): String = s"$root/mrollup"
+  private def entryDir(root: String, entry: String) =
+    IndexCore.dataDir(storeDir(root), entry)
+  private def log(root: String) = IndexCore.log(storeDir(root))
 
   /** Physical file schema, CURRENT (v2) revision: fidelity lives in the
    *  directory name. `sumsq` (Σv² — variance/stddev support) is the v2
@@ -116,18 +124,11 @@ object ManifestStore {
   private val rawCommitSchema: StructType = StructType(
     Tables.rawSchema.fields :+ StructField("ds_b", IntegerType))
 
-  private def fsFor(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
-  // the commit protocol itself lives in CommitLog (shared with every
-  // other manifest-governed dataset, e.g. the persisted dedup index)
-  private def log(root: String) = new CommitLog(manifestDir(root))
-
   /** Latest snapshot: (version, live commit-dir names); (0, Nil) when
    *  the table has never been written.
    */
   def latest(spark: SparkSession, root: String): (Long, Seq[String]) =
-    log(root).latest(spark)
+    IndexCore.ledger(spark, storeDir(root))
 
   /** The live commit set AS OF a published version — time travel.
    *  Valid for any version whose commit dirs `vacuum` has not yet
@@ -137,22 +138,6 @@ object ManifestStore {
   def liveAt(spark: SparkSession, root: String, v: Long): Seq[String] =
     log(root).liveAt(spark, v)
 
-  /** Optimistic-concurrency manifest commit: compute the next live set
-   *  from the current one and publish it as the next version with an
-   *  atomic create-exclusive (hard-link publish on POSIX — Hadoop's
-   *  local create(overwrite=false) checks-then-creates and DID lose a
-   *  racing writer's manifest under load; rename-no-replace on HDFS;
-   *  a conditional PUT on S3 — see CommitLog.publishExclusive). A
-   *  losing writer re-reads and retries. `next` returning None ABORTS
-   *  the commit (used by
-   *  compaction when its input snapshot was invalidated by a
-   *  concurrent compactor — publishing anyway would double-count).
-   *  Returns true iff a version was published.
-   */
-  private def commit(spark: SparkSession, root: String)(
-      next: Seq[String] => Option[Seq[String]]): Boolean =
-    log(root).commit(spark)(next)
-
   /** Write a frame as one immutable commit directory (shared by append
    *  and compaction so the physical layout — ds_b derivation, sort,
    *  file caps, level partitioning — cannot drift between the two).
@@ -160,7 +145,7 @@ object ManifestStore {
    *  update that makes it visible.
    */
   private def writeCommitDir(root: String, partials: DataFrame): String = {
-    val name = s"c-${UUID.randomUUID().toString.take(12)}"
+    val name = IndexCore.entryName("c", None)
     val withB = partials.withColumn("ds_b", Tables.dsBucket(col("dataset_id")))
     val present = withB.columns.toSet
     val fields = physSchema.fieldNames.toIndexedSeq
@@ -176,7 +161,7 @@ object ManifestStore {
       .mode("errorifexists")
       .option("maxRecordsPerFile", Fidelity.GroupSize)
       .partitionBy("fidelity")
-      .parquet(s"${dataDir(root)}/$name")
+      .parquet(entryDir(root, name))
     name
   }
 
@@ -187,19 +172,9 @@ object ManifestStore {
    *  scale (add `ds_b` to the repartition on a cluster for write
    *  parallelism — the manifest protocol is indifferent to file count).
    */
-  def appendPartials(spark: SparkSession, root: String, partials: DataFrame): Unit = {
-    val name = writeCommitDir(root, partials)
-    commit(spark, root)(live => Some(live :+ name)): Unit
-  }
-
-  /** Manifest entries starting with this prefix are application-level
-   *  TRANSACTION KEYS, not commit dirs: `#txn:<key>` lines ride the
-   *  same atomically-published version file as the data they guard and
-   *  are PRESERVED by compaction (Delta's txn/appId-version idea
-   *  reduced to this table) — so the duplicate check can never race or
-   *  be garbage-collected away from a redelivery.
-   */
-  private val TxnPrefix = "#txn:"
+  def appendPartials(spark: SparkSession, root: String, partials: DataFrame): Unit =
+    IndexCore.publish(spark, storeDir(root),
+      Seq(writeCommitDir(root, partials)), Seq.empty): Unit
 
   /** Txn keys preserved across a compaction (most recent first to go
    *  is oldest): bounds manifest growth under a perpetual stream while
@@ -231,32 +206,27 @@ object ManifestStore {
   def appendPartialsIdempotent(
       spark: SparkSession, root: String, partials: DataFrame,
       key: String): Boolean = {
-    require(!key.contains('\n') && key.nonEmpty, s"bad txn key: $key")
-    val txn = TxnPrefix + key
-    val name = writeCommitDir(root, partials)
-    val published = commit(spark, root) { live =>
-      if (live.contains(txn)) None else Some(live :+ name :+ txn)
-    }
-    if (!published) {
-      val p = new Path(s"${dataDir(root)}/$name")
-      fsFor(spark, p).delete(p, true): Unit
-    }
-    published
+    val txn = CommitLog.txnEntry(key)
+    IndexCore.publish(spark, storeDir(root),
+      Seq(writeCommitDir(root, partials)), Seq(txn))
   }
 
   private def empty(spark: SparkSession): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Tables.rollupSchema)
 
-  /** The rollup monoid folded at read time over the given pre-filtered
-   *  per-commit frames. `sumsq` (v2) folds under the null-poisoning sum:
-   *  non-null iff every contributing row carries it (SQL `sum` would
-   *  silently SKIP the v1 contributors' nulls and report a Σv² that
-   *  excludes their rows).
+  /** The rollup monoid folded over the given pre-filtered per-commit
+   *  frames, grouped by `keys` — at read time by bucket, in a
+   *  compaction by the stored grain. `sumsq` (v2) folds under the
+   *  null-poisoning sum: non-null iff every contributing row carries it
+   *  (SQL `sum` would silently SKIP the v1 contributors' nulls and
+   *  report a Σv² that excludes their rows), so read-time and compacted
+   *  answers agree and the fold stays associative.
    */
-  private def mergeOnRead(parts: DataFrame): DataFrame =
+  private def mergeOnRead(parts: DataFrame,
+      keys: Seq[String] = Seq("dataset_id", "bucket_s")): DataFrame =
     parts
-      .groupBy("dataset_id", "bucket_s")
+      .groupBy(keys.map(col): _*)
       .agg(
         min("min_v").as("min_v"),
         max("max_v").as("max_v"),
@@ -265,23 +235,51 @@ object ManifestStore {
         when(count(lit(1)) === count(col("sumsq")), sum(col("sumsq")))
           .as("sumsq"))
 
+  /** One `c-` commit's rows WITH its `fidelity` partition column — the
+   *  grain folds, merges, rewrites and the write audit read at.
+   */
+  private def readPartials(spark: SparkSession, root: String, d: String): DataFrame =
+    spark.read
+      .schema(StructType(physSchema.fields :+ StructField("fidelity", StringType)))
+      .option("basePath", entryDir(root, d))
+      .parquet(entryDir(root, d))
+
   /** Live `fidelity=<level>` leaf dirs for one level (manifest-level
    *  pruning: other levels' files are never listed, let alone read).
    */
   private def levelDirs(spark: SparkSession, root: String, f: Fidelity): Seq[String] = {
     val (_, live) = latest(spark, root)
     dirEntries(live)
-      .map(d => s"${dataDir(root)}/$d/fidelity=${Tables.fidelityPart(f)}")
+      .map(d => s"${entryDir(root, d)}/fidelity=${Tables.fidelityPart(f)}")
       .filter(StoreFs.exists(spark, _))
   }
 
+  /** The merge-on-read fold of the level leaf `dirs`, `prune`
+   *  applied to the physical rows BELOW the fold (so series/bucket
+   *  predicates ride the within-file sort's row-group stats); `sumsq`
+   *  is exposed when `withSumsq`. Zero dirs read as the typed empty
+   *  level.
+   */
+  private def foldLevel(spark: SparkSession, dirs: Seq[String],
+      withSumsq: Boolean = false)(
+      prune: DataFrame => DataFrame = identity): DataFrame =
+    if (dirs.isEmpty) {
+      if (withSumsq) empty(spark).withColumn("sumsq", lit(null).cast(DoubleType))
+      else empty(spark)
+    } else mergeOnRead(prune(spark.read.schema(physSchema).parquet(dirs: _*)))
+      .select((Tables.rollupSchema.fieldNames.toIndexedSeq ++
+        Option.when(withSumsq)("sumsq")).map(col): _*)
+
+  /** The physical rows of one series: the ds_b + dataset_id equalities
+   *  ride the within-file (ds_b, dataset_id, ...) sort's row-group stats.
+   */
+  private def series(datasetId: String)(df: DataFrame): DataFrame =
+    df.where(col("ds_b") === Tables.dsBucket(lit(datasetId)) &&
+      col("dataset_id") === datasetId)
+
   /** Read one level, merged across live commits (S5 equivalent). */
-  def readLevel(spark: SparkSession, root: String, f: Fidelity): DataFrame = {
-    val dirs = levelDirs(spark, root, f)
-    if (dirs.isEmpty) empty(spark)
-    else mergeOnRead(spark.read.schema(physSchema).parquet(dirs: _*))
-      .select(Tables.rollupSchema.fieldNames.map(col).toIndexedSeq: _*)
-  }
+  def readLevel(spark: SparkSession, root: String, f: Fidelity): DataFrame =
+    foldLevel(spark, levelDirs(spark, root, f))()
 
   /** [[readLevel]] with the v2 schema exposed: `sumsq` is Σv² for a
    *  bucket when every contributing commit was written by a v2 writer,
@@ -289,40 +287,21 @@ object ManifestStore {
    *  evolution rule — see `physSchema`). Callers derive variance as
    *  `(sumsq - sum_v²/cnt) / cnt` where non-null.
    */
-  def readLevelV2(spark: SparkSession, root: String, f: Fidelity): DataFrame = {
-    val dirs = levelDirs(spark, root, f)
-    if (dirs.isEmpty)
-      empty(spark).withColumn("sumsq", lit(null).cast(DoubleType))
-    else mergeOnRead(spark.read.schema(physSchema).parquet(dirs: _*))
-      .select((Tables.rollupSchema.fieldNames.toIndexedSeq :+ "sumsq").map(col): _*)
-  }
+  def readLevelV2(spark: SparkSession, root: String, f: Fidelity): DataFrame =
+    foldLevel(spark, levelDirs(spark, root, f), withSumsq = true)()
 
   /** Snapshot (time-travel) level read: fold the monoid over the live
    *  set AS OF `version` — the reader sees exactly the table state the
    *  version's writer published, regardless of later commits.
    */
   def readLevelAsOf(
-      spark: SparkSession, root: String, f: Fidelity, version: Long): DataFrame = {
-    val dirs = asOfLevelDirs(spark, root, f, version)
-    if (dirs.isEmpty) empty(spark)
-    else mergeOnRead(spark.read.schema(physSchema).parquet(dirs: _*))
-      .select(Tables.rollupSchema.fieldNames.map(col).toIndexedSeq: _*)
-  }
+      spark: SparkSession, root: String, f: Fidelity, version: Long): DataFrame =
+    foldLevel(spark, asOfLevelDirs(spark, root, f, version))()
 
-  /** Level read pruned to one series BEFORE the merge fold: the ds_b +
-   *  dataset_id equalities ride the within-file sort's row-group stats
-   *  (the manifest analog of `Tables.readRollupFor`).
-   */
+  /** Level read pruned to one series BEFORE the merge fold. */
   def readLevelFor(
-      spark: SparkSession, root: String, f: Fidelity, datasetId: String): DataFrame = {
-    val dirs = levelDirs(spark, root, f)
-    if (dirs.isEmpty) empty(spark)
-    else mergeOnRead(
-      spark.read.schema(physSchema).parquet(dirs: _*)
-        .where(col("ds_b") === Tables.dsBucket(lit(datasetId)) &&
-          col("dataset_id") === datasetId))
-      .select(Tables.rollupSchema.fieldNames.map(col).toIndexedSeq: _*)
-  }
+      spark: SparkSession, root: String, f: Fidelity, datasetId: String): DataFrame =
+    foldLevel(spark, levelDirs(spark, root, f))(series(datasetId))
 
   /** Range read for chart queries: series + bucket predicates apply
    *  BELOW the merge fold (a post-fold filter would aggregate the whole
@@ -354,37 +333,31 @@ object ManifestStore {
    *  the PARENT `c-` commit dir must still exist: an absent one means
    *  vacuum reclaimed it after a compaction superseded this version,
    *  and silently skipping it would serve a partial snapshot. Fail
-   *  loudly instead (mirrors [[requireRawDirs]] on the raw tier).
+   *  loudly instead (mirrors [[readRawDirs]] on the raw tier).
    */
   private def asOfLevelDirs(
       spark: SparkSession, root: String, f: Fidelity,
       version: Long): Seq[String] = {
     val entries = dirEntries(liveAt(spark, root, version))
     val missing = entries
-      .filterNot(d => StoreFs.exists(spark, s"${dataDir(root)}/$d"))
+      .filterNot(d => StoreFs.exists(spark, entryDir(root, d)))
     require(missing.isEmpty,
       s"commit dir(s) ${missing.mkString(", ")} referenced by version " +
         s"$version at $root no longer exist (vacuumed after a rewrite); " +
         "this snapshot is unreadable — refusing to return partial data")
     entries
-      .map(d => s"${dataDir(root)}/$d/fidelity=${Tables.fidelityPart(f)}")
+      .map(d => s"${entryDir(root, d)}/fidelity=${Tables.fidelityPart(f)}")
       .filter(StoreFs.exists(spark, _))
   }
 
   private def readLevelRangeDirs(
       spark: SparkSession, dirs: Seq[String], f: Fidelity,
-      datasetId: String, startS: Long, endS: Long): DataFrame =
-    if (dirs.isEmpty) empty(spark)
-    else {
-      val w = Tables.partitionWindowS(f)
-      mergeOnRead(
-        spark.read.schema(physSchema).parquet(dirs: _*)
-          .where(col("ds_b") === Tables.dsBucket(lit(datasetId)) &&
-            col("dataset_id") === datasetId &&
-            col("part_s").between(startS / w * w, endS / w * w) &&
-            col("bucket_s").between(startS, endS)))
-        .select(Tables.rollupSchema.fieldNames.map(col).toIndexedSeq: _*)
-    }
+      datasetId: String, startS: Long, endS: Long): DataFrame = {
+    val w = Tables.partitionWindowS(f)
+    foldLevel(spark, dirs)(df => series(datasetId)(df)
+      .where(col("part_s").between(startS / w * w, endS / w * w) &&
+        col("bucket_s").between(startS, endS)))
+  }
 
   private val cdcSchema: StructType = StructType(Seq(
     StructField("dataset_id", StringType),
@@ -437,7 +410,7 @@ object ManifestStore {
         "the window's net change is not derivable from the manifest alone")
     val level = s"fidelity=${Tables.fidelityPart(f)}"
     val addedDirs = dirEntries(after.filterNot(beforeSet))
-      .map(d => s"${dataDir(root)}/$d/$level")
+      .map(d => s"${entryDir(root, d)}/$level")
       .filter(StoreFs.exists(spark, _))
     if (addedDirs.isEmpty)
       return spark.createDataFrame(
@@ -449,7 +422,7 @@ object ManifestStore {
     val bb = deltaRaw.agg(
       min("ds_b"), max("ds_b"), min("part_s"), max("part_s")).head()
     val beforeDirs = dirEntries(before)
-      .map(d => s"${dataDir(root)}/$d/$level")
+      .map(d => s"${entryDir(root, d)}/$level")
       .filter(StoreFs.exists(spark, _))
     val old =
       if (beforeDirs.isEmpty)
@@ -520,36 +493,6 @@ object ManifestStore {
   def compact(spark: SparkSession, root: String): Unit =
     compactTiered(spark, root, fanIn = Int.MaxValue)
 
-  /** SIZE-TIERED compaction (the LSM policy): fold only the `fanIn`
-   *  SMALLEST live commits into one, leaving large, already-compacted
-   *  commits untouched. Under sustained ingest each trigger folds the
-   *  fresh small tier — so a commit's bytes are rewritten only when it
-   *  is among the smallest, i.e. O(log N)-ish times over its life
-   *  instead of every trigger, which is what bounds write
-   *  amplification at 100 TB (the full fold rewrites the ENTIRE table
-   *  per trigger: O(N²) total bytes over N batches). Same atomicity,
-   *  txn-key preservation, and concurrent-compactor abort as
-   *  [[compact]]; the fold is the same associative monoid, so
-   *  read-time answers are unchanged by WHICH commits folded.
-   */
-  /** Size-tiered selection: the `fanIn` smallest of `entries` by commit
-   *  dir length — one driver-side listing per live commit, no data
-   *  read. Returns everything when `fanIn` covers the set.
-   */
-  private def pickSmallest(
-      spark: SparkSession, root: String,
-      entries: Seq[String], fanIn: Int): Seq[String] =
-    if (fanIn >= entries.size) entries
-    else {
-      val sized = entries.map { d =>
-        val p = new Path(s"${dataDir(root)}/$d")
-        val fs = fsFor(spark, p)
-        val len = if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-        (d, len)
-      }
-      sized.sortBy(_._2).take(math.max(2, fanIn)).map(_._1)
-    }
-
   /** The raw (`r-`) leg of the size-tiered policy: concatenate the
    *  `fanIn` smallest raw commits into one re-sorted dir and swap the
    *  manifest — bounds both write amplification and the small-files
@@ -560,66 +503,63 @@ object ManifestStore {
    *  concurrent-compactor abort as the partial fold.
    */
   def compactRawTiered(spark: SparkSession, root: String, fanIn: Int = 8): Unit = {
-    val (_, live) = latest(spark, root)
-    val dirs = pickSmallest(spark, root, rawDirEntries(live), fanIn)
+    val dirs = IndexCore.smallest(spark, storeDir(root),
+      rawDirEntries(latest(spark, root)._2), fanIn)
     if (dirs.size <= 1) return
     val merged = spark.read
-      .parquet(dirs.map(d => s"${dataDir(root)}/$d"): _*)
+      .parquet(dirs.map(entryDir(root, _)): _*)
       .select("dataset_id", "ts_us", "value")
-    val name = writeRawCommitDir(root, merged)
-    val published = commit(spark, root) { now =>
-      if (dirs.forall(now.contains)) Some(now.filterNot(dirs.contains) :+ name)
-      else None
-    }
-    if (!published) {
-      val p = new Path(s"${dataDir(root)}/$name")
-      fsFor(spark, p).delete(p, true): Unit
-    }
+    publishFold(spark, root, dirs, writeRawCommitDir(root, merged))(identity)
   }
 
+  /** SIZE-TIERED compaction (the LSM policy): fold only the `fanIn`
+   *  SMALLEST live commits into one ([[IndexCore.smallest]]), leaving
+   *  large, already-compacted commits untouched. Under sustained
+   *  ingest each trigger folds the fresh small tier — so a commit's
+   *  bytes are rewritten only when it is among the smallest, i.e.
+   *  O(log N)-ish times over its life instead of every trigger, which
+   *  is what bounds write amplification at 100 TB (the full fold
+   *  rewrites the ENTIRE table per trigger: O(N²) total bytes over N
+   *  batches). Same atomicity, txn-key preservation, and
+   *  concurrent-compactor abort as [[compact]]; the fold is the same
+   *  associative monoid, so read-time answers are unchanged by WHICH
+   *  commits folded.
+   */
   def compactTiered(spark: SparkSession, root: String, fanIn: Int = 8): Unit = {
-    val (_, live) = latest(spark, root)
     // fold DATA commits only; `#txn:` key lines survive every
     // compaction untouched (that permanence is what makes the
     // idempotent append's duplicate check durable)
-    val all = dirEntries(live)
-    if (all.size <= 1) return
-    val dirs = pickSmallest(spark, root, all, fanIn)
+    val dirs = IndexCore.smallest(spark, storeDir(root),
+      dirEntries(latest(spark, root)._2), fanIn)
     if (dirs.size <= 1) return
-    val full = StructType(physSchema.fields :+ StructField("fidelity", StringType))
-    val merged = dirs
-      .map(d => spark.read.schema(full)
-        .option("basePath", s"${dataDir(root)}/$d")
-        .parquet(s"${dataDir(root)}/$d"))
-      .reduce(_.unionByName(_))
-      .groupBy("fidelity", "dataset_id", "part_s", "bucket_s")
-      .agg(
-        min("min_v").as("min_v"),
-        max("max_v").as("max_v"),
-        sum("sum_v").as("sum_v"),
-        sum("cnt").as("cnt"),
-        // null-poisoning fold (see mergeOnRead): a compacted bucket any
-        // v1 commit touched stays null, so read-time and compacted
-        // answers agree — the fold is associative
-        when(count(lit(1)) === count(col("sumsq")), sum(col("sumsq")))
-          .as("sumsq"))
-    val name = writeCommitDir(root, merged)
-    val published = commit(spark, root) { now =>
-      if (dirs.forall(now.contains)) {
-        // trim the txn-key tail so the manifest stays bounded under a
-        // perpetual stream: exactly-once is guaranteed for
-        // redeliveries within the last MaxTxnKeys batches (streaming
-        // redelivery windows are ~1 batch)
-        val kept = now.filterNot(dirs.contains)
-        val (txns, rest) = kept.partition(_.startsWith(TxnPrefix))
-        Some(rest :+ name :++ txns.takeRight(MaxTxnKeys))
-      }
-      else None // inputs already folded elsewhere — abort, don't double
+    val merged = mergeOnRead(
+      dirs.map(readPartials(spark, root, _)).reduce(_.unionByName(_)),
+      Seq("fidelity", "dataset_id", "part_s", "bucket_s"))
+    publishFold(spark, root, dirs, writeCommitDir(root, merged)) { next =>
+      // trim the txn-key tail so the manifest stays bounded under a
+      // perpetual stream: exactly-once is guaranteed for redeliveries
+      // within the last MaxTxnKeys batches (streaming redelivery
+      // windows are ~1 batch)
+      val (txns, rest) = next.partition(CommitLog.isTxn)
+      rest :++ txns.takeRight(MaxTxnKeys)
     }
-    if (!published) {
-      val p = new Path(s"${dataDir(root)}/$name")
-      fsFor(spark, p).delete(p, true): Unit
-    }
+  }
+
+  /** Publish a fold of `inputs` into the staged entry `name`: the
+   *  inputs leave, `name` is appended and `shape` may trim the result.
+   *  Only the fold's OWN inputs must still be live — concurrent appends
+   *  proceed — and if a concurrent compactor already folded one of
+   *  them the publish aborts and drops the staging (publishing both
+   *  folds would double-count every cell they share; aborting loses
+   *  only optimization work, never data).
+   */
+  private def publishFold(spark: SparkSession, root: String,
+      inputs: Seq[String], name: String)(
+      shape: Seq[String] => Seq[String]): Unit = {
+    val published = log(root).commit(spark)(now =>
+      Option.when(inputs.forall(now.contains))(
+        shape(now.filterNot(inputs.contains) :+ name)))
+    if (!published) IndexCore.dropStaging(spark, storeDir(root), Seq(name))
   }
 
   /** ZERO-COPY BRANCH: clone the dataset AS OF a published version
@@ -647,9 +587,7 @@ object ManifestStore {
   def cloneAsOf(
       spark: SparkSession, srcRoot: String, dstRoot: String,
       version: Long): Unit =
-    // the generic commit-log clone (shared with the index branches)
-    log(srcRoot).cloneAsOf(
-      spark, dataDir(srcRoot), dataDir(dstRoot), log(dstRoot), version)
+    IndexCore.cloneAsOf(spark, storeDir(srcRoot), storeDir(dstRoot), version)
 
   /** FEDERATED MERGE: fold ANOTHER store instance's live raw and
    *  rollup state into this one under ONE manifest version — the
@@ -676,64 +614,24 @@ object ManifestStore {
    */
   def mergeFrom(
       spark: SparkSession, dstRoot: String, srcRoot: String,
-      key: Option[String] = None): Unit = {
-    val (srcV, srcLive) = latest(spark, srcRoot)
-    val srcC = dirEntries(srcLive)
-    val srcR = rawDirEntries(srcLive)
-    val srcTxn = srcLive.filter(_.startsWith(TxnPrefix)) :+
-      CommitLog.sourceIdentity(srcV, srcLive)
-    require(srcC.nonEmpty || srcR.nonEmpty,
-      s"nothing to merge: $srcRoot has no live commits")
-    val txn = key.map { k =>
-      require(k.nonEmpty && !k.contains('\n'), s"bad txn key: $k")
-      TxnPrefix + k
+      key: Option[String] = None): Unit =
+    IndexCore.mergeFrom(spark, storeDir(dstRoot), storeDir(srcRoot), key) { src =>
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration.Duration
+      implicit val ec: ExecutionContext = ExecutionContext.global
+      val (srcC, srcR) = src.partition(_.startsWith("c-"))
+      val writes = Seq(
+        Option.when(srcC.nonEmpty)(Future(writeCommitDir(dstRoot,
+          // plain concat of the source's partials: v1 commits read sumsq
+          // NULL here and the null lands in the staged rows, which the
+          // null-poisoning fold treats exactly like the absent column
+          srcC.map(readPartials(spark, srcRoot, _)).reduce(_.unionByName(_))))),
+        Option.when(srcR.nonEmpty)(Future(writeRawCommitDir(dstRoot,
+          spark.read
+            .parquet(srcR.map(entryDir(srcRoot, _)): _*)
+            .select("dataset_id", "ts_us", "value"))))).flatten
+      (Await.result(Future.sequence(writes), Duration.Inf), ())
     }
-    val dstNow = latest(spark, dstRoot)._2
-    (srcTxn ++ txn).foreach { t =>
-      require(!dstNow.contains(t),
-        s"merge of $srcRoot into $dstRoot rejected: delivery key " +
-          s"${t.stripPrefix(TxnPrefix)} already lives in the destination " +
-          "— its batch is already folded here (merging again would " +
-          "double-count it)")
-    }
-    (srcC ++ srcR).foreach { d =>
-      val p = new Path(s"${dataDir(srcRoot)}/$d")
-      require(fsFor(spark, p).exists(p),
-        s"source commit $d vanished mid-merge (concurrent vacuum?) — " +
-          "re-read the source and retry")
-    }
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val full = StructType(physSchema.fields :+ StructField("fidelity", StringType))
-    val writes = Seq(
-      if (srcC.isEmpty) Future.successful(None)
-      else Future(Some(writeCommitDir(dstRoot,
-        // plain concat of the source's partials: v1 commits read sumsq
-        // NULL here and the null lands in the staged rows, which the
-        // null-poisoning fold treats exactly like the absent column
-        srcC.map(d => spark.read.schema(full)
-            .option("basePath", s"${dataDir(srcRoot)}/$d")
-            .parquet(s"${dataDir(srcRoot)}/$d"))
-          .reduce(_.unionByName(_))))),
-      if (srcR.isEmpty) Future.successful(None)
-      else Future(Some(writeRawCommitDir(dstRoot,
-        spark.read
-          .parquet(srcR.map(d => s"${dataDir(srcRoot)}/$d"): _*)
-          .select("dataset_id", "ts_us", "value")))))
-    val names = Await.result(Future.sequence(writes), Duration.Inf).flatten
-    val published = commit(spark, dstRoot) { now =>
-      if ((srcTxn ++ txn).exists(now.contains)) None // raced duplicate
-      else Some(now :++ names :++ srcTxn :++ txn.toSeq)
-    }
-    if (!published) {
-      dropStaged(spark, dstRoot, names)
-      require(published,
-        s"merge of $srcRoot into $dstRoot raced a concurrent writer " +
-          "that committed one of its delivery keys — this attempt's " +
-          "staging was dropped")
-    }
-  }
 
   /** Right-to-be-forgotten on the atomic store: rewrite every live
    *  commit that CONTAINS the series without it and swap the manifest
@@ -787,17 +685,15 @@ object ManifestStore {
       rawHit: org.apache.spark.sql.Column,
       what: String): Unit = {
     val (_, live) = latest(spark, root)
-    val fullC = StructType(physSchema.fields :+ StructField("fidelity", StringType))
     // old entry -> replacement (None = commit becomes empty, drop it)
     val replaced = scala.collection.mutable.LinkedHashMap[String, Option[String]]()
     for (d <- dirEntries(live) ++ rawDirEntries(live)) {
-      val path = s"${dataDir(root)}/$d"
+      val path = entryDir(root, d)
       if (StoreFs.exists(spark, path)) {
         val isPartials = d.startsWith("c-")
         val hit = if (isPartials) partialsHit else rawHit
         val df =
-          if (isPartials)
-            spark.read.schema(fullC).option("basePath", path).parquet(path)
+          if (isPartials) readPartials(spark, root, d)
           else spark.read.schema(rawCommitSchema).parquet(path)
         if (!df.where(hit).isEmpty) {
           val survivors = df.where(!hit)
@@ -812,59 +708,38 @@ object ManifestStore {
       }
     }
     if (replaced.isEmpty) return
-    val published = commit(spark, root) { now =>
+    val published = log(root).commit(spark) { now =>
       if (replaced.keys.forall(now.contains))
         Some(now.flatMap(e => replaced.get(e).getOrElse(Some(e))))
       else None // live set moved under us — abort, caller retries
     }
     if (!published) {
-      for (n <- replaced.values.flatten) {
-        val p = new Path(s"${dataDir(root)}/$n")
-        fsFor(spark, p).delete(p, true): Unit
-      }
+      IndexCore.dropStaging(spark, storeDir(root), replaced.values.flatten.toSeq)
       throw new IllegalStateException(
         s"$what lost the manifest race at $root — rerun against the new live set")
     }
   }
 
-  /** Delete data dirs no manifest-visible snapshot references and older
-   *  than `minAgeMs`. The age floor is what makes GC safe against (a)
-   *  writers that have WRITTEN a commit dir but not yet published its
-   *  manifest entry, and (b) readers still resolving a superseded
-   *  snapshot — both live in a bounded window, so production callers
-   *  keep a retention (the auto-path uses VacuumRetentionMs, the
-   *  Delta/Iceberg pattern); `minAgeMs = 0` is for explicit cleanup
-   *  once a caller knows everything has drained.
-   */
-  /** Bound the MANIFEST history alone (CommitLog.vacuumVersions):
-   *  version files only — live set, data dirs, and delivery keys are
-   *  untouched, so this is safe to run CONTINUOUSLY (the streaming
-   *  ingest maintainers call it per batch when asked; data-dir vacuum
-   *  stays a separate, explicitly-scheduled action because it races
-   *  in-flight readers of superseded snapshots).
+  /** Bound the MANIFEST history alone ([[IndexCore.vacuumManifest]]):
+   *  safe to run CONTINUOUSLY (the streaming ingest maintainers call it
+   *  per batch when asked; data-dir vacuum stays a separate,
+   *  explicitly-scheduled action because it races in-flight readers of
+   *  superseded snapshots).
    */
   def vacuumManifest(spark: SparkSession, root: String, keep: Int): Unit =
-    log(root).vacuumVersions(spark, keep)
+    IndexCore.vacuumManifest(spark, storeDir(root), keep)
 
+  /** Delete data dirs the latest version no longer references and
+   *  older than `minAgeMs` ([[IndexCore.vacuum]]): production callers
+   *  keep a retention (the auto-path uses VacuumRetentionMs, the
+   *  Delta/Iceberg pattern); `minAgeMs = 0` is for explicit cleanup
+   *  once a caller knows everything has drained. `keepVersions` bounds
+   *  the version files, which accrue one per commit forever and only
+   *  matter for time-travel/branch.
+   */
   def vacuum(spark: SparkSession, root: String, minAgeMs: Long = 0L,
-      keepVersions: Int = Int.MaxValue): Unit = {
-    val (_, live) = latest(spark, root)
-    val dd = new Path(dataDir(root))
-    val fs = fsFor(spark, dd)
-    if (!fs.exists(dd)) return
-    val cutoff = System.currentTimeMillis() - minAgeMs
-    fs.listStatus(dd)
-      .filter(st => !live.contains(st.getPath.getName) &&
-        st.getModificationTime <= cutoff)
-      .foreach(st => fs.delete(st.getPath, true): Unit)
-    // MANIFEST retention (CommitLog.vacuumVersions): the version files
-    // themselves accrue one per commit forever — a streaming maintainer
-    // at one commit per 10 s is ~8.6k/day — and only matter for
-    // time-travel/branch, so a production deployment bounds them here;
-    // reads below the floor fail loudly naming retention
-    if (keepVersions != Int.MaxValue)
-      log(root).vacuumVersions(spark, keepVersions)
-  }
+      keepVersions: Int = Int.MaxValue): Unit =
+    IndexCore.vacuum(spark, storeDir(root), minAgeMs, keepVersions)
 
   /** Retention the auto compact+vacuum path leaves for in-flight
    *  writers/readers of superseded snapshots (see `vacuum`).
@@ -877,7 +752,7 @@ object ManifestStore {
    *  partitioned raw table gets from `win_s` directories.
    */
   private def writeRawCommitDir(root: String, batch: DataFrame): String = {
-    val name = s"r-${UUID.randomUUID().toString.take(12)}"
+    val name = IndexCore.entryName("r", None)
     batch
       .withColumn("ds_b", Tables.dsBucket(col("dataset_id")))
       .repartition(col("ds_b"))
@@ -885,7 +760,7 @@ object ManifestStore {
       .write
       .mode("errorifexists")
       .option("maxRecordsPerFile", graft.model.Fidelity.GroupSize)
-      .parquet(s"${dataDir(root)}/$name")
+      .parquet(entryDir(root, name))
     name
   }
 
@@ -900,27 +775,45 @@ object ManifestStore {
    *  the single version-file create. An optional delivery `key` makes
    *  the whole two-table publish idempotent exactly like
    *  [[appendPartialsIdempotent]]. Returns true iff this call
-   *  published (false: duplicate key or empty batch).
+   *  published (false: duplicate key or empty batch). A redelivered
+   *  key returns false before any Spark work.
    */
   def ingestBatchAtomic(
       spark: SparkSession, root: String, batchLong: DataFrame,
-      key: Option[String] = None, maxLiveCommits: Int = 16): Boolean = {
-    require(key.forall(k => k.nonEmpty && !k.contains('\n')),
-      s"bad txn key: $key")
+      key: Option[String] = None, maxLiveCommits: Int = 16): Boolean =
+    !delivered(spark, root, key) &&
+      stageBatch(spark, root, batchLong,
+        Tables.allLevelPartials(_, withSumsq = true)).exists { case (r, c) =>
+        publishStaged(spark, root, Seq(r, c), key, maxLiveCommits)
+      }
+
+  /** Stage one batch for a two-table publish: sanitize it, then write
+   *  its raw `r-` commit dir and its partials (`partialsOf`) `c-`
+   *  commit dir concurrently — invisible until a publish. None (nothing
+   *  staged) for an empty batch.
+   */
+  private def stageBatch(
+      spark: SparkSession, root: String, batchLong: DataFrame,
+      partialsOf: DataFrame => DataFrame): Option[(String, String)] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     val batch = graft.ingest.Melt.sanitize(batchLong).persist()
-    try {
-      if (batch.isEmpty) return false
-      val writes = Seq(
-        Future(writeRawCommitDir(root, batch)),
-        Future(writeCommitDir(root,
-          Tables.allLevelPartials(batch, withSumsq = true))))
-      val names = Await.result(Future.sequence(writes), Duration.Inf)
-      publishStaged(spark, root, names, key, maxLiveCommits)
+    try Option.when(!batch.isEmpty) {
+      val raw = Future(writeRawCommitDir(root, batch))
+      val partials = Future(writeCommitDir(root, partialsOf(batch)))
+      (Await.result(raw, Duration.Inf), Await.result(partials, Duration.Inf))
     } finally batch.unpersist(): Unit
   }
+
+  /** The cheap up-front duplicate probe of an optional delivery key:
+   *  a redelivered batch must not pay sanitize, staging or audit before
+   *  losing to its own key (the in-commit check of [[publishStaged]]
+   *  still closes the race with a concurrent redelivery).
+   */
+  private def delivered(
+      spark: SparkSession, root: String, key: Option[String]): Boolean =
+    key.exists(IndexCore.hasDelivery(spark, storeDir(root), _))
 
   /** Publish already-staged commit dirs under one version (shared by
    *  [[ingestBatchAtomic]] and [[ingestBatchAudited]]): the delivery-key
@@ -930,13 +823,9 @@ object ManifestStore {
   private def publishStaged(
       spark: SparkSession, root: String, names: Seq[String],
       key: Option[String], maxLiveCommits: Int): Boolean = {
-    val txn = key.map(TxnPrefix + _)
-    val published = commit(spark, root) { live =>
-      if (txn.exists(live.contains)) None
-      else Some(live :++ names :++ txn.toSeq)
-    }
-    if (!published) dropStaged(spark, root, names)
-    else {
+    val published = IndexCore.publish(spark, storeDir(root), names,
+      key.map(CommitLog.txnEntry).toSeq)
+    if (published) {
       val liveNow = latest(spark, root)._2
       val fanIn = math.max(2, maxLiveCommits / 2)
       val foldC = liveNow.count(_.startsWith("c-")) > maxLiveCommits
@@ -948,12 +837,18 @@ object ManifestStore {
     published
   }
 
-  private def dropStaged(
-      spark: SparkSession, root: String, names: Seq[String]): Unit =
-    for (d <- names) {
-      val p = new Path(s"${dataDir(root)}/$d")
-      fsFor(spark, p).delete(p, true): Unit
-    }
+  /** The four semantically distinct ways a WAP ingest can end —
+   *  previously conflated into one `false`: a duplicate delivery is
+   *  success-equivalent (the data IS in the table), an empty batch a
+   *  no-op, an audit failure a data problem someone must look at.
+   */
+  sealed trait WapOutcome
+  object WapOutcome {
+    case object Published extends WapOutcome
+    case object DuplicateDelivery extends WapOutcome
+    case object EmptyBatch extends WapOutcome
+    case object AuditFailed extends WapOutcome
+  }
 
   /** WRITE-AUDIT-PUBLISH ingest (the lakehouse WAP pattern): stage both
    *  tables' commit dirs exactly as [[ingestBatchAtomic]] would, AUDIT
@@ -975,19 +870,6 @@ object ManifestStore {
    *  where the report has one (expectation, violations) row per
    *  expectation, in input order.
    */
-  /** The four semantically distinct ways a WAP ingest can end —
-   *  previously conflated into one `false`: a duplicate delivery is
-   *  success-equivalent (the data IS in the table), an empty batch a
-   *  no-op, an audit failure a data problem someone must look at.
-   */
-  sealed trait WapOutcome
-  object WapOutcome {
-    case object Published extends WapOutcome
-    case object DuplicateDelivery extends WapOutcome
-    case object EmptyBatch extends WapOutcome
-    case object AuditFailed extends WapOutcome
-  }
-
   def ingestBatchAudited(
       spark: SparkSession, root: String, batchLong: DataFrame,
       expectations: Seq[(String, org.apache.spark.sql.Column)],
@@ -1016,8 +898,6 @@ object ManifestStore {
       key: Option[String], maxLiveCommits: Int,
       partialsOf: DataFrame => DataFrame): (WapOutcome, DataFrame) = {
     require(expectations.nonEmpty, "ingestBatchAudited without expectations")
-    require(key.forall(k => k.nonEmpty && !k.contains('\n')),
-      s"bad txn key: $key")
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
@@ -1026,74 +906,59 @@ object ManifestStore {
       .map(f => s"rollup_cnt_conservation_${Tables.fidelityPart(f)}")
     def emptyReport = (expectations.map { case (n, _) => (n, 0L) } ++
       conservationNames.map((_, 0L))).toDF("expectation", "violations")
-    // cheap up-front rejection: a redelivered batch must not pay the
-    // full stage+audit cost before losing to its own key (the same
-    // up-front check Dedup/TextIndex make; the in-closure check inside
-    // publishStaged still guards the concurrent-redelivery race)
-    val txn = key.map(TxnPrefix + _)
-    if (txn.exists(latest(spark, root)._2.contains))
+    if (delivered(spark, root, key))
       return (WapOutcome.DuplicateDelivery, emptyReport)
-    val batch = graft.ingest.Melt.sanitize(batchLong).persist()
-    try {
-      if (batch.isEmpty) return (WapOutcome.EmptyBatch, emptyReport)
-      val writes = Seq(
-        Future(writeRawCommitDir(root, batch)),
-        Future(writeCommitDir(root, partialsOf(batch))))
-      val names = Await.result(Future.sequence(writes), Duration.Inf)
-      // audit what readers WOULD see: both STAGED commit dirs through
-      // the readers' schema'd paths (so writer/layout bugs are caught
-      // too, not just bad input), concurrently:
-      //  - raw tier: one aggregation pass, all expectations as
-      //    parallel violation counts over the staged raw rows;
-      //  - rollup tier: per-level COUNT CONSERVATION — every fidelity's
-      //    Σcnt must equal the staged raw row count (the invariant
-      //    manifest_history checks post-hoc, moved pre-publish so an
-      //    allLevelPartials writer bug never becomes visible data).
-      // Cost of both ∝ batch, never ∝ table.
-      val rawName = names.find(_.startsWith("r-")).get
-      val rollName = names.find(_.startsWith("c-")).get
-      val countsF = Future {
-        spark.read.schema(rawCommitSchema).parquet(s"${dataDir(root)}/$rawName")
-          .select(Tables.rawSchema.fieldNames.map(col).toIndexedSeq: _*)
-          .agg(
-            count(lit(1)).as("__n"),
-            expectations.map { case (n, pred) =>
-              sum(when(pred.isNull || !pred, 1L).otherwise(0L)).as(n)
-            }: _*).head()
-      }
-      val perLevelF = Future {
-        val full = StructType(
-          physSchema.fields :+ StructField("fidelity", StringType))
-        spark.read.schema(full)
-          .option("basePath", s"${dataDir(root)}/$rollName")
-          .parquet(s"${dataDir(root)}/$rollName")
-          .groupBy("fidelity").agg(sum(col("cnt")).as("c"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
-      val counts = Await.result(countsF, Duration.Inf)
-      val perLevel = Await.result(perLevelF, Duration.Inf)
-      val nRaw = counts.getLong(0)
-      // violations for a conservation row = the absolute row-count
-      // discrepancy at that level (an absent level counts all nRaw)
-      val conservation = Fidelity.aggLevels.map { f =>
-        val part = Tables.fidelityPart(f)
-        (s"rollup_cnt_conservation_$part",
-          math.abs(perLevel.getOrElse(part, 0L) - nRaw))
-      }
-      val report = (expectations.zipWithIndex
-        .map { case ((n, _), i) => (n, counts.getLong(i + 1)) } ++
-        conservation)
-        .toDF("expectation", "violations")
-      val clean = expectations.indices.forall(i => counts.getLong(i + 1) == 0L) &&
-        conservation.forall(_._2 == 0L)
-      if (!clean) {
-        dropStaged(spark, root, names)
-        (WapOutcome.AuditFailed, report)
-      } else if (publishStaged(spark, root, names, key, maxLiveCommits))
-        (WapOutcome.Published, report)
-      else // lost the publish race to a concurrent redelivery of our key
-        (WapOutcome.DuplicateDelivery, report)
-    } finally batch.unpersist(): Unit
+    val staged = stageBatch(spark, root, batchLong, partialsOf)
+    if (staged.isEmpty) return (WapOutcome.EmptyBatch, emptyReport)
+    val (rawName, rollName) = staged.get
+    val names = Seq(rawName, rollName)
+    // audit what readers WOULD see: both STAGED commit dirs through
+    // the readers' schema'd paths (so writer/layout bugs are caught
+    // too, not just bad input), concurrently:
+    //  - raw tier: one aggregation pass, all expectations as
+    //    parallel violation counts over the staged raw rows;
+    //  - rollup tier: per-level COUNT CONSERVATION — every fidelity's
+    //    Σcnt must equal the staged raw row count (the invariant
+    //    manifest_history checks post-hoc, moved pre-publish so an
+    //    allLevelPartials writer bug never becomes visible data).
+    // Cost of both ∝ batch, never ∝ table.
+    val countsF = Future {
+      spark.read.schema(rawCommitSchema).parquet(entryDir(root, rawName))
+        .select(Tables.rawSchema.fieldNames.map(col).toIndexedSeq: _*)
+        .agg(
+          count(lit(1)).as("__n"),
+          expectations.map { case (n, pred) =>
+            sum(when(pred.isNull || !pred, 1L).otherwise(0L)).as(n)
+          }: _*).head()
+    }
+    val perLevelF = Future {
+      readPartials(spark, root, rollName)
+        .groupBy("fidelity").agg(sum(col("cnt")).as("c"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    val counts = Await.result(countsF, Duration.Inf)
+    val perLevel = Await.result(perLevelF, Duration.Inf)
+    val nRaw = counts.getLong(0)
+    // violations for a conservation row = the absolute row-count
+    // discrepancy at that level (an absent level counts all nRaw)
+    val conservation = Fidelity.aggLevels.map { f =>
+      val part = Tables.fidelityPart(f)
+      (s"rollup_cnt_conservation_$part",
+        math.abs(perLevel.getOrElse(part, 0L) - nRaw))
+    }
+    val report = (expectations.zipWithIndex
+      .map { case ((n, _), i) => (n, counts.getLong(i + 1)) } ++
+      conservation)
+      .toDF("expectation", "violations")
+    val clean = expectations.indices.forall(i => counts.getLong(i + 1) == 0L) &&
+      conservation.forall(_._2 == 0L)
+    if (!clean) {
+      IndexCore.dropStaging(spark, storeDir(root), names)
+      (WapOutcome.AuditFailed, report)
+    } else if (publishStaged(spark, root, names, key, maxLiveCommits))
+      (WapOutcome.Published, report)
+    else // lost the publish race to a concurrent redelivery of our key
+      (WapOutcome.DuplicateDelivery, report)
   }
 
   /** Raw datapoint scan over the atomic store (S4 for manifest roots):
@@ -1114,13 +979,13 @@ object ManifestStore {
 
   /** Per-series raw read (the FULL-fidelity chart route): the ds_b +
    *  dataset_id equalities ride the commit files' (ds_b, dataset_id,
-   *  ts) sort via row-group stats — the manifest analog of
-   *  `Tables.readRawFor`'s partition-dir pruning, with the manifest
-   *  itself standing in for the directory tree.
+   *  ts) sort via row-group stats, with the manifest standing in for a
+   *  partition-directory tree.
    */
   def readRawFor(
       spark: SparkSession, root: String, datasetId: String): DataFrame =
-    readRawForDirs(spark, rawDirEntries(latest(spark, root)._2), root, datasetId)
+    readRawDirs(spark, rawDirEntries(latest(spark, root)._2), root,
+      series(datasetId))
 
   /** [[readRawFor]] AS OF a published version — the FULL-fidelity leg
    *  of chart time travel (pairs with [[readLevelRangeAsOf]]).
@@ -1128,24 +993,11 @@ object ManifestStore {
   def readRawForAsOf(
       spark: SparkSession, root: String, datasetId: String,
       version: Long): DataFrame =
-    readRawForDirs(spark, rawDirEntries(liveAt(spark, root, version)),
-      root, datasetId)
+    readRawDirs(spark, rawDirEntries(liveAt(spark, root, version)),
+      root, series(datasetId))
 
-  private def readRawForDirs(
-      spark: SparkSession, entries: Seq[String], root: String,
-      datasetId: String): DataFrame = {
-    val dirs = requireRawDirs(spark, entries, root)
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Tables.rawSchema)
-    else spark.read.schema(rawCommitSchema).parquet(dirs: _*)
-      .where(col("ds_b") === Tables.dsBucket(lit(datasetId)) &&
-        col("dataset_id") === datasetId)
-      .select(Tables.rawSchema.fieldNames.map(col).toIndexedSeq: _*)
-  }
-
-  /** Resolve `r-` commit entries to data dirs, REQUIRING each to exist.
-   *  Raw commit dirs (unlike per-level `c-<id>/fidelity=` leaf dirs,
+  /** Read `r-` commit entries (`prune` applied below the projection),
+   *  REQUIRING each dir to exist. Raw commit dirs (unlike per-level `c-<id>/fidelity=` leaf dirs,
    *  which legitimately exist only for levels the commit touched) are
    *  always present when their version published — an absent one means
    *  vacuum reclaimed a superseded dir after a rewrite, and silently
@@ -1153,25 +1005,20 @@ object ManifestStore {
    *  [[cdcRawBetween]]. Fail loudly instead, like [[liveAt]] does for
    *  reclaimed versions.
    */
-  private def requireRawDirs(
-      spark: SparkSession, entries: Seq[String], root: String): Seq[String] = {
-    val dirs = entries.map(d => s"${dataDir(root)}/$d")
+  private def readRawDirs(
+      spark: SparkSession, entries: Seq[String], root: String,
+      prune: DataFrame => DataFrame = identity): DataFrame = {
+    val dirs = entries.map(entryDir(root, _))
     val missing = dirs.filterNot(StoreFs.exists(spark, _))
     require(missing.isEmpty,
       s"raw commit dir(s) ${missing.mkString(", ")} referenced by the " +
         s"manifest at $root no longer exist (vacuumed after a rewrite); " +
         "this snapshot/CDC window is unreadable — refusing to return " +
         "partial data")
-    dirs
-  }
-
-  private def readRawDirs(
-      spark: SparkSession, entries: Seq[String], root: String): DataFrame = {
-    val dirs = requireRawDirs(spark, entries, root)
     if (dirs.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Tables.rawSchema)
-    else spark.read.schema(rawCommitSchema).parquet(dirs: _*)
+    else prune(spark.read.schema(rawCommitSchema).parquet(dirs: _*))
       .select(Tables.rawSchema.fieldNames.map(col).toIndexedSeq: _*)
   }
 

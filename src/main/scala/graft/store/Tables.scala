@@ -330,23 +330,6 @@ object Tables {
   def readRaw(spark: SparkSession, root: String): DataFrame =
     readOrEmpty(spark, rawPath(root), rawSchema, rawDiskSchema)
 
-  /** Raw read pruned to ONE series: static partition pruning to its
-   *  hash bucket, then the dataset_id equality skips row groups via the
-   *  ingest-time (dataset_id, ts) sort's min/max stats. The bucket
-   *  predicate must be injected HERE — a bare dataset_id filter above
-   *  `readRaw` cannot imply which ds_b dirs to prune.
-   */
-  def readRawFor(spark: SparkSession, root: String, datasetId: String): DataFrame = {
-    val path = rawPath(root)
-    if (!StoreFs.exists(spark, path))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rawSchema)
-    else
-      readDisk(spark, path, rawDiskSchema)
-        .where(col("ds_b") === dsBucket(lit(datasetId)) &&
-          col("dataset_id") === datasetId)
-        .select(rawSchema.fields.map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*)
-  }
-
   /** Raw read restricted to a win_s partition range — the filter lands
    *  on the partition column BEFORE projection, so it prunes statically.
    */
@@ -369,22 +352,6 @@ object Tables {
     if (StoreFs.exists(spark, path))
       readDisk(spark, path, rollupDiskSchema)
         .where(col("fidelity") === fidelityPart(f))
-        .select(rollupSchema.fields.map(fl => col(fl.name).cast(fl.dataType)).toIndexedSeq: _*)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rollupSchema)
-  }
-
-  /** Rollup read pruned to one level AND one series' hash bucket (see
-   *  readRawFor for why the bucket predicate lives in the reader).
-   */
-  def readRollupFor(
-      spark: SparkSession, root: String, f: Fidelity, datasetId: String): DataFrame = {
-    val path = rollupPath(root)
-    if (StoreFs.exists(spark, path))
-      readDisk(spark, path, rollupDiskSchema)
-        .where(col("fidelity") === fidelityPart(f) &&
-          col("ds_b") === dsBucket(lit(datasetId)) &&
-          col("dataset_id") === datasetId)
         .select(rollupSchema.fields.map(fl => col(fl.name).cast(fl.dataType)).toIndexedSeq: _*)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rollupSchema)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sim.Similarity
-import graft.store.IndexCore
+import graft.store.{CommitLog, IndexCore}
 
 /**
  * Streaming maintenance of the persisted IVF ANN index
@@ -95,7 +95,7 @@ object StreamAnnIndex {
         // one ledger snapshot answers both the delivery probe and
         // found-vs-append (the StreamRagPipeline discipline)
         val (version, live) = IndexCore.ledger(s, indexDir)
-        if (!live.contains("#txn:" + key) && !b.isEmpty) {
+        if (!live.contains(CommitLog.txnEntry(key)) && !b.isEmpty) {
           val batch = b.select("vec_id", "v")
           if (version == 0L)
             Similarity.ivfIndexBuild(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.Fidelity
-import graft.store.{ManifestStore, Tables}
+import graft.store.{IndexCore, ManifestStore, Tables}
 
 /**
  * CDC STREAMING CONSUMER — tail the manifest store's commit log as a
@@ -42,7 +42,7 @@ object StreamCdc {
     spark.readStream
       .format("text")
       .option("maxFilesPerTrigger", "1")
-      .load(s"$root/mrollup/_manifests")
+      .load(IndexCore.manifestDir(ManifestStore.storeDir(root)))
       .select(
         regexp_extract(input_file_name(), "/v(\\d+)$", 1)
           .cast("long").as("version"),

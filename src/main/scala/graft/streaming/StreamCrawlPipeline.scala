@@ -110,6 +110,9 @@ object StreamCrawlPipeline {
       .foreachBatch { (b0: DataFrame, id: Long) =>
         val s = b0.sparkSession
         val key = s"b$id"
+        // the dedup upsert's leg keys (its re-fetch leg runs under
+        // `<key>.up`)
+        val (upDel, upAdd) = IndexCore.upsertKeys(s"$key.up")
         // persist discipline (the StreamRagPipeline fence's lesson):
         // the batch, the membership probe, and both split halves each
         // feed several downstream actions — uncached, every action
@@ -126,7 +129,7 @@ object StreamCrawlPipeline {
           // one probe job and skips the split joins
           val known = Dedup.indexKnownIds(
             s, dedupDir, batch.select(idCol), idCol,
-            excludeKeys = Seq(key, s"$key.up.del", s"$key.up.add"))
+            excludeKeys = Seq(key, upDel, upAdd))
             .persist()
           val allFresh = known.count() == 0
           val fresh =
@@ -194,7 +197,7 @@ object StreamCrawlPipeline {
             // the upsert's persisted report — replay-identical)
             if (!IndexCore.hasDelivery(s, textDir, s"$key.up.tadd")) {
               val dups = Dedup
-                .indexPairsForDelivery(s, dedupDir, s"$key.up.add")
+                .indexPairsForDelivery(s, dedupDir, upAdd)
                 .select(col("b_id").as(idCol)).distinct()
               val survivors = refetch.join(dups, Seq(idCol), "left_anti")
               if (!survivors.isEmpty)

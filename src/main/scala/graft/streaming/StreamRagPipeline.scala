@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.Dedup
 import graft.sim.Similarity
-import graft.store.IndexCore
+import graft.store.{CommitLog, IndexCore}
 import graft.text.TextIndex
 
 /**
@@ -106,6 +106,9 @@ object StreamRagPipeline {
       .foreachBatch { (b0: DataFrame, id: Long) =>
         val s = b0.sparkSession
         val key = s"b$id"
+        // the dedup upsert's leg keys (its re-fetch leg runs under
+        // `<key>.up`)
+        val (upDel, upAdd) = IndexCore.upsertKeys(s"$key.up")
         // ONE materializing count doubles as the emptiness probe (the
         // old standalone isEmpty launched a job whose work the legs
         // then redid) — every leg below reads the cached batch
@@ -120,7 +123,7 @@ object StreamRagPipeline {
             // the job-count regression fence in StreamRagPipelineSpec
             val known = Dedup.indexKnownIds(s, dedupDir,
               b.select(idCol), idCol,
-              excludeKeys = Seq(key, s"$key.up.del", s"$key.up.add"))
+              excludeKeys = Seq(key, upDel, upAdd))
               .persist()
             val knownN = known.count()
             val allFresh = knownN == 0
@@ -150,7 +153,7 @@ object StreamRagPipeline {
             // one ANN ledger snapshot answers BOTH "already delivered?"
             // and "founded yet?" — the old path resolved the log twice
             val (annVersion, annLive) = IndexCore.ledger(s, annDir)
-            val needAnn = !annLive.contains("#txn:" + key)
+            val needAnn = !annLive.contains(CommitLog.txnEntry(key))
             if (needText || needAnn) {
               val dups = Dedup.indexPairsForDelivery(s, dedupDir, key)
                 .select(col("b_id").as(idCol)).distinct()
@@ -205,8 +208,8 @@ object StreamRagPipeline {
                   key = Some(s"$key.up.tdel"))
               // ANN: superseded vectors retire likewise (pure gone-set)
               val (annV2, annLive2) = IndexCore.ledger(s, annDir)
-              if (!annLive2.contains(s"#txn:$key.up.adel") &&
-                  !annLive2.contains(s"#txn:$key.up.aadd") &&
+              if (!annLive2.contains(CommitLog.txnEntry(s"$key.up.adel")) &&
+                  !annLive2.contains(CommitLog.txnEntry(s"$key.up.aadd")) &&
                   annV2 > 0L)
                 Similarity.ivfIndexForget(s, annDir, ids,
                   key = Some(s"$key.up.adel"))
@@ -215,10 +218,10 @@ object StreamRagPipeline {
               // both retrieval tiers
               val needT2 = !IndexCore.hasDelivery(s, textDir, s"$key.up.tadd")
               val (annV3, annLive3) = IndexCore.ledger(s, annDir)
-              val needA2 = !annLive3.contains(s"#txn:$key.up.aadd")
+              val needA2 = !annLive3.contains(CommitLog.txnEntry(s"$key.up.aadd"))
               if (needT2 || needA2) {
                 val dups2 = Dedup
-                  .indexPairsForDelivery(s, dedupDir, s"$key.up.add")
+                  .indexPairsForDelivery(s, dedupDir, upAdd)
                   .select(col("b_id").as(idCol)).distinct()
                 val surv2 = refetch
                   .join(dups2, Seq(idCol), "left_anti").persist()

@@ -364,9 +364,7 @@ object TextIndex {
       ).flatten
       Await.result(
         Future.sequence(writes.map(w => Future(w()))), Duration.Inf): Unit
-      IndexCore.publishAppend(spark, dir, name, txn.toSeq)(
-        s"shard with delivery key ${key.get} raced a concurrent " +
-          s"redelivery into $dir — this attempt's staging was dropped")
+      IndexCore.publishAppend(spark, dir, name, txn, "shard")
     } finally {
       tp.unpersist(): Unit
       snap.foreach(_.unpersist(): Unit)
@@ -563,40 +561,19 @@ object TextIndex {
     require(legs.docs,
       "upsertDocs needs the forward docs leg in its ingest profile — " +
         "the next upsert's delete leg re-derives deltas from it")
-    // ONE materialization of the caller's frame feeds BOTH legs: the
-    // delete-leg id list and the ingested shard must come from the
-    // same evaluation — a nondeterministic source (sampled/limited/
-    // rand-derived) evaluated twice could delete ids it never
-    // re-adds, or leave stale postings live
     val idType = docs.schema(idCol).dataType.typeName
     require(Seq("byte", "short", "integer", "long").contains(idType),
       s"upsertDocs needs an integral id column; got $idCol: $idType")
-    val snap = docs.select(col(idCol).cast("long").as(idCol),
-      col(textCol).cast("string").as(textCol)).persist()
-    try {
-      val ids = snap.select(col(idCol)).distinct()
-        .limit(65537).collect().map(_.getLong(0)).toSeq
-      require(ids.nonEmpty && ids.length <= 65536,
-        s"upsertDocs takes 1..65536 distinct ids per call (got ${ids.length})")
-      val (delKey, addKey) = (key.map(_ + ".del"), key.map(_ + ".add"))
-      // an empty index has nothing to delete — the first upsert is a
-      // plain founding ingest (forgetDocs would refuse the missing
-      // docs leg of a commit-less index). The delete leg must ALSO
-      // skip when the ADD leg already committed: a FOUNDING upsert
-      // never ledgers its delete key, so a redelivery (or a replay
-      // after the add committed) would otherwise see a now-non-empty
-      // index, tombstone the generation the first delivery just
-      // founded, and skip the re-ingest — silently deleting the
-      // upserted content
-      val delivered = (k: Option[String]) =>
-        k.exists(IndexCore.hasDelivery(spark, dir, _))
-      if (liveShardCount(spark, dir) > 0 && !delivered(delKey) &&
-          !delivered(addKey))
-        forgetDocs(spark, dir, ids, key = delKey)
-      if (!delivered(addKey))
-        ingestShard(spark, dir, snap, idCol, textCol, key = addKey,
-          legs = legs)
-    } finally snap.unpersist(): Unit
+    // the delete leg skips on an empty index, where forgetDocs would
+    // refuse the missing docs leg of a commit-less index
+    IndexCore.upsert(spark, dir,
+      docs.select(col(idCol).cast("long").as(idCol),
+        col(textCol).cast("string").as(textCol)),
+      idCol, key, "upsertDocs")(
+      del = (ids, delKey) => forgetDocs(spark, dir, ids, delKey),
+      add = (snap, addKey) => ingestShard(spark, dir, snap, idCol, textCol,
+        key = addKey, legs = legs),
+      replayed = _ => ())
   }
 
   /** The tombstone PUBLISH step, separated so the stale-abort path is
@@ -2019,7 +1996,8 @@ object TextIndex {
   def mergeFrom(
       spark: SparkSession, dstDir: String, srcDir: String,
       key: Option[String] = None): Unit =
-    core.mergeFrom(spark, dstDir, srcDir, key) { (srcCommits, dst) =>
-      foldLegs(spark, srcCommits.map((_, Seq.empty[String])), Seq.empty, dst)
-    }
+    IndexCore.mergeFrom(spark, dstDir, srcDir, key)(src =>
+      IndexCore.stageCommit(dstDir)(dst => foldLegs(spark,
+        src.map(c => (IndexCore.dataDir(srcDir, c), Seq.empty[String])),
+        Seq.empty, dst)))
 }

@@ -13,51 +13,22 @@ import graft.model.Fidelity
 class ApiSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
-  test("manifest-backed API returns the same data as the dynamic-overwrite API") {
+  test("manifest-backed API serves full-fidelity and routed aggregate reads") {
     val batches = Seq(
       Seq(("api.m.a", "2024-01-01T01:00:00", 1.0), ("api.m.a", "2024-01-01T01:00:30", 3.0)),
       Seq(("api.m.a", "2024-01-01T01:01:10", 5.0), ("api.m.b", "2024-01-01T01:00:00", -1.0)))
     val t0 = TestSpark.isoUs("2024-01-01T01:00:00")
 
-    def run(manifest: Boolean): (Seq[String], Seq[String]) = {
-      val root = TestSpark.tmpDir("graft_api_cmp")
-      val api = new GraftApi(spark, root, root + "/all_comments", manifestRollups = manifest)
-      batches.foreach(b => api.putData(TestSpark.longDF(b)))
-      def dump(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toString).sorted.toSeq
-      (dump(api.getData("api.m.a", t0, t0 + 120000000L)),
-        dump(api.getData("api.m.a", t0, t0 + 120000000L, Some(Fidelity.S100))))
-    }
-
-    val (fullDyn, aggDyn) = run(manifest = false)
-    val (fullMan, aggMan) = run(manifest = true)
-    assert(fullMan == fullDyn && fullMan.size == 3, "full-fidelity reads agree")
+    val root = TestSpark.tmpDir("graft_api_cmp")
+    val api = new GraftApi(spark, root, root + "/all_comments")
+    batches.foreach(b => api.putData(TestSpark.longDF(b)))
+    def dump(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val full = dump(api.getData("api.m.a", t0, t0 + 120000000L))
+    val agg = dump(api.getData("api.m.a", t0, t0 + 120000000L, Some(Fidelity.S100)))
+    assert(full.size == 3, "full-fidelity read returns every point")
     // all three points share the 100s bucket: min 1.0, mean 3.0, max 5.0
-    assert(aggMan == aggDyn && aggMan == Seq("[1704070800,1.0,3.0,5.0]"),
-      "routed agg reads agree across backends")
-  }
-
-  test("autoRollupRewrite routes ad-hoc window aggregates to the rollup table") {
-    val root = TestSpark.tmpDir("graft_api_rw")
-    val api = new GraftApi(spark, root, root + "/all_comments",
-      manifestRollups = false, autoRollupRewrite = true)
-    try {
-      api.putData(TestSpark.longDF(Seq(
-        ("api.rw.a", "2024-01-01T01:00:00", 1.0),
-        ("api.rw.a", "2024-01-01T01:00:05", 3.0),
-        ("api.rw.a", "2024-01-01T01:00:11", 5.0))))
-      // an AD-HOC aggregate a user writes over the raw table — never
-      // routed through getData — must still hit the rollup store
-      val q = graft.ops.Rollup.aggregate(
-        graft.store.Tables.readRaw(spark, root), 10L)
-      val optimized = q.queryExecution.optimizedPlan.toString
-      assert(!optimized.contains("Aggregate"),
-        s"rewrite did not fire:\n$optimized")
-      val physical = q.queryExecution.executedPlan.toString
-      assert(physical.contains("/rollup") && !physical.contains("/raw"),
-        s"expected a rollup-only scan:\n$physical")
-      assert(q.orderBy("bucket_s").collect().map(_.getLong(5)).sum == 3L)
-    } finally graft.plans.RollupCatalog.clear()
+    assert(agg == Seq("[1704070800,1.0,3.0,5.0]"), "routed agg read")
   }
 
   test("getData asOf serves the chart from one frozen version on both routes") {
@@ -78,12 +49,6 @@ class ApiSpec extends AnyFunSuite {
     val agg = api.getData("api.tt.a", t0, t0 + 120000000L,
       Some(Fidelity.S100), asOf = Some(1L)).collect()
     assert(agg.length == 1 && agg.head.getDouble(2) == 1.0)
-    // time travel is a manifest-backend capability — loud otherwise
-    val dyn = new GraftApi(spark, TestSpark.tmpDir("graft_api_dyn"),
-      root + "/c2", manifestRollups = false)
-    assertThrows[IllegalArgumentException] {
-      dyn.getData("api.tt.a", t0, t0 + 1L, asOf = Some(1L))
-    }
   }
 
   test("put/get/search/comments/self-metrics round-trip") {

@@ -23,6 +23,15 @@ class ManifestStoreSpec extends AnyFunSuite {
         ((r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getLong(5))))
       .toMap
 
+  /** The store's data dir holds exactly the live `c-`/`r-` entries: a
+   *  rejected publish left no staging behind.
+   */
+  private def assertNoStaging(root: String): Unit = {
+    val onDisk = new java.io.File(s"$root/mrollup/data").listFiles().map(_.getName).toSet
+    assert(onDisk == ManifestStore.latest(spark, root)._2.filterNot(_.startsWith("#")).toSet,
+      s"rejected staging leaked: $onDisk")
+  }
+
   test("appends are snapshot-visible and merge across commits at read time") {
     val root = TestSpark.tmpDir("mstore")
     assert(ManifestStore.readLevel(spark, root, Fidelity.S1).isEmpty,
@@ -174,6 +183,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       "first delivery publishes")
     assert(!ManifestStore.appendPartialsIdempotent(spark, root, partials, "b0"),
       "redelivery is rejected")
+    assertNoStaging(root)
     assert(level1(root).values.map(_._4).sum == 1L, "cnt folded once")
 
     // a second batch + compaction must PRESERVE the key
@@ -181,9 +191,12 @@ class ManifestStoreSpec extends AnyFunSuite {
       Tables.allLevelPartials(
         graft.ingest.Melt.sanitize(batch(("a", "2024-01-01T00:00:01", 4.0)))), "b1"))
     ManifestStore.compact(spark, root)
+    ManifestStore.vacuum(spark, root)
     assert(!ManifestStore.appendPartialsIdempotent(spark, root, partials, "b0"),
       "key survives compaction")
+    assertNoStaging(root)
     assert(!ManifestStore.appendPartialsIdempotent(spark, root, partials, "b1"))
+    assertNoStaging(root)
     assert(level1(root).values.map(_._4).sum == 2L,
       "state identical after compaction + redeliveries")
     // reads ignore key lines entirely
@@ -622,6 +635,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     // duplicate delivery key: NEITHER table changes
     assert(!ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00", 2.0)), key = Some("k1")))
+    assertNoStaging(root)
     assert(ManifestStore.readRaw(spark, root).count() == 2L)
     assert(ManifestStore.readLevel(spark, root, Fidelity.S1)
       .agg(org.apache.spark.sql.functions.sum("cnt")).head().getLong(0) == 2L)
@@ -669,6 +683,43 @@ class ManifestStoreSpec extends AnyFunSuite {
         vPre, ManifestStore.latest(spark, root)._1)
     }
     assert(ex.getMessage.contains("raw rewrite"))
+  }
+
+  test("a redelivered keyed ingestBatchAtomic starts no Spark job and leaves the version unchanged") {
+    val root = TestSpark.tmpDir("mstore_replay_jobs")
+    // count only this thread's jobs: tagged by a job group of our own
+    val group = s"mstore-replay-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    def jobsOf(body: => Boolean): (Boolean, Int) = {
+      jobs.set(0)
+      spark.sparkContext.setJobGroup(group, "redelivery probe")
+      val out = try body finally spark.sparkContext.clearJobGroup()
+      // the listener bus is async — let it drain before reading
+      Thread.sleep(2000)
+      (out, jobs.get())
+    }
+    val b = batch(("a", "2024-01-01T00:00:00", 2.0))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // control: the listener does see the first delivery's jobs
+      val (first, firstJobs) =
+        jobsOf(ManifestStore.ingestBatchAtomic(spark, root, b, key = Some("k1")))
+      assert(first && firstJobs > 0, s"first delivery: $first, $firstJobs jobs")
+      val v = ManifestStore.latest(spark, root)._1
+      val (again, againJobs) =
+        jobsOf(ManifestStore.ingestBatchAtomic(spark, root, b, key = Some("k1")))
+      assert(!again, "redelivery must not publish")
+      assert(againJobs == 0, s"redelivery started $againJobs Spark jobs")
+      assert(ManifestStore.latest(spark, root)._1 == v, "version moved on a redelivery")
+      assertNoStaging(root)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("WAP ingest: a failed audit leaves the table byte-identical, a clean one publishes") {

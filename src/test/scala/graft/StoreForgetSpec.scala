@@ -30,12 +30,13 @@ class StoreForgetSpec extends AnyFunSuite {
 
     Tables.forgetDataset(spark, root, "a")
 
-    assert(Tables.readRawFor(spark, root, "a").isEmpty, "raw rows gone")
+    assert(Tables.readRaw(spark, root).where(col("dataset_id") === "a").isEmpty,
+      "raw rows gone")
     assert(Tables.readRaw(spark, root)
       .orderBy("dataset_id", "ts_us").collect().toSeq == beforeOthers,
       "other series' raw rows byte-exact")
     for (f <- Fidelity.aggLevels) {
-      assert(Tables.readRollupFor(spark, root, f, "a").isEmpty,
+      assert(Tables.readRollup(spark, root, f).where(col("dataset_id") === "a").isEmpty,
         s"level ${f.name}: rollup buckets gone")
     }
     val s1 = Tables.readRollup(spark, root, Fidelity.S1)
