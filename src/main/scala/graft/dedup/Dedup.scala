@@ -843,7 +843,7 @@ object Dedup {
                 Seq("a_id"), "left_anti")
               .join(broadcast(gone.select(col("doc_id").as("b_id"))),
                 Seq("b_id"), "left_anti")
-              .select(df.columns.map(col): _*)
+              .select(df.columns.toIndexedSeq.map(col): _*)
               .repartition(1).write.parquet(s"$dst/pairs")
             any = true
           }

@@ -273,12 +273,26 @@ object Similarity {
 
   /** Publish a staged batch commit with its optional delivery key. */
   /** The live centroid generation, collected to the driver (bounded —
-   *  every probe ships it as a literal).
+   *  every probe ships it as a literal). `entries` is the ledger
+   *  snapshot to read.
    */
+  private def liveCentroids(spark: SparkSession, dir: String,
+      entries: Seq[String]): Array[(Long, Array[Double])] =
+    collectBounded(core.readAt(spark, dir, "centroids", entries),
+      "the stored centroid set must stay index-small")
   private def liveCentroids(
       spark: SparkSession, dir: String): Array[(Long, Array[Double])] =
-    collectBounded(core.readLive(spark, dir, "centroids"),
-      "the stored centroid set must stay index-small")
+    liveCentroids(spark, dir, IndexCore.live(spark, dir))
+
+  /** [[liveCentroids]] for the query path: collected once per live
+   *  commit set and then served from the [[graft.store.IndexCore.memo]]
+   *  (the fsck checks keep reading the stored leg).
+   */
+  private def servedCentroids(
+      spark: SparkSession, dir: String): Array[(Long, Array[Double])] =
+    IndexCore.memo(spark, dir, Seq("centroids")) { (entries, _) =>
+      Map("centroids" -> liveCentroids(spark, dir, entries))
+    }("centroids")
 
   /** The live postings, order-scoped ([[graft.store.IndexCore.scoped]]);
    *  `perCommit` shapes each per-commit read (the query path pushes its
@@ -635,7 +649,7 @@ object Similarity {
   def ivfIndexQuery(
       spark: org.apache.spark.sql.SparkSession, dir: String, queries: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
-    val cents = liveCentroids(spark, dir)
+    val cents = servedCentroids(spark, dir)
     val (ids, vecs) = (cents.map(_._1), cents.flatMap(_._2))
     val probes = queries.select(
       col("vec_id").as("q_id"), col("v").as("qv"),
@@ -651,13 +665,13 @@ object Similarity {
     // commit). The plan carries `PartitionFilters: [cell IN (...)]`
     // per branch — guarded by PlanAuditSpec.
     val probedCells = probes.select("cell").distinct()
-      .collect().map(_.getLong(0)).sorted
+      .collect().map(_.getLong(0)).sorted.toSeq
     // per-commit roots each carry their own cell=N partition tree — a
     // multi-root partitioned read conflicts, so read per commit and
     // union (same leaf files either way)
     val postings = livePosts(spark, dir, df =>
       df.where(
-        col("cell").isin(probedCells.map(java.lang.Long.valueOf): _*)))
+        col("cell").isin(probedCells: _*)))
       .getOrElse(throw new IllegalArgumentException(
         s"no live posting commits in IVF index $dir"))
     rankTopK(

@@ -307,7 +307,7 @@ object Sketches {
     val member = (0 until kHash)
       .map(j => expr(s"(shiftright(${pre}w$j, CAST(${pre}p$j % 64 AS INT)) & 1) = 1"))
       .reduce(_ && _)
-    withPos.where(member).select(probes.columns.map(col): _*)
+    withPos.where(member).select(probes.columns.toIndexedSeq.map(col): _*)
   }
 
   /**

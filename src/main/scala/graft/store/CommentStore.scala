@@ -55,29 +55,42 @@ object CommentStore {
   def validate(text: String, tags: Seq[String]): Unit =
     require(!(text +: tags).exists(_.contains(";")), "fields may not contain ';'")
 
+  /** The log's on-disk schema: every log part and every compacted base
+   *  is written with exactly these columns.
+   */
+  private val logSchema: StructType = StructType(schema.fields ++ Seq(
+    StructField("_seq", LongType), StructField("_del", BooleanType)))
+
+  /** True iff the table at `path` is log-shaped (carries `_seq`). A
+   *  directory never mixes shapes — a plain table is migrated whole
+   *  before its first log append — so ONE part's footer, read on the
+   *  driver, decides, instead of a schema-inference job over the
+   *  table. A table with no top-level part (say a partitioned external
+   *  one) still infers.
+   */
+  private def logShaped(spark: SparkSession, path: String): Boolean =
+    StoreFs.firstPartHasColumn(spark, path, "_seq")
+      .getOrElse(spark.read.parquet(path).columns.contains("_seq"))
+
   /** Current comments, date-sorted. Plain externally-written tables
-   *  (no `_seq` column) are served as-is; log-shaped tables fold
-   *  latest-per-id and drop tombstones.
+   *  (no `_seq` column) are served as-is; log-shaped tables are read
+   *  with their pinned schema (no inference job), fold latest-per-id
+   *  and drop tombstones.
    */
   def load(spark: SparkSession, path: String): DataFrame =
     if (!StoreFs.exists(spark, path))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val raw = spark.read.parquet(path)
-      if (!raw.columns.contains("_seq"))
-        raw.select(
-          col("id").cast(LongType), col("date_us").cast(LongType),
-          col("text"), col("tags"))
-      else
-        raw.withColumn("_rn",
-            row_number().over(Window.partitionBy("id").orderBy(col("_seq").desc)))
-          .where(col("_rn") === 1 && !col("_del"))
-          .select(
-            col("id").cast(LongType), col("date_us").cast(LongType),
-            col("text"), col("tags"))
-          .orderBy("date_us", "id")
-    }
+    else if (!logShaped(spark, path))
+      spark.read.parquet(path).select(schema.fields.toIndexedSeq.map(f =>
+        col(f.name).cast(f.dataType)): _*)
+    else
+      spark.read.schema(logSchema).parquet(path)
+        .withColumn("_rn",
+          row_number().over(Window.partitionBy("id").orderBy(col("_seq").desc)))
+        .where(col("_rn") === 1 && !col("_del"))
+        .select(col("id"), col("date_us"), col("text"), col("tags"))
+        .orderBy("date_us", "id")
 
   /** One-part append of a single log row, then bounded compaction. A
    *  pre-existing PLAIN table (externally written, no log columns) is
@@ -87,8 +100,7 @@ object CommentStore {
       spark: SparkSession, path: String,
       id: Long, dateUs: Long, text: String, tags: Seq[String],
       del: Boolean): Unit = {
-    if (StoreFs.exists(spark, path) &&
-        !spark.read.parquet(path).columns.contains("_seq"))
+    if (StoreFs.exists(spark, path) && !logShaped(spark, path))
       compact(spark, path) // migrates: rewrites the plain table log-shaped
     import spark.implicits._
     Seq((id, dateUs, text, tags, nextSeq(), del))

@@ -105,7 +105,16 @@ final class IndexCore(val idCol: String, legs: Map[String, IndexLeg]) {
    *  by delta or do not touch.
    */
   def readLive(spark: SparkSession, dir: String, leg: String): DataFrame =
-    read(spark, leg, liveRoots(spark, dir, leg))
+    readAt(spark, dir, leg, live(spark, dir))
+
+  /** [[readLive]] over the commits of a ledger snapshot `entries`
+   *  already resolved — what a [[IndexCore.memo]] fetch reads, so the
+   *  answer is exactly the state the memo key names.
+   */
+  def readAt(spark: SparkSession, dir: String, leg: String,
+      entries: Seq[String]): DataFrame =
+    read(spark, leg, entries.filter(_.startsWith("c-"))
+      .map(legPath(dir, _, leg)).filter(exists(spark, _)))
 
   /** True iff EVERY live commit carries `leg` (and one exists) — the
    *  uniformity probe behind optional-leg routing: a partial leg would
@@ -620,6 +629,58 @@ object IndexCore {
     spark.emptyDataset[Long].toDF("doc_id")
   }
 
+  // ---- memo of immutable per-commit aggregates ----
+
+  /** Most (dir, part) values the memo holds (least recently used go). */
+  private val MemoEntries = 256
+
+  /** (dir, part) → (the live data entries it was folded from, value). */
+  private val memoMap =
+    new java.util.LinkedHashMap[(String, String), (Seq[String], Any)](
+      64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String), (Seq[String], Any)]): Boolean =
+        size() > MemoEntries
+    }
+
+  /** MEMO OF IMMUTABLE AGGREGATES — the small folded legs every
+   *  interactive probe needs before its real scan (the text index's
+   *  stats sums and per-term df, the IVF centroids), served from
+   *  driver memory instead of a rescan per query. A published entry is
+   *  never rewritten in place — ingest, fold, retirement, rebuild,
+   *  merge, the fsck repair legs and the store's write-audit-publish
+   *  all stage a FRESH entry name and swap it in through the log — so a
+   *  value folded from a set of live data entries stays exact for as
+   *  long as that set is live.
+   *
+   *  Each value is therefore keyed by (dir, part) and stamped with the
+   *  live data entries (`c-`/`t-`, log order) of ONE ledger read; it
+   *  answers only while the ledger still lists exactly those entries, so
+   *  the memo can never serve a superseded state. `fetch(entries,
+   *  missing)` folds the `missing` parts from exactly that `entries`
+   *  snapshot (never a fresh ledger read) and returns a value for each.
+   *  [[MemoEntries]] bounds the memo; [[vacuum]] drops a dir's values.
+   */
+  def memo[V](spark: SparkSession, dir: String, parts: Seq[String])(
+      fetch: (Seq[String], Seq[String]) => Map[String, V]): Map[String, V] = {
+    val entries = live(spark, dir).filter(isData)
+    val hit = memoMap.synchronized {
+      parts.flatMap(p => Option(memoMap.get((dir, p)))
+        .collect { case (`entries`, v) => p -> v.asInstanceOf[V] })
+    }.toMap
+    val missing = parts.filterNot(hit.contains)
+    val got = if (missing.isEmpty) Map.empty[String, V] else fetch(entries, missing)
+    memoMap.synchronized {
+      got.foreach { case (p, v) => memoMap.put((dir, p), (entries, v)) }
+    }
+    hit ++ got
+  }
+
+  /** Forget every memoized value of `dir`. */
+  def dropMemo(dir: String): Unit = memoMap.synchronized {
+    memoMap.keySet.removeIf(_._1 == dir): Unit
+  }
+
   // ---- ledger verbs ----
 
   /** The index's live ledger entries. */
@@ -716,6 +777,7 @@ object IndexCore {
    */
   def vacuum(spark: SparkSession, dir: String, minAgeMs: Long = 0L,
       keepVersions: Int = Int.MaxValue): Unit = {
+    dropMemo(dir)
     val entries = live(spark, dir).toSet
     val dd = new Path(s"$dir/data")
     val fs = dd.getFileSystem(spark.sessionState.newHadoopConf())

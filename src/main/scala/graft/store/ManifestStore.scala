@@ -195,21 +195,21 @@ object ManifestStore {
     live.filter(_.startsWith("r-"))
 
   /** Idempotent [[appendPartials]] keyed by a caller-supplied delivery
-   *  key (e.g. a streaming micro-batch id). If the key was already
-   *  published, the staged commit dir is dropped and nothing changes —
-   *  foreachBatch redeliveries after a crash between sink-commit and
-   *  checkpoint-commit fold in EXACTLY once. Returns true iff this
-   *  call published. The key check is part of the manifest's own
-   *  optimistic-commit read: no second coordination channel, so there
-   *  is no window where the key and the data disagree.
+   *  key (e.g. a streaming micro-batch id): foreachBatch redeliveries
+   *  after a crash between sink-commit and checkpoint-commit fold in
+   *  EXACTLY once. Returns true iff this call published. A key already
+   *  in the ledger is refused BEFORE any work — no Spark job, no staged
+   *  dir; a redelivery racing past that probe is still refused by the
+   *  key check inside the manifest's own optimistic-commit read (its
+   *  staging is dropped), so there is no window where the key and the
+   *  data disagree.
    */
   def appendPartialsIdempotent(
       spark: SparkSession, root: String, partials: DataFrame,
-      key: String): Boolean = {
-    val txn = CommitLog.txnEntry(key)
-    IndexCore.publish(spark, storeDir(root),
-      Seq(writeCommitDir(root, partials)), Seq(txn))
-  }
+      key: String): Boolean =
+    !IndexCore.hasDelivery(spark, storeDir(root), key) &&
+      IndexCore.publish(spark, storeDir(root),
+        Seq(writeCommitDir(root, partials)), Seq(CommitLog.txnEntry(key)))
 
   private def empty(spark: SparkSession): DataFrame =
     spark.createDataFrame(
@@ -350,13 +350,26 @@ object ManifestStore {
       .filter(StoreFs.exists(spark, _))
   }
 
+  /** The chart fold behind [[readLevelRange]] and its as-of twin: the
+   *  series and part/bucket bounds prune below the fold, and the
+   *  surviving rows fold in ONE task with no exchange (`coalesce(1)`
+   *  below the merge-on-read aggregate) — one Spark job per chart
+   *  instead of a partial-aggregate stage, a shuffle and a final stage.
+   *  The fold input is bounded: a commit holds at most one row per
+   *  (series, bucket), so it is at most (live commits) × (buckets in
+   *  the span), and [[graft.query.RangeQuery.route]]'s 500-file guard
+   *  (~5000 buckets per file) caps the span — the input is of the same
+   *  order as the rows the caller collects, times the live commit
+   *  count that compaction bounds.
+   */
   private def readLevelRangeDirs(
       spark: SparkSession, dirs: Seq[String], f: Fidelity,
       datasetId: String, startS: Long, endS: Long): DataFrame = {
     val w = Tables.partitionWindowS(f)
     foldLevel(spark, dirs)(df => series(datasetId)(df)
       .where(col("part_s").between(startS / w * w, endS / w * w) &&
-        col("bucket_s").between(startS, endS)))
+        col("bucket_s").between(startS, endS))
+      .coalesce(1))
   }
 
   private val cdcSchema: StructType = StructType(Seq(

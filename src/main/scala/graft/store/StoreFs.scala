@@ -34,6 +34,26 @@ private[store] object StoreFs {
     else fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
   }
 
+  /** Whether the first `.parquet` part directly under `path` declares
+   *  column `column`, from that part's footer read on the driver (no
+   *  Spark job); None when there is no such part.
+   */
+  def firstPartHasColumn(spark: SparkSession, path: String,
+      column: String): Option[Boolean] = {
+    val p = new Path(path)
+    val fs = fsFor(spark, p)
+    if (!fs.exists(p)) None
+    else fs.listStatus(p).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).headOption
+      .map { part =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            part, spark.sessionState.newHadoopConf()))
+        try reader.getFooter.getFileMetaData.getSchema.containsField(column)
+        finally reader.close()
+      }
+  }
+
   /** Recursively delete `path` if it exists; a failed delete of an
    *  existing path throws (a silent false would leave the caller
    *  appending into a dir it believes gone — duplicate rows).

@@ -45,7 +45,7 @@ import IndexCore.{dataDir, isViol, legPath}
  *
  * Query cost shape: |terms| vocab lookups (token-pruned scans), one
  * posting scan pruned to ≤|terms| of 16 buckets AND pushed-down token
- * equality, a doc-grain partial-aggregated sum, and a top-k window.
+ * equality, a doc-grain partial-aggregated sum, and a bounded top-k.
  * Nothing is ∝ corpus except the pruned posting scan itself, which is
  * ∝ the query terms' posting lists — the inverted-index contract.
  *
@@ -65,6 +65,14 @@ object TextIndex {
    *  [[suggestFuzzy]] takes the pruned path only for maxDist <= this.
    */
   private val DelMaxDist = 2
+
+  /** Most posting rows a BM25 probe scores in ONE task. Below it the
+   *  doc-grain sum and the top-k run in the scan's task with no
+   *  exchange — a job fewer, and a job's fixed cost outweighs the
+   *  parallel work at this size; above it (a stop-word-grade term) the
+   *  sum stays a distributed partial aggregate.
+   */
+  private val OneTaskPostings = 1L << 18
 
   /** Which OPTIONAL legs an ingest writes. [[LegProfile.Serving]]
    *  (the default) writes all three — a user-facing search index
@@ -142,19 +150,20 @@ object TextIndex {
    *  never-ingested-those-docs value, so BM25 idf/avgdl are exact
    *  after a delete, not stale-until-compaction. A token whose folded
    *  df reaches 0 must be dropped by the caller (`where df > 0`).
+   *  `entries` is the ledger snapshot to read.
    */
-  private def withDeltas(
-      spark: SparkSession, dir: String, leg: String): DataFrame = {
-    val base = core.readLive(spark, dir, leg)
-    val ts = IndexCore.live(spark, dir).filter(_.startsWith("t-"))
+  private def withDeltas(spark: SparkSession, dir: String, leg: String,
+      entries: Seq[String]): DataFrame = {
+    val base = core.readAt(spark, dir, leg, entries)
+    val ts = entries.filter(_.startsWith("t-"))
     if (ts.isEmpty) base
     else base.unionByName(
       core.read(spark, s"d$leg", ts.map(legPath(dir, _, s"d$leg"))))
   }
   private def vocabRows(spark: SparkSession, dir: String): DataFrame =
-    withDeltas(spark, dir, "vocab")
+    withDeltas(spark, dir, "vocab", IndexCore.live(spark, dir))
   private def statsRows(spark: SparkSession, dir: String): DataFrame =
-    withDeltas(spark, dir, "stats")
+    withDeltas(spark, dir, "stats", IndexCore.live(spark, dir))
 
   /** Leg-presence probes callers route on (every live commit carries
    *  the leg — a partial leg would silently answer from part of the
@@ -182,20 +191,41 @@ object TextIndex {
     require(ids.nonEmpty && ids.length <= 65536,
       s"docsFor is a point lookup for 1..65536 ids (got ${ids.length})")
     import spark.implicits._
-    val buckets = ids.toDF("i")
-      .select(hashBucket(col("i"))).distinct()
-      .collect().map(_.getLong(0)).toSeq
+    val buckets = bucketsOf(ids.toDF("k"))
     docGrain(spark, dir, "docs")
       .where(col("fb").isin(buckets: _*) && col("doc_id").isin(ids: _*))
       .select(col("doc_id"), col("text"))
   }
 
-  private def tokenBucket(token: Column): Column =
-    pmod(xxhash64(token), lit(TokenBuckets.toLong))
+  /** The distinct [[hashBucket]]s of the driver-side keys in `keys`'
+   *  one column `k` (a local frame: `Seq.toDF`), with NO Spark job: a
+   *  Project over a LocalRelation folds to a local relation at optimize
+   *  time, so the collect reads driver memory (a `.distinct()` would
+   *  plan an aggregate and schedule a job); Scala dedupes. The hash is
+   *  still Spark's own, so the buckets match the written partitions.
+   */
+  private[graft] def bucketsOf(keys: DataFrame): Seq[Long] =
+    keys.select(hashBucket(col("k"))).collect().map(_.getLong(0))
+      .distinct.toSeq
 
-  /** The 16-way hash bucket every non-token leg keys on — `del` on the
-   *  deletion variant, `docs` on the doc id — so point probes prune
-   *  partition DIRECTORIES exactly like the posting scan's tb.
+  /** BOUNDED TOP-K RANK: the first `k` rows of `df` in `order` (a
+   *  total order — every caller ends it with its unique key, so ties
+   *  keep their tie-breakers), with a leading 1-based `rank`.
+   *  `orderBy(...).limit(k)` plans as TakeOrderedAndProject: a top-k
+   *  per task, then one merge over at most k rows per task — never the
+   *  whole input through one task, as a partition-less
+   *  `row_number() OVER (ORDER BY ...)` would. Its output is ONE
+   *  partition in `order`, and monotonically_increasing_id numbers
+   *  partition 0's rows consecutively from 0, so the rank needs no
+   *  window at all.
+   */
+  private def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
+    df.orderBy(order: _*).limit(k)
+      .withColumn("rank", monotonically_increasing_id() + 1L)
+
+  /** The 16-way hash bucket every bucketed leg keys on — `post` and
+   *  `pos` on the token, `del` on the deletion variant, `docs` on the
+   *  doc id — so point probes prune partition DIRECTORIES.
    */
   private def hashBucket(c: Column): Column =
     pmod(xxhash64(c), lit(TokenBuckets.toLong))
@@ -321,7 +351,7 @@ object TextIndex {
         Some(() =>
           tp.join(dl, "doc_id")
             .select(col("token"), col("doc_id"), col("tf"), col("dl"),
-              tokenBucket(col("token")).as("tb"))
+              hashBucket(col("token")).as("tb"))
             // bucket-grain tasks before the partitioned write: one file
             // per bucket per shard instead of tasks×buckets — the read
             // path's file count stays ∝ shards×TokenBuckets, and a shard
@@ -330,7 +360,7 @@ object TextIndex {
             .write.partitionBy("tb").parquet(s"$dir/data/$name/post")),
         Option.when(legs.pos)(() =>
           tp.select(col("token"), col("doc_id"), col("positions"),
-              tokenBucket(col("token")).as("tb"))
+              hashBucket(col("token")).as("tb"))
             .repartition(TokenBuckets, col("tb"))
             .write.partitionBy("tb").parquet(s"$dir/data/$name/pos")),
         Some(() =>
@@ -644,57 +674,81 @@ object TextIndex {
   }
 
   /** The shared driver-side prelude of every BM25 probe: the (nd, tl)
-   *  stats fold OVERLAPPED with the terms' df fold (independent jobs),
-   *  the `maxDf` stop-word cut, per-term ppm idf, and the
-   *  token-bucket-pruned posting scan. Per-commit roots each carry
-   *  their own tb=N partition tree — read per commit and union (the
-   *  same multi-root discipline as the IVF postings); the tb filter
-   *  prunes partition DIRECTORIES, the token equality pushes into row
-   *  groups within the surviving buckets. Returns (avgdl, kept terms
-   *  sorted, (token, idf_ppm) pairs, pruned postings).
+   *  stats fold and the terms' df fold, the `maxDf` stop-word cut,
+   *  per-term ppm idf, and the token-bucket-pruned posting scan.
+   *
+   *  The folds come from the [[IndexCore.memo]] of the live commit set
+   *  (stats and df legs are immutable once published). A miss fetches
+   *  every missing part in ONE shuffle-free collect of the UNFOLDED
+   *  rows — at most one stats row and |terms| vocab rows per live
+   *  commit or tombstone delta — and sums them on the driver. The
+   *  buckets come from [[bucketsOf]], so a warm prelude starts no Spark
+   *  job; the kept terms' folded df sizes the posting scan exactly, and
+   *  a scan within [[OneTaskPostings]] is coalesced to one task.
+   *  Per-commit roots each carry their own tb=N partition tree —
+   *  read per commit and union (the same multi-root discipline as the
+   *  IVF postings); the tb filter prunes partition DIRECTORIES, the
+   *  token equality pushes into row groups within the surviving
+   *  buckets. Returns (avgdl, kept terms sorted, (token, idf_ppm)
+   *  pairs, pruned postings).
    */
   private def bm25Prelude(
       spark: SparkSession, dir: String, terms: Seq[String],
       maxDf: Option[Long]): (Double, Seq[String], Seq[(String, Long)], DataFrame) = {
     import spark.implicits._
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val statsF = Future {
-      statsRows(spark, dir).agg(sum("nd"), sum("tl")).head()
+    val asked = terms.distinct.sorted
+    val folds = IndexCore.memo(spark, dir, "stats" +: asked.map("df:" + _)) {
+      (entries, missing) => aggregateParts(spark, dir, entries, missing)
     }
-    val dfF = Future {
-      vocabRows(spark, dir)
-        .where(col("token").isin(terms: _*))
-        .groupBy("token").agg(sum("df").as("df"))
-        .where(col("df") > 0) // fully-deleted tokens are not indexed
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
-    val stats = Await.result(statsF, Duration.Inf)
-    // sums over zero stats rows are null: an index with no live
-    // commits folds to (0, 0) and every probe answers empty
-    val (nd, tl) =
-      if (stats.isNullAt(0)) (0L, 0L) else (stats.getLong(0), stats.getLong(1))
+    // a fold over zero rows is (0, 0): an index with no live commits
+    // answers every probe empty
+    val (nd, tl) = folds("stats")
     val avgdl = tl.toDouble / nd
-    val dfByTerm = Await.result(dfF, Duration.Inf)
-    // survivors: indexed (df exists) and under the stop-word cap —
-    // only these reach the posting scan and the bucket list
-    val kept = terms.distinct.sorted.filter(t =>
-      dfByTerm.get(t).exists(df => maxDf.forall(df <= _)))
+    // survivors: indexed (folded df > 0 — fully-deleted tokens are not
+    // indexed) and under the stop-word cap — only these reach the
+    // posting scan and the bucket list
+    val dfOf = (t: String) => folds(s"df:$t")._1
+    val kept = asked.filter(t => dfOf(t) > 0 && maxDf.forall(dfOf(t) <= _))
     val idf = kept.map { t =>
-      val df = dfByTerm(t)
+      val df = dfOf(t)
       (t, math.round(
         math.log((nd - df + 0.5) / (df + 0.5) + 1.0) * 1e6))
     }
-    val termBuckets =
-      if (kept.isEmpty) Seq.empty[Long]
-      else kept.toDF("t")
-        .select(tokenBucket(col("t"))).distinct()
-        .collect().map(_.getLong(0)).toSeq
-    val posts = docGrain(spark, dir, "post")
-      .where(col("tb").isin(termBuckets: _*) &&
+    val pruned = docGrain(spark, dir, "post")
+      .where(col("tb").isin(bucketsOf(kept.toDF("k")): _*) &&
         col("token").isin(kept: _*))
+    // postings are unique per (token, doc), so the folded df of the
+    // kept terms is EXACTLY the number of posting rows this probe scores
+    val posts =
+      if (kept.map(dfOf).sum <= OneTaskPostings) pruned.coalesce(1) else pruned
     (avgdl, kept, idf, posts)
+  }
+
+  /** The memo fetch behind [[bm25Prelude]]: the `missing` parts
+   *  (`stats` → (nd, tl), `df:<term>` → (df, 0)) folded from the
+   *  `entries` snapshot by ONE collect of the unfolded stats and vocab
+   *  rows (tombstone deltas included) — no aggregate, so no shuffle —
+   *  summed on the driver. A term with no rows folds to df 0.
+   */
+  private def aggregateParts(spark: SparkSession, dir: String,
+      entries: Seq[String], missing: Seq[String]): Map[String, (Long, Long)] = {
+    val terms = missing.filter(_.startsWith("df:")).map(_.drop(3))
+    val stats = Option.when(missing.contains("stats"))(
+      withDeltas(spark, dir, "stats", entries)
+        .select(lit(null).cast("string").as("token"),
+          col("nd").as("a"), col("tl").as("b")))
+    val vocab = Option.when(terms.nonEmpty)(
+      withDeltas(spark, dir, "vocab", entries)
+        .where(col("token").isin(terms: _*))
+        .select(col("token"), col("df").as("a"), lit(0L).as("b")))
+    val rows = (stats ++ vocab).reduce(_.unionByName(_)).collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2)))
+    def fold(token: Option[String]): (Long, Long) = {
+      val rs = rows.filter(_._1 == token)
+      (rs.map(_._2).sum, rs.map(_._3).sum)
+    }
+    (stats.map(_ => "stats" -> fold(None)) ++
+      terms.map(t => s"df:$t" -> fold(Some(t)))).toMap
   }
 
   /** WEIGHTED BM25 over the stored index: each query term carries an
@@ -721,7 +775,7 @@ object TextIndex {
       bm25Prelude(spark, dir, wByTerm.keys.toSeq, maxDf)
     val idf = idfPairs.map { case (t, i) => (t, i, wByTerm(t)) }
       .toDF("token", "idf_ppm", "w_ppm")
-    posts
+    val scores = posts
       .join(broadcast(idf), "token")
       .withColumn("score_ppm",
         round((col("w_ppm") / lit(1000000.0)) *
@@ -731,9 +785,7 @@ object TextIndex {
           .cast("long"))
       .groupBy("doc_id")
       .agg(sum("score_ppm").as("score_ppm"), count(lit(1)).as("n_terms"))
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score_ppm").desc, col("doc_id"))).cast("long"))
-      .where(col("rank") <= k)
+    topK(scores, k, col("score_ppm").desc, col("doc_id"))
       .select(col("rank"), col("doc_id"), col("score_ppm"), col("n_terms"))
   }
 
@@ -992,9 +1044,8 @@ object TextIndex {
    *  vocabulary-grain (≪ corpus); the prefix cannot bucket-prune
    *  (buckets hash whole tokens) but pushes to the vocab scan as a
    *  StringStartsWith row-group filter, and the ranking is a
-   *  TakeOrdered over the prefix matches followed by a window over
-   *  the ≤ k survivors — no global single-partition window over the
-   *  full match set. Returns (rank, token, df).
+   *  [[topK]] over the prefix matches — no global single-partition
+   *  window over the full match set. Returns (rank, token, df).
    */
   def suggestPrefix(
       spark: SparkSession, dir: String, prefix: String, k: Int): DataFrame = {
@@ -1003,10 +1054,7 @@ object TextIndex {
       .where(col("token").startsWith(prefix))
       .groupBy("token").agg(sum("df").as("df"))
       .where(col("df") > 0) // fully-deleted tokens must stop suggesting
-      .orderBy(col("df").desc, col("token"))
-      .limit(k)
-    top.withColumn("rank", row_number().over(
-        Window.orderBy(col("df").desc, col("token"))).cast("long"))
+    topK(top, k, col("df").desc, col("token"))
       .select(col("rank"), col("token"), col("df"))
   }
 
@@ -1101,9 +1149,7 @@ object TextIndex {
       else {
         val variants = delNeighborhood(term, maxDist)
         import spark.implicits._
-        val vBuckets = variants.toDF("v")
-          .select(hashBucket(col("v"))).distinct()
-          .collect().map(_.getLong(0)).toSeq
+        val vBuckets = bucketsOf(variants.toDF("k"))
         // candidate tokens = the vocab inside the term's edit ball —
         // verified by the same Levenshtein before touching vocab df,
         // so the df probe's literal filter is survivor-small
@@ -1134,12 +1180,7 @@ object TextIndex {
           .where(col("df") > 0)
           .join(distDf, "token")
       }
-    val top = scored
-      .orderBy(col("dist").asc, col("df").desc, col("token"))
-      .limit(k)
-    top.withColumn("rank", row_number().over(
-        Window.orderBy(col("dist").asc, col("df").desc, col("token")))
-        .cast("long"))
+    topK(scored, k, col("dist").asc, col("df").desc, col("token"))
       .select(col("rank"), col("token"), col("dist"), col("df"))
   }
 
@@ -1170,14 +1211,12 @@ object TextIndex {
         "predates positional ingest; use searchPhrase (candidate-then-" +
         "verify, capped) with the corpus")
     val terms = toks.distinct
-    val termBuckets = terms.toDF("t")
-      .select(tokenBucket(col("t"))).distinct()
-      .collect().map(_.getLong(0)).toSeq
+    val termBuckets = bucketsOf(terms.toDF("k"))
     val offsets = broadcast(
       toks.zipWithIndex.map { case (t, j) => (t, j.toLong) }
         .toDF("token", "off"))
     val n = toks.size
-    docGrain(spark, dir, "pos")
+    val occurrences = docGrain(spark, dir, "pos")
       .where(col("tb").isin(termBuckets: _*) &&
         col("token").isin(terms: _*))
       .select(col("token"), col("doc_id"),
@@ -1189,9 +1228,7 @@ object TextIndex {
       .where(col("nmatch") === n)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_occurrences"))
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("n_occurrences").desc, col("doc_id"))).cast("long"))
-      .where(col("rank") <= k)
+    topK(occurrences, k, col("n_occurrences").desc, col("doc_id"))
       .select(col("rank"), col("doc_id"), col("n_occurrences"))
   }
 
@@ -1234,9 +1271,7 @@ object TextIndex {
     val toks = phrase.trim.split("\\s+").toSeq.filter(_.nonEmpty)
     require(toks.nonEmpty && k > 0, s"bad phrase/k: '$phrase'/$k")
     val terms = toks.distinct
-    val termBuckets = terms.toDF("t")
-      .select(tokenBucket(col("t"))).distinct()
-      .collect().map(_.getLong(0)).toSeq
+    val termBuckets = bucketsOf(terms.toDF("k"))
     val candIds = docGrain(spark, dir, "post")
       .where(col("tb").isin(termBuckets: _*) &&
         col("token").isin(terms: _*))
@@ -1254,7 +1289,7 @@ object TextIndex {
         .select(lit(0L).as("rank"), lit(0L).as("doc_id"),
           lit(0L).as("n_occurrences")).limit(0)
     val n = toks.size
-    fetch(candIds.toSeq)
+    val occurrences = fetch(candIds.toSeq)
       .select(col("doc_id"),
         graft.text.TextOps.tokens(col("text")).as("tokens"))
       .withColumn("n_occurrences",
@@ -1265,9 +1300,7 @@ object TextIndex {
             }.reduce(_ && _))))
           .otherwise(lit(0)).cast("long"))
       .where(col("n_occurrences") > 0)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("n_occurrences").desc, col("doc_id"))).cast("long"))
-      .where(col("rank") <= k)
+    topK(occurrences, k, col("n_occurrences").desc, col("doc_id"))
       .select(col("rank"), col("doc_id"), col("n_occurrences"))
   }
 
@@ -1296,23 +1329,19 @@ object TextIndex {
     require(hasPositionalLeg(spark, dir),
       s"index $dir has no positional leg on every live commit — NEAR " +
         "needs positional ingest")
-    val termBuckets = terms.toDF("t")
-      .select(tokenBucket(col("t"))).distinct()
-      .collect().map(_.getLong(0)).toSeq
+    val termBuckets = bucketsOf(terms.toDF("k"))
     val pos = docGrain(spark, dir, "pos")
       .where(col("tb").isin(termBuckets: _*) &&
         col("token").isin(terms: _*))
       .select(col("doc_id"), explode(col("positions")).as("pos"),
         col("token"))
-    TextOps.lastSeenSweep(pos, terms)
+    val windows = TextOps.lastSeenSweep(pos, terms)
       .where(col("nn") === terms.size)
       .select(col("doc_id"),
         (col("pos") - col("lmin") + 1).cast("long").as("wl"))
       .groupBy("doc_id").agg(min(col("wl")).as("min_window"))
       .where(col("min_window") <= w)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("min_window").asc, col("doc_id"))).cast("long"))
-      .where(col("rank") <= k)
+    topK(windows, k, col("min_window").asc, col("doc_id"))
       .select(col("rank"), col("doc_id"), col("min_window"))
   }
 
@@ -1344,9 +1373,7 @@ object TextIndex {
       s"index $dir has no positional leg on every live commit — sloppy " +
         "phrases need positional ingest")
     val terms = toks.distinct
-    val termBuckets = terms.toDF("t")
-      .select(tokenBucket(col("t"))).distinct()
-      .collect().map(_.getLong(0)).toSeq
+    val termBuckets = bucketsOf(terms.toDF("k"))
     val pos = docGrain(spark, dir, "pos")
       .where(col("tb").isin(termBuckets: _*) &&
         col("token").isin(terms: _*))
@@ -1370,16 +1397,14 @@ object TextIndex {
       if (n == 1) layered.withColumn("chain_start", col("s0"))
       else layered.withColumn("chain_start",
         when(col("token") === toks.last, col(last)))
-    end
+    val windows = end
       .where(col("chain_start").isNotNull &&
         col("token") === toks.last)
       .select(col("doc_id"),
         (col("pos") - col("chain_start") + 1).cast("long").as("wl"))
       .groupBy("doc_id").agg(min(col("wl")).as("min_window"))
       .where(col("min_window") <= w)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("min_window").asc, col("doc_id"))).cast("long"))
-      .where(col("rank") <= k)
+    topK(windows, k, col("min_window").asc, col("doc_id"))
       .select(col("rank"), col("doc_id"), col("min_window"))
   }
 
@@ -1560,13 +1585,10 @@ object TextIndex {
       val kept = terms.filter(t => dfByTerm.get(t).exists(_ <= maxDf)).toSeq
       val keptBt = bt.where(col("token").isin(kept: _*))
       val nKept = keptBt.groupBy("bench_id").agg(count(lit(1)).as("n_kept"))
-      val termBuckets =
-        if (kept.isEmpty) Seq.empty[Long]
-        else {
-          import spark.implicits._
-          kept.toDF("t").select(tokenBucket(col("t"))).distinct()
-            .collect().map(_.getLong(0)).toSeq
-        }
+      val termBuckets = {
+        import spark.implicits._
+        bucketsOf(kept.toDF("k"))
+      }
       // postings are unique per (token, doc): shards partition docs and
       // compaction concatenates, so count(*) IS the distinct-token overlap
       val posts = docGrain(spark, dir, "post")
@@ -1644,9 +1666,7 @@ object TextIndex {
       if (dtok.isEmpty)
         return emptyResult(spark, "query_id" -> LongType,
           "doc_id" -> LongType, "n_occurrences" -> LongType)
-      val buckets = dtok.toDF("t")
-        .select(tokenBucket(col("t"))).distinct()
-        .collect().map(_.getLong(0)).toSeq
+      val buckets = bucketsOf(dtok.toDF("k"))
       // candidate rules' phrase lengths: dl rides every posting row
       // (dl = the rule-document's token count), pruned by the batch's
       // tokens — rule-grain rows, only for rules sharing vocabulary

@@ -65,10 +65,10 @@ class FunctionsSpec extends AnyFunSuite {
     assert(got === want)
     // interpreted eval agrees with the codegen'd path
     val expr = graft.functions.TopCentroids(toExpr(col("v")), ids, flat, 3)
-    val one = vecs.where(col("vec_id") === 7L).head.getSeq[Double](1)
+    val one = vecs.where(col("vec_id") === 7L).head().getSeq[Double](1)
     val interp = expr.nullSafeEval(
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(one.toArray))
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray.toSeq
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq
     assert(interp === got(7L))
   }
 

@@ -24,13 +24,23 @@ class ManifestStoreSpec extends AnyFunSuite {
       .toMap
 
   /** The store's data dir holds exactly the live `c-`/`r-` entries: a
-   *  rejected publish left no staging behind.
+   *  rejected publish left no staging behind. With `untouchedSince` (a
+   *  [[dataStamp]] taken before the rejected call) the dir must also be
+   *  unmodified since — nothing was even staged and dropped.
    */
-  private def assertNoStaging(root: String): Unit = {
+  private def assertNoStaging(root: String, untouchedSince: Option[Long] = None): Unit = {
     val onDisk = new java.io.File(s"$root/mrollup/data").listFiles().map(_.getName).toSet
     assert(onDisk == ManifestStore.latest(spark, root)._2.filterNot(_.startsWith("#")).toSet,
       s"rejected staging leaked: $onDisk")
+    untouchedSince.foreach(t => assert(dataStamp(root) == t,
+      "a rejected delivery staged (and dropped) a commit dir"))
   }
+
+  /** The data dir's modification time: creating or deleting an entry
+   *  dir in it moves the stamp.
+   */
+  private def dataStamp(root: String): Long =
+    new java.io.File(s"$root/mrollup/data").lastModified()
 
   test("appends are snapshot-visible and merge across commits at read time") {
     val root = TestSpark.tmpDir("mstore")
@@ -181,9 +191,10 @@ class ManifestStoreSpec extends AnyFunSuite {
       graft.ingest.Melt.sanitize(batch(("a", "2024-01-01T00:00:00", 2.0))))
     assert(ManifestStore.appendPartialsIdempotent(spark, root, partials, "b0"),
       "first delivery publishes")
+    val stamp0 = dataStamp(root)
     assert(!ManifestStore.appendPartialsIdempotent(spark, root, partials, "b0"),
       "redelivery is rejected")
-    assertNoStaging(root)
+    assertNoStaging(root, Some(stamp0))
     assert(level1(root).values.map(_._4).sum == 1L, "cnt folded once")
 
     // a second batch + compaction must PRESERVE the key
@@ -192,11 +203,12 @@ class ManifestStoreSpec extends AnyFunSuite {
         graft.ingest.Melt.sanitize(batch(("a", "2024-01-01T00:00:01", 4.0)))), "b1"))
     ManifestStore.compact(spark, root)
     ManifestStore.vacuum(spark, root)
+    val stamp1 = dataStamp(root)
     assert(!ManifestStore.appendPartialsIdempotent(spark, root, partials, "b0"),
       "key survives compaction")
-    assertNoStaging(root)
+    assertNoStaging(root, Some(stamp1))
     assert(!ManifestStore.appendPartialsIdempotent(spark, root, partials, "b1"))
-    assertNoStaging(root)
+    assertNoStaging(root, Some(stamp1))
     assert(level1(root).values.map(_._4).sum == 2L,
       "state identical after compaction + redeliveries")
     // reads ignore key lines entirely
@@ -687,39 +699,37 @@ class ManifestStoreSpec extends AnyFunSuite {
 
   test("a redelivered keyed ingestBatchAtomic starts no Spark job and leaves the version unchanged") {
     val root = TestSpark.tmpDir("mstore_replay_jobs")
-    // count only this thread's jobs: tagged by a job group of our own
-    val group = s"mstore-replay-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet(): Unit
-    }
-    def jobsOf(body: => Boolean): (Boolean, Int) = {
-      jobs.set(0)
-      spark.sparkContext.setJobGroup(group, "redelivery probe")
-      val out = try body finally spark.sparkContext.clearJobGroup()
-      // the listener bus is async — let it drain before reading
-      Thread.sleep(2000)
-      (out, jobs.get())
-    }
     val b = batch(("a", "2024-01-01T00:00:00", 2.0))
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // control: the listener does see the first delivery's jobs
-      val (first, firstJobs) =
-        jobsOf(ManifestStore.ingestBatchAtomic(spark, root, b, key = Some("k1")))
-      assert(first && firstJobs > 0, s"first delivery: $first, $firstJobs jobs")
-      val v = ManifestStore.latest(spark, root)._1
-      val (again, againJobs) =
-        jobsOf(ManifestStore.ingestBatchAtomic(spark, root, b, key = Some("k1")))
-      assert(!again, "redelivery must not publish")
-      assert(againJobs == 0, s"redelivery started $againJobs Spark jobs")
-      assert(ManifestStore.latest(spark, root)._1 == v, "version moved on a redelivery")
-      assertNoStaging(root)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // control: the counter does see the first delivery's jobs
+    val (first, firstJobs) = TestSpark.countJobs(
+      ManifestStore.ingestBatchAtomic(spark, root, b, key = Some("k1")))
+    assert(first && firstJobs > 0, s"first delivery: $first, $firstJobs jobs")
+    val v = ManifestStore.latest(spark, root)._1
+    val stamp = dataStamp(root)
+    val (again, againJobs) = TestSpark.countJobs(
+      ManifestStore.ingestBatchAtomic(spark, root, b, key = Some("k1")))
+    assert(!again, "redelivery must not publish")
+    assert(againJobs == 0, s"redelivery started $againJobs Spark jobs")
+    assert(ManifestStore.latest(spark, root)._1 == v, "version moved on a redelivery")
+    assertNoStaging(root, Some(stamp))
+  }
+
+  test("a redelivered keyed appendPartialsIdempotent starts no Spark job and stages no dir") {
+    val root = TestSpark.tmpDir("mstore_partials_replay_jobs")
+    val partials = Tables.allLevelPartials(
+      graft.ingest.Melt.sanitize(batch(("a", "2024-01-01T00:00:00", 2.0))))
+    val (first, firstJobs) = TestSpark.countJobs(
+      ManifestStore.appendPartialsIdempotent(spark, root, partials, "b0"))
+    assert(first && firstJobs > 0, s"first delivery: $first, $firstJobs jobs")
+    val v = ManifestStore.latest(spark, root)._1
+    val stamp = dataStamp(root)
+    val (again, againJobs) = TestSpark.countJobs(
+      ManifestStore.appendPartialsIdempotent(spark, root, partials, "b0"))
+    assert(!again, "redelivery must not publish")
+    assert(againJobs == 0, s"redelivery started $againJobs Spark jobs")
+    assert(ManifestStore.latest(spark, root)._1 == v, "version moved on a redelivery")
+    assertNoStaging(root, Some(stamp))
+    assert(level1(root).values.map(_._4).sum == 1L, "cnt folded once")
   }
 
   test("WAP ingest: a failed audit leaves the table byte-identical, a clean one publishes") {

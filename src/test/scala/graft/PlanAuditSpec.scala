@@ -87,6 +87,31 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("the chart range read folds in one task: no exchange, series and range bounds pushed into the scan") {
+    withPlainPlans {
+      val root = TestSpark.tmpDir("mstore_chart_plan")
+      for (i <- 0 until 2)
+        graft.store.ManifestStore.ingestBatch(spark, root, TestSpark.longDF(Seq(
+          ("a", s"2024-01-01T00:00:0$i", 1.0), ("b", s"2024-01-01T00:00:0$i", 2.0))))
+      val lo = TestSpark.isoUs("2024-01-01T00:00:00") / 1000000L
+      val df = graft.store.ManifestStore.readLevelRange(
+        spark, root, graft.model.Fidelity.S1, "a", lo, lo + 1)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(shuffleCount(df) == 0, s"chart fold grew an exchange:\n${plan.take(2000)}")
+      // the scan node's full pushed-filter list (the plan string
+      // abbreviates long metadata)
+      val pushed = df.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.metadata.getOrElse("PushedFilters", "")
+      }.mkString
+      for (c <- Seq("ds_b", "part_s", "bucket_s"))
+        assert(s"(EqualTo|GreaterThanOrEqual|LessThanOrEqual)\\($c,".r
+          .findFirstIn(pushed).isDefined, s"$c predicate not pushed: $pushed")
+      assert(df.collect().map(r => (r.getLong(1), r.getDouble(4))).toSet ==
+        Set((lo, 1.0), (lo + 1, 1.0)), "chart fold answer")
+    }
+  }
+
   test("inverted_index is two combine-capable aggregations, no window sort") {
     withPlainPlans {
       val df = SparkEntry.queries("inverted_index")(spark, sf)

@@ -31,6 +31,30 @@ object TestSpark {
       .toDF("dataset_id", "ts_us", "value")
   }
 
+  /** `body`'s result and the number of Spark jobs it started, counted
+   *  by a listener over a job group of its own (jobs of other threads
+   *  are not counted) once the listener bus has drained.
+   */
+  def countJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"count-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job count")
+      val out = try body finally sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
