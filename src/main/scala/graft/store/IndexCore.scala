@@ -97,7 +97,14 @@ final class IndexCore(val idCol: String, legs: Map[String, IndexLeg]) {
 
   /** Live data commits' `leg` dirs, in log order, that exist. */
   def liveRoots(spark: SparkSession, dir: String, leg: String): Seq[String] =
-    live(spark, dir).filter(_.startsWith("c-"))
+    rootsAt(spark, dir, leg, live(spark, dir))
+
+  /** The `leg` dirs that exist of the data commits among the ledger
+   *  entries `entries`, in their order.
+   */
+  private def rootsAt(spark: SparkSession, dir: String, leg: String,
+      entries: Seq[String]): Seq[String] =
+    entries.filter(_.startsWith("c-"))
       .map(legPath(dir, _, leg)).filter(exists(spark, _))
 
   /** A leg across every live commit, tombstones NOT applied — for the
@@ -113,8 +120,7 @@ final class IndexCore(val idCol: String, legs: Map[String, IndexLeg]) {
    */
   def readAt(spark: SparkSession, dir: String, leg: String,
       entries: Seq[String]): DataFrame =
-    read(spark, leg, entries.filter(_.startsWith("c-"))
-      .map(legPath(dir, _, leg)).filter(exists(spark, _)))
+    read(spark, leg, rootsAt(spark, dir, leg, entries))
 
   /** True iff EVERY live commit carries `leg` (and one exists) — the
    *  uniformity probe behind optional-leg routing: a partial leg would

@@ -66,14 +66,6 @@ object TextIndex {
    */
   private val DelMaxDist = 2
 
-  /** Most posting rows a BM25 probe scores in ONE task. Below it the
-   *  doc-grain sum and the top-k run in the scan's task with no
-   *  exchange — a job fewer, and a job's fixed cost outweighs the
-   *  parallel work at this size; above it (a stop-word-grade term) the
-   *  sum stays a distributed partial aggregate.
-   */
-  private val OneTaskPostings = 1L << 18
-
   /** Which OPTIONAL legs an ingest writes. [[LegProfile.Serving]]
    *  (the default) writes all three — a user-facing search index
    *  wants positional phrases, key-probe fuzzy suggest, and
@@ -214,14 +206,16 @@ object TextIndex {
    *  `orderBy(...).limit(k)` plans as TakeOrderedAndProject: a top-k
    *  per task, then one merge over at most k rows per task — never the
    *  whole input through one task, as a partition-less
-   *  `row_number() OVER (ORDER BY ...)` would. Its output is ONE
-   *  partition in `order`, and monotonically_increasing_id numbers
-   *  partition 0's rows consecutively from 0, so the rank needs no
-   *  window at all.
+   *  `row_number() OVER (ORDER BY ...)` straight over `df` would. The
+   *  rank window then sees at most k rows and sits on the limit's one
+   *  output partition, so it adds no exchange; it is a window and not a
+   *  row counter because the optimizer may drop a limit over an input
+   *  already known to hold ≤ k rows, and the global sort left in its
+   *  place spreads its output over several partitions.
    */
   private def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
     df.orderBy(order: _*).limit(k)
-      .withColumn("rank", monotonically_increasing_id() + 1L)
+      .withColumn("rank", row_number().over(Window.orderBy(order: _*)).cast("long"))
 
   /** The 16-way hash bucket every bucketed leg keys on — `post` and
    *  `pos` on the token, `del` on the deletion variant, `docs` on the
@@ -683,8 +677,7 @@ object TextIndex {
    *  rows — at most one stats row and |terms| vocab rows per live
    *  commit or tombstone delta — and sums them on the driver. The
    *  buckets come from [[bucketsOf]], so a warm prelude starts no Spark
-   *  job; the kept terms' folded df sizes the posting scan exactly, and
-   *  a scan within [[OneTaskPostings]] is coalesced to one task.
+   *  job.
    *  Per-commit roots each carry their own tb=N partition tree —
    *  read per commit and union (the same multi-root discipline as the
    *  IVF postings); the tb filter prunes partition DIRECTORIES, the
@@ -714,13 +707,9 @@ object TextIndex {
       (t, math.round(
         math.log((nd - df + 0.5) / (df + 0.5) + 1.0) * 1e6))
     }
-    val pruned = docGrain(spark, dir, "post")
+    val posts = docGrain(spark, dir, "post")
       .where(col("tb").isin(bucketsOf(kept.toDF("k")): _*) &&
         col("token").isin(kept: _*))
-    // postings are unique per (token, doc), so the folded df of the
-    // kept terms is EXACTLY the number of posting rows this probe scores
-    val posts =
-      if (kept.map(dfOf).sum <= OneTaskPostings) pruned.coalesce(1) else pruned
     (avgdl, kept, idf, posts)
   }
 

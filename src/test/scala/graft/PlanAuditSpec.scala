@@ -87,7 +87,7 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("the chart range read folds in one task: no exchange, series and range bounds pushed into the scan") {
+  test("the chart range read folds in one task over few live commits: no exchange, series and range bounds pushed into the scan; more commits keep the exchange") {
     withPlainPlans {
       val root = TestSpark.tmpDir("mstore_chart_plan")
       for (i <- 0 until 2)
@@ -109,6 +109,17 @@ class PlanAuditSpec extends AnyFunSuite {
           .findFirstIn(pushed).isDefined, s"$c predicate not pushed: $pushed")
       assert(df.collect().map(r => (r.getLong(1), r.getDouble(4))).toSet ==
         Set((lo, 1.0), (lo + 1, 1.0)), "chart fold answer")
+      // past four live level dirs the scan stays parallel and the fold
+      // keeps its exchange
+      for (i <- 2 until 5)
+        graft.store.ManifestStore.ingestBatch(spark, root, TestSpark.longDF(Seq(
+          ("a", s"2024-01-01T00:00:0$i", 1.0), ("b", s"2024-01-01T00:00:0$i", 2.0))))
+      val wide = graft.store.ManifestStore.readLevelRange(
+        spark, root, graft.model.Fidelity.S1, "a", lo, lo + 4)
+      assert(shuffleCount(wide) == 1,
+        s"a fragmented chart fold lost its exchange:\n${wide.queryExecution.executedPlan.toString.take(2000)}")
+      assert(wide.collect().map(r => (r.getLong(1), r.getDouble(4))).toSet ==
+        (0L to 4L).map(i => (lo + i, 1.0)).toSet, "distributed chart fold answer")
     }
   }
 
