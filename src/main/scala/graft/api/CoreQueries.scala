@@ -36,32 +36,49 @@ object CoreQueries {
   private def r6(c: Column): Column = round(c, 6)
 
   /** Session-scoped memo of a fully-ingested baseline store (ONE
-   *  `Tables.ingestBatch` of the whole events corpus). Queries that
-   *  only need "a store with the corpus in it" as their FIXTURE —
-   *  rollup_repair, store_retention — hardlink-clone it instead of
-   *  each paying the multi-second ingest again; the ingest itself is
-   *  still measured where it IS the operator (ingest_incremental_1s,
-   *  store_compact, ingest_dedup_1s). Same bounding rule as
-   *  PipelineQueries' pair-graph memo.
+   *  `Tables.ingestBatch` of the whole events corpus) in the
+   *  partitioned audit layout. Its consumers — rollup_repair,
+   *  store_fsck, store_fsck_repair and store_retention — hardlink-clone
+   *  it ([[clonedBaseStore]]) instead of each paying the multi-second
+   *  ingest again; the ingest itself is still measured where it IS the
+   *  operator (ingest_dedup_1s). Same bounding rule as PipelineQueries'
+   *  pair-graph memo.
    */
   private val baseStoreCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), String]()
 
-  /** Session-scoped memo of the md5-split 3-batch MANIFEST store —
-   *  the shared fixture of manifest_time_travel / manifest_cdc /
-   *  incremental_refresh, all read-only consumers (time travel, CDC
-   *  and version reads never mutate), so unlike [[clonedBaseStore]]
-   *  no clone is needed: they read the same root directly.
+  /** Batch i of 3 of the events melt, split by an md5 hash of (series,
+   *  ts): DuckDB-reproducible, so an oracle can name WHICH rows landed
+   *  in each batch, not just their union.
    */
-  private val manifestFixtureCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val md5Third: Column = pmod(
+    conv(substring(
+      md5(concat_ws("|", col("dataset_id"), col("ts_us"))), 1, 15), 16, 10)
+      .cast("long"),
+    lit(3L))
 
-  /** Shared read-only fixture for the ATOMIC multi-table manifest
-   *  queries: 3 crc32-split batches through
-   *  `ManifestStore.ingestBatchAtomic` (each publishing raw + partials
-   *  under one version, keyed), plus a deliberate DUPLICATE redelivery
-   *  of batch 1 — the oracle equality of both table legs then proves
-   *  the two-table publish is exactly-once end to end.
+  /** Three crc32-split batches of the events melt into a fresh manifest
+   *  store, one atomic raw + rollup publish each; returns the root. The
+   *  oracles of its queries see only the union of the batches.
+   */
+  private def ingestThirds(s: SparkSession, dir: String, prefix: String,
+      maxLiveCommits: Int = 16): String = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    val long = ev(s, dir)
+    val third = pmod(crc32(concat_ws("|", col("dataset_id"), col("ts_us"))), lit(3))
+    for (i <- 0 until 3)
+      graft.store.ManifestStore.ingestBatchAtomic(s, root,
+        long.where(third === i), maxLiveCommits = maxLiveCommits): Unit
+    root
+  }
+
+  /** Shared read-only fixture of the manifest-store queries (the
+   *  atomic ingest legs, as-of, CDC, history, the CDC streams): the 3
+   *  md5-split batches through `ManifestStore.ingestBatchAtomic`, each
+   *  publishing raw + partials under one keyed version (versions 1-3),
+   *  plus a deliberate DUPLICATE redelivery of batch 1 — the oracle
+   *  equality of both table legs then proves the two-table publish is
+   *  exactly-once end to end. Mutating consumers hardlink-clone it.
    */
   private val atomicFixtureCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), String]()
@@ -71,15 +88,7 @@ object CoreQueries {
       val root = java.nio.file.Files
         .createTempDirectory("graft_atomic_fixture").toString
       val long = ev(key._1, key._2)
-      // md5 split (not crc32) so the per-batch membership is DuckDB-
-      // reproducible — the raw CDC oracle depends on WHICH rows landed
-      // in batch 2, not just on their union
-      val h = pmod(
-        conv(substring(
-          md5(concat_ws("|", col("dataset_id"), col("ts_us"))), 1, 15), 16, 10)
-          .cast("long"),
-        lit(3L))
-      def slice(i: Int) = long.where(h === i)
+      def slice(i: Int) = long.where(md5Third === i)
       for (i <- 0 until 3)
         require(graft.store.ManifestStore.ingestBatchAtomic(
           key._1, root, slice(i), key = Some(s"b$i")), s"batch $i must publish")
@@ -89,29 +98,7 @@ object CoreQueries {
       root
     })
   }
-  private def mdSplitManifestStore(s: SparkSession, dir: String): String = {
-    if (manifestFixtureCache.size > 8) manifestFixtureCache.clear()
-    manifestFixtureCache.computeIfAbsent((s, dir), { key =>
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_manifest_fixture").toString
-      val long = ev(key._1, key._2)
-      val h = pmod(
-        conv(substring(
-          md5(concat_ws("|", col("dataset_id"), col("ts_us"))), 1, 15), 16, 10)
-          .cast("long"),
-        lit(3L))
-      for (i <- 0 until 3)
-        graft.store.ManifestStore.ingestBatch(key._1, root, long.where(h === i))
-      root
-    })
-  }
 
-  /** A private, mutation-safe copy of the baseline store: directories
-   *  are recreated, files HARDLINKED. Safe because store files are
-   *  immutable once written (every mutation — merge, repair, expire —
-   *  replaces or unlinks files, never appends in place), so a clone's
-   *  mutations can never reach the shared baseline.
-   */
   /** Hardlink-clone a store root: file data is shared (copy-on-nothing
    *  — stores only ever add or unlink whole files), directory
    *  structure is fresh, so a mutating query gets a private store for
@@ -138,6 +125,49 @@ object CoreQueries {
       Tables.ingestBatch(key._1, root, ev(key._1, key._2))
       root
     }))
+  }
+
+  /** The 1 s level of a manifest root, in the oracle's column shape. */
+  private def level1s(s: SparkSession, root: String): DataFrame =
+    graft.store.ManifestStore.readLevel(s, root, Fidelity.S1)
+      .select(
+        col("dataset_id"), col("bucket_s"),
+        col("min_v"), col("max_v"), r6(col("sum_v")).as("sum_v"), col("cnt"))
+      .orderBy("dataset_id", "bucket_s")
+
+  /** Replay the events table through a Structured Streaming file source
+   *  (AvailableNow) into a fresh manifest store with the sink `start`
+   *  (a [[graft.streaming.StreamIngest]] sink given source, root and
+   *  checkpoint), then read the 1 s level back.
+   */
+  private def streamEvents1s(s: SparkSession, dir: String, prefix: String)(
+      start: (DataFrame, String, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val schema = Melt.readTsParquet(s, s"$dir/events.parquet").schema
+    // the file source wants a directory: stage a symlink to the table
+    val srcDir = java.nio.file.Files.createTempDirectory(s"${prefix}_src")
+    java.nio.file.Files.createSymbolicLink(
+      srcDir.resolve("events.parquet"),
+      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    val stream = s.readStream.schema(schema).parquet(srcDir.toString)
+    start(Melt.events(stream), root, s"$root/ckpt").awaitTermination()
+    level1s(s, root)
+  }
+
+  /** Forget the 'view' series on a hardlink clone of the atomic
+   *  fixture — every containing commit rewrites without it and the
+   *  manifest swaps ONCE — then read the 10 s level back.
+   */
+  private def forgetView10s(s: SparkSession, dir: String): DataFrame = {
+    val root = hardlinkClone(atomicManifestStore(s, dir))
+    graft.store.ManifestStore.forgetDataset(s, root, "view")
+    graft.store.ManifestStore.readLevel(s, root, Fidelity.S10)
+      .select(
+        col("dataset_id"), col("bucket_s"),
+        col("min_v"), col("max_v"), r6(col("sum_v")).as("sum_v"), col("cnt"))
+      .orderBy("dataset_id", "bucket_s")
   }
 
   // Fixed query window: 2024-01-05T00:00:00Z .. 2024-01-06T00:00:00Z
@@ -1242,82 +1272,35 @@ object CoreQueries {
         .orderBy("dataset_id")),
 
     // ---- ST/S1: TRUE Structured Streaming ingest — readStream over the
-    // events parquet, foreachBatch merge into the store, then read the
-    // 1 s level back; must equal the one-shot rollup oracle ------------
-    "stream_ingest_1s" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_stream_ingest").toString
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = Melt.readTsParquet(s, s"$dir/events.parquet").schema
-      // the file source wants a directory: stage a symlink to the table
-      val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_src")
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
-      val stream = s.readStream.schema(schema).parquet(srcDir.toString)
-      val q = graft.streaming.StreamIngest.start(
-        Melt.events(stream), root, s"$root/ckpt",
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
-      Tables.readRollup(s, root, Fidelity.S1)
-        .select(
-          col("dataset_id"), col("bucket_s"),
-          col("min_v"), col("max_v"), r6(col("sum_v")).as("sum_v"), col("cnt"))
-        .orderBy("dataset_id", "bucket_s")
-    }),
+    // events parquet, each micro-batch's raw rows and rollup partials
+    // published under ONE manifest version keyed by its batch id (the
+    // atomic sink), then read the 1 s level back; must equal the
+    // one-shot rollup oracle ------------------------------------------
+    "stream_ingest_1s" -> ((s, dir) =>
+      streamEvents1s(s, dir, "graft_stream_ingest")(
+        graft.streaming.StreamIngest.startAtomic(_, _, _,
+          org.apache.spark.sql.streaming.Trigger.AvailableNow()))),
 
     // ---- EXACTLY-ONCE streaming ingest into the manifest/LSM store:
-    // same replay as stream_ingest_1s but each micro-batch appends its
-    // partials under ONE idempotent manifest commit keyed by batch id
-    // (a blind append would double-count on foreachBatch redelivery —
-    // the merge path is naturally idempotent, the append path needs
-    // the txn key). Read back the 1 s level = one-shot rollup --------
-    "stream_manifest_1s" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_stream_manifest").toString
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = Melt.readTsParquet(s, s"$dir/events.parquet").schema
-      val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_msrc")
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
-      val stream = s.readStream.schema(schema).parquet(srcDir.toString)
-      val q = graft.streaming.StreamIngest.startManifest(
-        Melt.events(stream), root, s"$root/ckpt",
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
-      graft.store.ManifestStore.readLevel(s, root, Fidelity.S1)
-        .select(
-          col("dataset_id"), col("bucket_s"),
-          col("min_v"), col("max_v"), r6(col("sum_v")).as("sum_v"), col("cnt"))
-        .orderBy("dataset_id", "bucket_s")
-    }),
+    // the same replay, but each micro-batch appends only its partials
+    // under ONE idempotent manifest commit keyed by batch id (a blind
+    // append would double-count on foreachBatch redelivery; the txn
+    // key makes it exactly-once). Read back the 1 s level = one-shot
+    // rollup --------------------------------------------------------
+    "stream_manifest_1s" -> ((s, dir) =>
+      streamEvents1s(s, dir, "graft_stream_manifest")(
+        graft.streaming.StreamIngest.startManifest(_, _, _,
+          org.apache.spark.sql.streaming.Trigger.AvailableNow()))),
 
-    // ---- ATOMIC exactly-once streaming ingest: same replay as
-    // stream_manifest_1s but each micro-batch publishes raw + rollup
-    // partials under ONE keyed manifest version (the strongest sink
-    // posture — no snapshot can see the two tables out of step). The
-    // 1 s level must equal the one-shot rollup --------------------
-    "stream_atomic_1s" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_stream_atomic").toString
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = Melt.readTsParquet(s, s"$dir/events.parquet").schema
-      val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_asrc")
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
-      val stream = s.readStream.schema(schema).parquet(srcDir.toString)
-      val q = graft.streaming.StreamIngest.startAtomic(
-        Melt.events(stream), root, s"$root/ckpt",
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
-      graft.store.ManifestStore.readLevel(s, root, Fidelity.S1)
-        .select(
-          col("dataset_id"), col("bucket_s"),
-          col("min_v"), col("max_v"), r6(col("sum_v")).as("sum_v"), col("cnt"))
-        .orderBy("dataset_id", "bucket_s")
-    }),
+    // ---- ATOMIC exactly-once streaming ingest: the same body as
+    // stream_ingest_1s — each micro-batch publishes raw + rollup
+    // partials under ONE keyed manifest version (no snapshot can see
+    // the two tables out of step). The 1 s level must equal the
+    // one-shot rollup ------------------------------------------------
+    "stream_atomic_1s" -> ((s, dir) =>
+      streamEvents1s(s, dir, "graft_stream_atomic")(
+        graft.streaming.StreamIngest.startAtomic(_, _, _,
+          org.apache.spark.sql.streaming.Trigger.AvailableNow()))),
 
     // ---- watermarked event-time window aggregation: the bounded-
     // lateness streaming analytics path (the ingest path above stays
@@ -1861,18 +1844,8 @@ object CoreQueries {
     // ---- S2/S3/ST: incremental ingest — 3 batches through the store,
     // merged state must equal the one-shot rollup (A2 across batches) --
     "ingest_incremental_1s" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ingest").toString
-      val long = ev(s, dir)
-      for (i <- 0 until 3)
-        Tables.ingestBatch(
-          s, root,
-          long.where(pmod(crc32(concat_ws("|", col("dataset_id"), col("ts_us"))), lit(3)) === i))
-      Tables.readRollup(s, root, Fidelity.S1)
-        .select(
-          col("dataset_id"), col("bucket_s"),
-          col("min_v"), col("max_v"), r6(col("sum_v")).as("sum_v"), col("cnt"))
-        .orderBy("dataset_id", "bucket_s")
+      val root = ingestThirds(s, dir, "graft_ingest")
+      level1s(s, root)
     }),
 
     // ---- rollup repair / backfill: corrupt a coarse-aligned slice of
@@ -1963,47 +1936,33 @@ object CoreQueries {
         .orderBy("phase", "check")
     }),
 
-    // ---- store compaction: 3 per-batch appends leave interleaved
-    // sliver files; compactRaw rewrites each partition bin-packed and
-    // (dataset_id, ts)-sorted. The oracle proves the rewrite is
-    // LOSSLESS — the compacted raw table still equals the events melt
-    // exactly (file-count reduction is assert-ed in IngestMergeSpec) --
+    // ---- store compaction: 3 atomic ingests leave 3 raw commits of
+    // interleaved sliver files; a full-fan-in compactRawTiered folds
+    // them into ONE commit, re-sorted by (ds_b, dataset_id, ts). The
+    // oracle proves the rewrite is LOSSLESS — the compacted raw table
+    // still equals the events melt exactly (the commit and file counts
+    // are assert-ed in IngestMergeSpec) ------------------------------
     "store_compact" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_compact").toString
-      val long = ev(s, dir)
-      for (i <- 0 until 3)
-        Tables.ingestBatch(
-          s, root,
-          long.where(pmod(crc32(concat_ws("|", col("dataset_id"), col("ts_us"))), lit(3)) === i))
-      Tables.compactRaw(s, root)
-      Tables.readRaw(s, root)
+      val root = ingestThirds(s, dir, "graft_compact")
+      graft.store.ManifestStore.compactRawTiered(s, root, fanIn = Int.MaxValue)
+      graft.store.ManifestStore.readRaw(s, root)
         .select("dataset_id", "ts_us", "value")
         .orderBy("dataset_id", "ts_us", "value")
     }),
+
+    // ---- targeted series deletion (right-to-be-forgotten): the same
+    // body as manifest_forget_10s — forget the 'view' series on a clone
+    // of the atomic fixture, then read the 10 s level back: the series
+    // must be gone and every other series' aggregate untouched.
+    // Raw-side equality and the empty-store end state are assert-ed in
+    // StoreForgetSpec ------------------------------------------------
+    "store_forget" -> ((s, dir) => forgetView10s(s, dir)),
 
     // ---- partition-grain retention (TTL): ingest, expire every raw
     // window ending at or before Jan 4 (a 7-day window boundary, so
     // raw expiry is exact), read back — directory-metadata deletes
     // only, zero data read; straddling rollup partitions stay whole
     // (conservative TTL, unit-specced) --------------------------------
-    // ---- targeted series deletion (right-to-be-forgotten): ingest,
-    // forget the 'view' series — a REWRITE of just its hash-bucket
-    // subtree (1/DsBuckets of the store; TTL-style unlinking can't do
-    // per-series deletes because bucket files interleave series) —
-    // then read the 10 s level back: the series must be gone and every
-    // other series' aggregate untouched. Raw-side equality and
-    // layout preservation are assert-ed in StoreForgetSpec ------------
-    "store_forget" -> ((s, dir) => {
-      val root = clonedBaseStore(s, dir)
-      Tables.forgetDataset(s, root, "view")
-      Tables.readRollup(s, root, Fidelity.S10)
-        .select(
-          col("dataset_id"), col("bucket_s"),
-          col("min_v"), col("max_v"), r6(col("sum_v")).as("sum_v"), col("cnt"))
-        .orderBy("dataset_id", "bucket_s")
-    }),
-
     "store_retention" -> ((s, dir) => {
       val root = clonedBaseStore(s, dir)
       Tables.expireBefore(s, root, cutoffS = 1704326400L)
@@ -2012,25 +1971,14 @@ object CoreQueries {
         .orderBy("dataset_id", "ts_us", "value")
     }),
 
-    // ---- S3 via the manifest/merge-on-read commit path: same 3-batch
-    // ingest as ingest_incremental_1s, but each batch APPENDS partials
-    // under an O(1) atomic manifest commit and readers fold the monoid;
-    // maxLiveCommits=2 forces a compact+vacuum cycle inside the gated
-    // run, so the oracle checks the full LSM lifecycle, not just appends
+    // ---- S3 via the manifest/merge-on-read commit path: the same
+    // 3-batch ingest as ingest_incremental_1s with maxLiveCommits=2,
+    // which forces a tiered compact (both tiers) + vacuum cycle inside
+    // the gated run, so the oracle checks the full LSM lifecycle, not
+    // just appends ---------------------------------------------------
     "ingest_manifest_1s" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_manifest").toString
-      val long = ev(s, dir)
-      for (i <- 0 until 3)
-        graft.store.ManifestStore.ingestBatch(
-          s, root,
-          long.where(pmod(crc32(concat_ws("|", col("dataset_id"), col("ts_us"))), lit(3)) === i),
-          maxLiveCommits = 2)
-      graft.store.ManifestStore.readLevel(s, root, Fidelity.S1)
-        .select(
-          col("dataset_id"), col("bucket_s"),
-          col("min_v"), col("max_v"), r6(col("sum_v")).as("sum_v"), col("cnt"))
-        .orderBy("dataset_id", "bucket_s")
+      val root = ingestThirds(s, dir, "graft_manifest", maxLiveCommits = 2)
+      level1s(s, root)
     }),
 
     // ---- FEDERATED store merge: two stores ingest DISJOINT halves of
@@ -2061,11 +2009,7 @@ object CoreQueries {
       require(scala.util.Try(
           graft.store.ManifestStore.mergeFrom(s, dst, src)).isFailure,
         "re-merging the same source must be refused")
-      graft.store.ManifestStore.readLevel(s, dst, Fidelity.S1)
-        .select(
-          col("dataset_id"), col("bucket_s"),
-          col("min_v"), col("max_v"), r6(col("sum_v")).as("sum_v"), col("cnt"))
-        .orderBy("dataset_id", "bucket_s")
+      level1s(s, dst)
     }),
 
     // ---- ZERO-COPY BRANCH: clone the shared atomic fixture AS OF v2
@@ -2082,22 +2026,13 @@ object CoreQueries {
         .createTempDirectory("graft_branch").toString + "/b"
       graft.store.ManifestStore.cloneAsOf(s, src, br, version = 2L)
       val long = ev(s, dir)
-      val h = pmod(
-        conv(substring(
-          md5(concat_ws("|", col("dataset_id"), col("ts_us"))), 1, 15), 16, 10)
-          .cast("long"),
-        lit(3L))
       require(!graft.store.ManifestStore.ingestBatchAtomic(
-          s, br, long.where(h === 1), key = Some("b1")),
+          s, br, long.where(md5Third === 1), key = Some("b1")),
         "a key folded before the branch point must reject on the branch")
       require(graft.store.ManifestStore.ingestBatchAtomic(
-          s, br, long.where(h === 2), key = Some("b2")),
+          s, br, long.where(md5Third === 2), key = Some("b2")),
         "a key folded only after the branch point must ingest on the branch")
-      graft.store.ManifestStore.readLevel(s, br, Fidelity.S1)
-        .select(
-          col("dataset_id"), col("bucket_s"),
-          col("min_v"), col("max_v"), r6(col("sum_v")).as("sum_v"), col("cnt"))
-        .orderBy("dataset_id", "bucket_s")
+      level1s(s, br)
     }),
 
     // ---- manifest time travel: ingest 3 batches (md5-split so the
@@ -2105,7 +2040,7 @@ object CoreQueries {
     // version 2 — the snapshot must equal the rollup of batches 0-1
     // exactly, proving versioned-read isolation from later commits ----
     "manifest_time_travel" -> ((s, dir) => {
-      val root = mdSplitManifestStore(s, dir)
+      val root = atomicManifestStore(s, dir)
       graft.store.ManifestStore.readLevelAsOf(s, root, Fidelity.S1, version = 2L)
         .select(
           col("dataset_id"), col("bucket_s"),
@@ -2121,7 +2056,7 @@ object CoreQueries {
     // read a downstream cache/alert/export sync runs instead of a
     // full-table diff ------------------------------------------------
     "manifest_cdc" -> ((s, dir) => {
-      val root = mdSplitManifestStore(s, dir)
+      val root = atomicManifestStore(s, dir)
       graft.store.ManifestStore
         .cdcBetween(s, root, Fidelity.S1, fromV = 2L, toV = 3L)
         .select(
@@ -2142,7 +2077,7 @@ object CoreQueries {
     // 1 s level semi-joined to the affected-day set. The maintained
     // summary must equal the one-shot daily rollup bit-for-bit --------
     "incremental_refresh" -> ((s, dir) => {
-      val root = mdSplitManifestStore(s, dir)
+      val root = atomicManifestStore(s, dir)
       var summary = graft.streaming.StreamCdc.daily(
         graft.store.ManifestStore.readLevelAsOf(s, root, Fidelity.S1, 1L))
       for (v <- 2L to 3L)
@@ -2161,11 +2096,7 @@ object CoreQueries {
     // proves both tables are exactly-once and mutually consistent ----
     "ingest_atomic_1s" -> ((s, dir) => {
       val root = atomicManifestStore(s, dir)
-      graft.store.ManifestStore.readLevel(s, root, Fidelity.S1)
-        .select(
-          col("dataset_id"), col("bucket_s"),
-          col("min_v"), col("max_v"), r6(col("sum_v")).as("sum_v"), col("cnt"))
-        .orderBy("dataset_id", "bucket_s")
+      level1s(s, root)
     }),
 
     // ---- ATOMIC multi-table ingest, raw leg: aggregate the manifest-
@@ -2186,15 +2117,7 @@ object CoreQueries {
     // containing commit rewrites without it and the manifest swaps
     // ONCE, so no reader can see a partial delete — then read the 10 s
     // level back: the series is gone, every other aggregate untouched
-    "manifest_forget_10s" -> ((s, dir) => {
-      val root = hardlinkClone(atomicManifestStore(s, dir))
-      graft.store.ManifestStore.forgetDataset(s, root, "view")
-      graft.store.ManifestStore.readLevel(s, root, Fidelity.S10)
-        .select(
-          col("dataset_id"), col("bucket_s"),
-          col("min_v"), col("max_v"), r6(col("sum_v")).as("sum_v"), col("cnt"))
-        .orderBy("dataset_id", "bucket_s")
-    }),
+    "manifest_forget_10s" -> ((s, dir) => forgetView10s(s, dir)),
 
     // ---- commit-log history sweep: every published version read back
     // on BOTH tables — the raw count and the 1 s-level point count must
@@ -2253,24 +2176,19 @@ object CoreQueries {
       val root = java.nio.file.Files
         .createTempDirectory("graft_wap_fixture").toString
       val long = ev(s, dir)
-      val h = pmod(
-        conv(substring(
-          md5(concat_ws("|", col("dataset_id"), col("ts_us"))), 1, 15), 16, 10)
-          .cast("long"),
-        lit(3L))
       def rep1(df: DataFrame): (String, Long) = {
         val r = df.head(); (r.getString(0), r.getLong(1))
       }
       val (p1, r1) = graft.store.ManifestStore.ingestBatchAudited(s, root,
-        long.where(h === 0),
+        long.where(md5Third === 0),
         Seq("value_le_1000" -> (col("value") <= 1000.0)), key = Some("w1"))
       val n1 = graft.store.ManifestStore.readRaw(s, root).count()
       val (p1b, r1b) = graft.store.ManifestStore.ingestBatchAudited(s, root,
-        long.where(h === 0),
+        long.where(md5Third === 0),
         Seq("value_le_1000" -> (col("value") <= 1000.0)), key = Some("w1"))
       val n1b = graft.store.ManifestStore.readRaw(s, root).count()
       val (p2, r2) = graft.store.ManifestStore.ingestBatchAudited(s, root,
-        long.where(h === 1),
+        long.where(md5Third === 1),
         Seq("value_le_95" -> (col("value") <= 95.0)), key = Some("w2"))
       val n2 = graft.store.ManifestStore.readRaw(s, root).count()
       val (e1, v1) = rep1(r1); val (e1b, v1b) = rep1(r1b); val (e2, v2) = rep1(r2)
@@ -2309,7 +2227,7 @@ object CoreQueries {
     // equal the one-shot daily rollup bit-for-bit (same oracle as the
     // batch incremental_refresh — the two share refreshDailyStep) ----
     "stream_cdc_refresh" -> ((s, dir) => {
-      val root = mdSplitManifestStore(s, dir)
+      val root = atomicManifestStore(s, dir)
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_cdc_ckpt").toString
       graft.streaming.StreamCdc.maintainDaily(s, root, s"$ckpt/ckpt")
@@ -2326,7 +2244,7 @@ object CoreQueries {
     // joins summary-derived totals with the delta-maintained totals so
     // the oracle checks both states AND their agreement -------------
     "stream_cdc_fanout" -> ((s, dir) => {
-      val root = mdSplitManifestStore(s, dir)
+      val root = atomicManifestStore(s, dir)
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_cdc_fan").toString
       val (summary, totals) =
@@ -2347,7 +2265,7 @@ object CoreQueries {
     // the sequentially-folded stream state must equal the declarative
     // "last decisive event" fold the oracle computes with windows ----
     "stream_cdc_alerts" -> ((s, dir) => {
-      val root = mdSplitManifestStore(s, dir)
+      val root = atomicManifestStore(s, dir)
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_cdc_alert").toString
       graft.streaming.StreamCdc
@@ -2367,16 +2285,11 @@ object CoreQueries {
       val root = java.nio.file.Files
         .createTempDirectory("graft_manifest_evo").toString
       val long = ev(s, dir)
-      val h = pmod(
-        conv(substring(
-          md5(concat_ws("|", col("dataset_id"), col("ts_us"))), 1, 15), 16, 10)
-          .cast("long"),
-        lit(3L))
       graft.store.ManifestStore.appendPartials(s, root,
-        Tables.allLevelPartials(long.where(h === 0)))
+        Tables.allLevelPartials(long.where(md5Third === 0)))
       for (i <- 1 until 3)
         graft.store.ManifestStore.appendPartials(s, root,
-          Tables.allLevelPartials(long.where(h === i), withSumsq = true))
+          Tables.allLevelPartials(long.where(md5Third === i), withSumsq = true))
       graft.store.ManifestStore.readLevelV2(s, root, Fidelity.S1)
         .select(
           col("dataset_id"), col("bucket_s"),

@@ -20,8 +20,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("vec_cosine"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "vec_cosine"),
       (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))))
-    // materialized-view rewrite: window aggregates over registered raw
-    // tables read the pre-computed rollup level instead (SURVEY §7.3)
-    e.injectOptimizerRule(session => graft.plans.RollupRewriteRule(session))
   }
 }

@@ -7,10 +7,17 @@ import org.apache.spark.sql.types._
 import graft.model.Fidelity
 
 /**
- * Manifest-committed, merge-on-read variant of the rollup table — the
- * "beyond dynamic overwrite" commit path SCALE.md promises for
- * sustained high-cardinality ingest (and the round-3 audit's one
- * remaining driver-side scale concern with `Tables.mergeRollups`).
+ * The rollup store: raw points and the six-level rollup pyramid of a
+ * dataset root, manifest-committed and merged on read. Every write
+ * path runs here — the `GraftApi` façade, both streaming sinks
+ * (`StreamIngest.startAtomic` and `startManifest`), ingest
+ * (`ingestBatchAtomic` and its write-audit-publish twin), size-tiered
+ * compaction of both tiers, forget, retention, branch and merge.
+ * [[Tables]] keeps only the partitioned layout its audit queries
+ * check. This commit path replaces dynamic partition overwrite
+ * (`Tables.mergeRollups`), whose driver-serial directory moves were
+ * the one driver-side scale concern left for sustained
+ * high-cardinality ingest (SCALE.md).
  *
  * The idea is the Delta/Iceberg commit protocol reduced to what this
  * table needs (same shape as the reference's one-file-at-a-time agg
@@ -660,8 +667,7 @@ object ManifestStore {
   /** Right-to-be-forgotten on the atomic store: rewrite every live
    *  commit that CONTAINS the series without it and swap the manifest
    *  ONCE — readers resolve the pre-delete or post-delete table, never
-   *  a partial delete (the partitioned-store `Tables.forgetDataset`
-   *  cannot make that claim across its per-partition rewrites). Cost ∝
+   *  a partial delete. Cost ∝
    *  commits actually containing the series: the containment probe is
    *  a ds_b/dataset_id-pruned scan riding each commit's row-group
    *  stats, untouched commits keep their dirs byte-for-byte (no write
@@ -792,9 +798,7 @@ object ManifestStore {
    *  rollup partials become visible in ONE manifest version — a reader
    *  resolving any snapshot sees a raw table and a rollup pyramid that
    *  agree exactly, and a crash anywhere before the version publish
-   *  leaves only orphan dirs that `vacuum` reclaims (the plain
-   *  [[ingestBatch]] writes the two tables as independent appends, so a
-   *  crash between them publishes a raw/rollup disagreement). The two
+   *  leaves only orphan dirs that `vacuum` reclaims. The two
    *  commit dirs write concurrently — the serialization point is still
    *  the single version-file create. An optional delivery `key` makes
    *  the whole two-table publish idempotent exactly like
@@ -1044,33 +1048,5 @@ object ManifestStore {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Tables.rawSchema)
     else prune(spark.read.schema(rawCommitSchema).parquet(dirs: _*))
       .select(Tables.rawSchema.fieldNames.map(col).toIndexedSeq: _*)
-  }
-
-  /** §3.2 ingest through the manifest path: sanitize → concurrent raw
-   *  append + rollup partials append (no merge on the write path) →
-   *  compact + vacuum when live commits exceed `maxLiveCommits`.
-   */
-  def ingestBatch(
-      spark: SparkSession, root: String, batchLong: DataFrame,
-      maxLiveCommits: Int = 16): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-
-    val batch = graft.ingest.Melt.sanitize(batchLong).persist()
-    try {
-      if (!batch.isEmpty) {
-        val writes = Seq(
-          Future(Tables.appendRaw(batch, root)),
-          Future(appendPartials(spark, root,
-            Tables.allLevelPartials(batch, withSumsq = true))))
-        Await.result(Future.sequence(writes), Duration.Inf): Unit
-        if (latest(spark, root)._2.size > maxLiveCommits) {
-          // steady-state policy: fold the small tier, never the table
-          compactTiered(spark, root, fanIn = math.max(2, maxLiveCommits / 2))
-          vacuum(spark, root, VacuumRetentionMs)
-        }
-      }
-    } finally batch.unpersist(): Unit
   }
 }

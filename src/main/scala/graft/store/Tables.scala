@@ -33,6 +33,23 @@ import graft.model.Fidelity
  * partition pruning on (ds_b, part_s) + row-group skipping on the
  * within-file (dataset_id, ts) sort replace the reference's
  * `_subpaths` arithmetic (src/index.py:408-458).
+ *
+ * This is the AUDIT layout, not the serving store: every streaming
+ * sink, the `GraftApi` façade, compaction and forget run on
+ * [[ManifestStore]]. What stays here, and why:
+ *  - `ingestBatch`, `mergeRollups`, `repairRollups`, `fsck` and
+ *    `fsckRepair`: rollup_repair, store_fsck and store_fsck_repair
+ *    audit and repair this partitioned layout (hash-bucket placement,
+ *    window grids, dynamic-overwrite merges), which the manifest store
+ *    does not have;
+ *  - `expireBefore`: store_retention cuts at 1704326400 s, which is
+ *    not a multiple of 100000 s, so `ManifestStore.expireBefore`
+ *    refuses it; directory-grain expiry keeps straddling windows whole
+ *    instead;
+ *  - `ingestBatch(dedup = true)`: ingest_dedup_1s needs it, and the
+ *    manifest store has no dedup-on-ingest.
+ * The schemas, `dsBucket`, `partitionWindowS` and `allLevelPartials`
+ * are shared with the manifest store.
  */
 object Tables {
 
@@ -150,25 +167,6 @@ object Tables {
       .parquet(rawPath(root))
 
   /**
-   * Compact the raw table: rewrite each (ds_b, win_s) partition's
-   * accumulation of per-batch append files into GroupSize-capped,
-   * (dataset_id, ts)-sorted files. Every append commits ≥ 1 file per
-   * touched partition, so a partition ingested by thousands of small
-   * batches ends up with thousands of sliver files — the small-files
-   * problem that dominates scan open/seek cost long before data volume
-   * does. Compaction restores the bin-packed layout the one-shot write
-   * would have produced (A3 file binning, reference src/index.py:46),
-   * INCLUDING the cross-file (dataset_id, ts) clustering that row-group
-   * min/max pruning depends on — which per-batch appends interleave.
-   *
-   * The rewrite materializes the table via localCheckpoint before
-   * overwriting its own input (lazy self-overwrite would corrupt). At
-   * 100 TB the same operation runs partition-windowed — compact the
-   * cold win_s ranges one slice at a time behind the manifest store's
-   * versioned commit — rather than whole-table; the per-partition
-   * rewrite here IS that slice operation with an unbounded window.
-   */
-  /**
    * Partition-grain retention (TTL): delete every store partition whose
    * TIME WINDOW ends at or before `cutoffS` — raw (ds_b, win_s) dirs
    * with `win_s + RawWindowS ≤ cutoff`, and rollup (fidelity, ds_b,
@@ -235,83 +233,6 @@ object Tables {
       if (fs.exists(base)) prune(base)
     }
     (nRaw, nRollup)
-  }
-
-  def compactRaw(spark: SparkSession, root: String): Unit = {
-    val path = rawPath(root)
-    if (!StoreFs.exists(spark, path)) return
-    val snap = readDisk(spark, path, rawDiskSchema).localCheckpoint(true)
-    snap
-      .repartition(col("ds_b"), col("win_s"))
-      .sortWithinPartitions(col("ds_b"), col("win_s"), col("dataset_id"), col("ts_us"))
-      .write
-      .mode("overwrite")
-      .option("maxRecordsPerFile", Fidelity.GroupSize)
-      .partitionBy("ds_b", "win_s")
-      .parquet(path)
-  }
-
-  /** Targeted series deletion (right-to-be-forgotten): remove every
-   *  raw point and every rollup bucket of `datasetId` by rewriting
-   *  ONLY the series' hash-bucket subtree of each table — cost is
-   *  1/DsBuckets of the store regardless of how many series it holds,
-   *  never a full-table rewrite (and unlike `expireBefore` it must
-   *  rewrite, not just unlink: the bucket's other series share its
-   *  files). Each subtree is materialized series-free via
-   *  localCheckpoint BEFORE its directory is replaced (the same
-   *  self-overwrite discipline as `compactRaw`); a bucket left with no
-   *  surviving rows is simply deleted. The rewrite preserves the
-   *  ingest layout — (dataset_id, ts)-sorted, GroupSize-capped files —
-   *  so reads after a forget prune exactly as before.
-   */
-  def forgetDataset(spark: SparkSession, root: String, datasetId: String): Unit = {
-    val b = spark.range(1).select(dsBucket(lit(datasetId))).head().getInt(0)
-
-    def rewrite(basePath: String, bucketDir: String, partCol: String,
-        sortCols: Seq[String]): Unit = {
-      if (!StoreFs.exists(spark, bucketDir)) return
-      val survivors = spark.read
-        .option("basePath", basePath).parquet(bucketDir)
-        .where(col("dataset_id") =!= datasetId)
-        .drop("ds_b", "fidelity")
-        .localCheckpoint(true)
-      StoreFs.delete(spark, bucketDir)
-      if (!survivors.isEmpty)
-        survivors
-          .repartition(col(partCol))
-          .sortWithinPartitions((partCol +: sortCols).map(col): _*)
-          .write
-          .mode("append")
-          .option("maxRecordsPerFile", Fidelity.GroupSize)
-          .partitionBy(partCol)
-          .parquet(bucketDir)
-    }
-
-    rewrite(rawPath(root), s"${rawPath(root)}/ds_b=$b",
-      "win_s", Seq("dataset_id", "ts_us"))
-    for (f <- Fidelity.aggLevels)
-      rewrite(rollupPath(root),
-        s"${rollupPath(root)}/fidelity=${fidelityPart(f)}/ds_b=$b",
-        "part_s", Seq("dataset_id", "bucket_s"))
-    // a table drained of its last partition must read as never-written
-    // (an empty dir defeats parquet schema inference), and an empty
-    // fidelity level must not break partition discovery
-    for (f <- Fidelity.aggLevels)
-      deleteIfHollow(spark, s"${rollupPath(root)}/fidelity=${fidelityPart(f)}")
-    deleteIfHollow(spark, rawPath(root))
-    deleteIfHollow(spark, rollupPath(root))
-  }
-
-  /** Delete `path` if it exists but holds no non-hidden children
-   *  (leftover _SUCCESS-style markers don't keep a table "alive").
-   */
-  private def deleteIfHollow(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p) && fs.listStatus(p).forall { st =>
-      val n = st.getPath.getName
-      n.startsWith("_") || n.startsWith(".")
-    }) StoreFs.delete(spark, path)
   }
 
   /** Read a table back; a never-written table reads as empty (the
@@ -391,15 +312,6 @@ object Tables {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /**
-   * S3 — merge-upsert one batch's partial aggregates for ALL levels into
-   * the rollup table with UNBOUNDED lateness (src/index.py:521-550,
-   * 328-374) in a single write job: read only the affected
-   * (fidelity, ds_b, part_s) partitions (left-semi join against the
-   * batch's distinct partition keys — broadcast, since a batch touches
-   * few partitions), fold with the A2 monoid, and dynamically overwrite
-   * just those partitions.
-   */
   /** The (fidelity, ds_b, part_s) partitions a batch with the given ts
    *  bounds and series-bucket set can touch — pure arithmetic on the
    *  same bucket/part derivation `allLevelPartials` uses, so it is a
@@ -431,13 +343,22 @@ object Tables {
     } yield (fidelityPart(f), b, part))
   }
 
-  /** @param preAggregated caller asserts `partials` is already unique
-   *  per (fidelity, dataset_id, part_s, bucket_s) — `allLevelPartials`
-   *  output qualifies. Only then may the first write into a fresh table
-   *  skip the merging groupBy; defaulting to false keeps the public
-   *  path safe (un-aggregated input would otherwise silently persist
-   *  duplicate bucket rows on the first write only, which readers
-   *  summing min/max/sum/cnt cannot detect).
+  /**
+   * S3 — merge-upsert one batch's partial aggregates for ALL levels into
+   * the rollup table with UNBOUNDED lateness (src/index.py:521-550,
+   * 328-374) in a single write job: read only the affected
+   * (fidelity, ds_b, part_s) partitions (left-semi join against the
+   * batch's distinct partition keys — broadcast, since a batch touches
+   * few partitions), fold with the A2 monoid, and dynamically overwrite
+   * just those partitions.
+   *
+   * @param preAggregated caller asserts `partials` is already unique
+   * per (fidelity, dataset_id, part_s, bucket_s) — `allLevelPartials`
+   * output qualifies. Only then may the first write into a fresh table
+   * skip the merging groupBy; defaulting to false keeps the public
+   * path safe (un-aggregated input would otherwise silently persist
+   * duplicate bucket rows on the first write only, which readers
+   * summing min/max/sum/cnt cannot detect).
    */
   def mergeRollups(
       spark: SparkSession, root: String, partials: DataFrame,
@@ -875,12 +796,6 @@ object Tables {
     } finally rollup.unpersist(): Unit
   }
 
-  /**
-   * §3.2 `Index.put` — one ingest batch: sanitize → append raw →
-   * cascade all 6 rollup levels → merge each into its table
-   * (reference: src/index.py:124-177). Used by both the batch bootstrap
-   * path and the Structured Streaming `foreachBatch` sink.
-   */
   /** Batch stats in ONE light agg — ts bounds and the distinct series
    *  BUCKETS, from which the affected rollup partitions follow
    *  arithmetically (`affectedPartitions`). Collecting buckets instead
@@ -906,6 +821,13 @@ object Tables {
       batch: DataFrame): Option[Seq[(String, Int, Long)]] =
     batchStatsHint(batch).flatten
 
+  /**
+   * §3.2 `Index.put` — one ingest batch: sanitize → append raw →
+   * cascade all 6 rollup levels → merge each into its table
+   * (reference: src/index.py:124-177). The writer of the audit
+   * fixtures (rollup_repair, store_fsck, store_fsck_repair,
+   * store_retention) and of `dedup = true` ingest (ingest_dedup_1s).
+   */
   def ingestBatch(
       spark: SparkSession, root: String, batchLong: DataFrame,
       dedup: Boolean = false): Unit = {

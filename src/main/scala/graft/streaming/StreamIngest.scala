@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -14,10 +14,15 @@ import graft.store.Tables
  * (src/metrics/loop.py:59-61); any batch with any timestamp merges
  * correctly into existing buckets via read-merge-write
  * (src/index.py:536-538, 328-374). A watermarked streaming aggregation
- * would DROP late data, so we deliberately use `foreachBatch` +
- * partition-scoped merge-upsert: all state lives in the rollup tables,
- * not the Spark state store — restart-safe by construction and
- * arbitrarily late batches fold in exactly like fresh ones.
+ * would DROP late data, so both sinks use `foreachBatch` + a keyed
+ * manifest commit into [[graft.store.ManifestStore]]: all state lives
+ * in the store, not the Spark state store — restart-safe by
+ * construction, and arbitrarily late batches fold in exactly like
+ * fresh ones (merge-on-read). The two sinks:
+ *  - [[startAtomic]]: raw rows and rollup partials under one version;
+ *  - [[startManifest]]: rollup partials only.
+ * Each keys its commit by the micro-batch id, so a replayed batch
+ * folds in exactly once.
  */
 object StreamIngest {
 
@@ -43,37 +48,6 @@ object StreamIngest {
         unix_micros(to_timestamp(col("p.date"))).as("ts_us"),
         col("p.value").as("value"))
 
-  /** Run a canonical-long streaming source into the store. Each
-   *  micro-batch goes through the same `Tables.ingestBatch` as the batch
-   *  bootstrap path — one code path for both (SURVEY §3.2).
-   */
-  def start(
-      longStream: DataFrame,
-      root: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    longStream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Tables.ingestBatch(batch.sparkSession, root, batch)
-      }
-      .start()
-
-  /** EXACTLY-ONCE streaming rollup ingest into the manifest store:
-   *  each micro-batch's all-level partials append under ONE idempotent
-   *  manifest commit keyed by the batch id
-   *  (ManifestStore.appendPartialsIdempotent). foreachBatch gives
-   *  at-least-once delivery — a crash between the sink commit and the
-   *  checkpoint commit REPLAYS the batch on restart — and the txn key
-   *  riding the atomically-published manifest version turns that into
-   *  exactly-once: the replay sees its key and folds in nothing. The
-   *  `Tables.ingestBatch` path (`start` above) gets the same property
-   *  from idempotent MERGE semantics instead; this is the append-only
-   *  LSM variant where a blind re-append WOULD double-count without
-   *  the key.
-   */
   /** ATOMIC exactly-once streaming ingest: each micro-batch's raw rows
    *  AND rollup partials publish under ONE manifest version keyed by
    *  the batch id (ManifestStore.ingestBatchAtomic) — the strongest
@@ -107,6 +81,18 @@ object StreamIngest {
       .start()
   }
 
+  /** EXACTLY-ONCE streaming rollup ingest into the manifest store:
+   *  each micro-batch's all-level partials append under ONE idempotent
+   *  manifest commit keyed by the batch id
+   *  (ManifestStore.appendPartialsIdempotent). foreachBatch gives
+   *  at-least-once delivery — a crash between the sink commit and the
+   *  checkpoint commit REPLAYS the batch on restart — and the txn key
+   *  riding the atomically-published manifest version turns that into
+   *  exactly-once: the replay sees its key and folds in nothing. The
+   *  key is what makes the append safe: a blind re-append of the same
+   *  partials WOULD double-count. Tiered compaction of the partials
+   *  rides the same call.
+   */
   def startManifest(
       longStream: DataFrame,
       root: String,

@@ -193,29 +193,36 @@ class IngestMergeSpec extends AnyFunSuite {
   }
 
   test("compactRaw merges per-batch sliver files losslessly") {
+    import graft.store.ManifestStore
     val root = TestSpark.tmpDir("graft_compact")
-    // 8 single-point batches into ONE partition → 8 sliver files
+    // 8 single-point atomic commits → 8 raw sliver commits
     for (b <- 0 until 8)
-      Tables.ingestBatch(spark, root, TestSpark.longDF(batch(b).take(1)))
+      ManifestStore.ingestBatchAtomic(spark, root, TestSpark.longDF(batch(b).take(1))): Unit
+    def rawLive(): Seq[String] =
+      ManifestStore.latest(spark, root)._2.filter(_.startsWith("r-"))
     def dataFiles(): Seq[java.nio.file.Path] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-      java.nio.file.Files.walk(java.nio.file.Paths.get(Tables.rawPath(root)))
-        .forEach(p => if (p.toString.endsWith(".parquet")) out += p)
+      for (d <- rawLive())
+        java.nio.file.Files.walk(java.nio.file.Paths.get(
+          graft.store.IndexCore.dataDir(ManifestStore.storeDir(root), d)))
+          .forEach(p => if (p.toString.endsWith(".parquet")) out += p)
       out.toSeq
     }
-    val before = Tables.readRaw(spark, root)
+    val before = ManifestStore.readRaw(spark, root)
       .orderBy("dataset_id", "ts_us").collect().toSeq
     val filesBefore = dataFiles().size
-    assert(filesBefore >= 8, s"expected ≥8 sliver files, got $filesBefore")
+    assert(rawLive().size == 8 && filesBefore >= 8,
+      s"expected 8 raw commits and ≥8 sliver files, got ${rawLive().size} / $filesBefore")
 
-    Tables.compactRaw(spark, root)
-    val after = Tables.readRaw(spark, root)
+    ManifestStore.compactRawTiered(spark, root, fanIn = Int.MaxValue)
+    val after = ManifestStore.readRaw(spark, root)
       .orderBy("dataset_id", "ts_us").collect().toSeq
     assert(after == before, "compaction must be lossless")
+    assert(rawLive().size == 1, s"one raw commit after the fold: ${rawLive()}")
     val filesAfter = dataFiles().size
     assert(filesAfter < filesBefore,
       s"compaction should shrink file count: $filesBefore -> $filesAfter")
-    assert(filesAfter <= 2, s"one partition should compact to ~1 file: $filesAfter")
+    assert(filesAfter <= 2, s"one raw commit should hold ~1 file: $filesAfter")
   }
 
   test("repairRollups restores raw-truth after a corrupting merge and clears orphans") {

@@ -23,6 +23,12 @@ class ManifestStoreSpec extends AnyFunSuite {
         ((r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getLong(5))))
       .toMap
 
+  /** The live `c-` (rollup partial) commits: atomic ingest also
+   *  publishes one `r-` (raw) commit per batch.
+   */
+  private def partialCommits(root: String): Seq[String] =
+    ManifestStore.latest(spark, root)._2.filter(_.startsWith("c-"))
+
   /** The store's data dir holds exactly the live `c-`/`r-` entries: a
    *  rejected publish left no staging behind. With `untouchedSince` (a
    *  [[dataStamp]] taken before the rejected call) the dir must also be
@@ -47,12 +53,12 @@ class ManifestStoreSpec extends AnyFunSuite {
     assert(ManifestStore.readLevel(spark, root, Fidelity.S1).isEmpty,
       "never-written table reads empty")
 
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00", 1.0), ("a", "2024-01-01T00:00:00.4", 3.0)))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00.8", 5.0), ("b", "2024-01-01T00:00:01", 7.0)))
 
-    assert(ManifestStore.latest(spark, root)._2.size == 2, "two live commits")
+    assert(partialCommits(root).size == 2, "two live commits")
     val m = level1(root)
     // same-second points from DIFFERENT commits fold via the monoid
     assert(m(("a", TestSpark.isoUs("2024-01-01T00:00:00") / 1000000L)) ==
@@ -63,11 +69,11 @@ class ManifestStoreSpec extends AnyFunSuite {
 
   test("readLevelAsOf sees exactly the snapshot its version published") {
     val root = TestSpark.tmpDir("mstore_asof")
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00", 1.0)))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00.5", 3.0)))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("b", "2024-01-01T00:00:01", 9.0)))
 
     val sec0 = TestSpark.isoUs("2024-01-01T00:00:00") / 1000000L
@@ -91,9 +97,9 @@ class ManifestStoreSpec extends AnyFunSuite {
 
   test("readLevelFor equals the series slice of readLevel") {
     val root = TestSpark.tmpDir("mstore")
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00", 1.0), ("b", "2024-01-01T00:00:00", 2.0)))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:02", 4.0)))
     val direct = ManifestStore.readLevelFor(spark, root, Fidelity.S1, "a")
       .orderBy("bucket_s").collect().toSeq
@@ -105,14 +111,14 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("compact folds commits into one; vacuum deletes the superseded dirs; reads unchanged") {
     val root = TestSpark.tmpDir("mstore")
     for (i <- 0 until 3)
-      ManifestStore.ingestBatch(spark, root,
+      ManifestStore.ingestBatchAtomic(spark, root,
         batch(("a", s"2024-01-01T00:00:0$i", i + 1.0), ("b", s"2024-01-01T00:00:0$i", 10.0 * (i + 1))))
     val before = level1(root)
-    val (_, liveBefore) = ManifestStore.latest(spark, root)
+    val liveBefore = partialCommits(root)
     assert(liveBefore.size == 3)
 
     ManifestStore.compact(spark, root)
-    val (_, liveAfter) = ManifestStore.latest(spark, root)
+    val liveAfter = partialCommits(root)
     assert(liveAfter.size == 1 && !liveBefore.contains(liveAfter.head))
     assert(level1(root) == before, "compaction preserves every level-1 cell")
 
@@ -126,7 +132,8 @@ class ManifestStoreSpec extends AnyFunSuite {
 
     ManifestStore.vacuum(spark, root)
     val dataDirs = new java.io.File(s"$root/mrollup/data").listFiles().map(_.getName).toSet
-    assert(dataDirs == liveAfter.toSet, "vacuum leaves only manifest-referenced dirs")
+    assert(dataDirs == ManifestStore.latest(spark, root)._2.toSet,
+      "vacuum leaves only manifest-referenced dirs")
     assert(level1(root) == before, "reads survive vacuum")
 
     // every aggregate level survives the cycle, not just S1
@@ -136,10 +143,10 @@ class ManifestStoreSpec extends AnyFunSuite {
 
   test("readLevelRange equals the bucket-range slice of readLevel, pre-fold pruned") {
     val root = TestSpark.tmpDir("mstore")
-    ManifestStore.ingestBatch(spark, root, batch(
+    ManifestStore.ingestBatchAtomic(spark, root, batch(
       ("a", "2024-01-01T00:00:00", 1.0), ("a", "2024-01-01T00:00:05", 2.0),
       ("b", "2024-01-01T00:00:02", 9.0)))
-    ManifestStore.ingestBatch(spark, root, batch(
+    ManifestStore.ingestBatchAtomic(spark, root, batch(
       ("a", "2024-01-01T00:00:02", 3.0), ("a", "2024-01-01T00:01:00", 4.0)))
     val lo = TestSpark.isoUs("2024-01-01T00:00:00") / 1000000L
     val hi = lo + 10
@@ -153,7 +160,7 @@ class ManifestStoreSpec extends AnyFunSuite {
 
   test("commits always land above the highest existing manifest version") {
     val root = TestSpark.tmpDir("mstore")
-    ManifestStore.ingestBatch(spark, root, batch(("a", "2024-01-01T00:00:00", 1.0)))
+    ManifestStore.ingestBatchAtomic(spark, root, batch(("a", "2024-01-01T00:00:00", 1.0)))
     val (v1, live1) = ManifestStore.latest(spark, root)
     // simulate a concurrent writer (another CommitLog instance — e.g. a
     // different driver on the same root) publishing the next version
@@ -164,10 +171,10 @@ class ManifestStoreSpec extends AnyFunSuite {
     // above it, never beside it
     val fake = new java.io.File(s"$root/mrollup/_manifests/" + f"v${v1 + 1}%012d")
     java.nio.file.Files.writeString(fake.toPath, live1.mkString("", "\n", "\n"))
-    ManifestStore.ingestBatch(spark, root, batch(("a", "2024-01-01T00:00:01", 2.0)))
+    ManifestStore.ingestBatchAtomic(spark, root, batch(("a", "2024-01-01T00:00:01", 2.0)))
     val (v2, live2) = ManifestStore.latest(spark, root)
     assert(v2 == v1 + 2, "new commit sequenced after the foreign version")
-    assert(live2.size == 2 && live1.forall(live2.contains))
+    assert(partialCommits(root).size == 2 && live1.forall(live2.contains))
     assert(level1(root).keySet.size == 2)
   }
 
@@ -175,8 +182,8 @@ class ManifestStoreSpec extends AnyFunSuite {
     val root = TestSpark.tmpDir("mstore")
     val all = (0 until 6).map(i => ("s", f"2024-01-01T00:00:$i%02d", i * 1.5))
     for (p <- all.grouped(2).toSeq)
-      ManifestStore.ingestBatch(spark, root, batch(p: _*), maxLiveCommits = 2)
-    assert(ManifestStore.latest(spark, root)._2.size <= 3, "compaction kept live set bounded")
+      ManifestStore.ingestBatchAtomic(spark, root, batch(p: _*), maxLiveCommits = 2)
+    assert(partialCommits(root).size <= 3, "compaction kept live set bounded")
     val oneShot = graft.ops.Rollup.aggregate(batch(all: _*), 1)
       .select("dataset_id", "bucket_s", "min_v", "max_v", "sum_v", "cnt")
       .orderBy("bucket_s").collect().toSeq
@@ -217,9 +224,9 @@ class ManifestStoreSpec extends AnyFunSuite {
 
   test("cdcBetween reports inserts and updates with old and merged new state") {
     val root = TestSpark.tmpDir("mstore_cdc")
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00", 4.0), ("b", "2024-01-01T00:00:01", 7.0)))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00.5", 1.0), // update: same bucket as v1's a
         ("c", "2024-01-01T00:00:02", 9.0))) // insert: bucket born in window
     val sec0 = TestSpark.isoUs("2024-01-01T00:00:00") / 1000000L
@@ -241,12 +248,12 @@ class ManifestStoreSpec extends AnyFunSuite {
 
   test("cdcBetween: empty window is empty; compaction boundary fails loudly") {
     val root = TestSpark.tmpDir("mstore_cdc2")
-    ManifestStore.ingestBatch(spark, root, batch(("a", "2024-01-01T00:00:00", 1.0)))
+    ManifestStore.ingestBatchAtomic(spark, root, batch(("a", "2024-01-01T00:00:00", 1.0)))
     assert(ManifestStore.cdcBetween(spark, root, Fidelity.S1, 1L, 1L).isEmpty)
     // from the never-written version 0, everything is an insert
     val fromZero = ManifestStore.cdcBetween(spark, root, Fidelity.S1, 0L, 1L).collect()
     assert(fromZero.map(_.getString(2)).toSeq == Seq("insert"))
-    ManifestStore.ingestBatch(spark, root, batch(("a", "2024-01-01T00:00:01", 2.0)))
+    ManifestStore.ingestBatchAtomic(spark, root, batch(("a", "2024-01-01T00:00:01", 2.0)))
     ManifestStore.compact(spark, root)
     val ex = intercept[IllegalArgumentException] {
       ManifestStore.cdcBetween(spark, root, Fidelity.S1, 1L,
@@ -258,9 +265,9 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("CDC consumer survives a concurrent compact + vacuum: loud " +
       "refusal, full resync at the head, then incremental windows resume") {
     val root = TestSpark.tmpDir("mstore_resync")
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00", 4.0), ("b", "2024-01-01T00:00:01", 7.0)))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00.5", 1.0), ("c", "2024-01-01T00:00:02", 9.0)))
     // the consumer: a replica of the S1 level maintained from CDC
     // windows, with a version cursor — the deployment shape the
@@ -280,7 +287,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     // maintenance races in behind the consumer's back: one more batch,
     // then compact + manifest-history vacuum + data vacuum — the
     // destructive verbs that carry NO lease here by contract
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("b", "2024-01-01T00:00:01.5", 2.0)))
     ManifestStore.compact(spark, root)
     ManifestStore.vacuumManifest(spark, root, keep = 1)
@@ -300,7 +307,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     assert(replica.values.map(_._4).sum == 5L)
     // life resumes: the next append flows through a plain incremental
     // window and the replica reconverges
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("c", "2024-01-01T00:00:02.5", 3.0)))
     applyWindow(ManifestStore.latest(spark, root)._1)
     assert(replica == level1(root), "incremental windows resumed cleanly")
@@ -407,9 +414,9 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("branching below the source's retention fails loudly on both paths: vacuumed data dirs and vacuumed version files") {
     val src = TestSpark.tmpDir("mstore_br_ret")
     for (i <- 0 until 3)
-      ManifestStore.ingestBatch(spark, src,
+      ManifestStore.ingestBatchAtomic(spark, src,
         batch(("a", s"2024-01-01T00:00:0$i", i.toDouble)))
-    ManifestStore.compact(spark, src) // v4 supersedes v1..v3's commits
+    ManifestStore.compact(spark, src) // v4 supersedes v1..v3's c- commits
     ManifestStore.vacuum(spark, src)  // superseded DATA dirs reclaimed
     // (a) the version file survives but its commits were vacuumed —
     // the clone's existence sweep refuses before linking anything
@@ -439,8 +446,8 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("mergeFrom: KEYLESS re-merge refuses via the snapshot-identity marker") {
     val dst = TestSpark.tmpDir("mstore_klm")
     val src = TestSpark.tmpDir("mstore_klm_src")
-    ManifestStore.ingestBatch(spark, dst, batch(("a", "2024-01-01T00:00:00", 1.0)))
-    ManifestStore.ingestBatch(spark, src, batch(("b", "2024-01-01T00:00:01", 2.0)))
+    ManifestStore.ingestBatchAtomic(spark, dst, batch(("a", "2024-01-01T00:00:00", 1.0)))
+    ManifestStore.ingestBatchAtomic(spark, src, batch(("b", "2024-01-01T00:00:01", 2.0)))
     ManifestStore.mergeFrom(spark, dst, src) // no keys anywhere
     val counts = level1(dst)
     // the same source snapshot again: without the identity marker this
@@ -451,7 +458,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("already lives in the destination"))
     assert(level1(dst) == counts, "refused keyless re-merge mutated the store")
     // an advanced source is a new snapshot and may merge again
-    ManifestStore.ingestBatch(spark, src, batch(("c", "2024-01-01T00:00:02", 3.0)))
+    ManifestStore.ingestBatchAtomic(spark, src, batch(("c", "2024-01-01T00:00:02", 3.0)))
     ManifestStore.mergeFrom(spark, dst, src)
   }
 
@@ -591,19 +598,19 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("tiered compaction folds only the small tier and leaves the big commit in place") {
     val root = TestSpark.tmpDir("mstore_tier")
     // one BIG commit (many buckets) + three small ones
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch((0 until 120).map(i =>
         ("big", f"2024-01-01T00:${i / 60}%02d:${i % 60}%02d", i.toDouble)): _*))
     for (i <- 1 to 3)
-      ManifestStore.ingestBatch(spark, root,
+      ManifestStore.ingestBatchAtomic(spark, root,
         batch(("s", s"2024-01-02T00:00:0$i", i.toDouble)))
-    val before = ManifestStore.latest(spark, root)._2
+    val before = partialCommits(root)
     assert(before.size == 4)
     val bigDir = before.head // first commit = the 120-bucket one
     val pre = level1(root)
 
     ManifestStore.compactTiered(spark, root, fanIn = 3)
-    val after = ManifestStore.latest(spark, root)._2
+    val after = partialCommits(root)
     assert(after.size == 2, s"3 small commits folded into 1: $after")
     assert(after.contains(bigDir),
       "the large commit must survive tiered compaction UNREWRITTEN " +
@@ -612,7 +619,7 @@ class ManifestStoreSpec extends AnyFunSuite {
 
     // explicit full optimize still folds everything down to one
     ManifestStore.compact(spark, root)
-    assert(ManifestStore.latest(spark, root)._2.size == 1)
+    assert(partialCommits(root).size == 1)
     assert(level1(root) == pre)
   }
 

@@ -78,7 +78,7 @@ class PlanAuditSpec extends AnyFunSuite {
     withPlainPlans {
       val root = TestSpark.tmpDir("mstore_plan")
       for (i <- 0 until 2)
-        graft.store.ManifestStore.ingestBatch(spark, root, TestSpark.longDF(Seq(
+        graft.store.ManifestStore.ingestBatchAtomic(spark, root, TestSpark.longDF(Seq(
           ("a", s"2024-01-01T00:00:0$i", 1.0))))
       val df = graft.store.ManifestStore.readLevel(spark, root, graft.model.Fidelity.S1)
       val plan = df.queryExecution.executedPlan.toString
@@ -91,7 +91,7 @@ class PlanAuditSpec extends AnyFunSuite {
     withPlainPlans {
       val root = TestSpark.tmpDir("mstore_chart_plan")
       for (i <- 0 until 2)
-        graft.store.ManifestStore.ingestBatch(spark, root, TestSpark.longDF(Seq(
+        graft.store.ManifestStore.ingestBatchAtomic(spark, root, TestSpark.longDF(Seq(
           ("a", s"2024-01-01T00:00:0$i", 1.0), ("b", s"2024-01-01T00:00:0$i", 2.0))))
       val lo = TestSpark.isoUs("2024-01-01T00:00:00") / 1000000L
       val df = graft.store.ManifestStore.readLevelRange(
@@ -112,7 +112,7 @@ class PlanAuditSpec extends AnyFunSuite {
       // past four live level dirs the scan stays parallel and the fold
       // keeps its exchange
       for (i <- 2 until 5)
-        graft.store.ManifestStore.ingestBatch(spark, root, TestSpark.longDF(Seq(
+        graft.store.ManifestStore.ingestBatchAtomic(spark, root, TestSpark.longDF(Seq(
           ("a", s"2024-01-01T00:00:0$i", 1.0), ("b", s"2024-01-01T00:00:0$i", 2.0))))
       val wide = graft.store.ManifestStore.readLevelRange(
         spark, root, graft.model.Fidelity.S1, "a", lo, lo + 4)

@@ -134,7 +134,7 @@ class ReadPathSpec extends AnyFunSuite {
 
     val root = TestSpark.tmpDir("jobs_chart")
     for (i <- 0 until 3)
-      ManifestStore.ingestBatch(spark, root, TestSpark.longDF(Seq(
+      ManifestStore.ingestBatchAtomic(spark, root, TestSpark.longDF(Seq(
         ("a", s"2024-01-01T00:00:0$i", i.toDouble), ("b", s"2024-01-01T00:00:0$i", 9.0))))
     val lo = TestSpark.isoUs("2024-01-01T00:00:00") / 1000000L
     val (chart, chartJobs) = TestSpark.countJobs(

@@ -20,11 +20,11 @@ class StreamCdcSpec extends AnyFunSuite {
   test("maintainDaily equals the one-shot daily rollup after draining the log") {
     val root = TestSpark.tmpDir("cdc_stream")
     // three commits, the third touching a second day and a second series
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00", 2.0), ("a", "2024-01-01T06:00:00", 4.0)))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T06:00:00", 6.0)))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-02T01:00:00", 1.0), ("b", "2024-01-01T12:00:00", 8.0)))
 
     val maintained = StreamCdc
@@ -49,11 +49,11 @@ class StreamCdcSpec extends AnyFunSuite {
     // series a means per version: 10 (high→ON), 5 (dead band→carries ON),
     // 1 (low→OFF); series b: always dead-band → never activates;
     // series c appears only in v3, decisively high
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00", 10.0), ("b", "2024-01-01T00:00:00", 5.0)))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:01", 5.0), ("b", "2024-01-01T00:00:01", 5.0)))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:02", 1.0), ("b", "2024-01-01T00:00:02", 5.0),
         ("c", "2024-01-01T00:00:02", 10.0)))
 
@@ -79,9 +79,9 @@ class StreamCdcSpec extends AnyFunSuite {
     def marker = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(state).resolve("_applied")), "UTF-8").trim.toLong
 
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00", 2.0)))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T06:00:00", 4.0)))
     val s1 = StreamCdc.maintainDaily(spark, root,
       TestSpark.tmpDir("cdc_rck1") + "/c", Some(state))
@@ -90,7 +90,7 @@ class StreamCdcSpec extends AnyFunSuite {
     // a third version lands while the consumer is down; the resumed run
     // (fresh stream checkpoint — the crash-lost-checkpoint case) must
     // bootstrap from state and apply ONLY version 3
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("b", "2024-01-01T12:00:00", 8.0)))
     val ck2 = TestSpark.tmpDir("cdc_rck2") + "/c"
     val s2 = StreamCdc.maintainDaily(spark, root, ck2, Some(state))
@@ -123,9 +123,9 @@ class StreamCdcSpec extends AnyFunSuite {
       java.nio.file.Paths.get(state).resolve("_applied")), "UTF-8").trim.toLong
 
     // v1: a decisively high (ON); v2: dead band (carries)
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:00", 10.0)))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:01", 5.0)))
     val s1 = StreamCdc.maintainAlerts(spark, root,
       TestSpark.tmpDir("cdc_ack1") + "/c", high = 8.0, low = 2.0, Some(state))
@@ -135,7 +135,7 @@ class StreamCdcSpec extends AnyFunSuite {
     // v3 lands while the consumer is down (decisively low — OFF); the
     // resumed run (fresh stream checkpoint = the crash case) must
     // bootstrap from state and apply ONLY version 3
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:02", 1.0)))
     val ck2 = TestSpark.tmpDir("cdc_ack2") + "/c"
     val s2 = StreamCdc.maintainAlerts(spark, root, ck2,
@@ -160,7 +160,7 @@ class StreamCdcSpec extends AnyFunSuite {
     // a stranded orphan from a crash between a past flip and its delete
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(state).resolve("s-1"))
-    ManifestStore.ingestBatch(spark, root,
+    ManifestStore.ingestBatchAtomic(spark, root,
       batch(("a", "2024-01-01T00:00:03", 10.0)))
     StreamCdc.maintainAlerts(spark, root, ck2,
       high = 8.0, low = 2.0, Some(state))
@@ -184,7 +184,7 @@ class StreamCdcSpec extends AnyFunSuite {
   test("versionFeed surfaces versions in commit order under AvailableNow") {
     val root = TestSpark.tmpDir("cdc_feed")
     for (i <- 1 to 3)
-      ManifestStore.ingestBatch(spark, root,
+      ManifestStore.ingestBatchAtomic(spark, root,
         batch(("a", f"2024-01-01T00:00:0$i", i.toDouble)))
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     val q = StreamCdc.versionFeed(spark, root).writeStream

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Fidelity
-import graft.store.Tables
+import graft.store.{ManifestStore, Tables}
 import graft.streaming.StreamIngest
 
 /**
@@ -13,7 +13,7 @@ import graft.streaming.StreamIngest
  * produce byte-identical rollup state to the batch path, including a
  * late batch (unbounded lateness — a watermarked agg would drop it).
  * Replays the `test_agg_combine` batches (FIXTURES.md §3) through a
- * file source, one file per micro-batch.
+ * file source, one file per micro-batch, into the manifest store.
  */
 class StreamIngestSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -34,7 +34,7 @@ class StreamIngestSpec extends AnyFunSuite {
       .schema(Tables.rawSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
-    val q = StreamIngest.start(stream, root, ckpt, Trigger.ProcessingTime("0 seconds"))
+    val q = StreamIngest.startAtomic(stream, root, ckpt, Trigger.ProcessingTime("0 seconds"))
     try {
       var i = 0
       for (b <- Seq(batch(0), batch(4), batch(8),
@@ -53,8 +53,8 @@ class StreamIngestSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
 
-    assert(Tables.readRaw(spark, root).count() == 13)
-    val r1 = Tables.readRollup(spark, root, Fidelity.S1)
+    assert(ManifestStore.readRaw(spark, root).count() == 13)
+    val r1 = ManifestStore.readLevel(spark, root, Fidelity.S1)
       .orderBy("bucket_s").collect()
     assert(r1.length == 2)
     val Row(_, _, mn0: Double, mx0: Double, sm0: Double, c0: Long) = r1(0): @unchecked
@@ -83,22 +83,22 @@ class StreamIngestSpec extends AnyFunSuite {
 
     // run 1 processes batch 0, then the query STOPS (crash stand-in)
     drop(batch(0), "b0")
-    val q1 = StreamIngest.start(
+    val q1 = StreamIngest.startAtomic(
       openStream(), root, ckpt, Trigger.ProcessingTime("0 seconds"))
     try q1.processAllAvailable() finally q1.stop()
-    assert(Tables.readRaw(spark, root).count() == 4)
+    assert(ManifestStore.readRaw(spark, root).count() == 4)
 
     // run 2 restarts from the SAME checkpoint with two more batches
     // waiting: the source's offset log must skip b0 (no double ingest)
     // and pick up exactly b1/b2
     drop(batch(4), "b1")
     drop(batch(8), "b2")
-    val q2 = StreamIngest.start(
+    val q2 = StreamIngest.startAtomic(
       openStream(), root, ckpt, Trigger.ProcessingTime("0 seconds"))
     try q2.processAllAvailable() finally q2.stop()
 
-    assert(Tables.readRaw(spark, root).count() == 12)
-    val r1 = Tables.readRollup(spark, root, Fidelity.S1)
+    assert(ManifestStore.readRaw(spark, root).count() == 12)
+    val r1 = ManifestStore.readLevel(spark, root, Fidelity.S1)
       .orderBy("bucket_s").collect()
     assert(r1.length == 2)
     val Row(_, _, mn0: Double, mx0: Double, sm0: Double, c0: Long) = r1(0): @unchecked
@@ -111,7 +111,6 @@ class StreamIngestSpec extends AnyFunSuite {
     val srcDir = TestSpark.tmpDir("graft_mrestart_src")
     val root = TestSpark.tmpDir("graft_mrestart_store")
     val ckpt = TestSpark.tmpDir("graft_mrestart_ckpt")
-    import graft.store.ManifestStore
 
     def drop(b: Seq[(String, String, Double)], name: String): Unit = {
       val staging = TestSpark.tmpDir(s"graft_mrestage_$name")
@@ -159,7 +158,6 @@ class StreamIngestSpec extends AnyFunSuite {
     val srcDir = TestSpark.tmpDir("graft_arestart_src")
     val root = TestSpark.tmpDir("graft_arestart_store")
     val ckpt = TestSpark.tmpDir("graft_arestart_ckpt")
-    import graft.store.ManifestStore
 
     def drop(b: Seq[(String, String, Double)], name: String): Unit = {
       val staging = TestSpark.tmpDir(s"graft_arestage_$name")
@@ -214,7 +212,6 @@ class StreamIngestSpec extends AnyFunSuite {
     val srcDir = TestSpark.tmpDir("graft_aret_src")
     val root = TestSpark.tmpDir("graft_aret_store")
     val ckpt = TestSpark.tmpDir("graft_aret_ckpt")
-    import graft.store.ManifestStore
     def drop(b: Seq[(String, String, Double)], name: String): Unit = {
       val staging = TestSpark.tmpDir(s"graft_aretstage_$name")
       TestSpark.longDF(b).coalesce(1).write.mode("overwrite").parquet(staging)
