@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.SparkSession
 
-import graft.store.{CommitLog, FsckScope, IndexCore, IndexLeg}
+import graft.store.{CommitLog, FsckScope, IndexCore, IndexLeg, WriteBatch}
 import graft.store.IndexCore.isViol
 import graft.text.TextOps
 
@@ -703,7 +703,12 @@ object Dedup {
     // together (signatures without postings would silently produce
     // candidates that can't verify)
     val txn = IndexCore.freshTxn(spark, indexDir, deliveryKey, "shard")
-    val sh = shingleSet(shard, idCol, textCol)
+    // the shard is materialized once; its count sizes the batch side: a
+    // bounded shard shingles and signs in ONE task with no exchange
+    // (WriteBatch). The stored index it probes stays a parallel scan
+    val snap = shard.select(col(idCol), col(textCol)).persist()
+    val src = WriteBatch.narrow(snap, WriteBatch.oneTask(WriteBatch.materialize(snap)))
+    val sh = shingleSet(src, idCol, textCol)
     // signature AND set size in ONE pass over the shingle set: the
     // stored row is (doc_id, mh, n) — everything banding, estimation,
     // and the Jaccard denominator need
@@ -711,7 +716,9 @@ object Dedup {
       toCol(graft.functions.MinhashSignatureAgg(
         toExpr(col("sh")), toExpr(col("h2")), k).toAggregateExpression()).as("mh"),
       count(lit(1)).as("n"))
-    withScopedPersist(sh, sig) {
+    val cached = Seq(sh, sig).map(
+      _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    try {
       val verdict =
         // tombstoned docs (order-scoped: commits before their
         // tombstone) neither generate candidates nor verify — a
@@ -742,6 +749,9 @@ object Dedup {
               .join(sh.select(col("doc_id").as("b_id"), col("sh")),
                 Seq("b_id", "sh"))
               .groupBy("a_id", "b_id").agg(count(lit(1)).as("i"))
+            // eager, and the ONLY checkpoint: the verdict is fixed
+            // before the shard publishes itself below, so it can never
+            // observe its own shard in the index
             jaccardOf(inter,
               isig.unionByName(sig).select("doc_id", "n"))
               .where(col("jaccard") >= threshold)
@@ -749,22 +759,25 @@ object Dedup {
               .localCheckpoint(true)
           } finally est.unpersist(): Unit
         }
-      // verdict is already eagerly checkpointed (or an empty literal
-      // frame) before the shard publishes itself. Keyed shards embed
-      // the key digest in the dir name so their pair report stays
-      // addressable by key (indexPairsForDelivery)
+      // Keyed shards embed the key digest in the dir name so their pair
+      // report stays addressable by key (indexPairsForDelivery). The
+      // legs stage under one invisible dir, so they write concurrently
       val name = IndexCore.entryName("c", deliveryKey)
       val dst = IndexCore.dataDir(indexDir, name)
-      sig.write.parquet(s"$dst/sig")
-      sh.write.parquet(s"$dst/sh")
-      if (persistPairs)
-        // the pair REPORT rides the shard's own commit: visible iff the
-        // shard is, so a replayed shard can neither re-report nor lose
-        // it (repartition(1): the empty first-shard verdict is a
-        // 0-partition literal frame, which would write no readable file)
-        verdict.repartition(1).write.parquet(s"$dst/pairs")
+      graft.util.Par.par(Seq(
+        Some(() => sig.write.parquet(s"$dst/sig")),
+        Some(() => sh.write.parquet(s"$dst/sh")),
+        Option.when(persistPairs)(() =>
+          // the pair REPORT rides the shard's own commit: visible iff the
+          // shard is, so a replayed shard can neither re-report nor lose
+          // it (repartition(1): the empty first-shard verdict is a
+          // 0-partition literal frame, which would write no readable file)
+          verdict.repartition(1).write.parquet(s"$dst/pairs"))).flatten): Unit
       IndexCore.publishAppend(spark, indexDir, name, txn, "shard")
       verdict
+    } finally {
+      cached.foreach(_.unpersist(false))
+      snap.unpersist(false): Unit
     }
   }
 

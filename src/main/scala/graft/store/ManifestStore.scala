@@ -148,10 +148,13 @@ object ManifestStore {
   /** Write a frame as one immutable commit directory (shared by append
    *  and compaction so the physical layout — ds_b derivation, sort,
    *  file caps, level partitioning — cannot drift between the two).
-   *  Returns the commit-dir name; the caller still owns the manifest
-   *  update that makes it visible.
+   *  `oneTask`: the partials come from a one-task batch
+   *  ([[WriteBatch]]) and write from that task. Returns the commit-dir
+   *  name; the caller still owns the manifest update that makes it
+   *  visible.
    */
-  private def writeCommitDir(root: String, partials: DataFrame): String = {
+  private def writeCommitDir(
+      root: String, partials: DataFrame, oneTask: Boolean = false): String = {
     val name = IndexCore.entryName("c", None)
     val withB = partials.withColumn("ds_b", Tables.dsBucket(col("dataset_id")))
     val present = withB.columns.toSet
@@ -159,9 +162,9 @@ object ManifestStore {
       .filter(f => requiredFields(f) || present(f))
     require(fields.forall(present),
       s"commit partials missing required columns: ${fields.filterNot(present)}")
-    withB
-      .select((col("fidelity") +: fields.map(col)): _*)
-      .repartition(col("fidelity"))
+    WriteBatch.clustered(
+        withB.select((col("fidelity") +: fields.map(col)): _*),
+        oneTask, None, col("fidelity"))
       .sortWithinPartitions(
         col("fidelity"), col("ds_b"), col("part_s"), col("dataset_id"), col("bucket_s"))
       .write
@@ -537,10 +540,8 @@ object ManifestStore {
     val dirs = IndexCore.smallest(spark, storeDir(root),
       rawDirEntries(latest(spark, root)._2), fanIn)
     if (dirs.size <= 1) return
-    val merged = spark.read
-      .parquet(dirs.map(entryDir(root, _)): _*)
-      .select("dataset_id", "ts_us", "value")
-    publishFold(spark, root, dirs, writeRawCommitDir(root, merged))(identity)
+    publishFold(spark, root, dirs,
+      writeRawCommitDir(root, readRawDirs(spark, dirs, root)))(identity)
   }
 
   /** SIZE-TIERED compaction (the LSM policy): fold only the `fanIn`
@@ -647,21 +648,16 @@ object ManifestStore {
       spark: SparkSession, dstRoot: String, srcRoot: String,
       key: Option[String] = None): Unit =
     IndexCore.mergeFrom(spark, storeDir(dstRoot), storeDir(srcRoot), key) { src =>
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
       val (srcC, srcR) = src.partition(_.startsWith("c-"))
       val writes = Seq(
-        Option.when(srcC.nonEmpty)(Future(writeCommitDir(dstRoot,
+        Option.when(srcC.nonEmpty)(() => writeCommitDir(dstRoot,
           // plain concat of the source's partials: v1 commits read sumsq
           // NULL here and the null lands in the staged rows, which the
           // null-poisoning fold treats exactly like the absent column
-          srcC.map(readPartials(spark, srcRoot, _)).reduce(_.unionByName(_))))),
-        Option.when(srcR.nonEmpty)(Future(writeRawCommitDir(dstRoot,
-          spark.read
-            .parquet(srcR.map(entryDir(srcRoot, _)): _*)
-            .select("dataset_id", "ts_us", "value"))))).flatten
-      (Await.result(Future.sequence(writes), Duration.Inf), ())
+          srcC.map(readPartials(spark, srcRoot, _)).reduce(_.unionByName(_)))),
+        Option.when(srcR.nonEmpty)(() => writeRawCommitDir(dstRoot,
+          readRawDirs(spark, srcR, srcRoot)))).flatten
+      (graft.util.Par.par(writes), ())
     }
 
   /** Right-to-be-forgotten on the atomic store: rewrite every live
@@ -779,13 +775,15 @@ object ManifestStore {
   /** Raw rows as one immutable `r-` commit dir: ds_b-bucketed and
    *  (dataset_id, ts)-sorted so series/time predicates ride row-group
    *  stats; the manifest version plays the time-window role the
-   *  partitioned raw table gets from `win_s` directories.
+   *  partitioned raw table gets from `win_s` directories. `oneTask`: a
+   *  one-task batch ([[WriteBatch]]) writes from its own task.
    */
-  private def writeRawCommitDir(root: String, batch: DataFrame): String = {
+  private def writeRawCommitDir(
+      root: String, batch: DataFrame, oneTask: Boolean = false): String = {
     val name = IndexCore.entryName("r", None)
-    batch
-      .withColumn("ds_b", Tables.dsBucket(col("dataset_id")))
-      .repartition(col("ds_b"))
+    WriteBatch.clustered(
+        batch.withColumn("ds_b", Tables.dsBucket(col("dataset_id"))),
+        oneTask, None, col("ds_b"))
       .sortWithinPartitions(col("ds_b"), col("dataset_id"), col("ts_us"))
       .write
       .mode("errorifexists")
@@ -818,19 +816,24 @@ object ManifestStore {
   /** Stage one batch for a two-table publish: sanitize it, then write
    *  its raw `r-` commit dir and its partials (`partialsOf`) `c-`
    *  commit dir concurrently — invisible until a publish. None (nothing
-   *  staged) for an empty batch.
+   *  staged) for an empty batch. One count sizes the batch: a bounded
+   *  one ([[WriteBatch]]) folds its partials and writes each dir from
+   *  one task, with no exchange.
    */
   private def stageBatch(
       spark: SparkSession, root: String, batchLong: DataFrame,
       partialsOf: DataFrame => DataFrame): Option[(String, String)] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
     val batch = graft.ingest.Melt.sanitize(batchLong).persist()
-    try Option.when(!batch.isEmpty) {
-      val raw = Future(writeRawCommitDir(root, batch))
-      val partials = Future(writeCommitDir(root, partialsOf(batch)))
-      (Await.result(raw, Duration.Inf), Await.result(partials, Duration.Inf))
+    try {
+      val rows = WriteBatch.materialize(batch)
+      val one = WriteBatch.oneTask(rows)
+      val b = WriteBatch.narrow(batch, one)
+      Option.when(rows > 0) {
+        val Seq(raw, partials) = graft.util.Par.par(Seq(
+          () => writeRawCommitDir(root, b, one),
+          () => writeCommitDir(root, partialsOf(b), one)))
+        (raw, partials)
+      }
     } finally batch.unpersist(): Unit
   }
 
@@ -1033,7 +1036,7 @@ object ManifestStore {
    *  [[cdcRawBetween]]. Fail loudly instead, like [[liveAt]] does for
    *  reclaimed versions.
    */
-  private def readRawDirs(
+  private[graft] def readRawDirs(
       spark: SparkSession, entries: Seq[String], root: String,
       prune: DataFrame => DataFrame = identity): DataFrame = {
     val dirs = entries.map(entryDir(root, _))

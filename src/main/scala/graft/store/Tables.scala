@@ -831,10 +831,6 @@ object Tables {
   def ingestBatch(
       spark: SparkSession, root: String, batchLong: DataFrame,
       dedup: Boolean = false): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-
     // The reference double-counts re-POSTed points (acknowledged TODO,
     // src/index.py:39-40): append + merge have no dedup. Default
     // replicates that for parity; `dedup = true` fixes it — exact-dup
@@ -875,11 +871,10 @@ object Tables {
         // write to DISJOINT tables — run them as concurrent Spark jobs so
         // the batch pays max(raw, rollup) latency, not their sum (the
         // reference writes its 7 levels sequentially, src/index.py:124-177).
-        val writes = Seq(
-          Future(appendRaw(batch, root)),
-          Future(mergeRollups(spark, root, allLevelPartials(batch), hint,
-            preAggregated = true)))
-        Await.result(Future.sequence(writes), Duration.Inf): Unit
+        graft.util.Par.par(Seq(
+          () => appendRaw(batch, root),
+          () => mergeRollups(spark, root, allLevelPartials(batch), hint,
+            preAggregated = true))): Unit
       }
     } finally batch.unpersist()
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.store.{IndexCore, IndexLeg}
+import graft.store.{IndexCore, IndexLeg, WriteBatch}
 import IndexCore.{dataDir, isViol, legPath}
 
 /**
@@ -211,11 +211,23 @@ object TextIndex {
    *  output partition, so it adds no exchange; it is a window and not a
    *  row counter because the optimizer may drop a limit over an input
    *  already known to hold ≤ k rows, and the global sort left in its
-   *  place spreads its output over several partitions.
+   *  place spreads its output over several partitions. The window is
+   *  partitioned on [[oneRankGroup]], a constant: it holds the same
+   *  rows as a partition-less window, and the limit's one partition
+   *  already satisfies it, so it adds no exchange there.
    */
   private def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
     df.orderBy(order: _*).limit(k)
-      .withColumn("rank", row_number().over(Window.orderBy(order: _*)).cast("long"))
+      .withColumn("rank", row_number()
+        .over(Window.partitionBy(oneRankGroup).orderBy(order: _*)).cast("long"))
+
+  /** The constant key of [[topK]]'s rank window. A UDF and not a
+   *  literal: the optimizer strips a literal partition key
+   *  (EliminateWindowPartitions), which leaves a partition-less window
+   *  that Spark warns about as a single-partition hazard on every
+   *  ranked query, although this one sees at most k rows.
+   */
+  private val oneRankGroup: Column = udf(() => 0).apply()
 
   /** The 16-way hash bucket every bucketed leg keys on — `post` and
    *  `pos` on the token, `del` on the deletion variant, `docs` on the
@@ -293,28 +305,33 @@ object TextIndex {
       idCol: String, textCol: String, key: Option[String] = None,
       legs: LegProfile = LegProfile.Serving): Unit = {
     val txn = IndexCore.freshTxn(spark, dir, key, "shard")
-    // forward-store snapshot: when the docs leg is requested the input
-    // is materialized ONCE up front and every leg (tp included)
-    // derives from that snapshot — a nondeterministic source (sampled/
-    // limited/rand-derived) would otherwise publish a forward store
-    // whose rows disagree with the postings built from a second
-    // evaluation of the same plan. The id is normalized to long here
-    // (loud for non-integral ids) so the fb bucket written at ingest
-    // equals the bucket docsFor recomputes from its Seq[Long] literals
-    // — xxhash64 hashes IntegerType and LongType differently, so a raw
-    // int id would silently fail the fb directory prune at lookup.
-    val snap: Option[DataFrame] = Option.when(legs.docs) {
-      val idType = docs.schema(idCol).dataType.typeName
-      require(Seq("byte", "short", "integer", "long").contains(idType),
-        s"forward docs leg needs an integral id column (docsFor probes " +
-          s"by Seq[Long]); got $idCol: $idType — use LegProfile.Minimal " +
-          "or map ids to long first")
-      val s = docs.select(col(idCol).cast("long").as(idCol),
-        col(textCol).cast("string").as(textCol)).persist()
-      s.count(): Unit
-      s
-    }
-    val src = snap.getOrElse(docs)
+    // the shard is materialized ONCE up front and every leg derives from
+    // that snapshot — a nondeterministic source (sampled/limited/rand-
+    // derived) would otherwise publish a forward store whose rows
+    // disagree with the postings built from a second evaluation of the
+    // same plan; its count sizes the write (WriteBatch). For the docs
+    // leg the id is normalized to long here (loud for non-integral ids)
+    // so the fb bucket written at ingest equals the bucket docsFor
+    // recomputes from its Seq[Long] literals — xxhash64 hashes
+    // IntegerType and LongType differently, so a raw int id would
+    // silently fail the fb directory prune at lookup.
+    val id =
+      if (!legs.docs) col(idCol)
+      else {
+        val idType = docs.schema(idCol).dataType.typeName
+        require(Seq("byte", "short", "integer", "long").contains(idType),
+          s"forward docs leg needs an integral id column (docsFor probes " +
+            s"by Seq[Long]); got $idCol: $idType — use LegProfile.Minimal " +
+            "or map ids to long first")
+        col(idCol).cast("long")
+      }
+    val snap = docs.select(id.as(idCol),
+      col(textCol).cast("string").as(textCol)).persist()
+    // a bounded shard runs every leg in ONE task: the tokenize group,
+    // the dl join and each leg's grouping plan no exchange, and the one
+    // task writes one file per bucket per leg
+    val one = WriteBatch.oneTask(WriteBatch.materialize(snap))
+    val src = WriteBatch.narrow(snap, one)
     // ONE tokenize pass feeds every leg: (doc, token)-grain rows with
     // tf AND the sorted 1-based raw-array positions (1-based so the
     // positional probe and a 1-based SQL formulation agree exactly)
@@ -331,31 +348,27 @@ object TextIndex {
       // parallel jobs on a cold persist all race to compute the same
       // tokenize+group (the cache only dedups work once populated), so
       // one count here makes the six writes read, not recompute
-      tp.count(): Unit
+      WriteBatch.materialize(tp): Unit
       val dl = tp.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
       val name = IndexCore.entryName("c", None)
+      // bucket-grain files: one file per bucket per shard instead of
+      // tasks×buckets — the read path's file count stays
+      // ∝ shards×TokenBuckets
+      def bucketed(df: DataFrame, b: String): DataFrame =
+        WriteBatch.clustered(df, one, Some(TokenBuckets), col(b))
       // the legs all derive from the persisted tp and land under
       // ONE not-yet-visible commit dir — write them concurrently (the
       // ManifestStore.ingestBatchAtomic discipline): atomicity comes
       // from the version-file create, not from write order
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
       val writes: Seq[() => Unit] = Seq(
         Some(() =>
-          tp.join(dl, "doc_id")
+          bucketed(tp.join(dl, "doc_id")
             .select(col("token"), col("doc_id"), col("tf"), col("dl"),
-              hashBucket(col("token")).as("tb"))
-            // bucket-grain tasks before the partitioned write: one file
-            // per bucket per shard instead of tasks×buckets — the read
-            // path's file count stays ∝ shards×TokenBuckets, and a shard
-            // is a bounded ingest batch so bucket-grain tasks stay small
-            .repartition(TokenBuckets, col("tb"))
+              hashBucket(col("token")).as("tb")), "tb")
             .write.partitionBy("tb").parquet(s"$dir/data/$name/post")),
         Option.when(legs.pos)(() =>
-          tp.select(col("token"), col("doc_id"), col("positions"),
-              hashBucket(col("token")).as("tb"))
-            .repartition(TokenBuckets, col("tb"))
+          bucketed(tp.select(col("token"), col("doc_id"), col("positions"),
+              hashBucket(col("token")).as("tb")), "tb")
             .write.partitionBy("tb").parquet(s"$dir/data/$name/pos")),
         Some(() =>
           tp.groupBy("token").agg(count(lit(1)).as("df"))
@@ -367,12 +380,11 @@ object TextIndex {
           // vocabulary-grain × ~|token|² variant rows — tiny next to
           // postings; bucketed on the VARIANT so a suggest query prunes
           // to its own variants' buckets
-          tp.select(col("token")).distinct()
+          bucketed(tp.select(col("token")).distinct()
             .select(explode(delVariants(col("token"))).as("variant"),
               col("token"))
             .select(col("variant"), col("token"),
-              hashBucket(col("variant")).as("db"))
-            .repartition(TokenBuckets, col("db"))
+              hashBucket(col("variant")).as("db")), "db")
             .write.partitionBy("db").parquet(s"$dir/data/$name/del")),
         Some(() =>
           dl.agg(count(lit(1)).as("nd"), sum(col("dl")).as("tl"))
@@ -381,17 +393,15 @@ object TextIndex {
           // reads the SNAPSHOT (id already long) — never re-evaluates
           // the caller's frame, so forward text always agrees with the
           // postings built from the same rows
-          src.select(col(idCol).as("doc_id"), col(textCol).as("text"),
-              hashBucket(col(idCol)).as("fb"))
-            .repartition(TokenBuckets, col("fb"))
+          bucketed(src.select(col(idCol).as("doc_id"), col(textCol).as("text"),
+              hashBucket(col(idCol)).as("fb")), "fb")
             .write.partitionBy("fb").parquet(s"$dir/data/$name/docs"))
       ).flatten
-      Await.result(
-        Future.sequence(writes.map(w => Future(w()))), Duration.Inf): Unit
+      graft.util.Par.par(writes): Unit
       IndexCore.publishAppend(spark, dir, name, txn, "shard")
     } finally {
       tp.unpersist(): Unit
-      snap.foreach(_.unpersist(): Unit)
+      snap.unpersist(): Unit
     }
   }
 
@@ -1754,9 +1764,6 @@ object TextIndex {
     def foldedVocab: DataFrame =
       withDelta("vocab").groupBy("token").agg(sum(col("df")).as("df"))
         .where(col("df") > 0)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
     val jobs = Seq(
       Some(() =>
         scoped("post")
@@ -1794,8 +1801,7 @@ object TextIndex {
           .repartition(TokenBuckets, col("fb"))
           .write.partitionBy("fb").parquet(s"$dst/docs"))
     ).flatten
-    Await.result(
-      Future.sequence(jobs.map(j => Future(j()))), Duration.Inf): Unit
+    graft.util.Par.par(jobs): Unit
   }
 
   /** Full fold: every live shard commit into one. Right for an
@@ -1884,9 +1890,6 @@ object TextIndex {
               else
                 df.repartition(TokenBuckets, col(bcol))
                   .write.partitionBy(bcol).parquet(s"$dst/$leg")
-            import scala.concurrent.{Await, ExecutionContext, Future}
-            import scala.concurrent.duration.Duration
-            implicit val ec: ExecutionContext = ExecutionContext.global
             val jobs = Seq(
               Some(() => bucketed(post2
                 .select(col("token"), col("doc_id"), col("tf"), col("dl"),
@@ -1913,8 +1916,7 @@ object TextIndex {
                   .select(col("variant"), col("token"), col("db")),
                   "db", "del"))
             ).flatten
-            Await.result(
-              Future.sequence(jobs.map(j => Future(j()))), Duration.Inf): Unit
+            graft.util.Par.par(jobs): Unit
             Some(c -> name)
           }
         } finally {

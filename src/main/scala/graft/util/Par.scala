@@ -19,9 +19,13 @@ package graft.util
  *    par calls' `Await` still gets ForkJoin managed-blocking
  *    compensation up to the cap, but can no longer grow the global
  *    pool's compensation threads without bound.
+ *
+ * Each thunk runs under the caller's Spark job properties (job group,
+ * tags, SQL execution), so its jobs cancel and count with the caller's.
  */
 object Par {
   import java.util.concurrent.{ForkJoinPool, TimeUnit}
+  import org.apache.spark.sql.graftbridge.GraftLocalProps
   import scala.concurrent.{Await, ExecutionContext, Future}
   import scala.concurrent.duration.Duration
   import scala.util.{Failure, Try}
@@ -36,10 +40,11 @@ object Par {
 
   def par[T](fs: Seq[() => T]): Seq[T] = {
     implicit val e: ExecutionContext = ec
+    val props = GraftLocalProps.capture()
     // Try-wrapped so Future.sequence cannot short-circuit: the await
     // completes only when ALL thunks have run to completion
-    val done = Await.result(
-      Future.sequence(fs.map(f => Future(Try(f())))), Duration.Inf)
+    val done = Await.result(Future.sequence(
+      fs.map(f => Future(Try(GraftLocalProps.runWith(props)(f()))))), Duration.Inf)
     done.collectFirst { case Failure(err) => err }.foreach(throw _)
     done.map(_.get)
   }

@@ -160,6 +160,33 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("a ranked BM25 partitions its rank window and adds no exchange above the top-k") {
+    withPlainPlans {
+      import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+      import org.apache.spark.sql.execution.window.WindowExec
+      val idx = TestSpark.tmpDir("plan_bm25_rank")
+      val s = spark
+      import s.implicits._
+      graft.text.TextIndex.ingestShard(spark, idx,
+        Seq((0L, "merge sort merge"), (1L, "window merge"), (2L, "scan window"))
+          .toDF("doc_id", "text"), "doc_id", "text")
+      val df = graft.text.TextIndex.searchBm25(spark, idx, Seq("merge", "window"), 10)
+      val plan = df.queryExecution.executedPlan
+      val wins = plan.collectWithSubqueries { case w: WindowExec => w }
+      // a partition-less WindowExec is the single-partition hazard Spark
+      // warns about on every query, although this one ranks <= k rows
+      assert(wins.nonEmpty && wins.forall(_.partitionSpec.nonEmpty),
+        s"rank window without a partition spec:\n${plan.toString.take(2000)}")
+      def aboveTopK(p: SparkPlan): Seq[SparkPlan] = p match {
+        case _: TakeOrderedAndProjectExec => Nil
+        case o => o +: o.children.flatMap(aboveTopK)
+      }
+      assert(wins.forall(w => !aboveTopK(w.child).exists(_.isInstanceOf[ShuffleExchangeExec])),
+        s"the rank window shuffles the top-k:\n${plan.toString.take(2000)}")
+      assert(df.collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L), "ranks 1..n")
+    }
+  }
+
   test("text_index_search_batch keeps the single-query plan shape: bucket pruning, broadcast legs, rank-limited per-query window") {
     withPlainPlans {
       val df = SparkEntry.queries("text_index_search_batch")(spark, sf)
