@@ -70,9 +70,12 @@ final class GraftApi(spark: SparkSession, root: String, commentsPath: String) {
     ManifestStore.ingestBatchAtomic(spark, root, batchLong): Unit
   }
 
-  /** GET /api/datasets?text=q (server.py:57-60, index.py:219-239). */
+  /** GET /api/datasets?text=q (server.py:57-60, index.py:219-239),
+   *  answered from the store's memoized catalog as a local frame: a
+   *  warm search starts no Spark job and scans no data.
+   */
   def datasets(query: String, maxCount: Int = 300): DataFrame =
-    Search.datasets(ManifestStore.readRaw(spark, root), query, maxCount)
+    Search.datasets(spark, ManifestStore.datasetIds(spark, root), query, maxCount)
 
   /** POST /api/comment/new — EPOCH-nanosecond id assigned HERE, never
    *  inside a distributed job (marks.py:82 uses `time.time_ns()`:

@@ -1,6 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /**
@@ -15,12 +16,20 @@ import org.apache.spark.sql.functions._
  * public/histogram.js:157-163). Y-axis bounds are min/max over the same
  * in-range points (public/axes.js:118-164).
  *
- * Spark-first: two distributed aggregations — a 1-row stats pass
- * (min/max/distinct), then a groupBy on the computed bucket index. The
- * reference instead sorts all values client-side (histogram.js:73);
- * a sort is exactly what we avoid at scale. The 1-row stats result is
- * cross-joined (broadcast, 1 row) rather than collected so the whole
- * thing stays one lazy plan.
+ * Spark-first, in one of two plan shapes chosen by the input plan's
+ * own output partitioning:
+ *  - a ONE-PARTITION input (a chart whose merge-on-read fold runs in
+ *    one task) is read once: one aggregate collects min, max, the
+ *    distinct count and the values, and the bars group the exploded
+ *    values in that same task — no exchange, no broadcast, one job;
+ *  - any other input keeps two distributed aggregations — a 1-row
+ *    stats pass (min/max/distinct), cross-joined as a 1-row broadcast
+ *    rather than collected so the whole thing stays one lazy plan,
+ *    then a groupBy on the computed bucket index. Nothing ever moves
+ *    the points to one partition.
+ * The reference instead sorts all values client-side (histogram.js:73);
+ * a sort is exactly what we avoid at scale. Null values are not binned
+ * (the stats aggregates skip them too), in both shapes.
  */
 object Histogram {
 
@@ -39,19 +48,27 @@ object Histogram {
    */
   def histogram(points: DataFrame, valueCol: String, maxBars: Int = 30): DataFrame = {
     val v = col(valueCol)
-    val stats = points.agg(
+    val stats = Seq(
       min(v).as("h_min"),
       max(v).as("h_max"),
       count_distinct(v).as("h_distinct"))
+    // (h_v, h_min, h_max, h_distinct): every non-null value with the stats
+    val binned =
+      if (onePartition(points))
+        points.agg(stats.head, stats.tail :+ collect_list(v).as("h_vs"): _*)
+          .select(explode(col("h_vs")).as("h_v"),
+            col("h_min"), col("h_max"), col("h_distinct"))
+      else
+        points.select(v.as("h_v")).where(col("h_v").isNotNull)
+          .crossJoin(broadcast(points.agg(stats.head, stats.tail: _*)))
     val n = least(col("h_distinct"), lit(maxBars.toLong))
     val width = (col("h_max") - col("h_min")) / n.cast("double")
-    points
-      .crossJoin(broadcast(stats))
+    binned
       .withColumn(
         "bucket",
         when(col("h_distinct") <= 1L, lit(0L)).otherwise(
           least(
-            floor((v - col("h_min")) / width).cast("long"),
+            floor((col("h_v") - col("h_min")) / width).cast("long"),
             n - 1L)))
       .groupBy(col("bucket"), col("h_min"), col("h_max"), n.as("n_buckets"))
       .agg(count(lit(1)).as("cnt"))
@@ -61,4 +78,13 @@ object Histogram {
         (col("h_min") + (col("bucket") + 1) * (col("h_max") - col("h_min")) / col("n_buckets")).as("hi"),
         col("cnt"))
   }
+
+  /** True iff `df`'s physical plan (exchanges planned, before adaptive
+   *  execution re-plans it) delivers exactly one partition.
+   */
+  private[graft] def onePartition(df: DataFrame): Boolean =
+    (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }).outputPartitioning.numPartitions == 1
 }

@@ -1,9 +1,11 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.query.TopK
 import graft.store.{FsckScope, IndexCore, IndexLeg}
 import graft.store.IndexCore.isViol
 
@@ -645,42 +647,66 @@ object Similarity {
   /** Probe the stored postings: queries rank exactly within their
    *  nProbe nearest cells; the per-commit cell partitioning prunes the
    *  scan to those directories.
+   *
+   *  A LOCAL query frame (one whose optimized plan is a LocalRelation,
+   *  e.g. an API caller's few vectors: `Dataset.isLocal` misses the
+   *  renaming Project of a `toDF(names)`) plans its probes on the
+   *  driver: the TopCentroids Project over a LocalRelation folds to a
+   *  local relation, so collecting it starts no job, and the postings
+   *  are scored against that driver-known probe set, carried as a
+   *  literal cell → queries map — no probed-cell job, no probe
+   *  broadcast. One query vector ranks with the bounded [[TopK]], so a
+   *  warm one-vector probe with no live tombstone is one Spark job. A
+   *  distributed query frame collects its probed cells and joins the
+   *  broadcast probes. Both shapes return the same rows.
    */
   def ivfIndexQuery(
       spark: org.apache.spark.sql.SparkSession, dir: String, queries: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
     val cents = servedCentroids(spark, dir)
     val (ids, vecs) = (cents.map(_._1), cents.flatMap(_._2))
-    val probes = queries.select(
-      col("vec_id").as("q_id"), col("v").as("qv"),
-      explode(
-        toCol(graft.functions.TopCentroids(toExpr(col("v")), ids, vecs, nProbe)))
-        .as("cell"))
+    val topCells =
+      toCol(graft.functions.TopCentroids(toExpr(col("v")), ids, vecs, nProbe))
     // the probed cell set is driver-computable and BOUNDED by the
-    // centroid count (itself collectBounded ≤ 65536 just above) — so
-    // prune each per-commit posting read with a STATIC cell filter
-    // instead of trusting dynamic partition pruning to fire through
-    // the union (it does not reliably propagate through per-commit
-    // branches, and a silent DPP miss would scan every cell of every
-    // commit). The plan carries `PartitionFilters: [cell IN (...)]`
-    // per branch — guarded by PlanAuditSpec.
-    val probedCells = probes.select("cell").distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    // per-commit roots each carry their own cell=N partition tree — a
-    // multi-root partitioned read conflicts, so read per commit and
-    // union (same leaf files either way)
-    val postings = livePosts(spark, dir, df =>
-      df.where(
-        col("cell").isin(probedCells: _*)))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no live posting commits in IVF index $dir"))
-    rankTopK(
-      postings
-        .join(broadcast(probes), Seq("cell"))
-        .where(col("q_id") =!= col("vec_id"))
-        .withColumn("cos", cosine(col("qv"), col("v")))
-        .withColumnRenamed("vec_id", "n_id"),
-      k)
+    // centroid count (itself collectBounded ≤ 65536) — so prune each
+    // per-commit posting read with a STATIC cell filter instead of
+    // trusting dynamic partition pruning to fire through the union (it
+    // does not reliably propagate through per-commit branches, and a
+    // silent DPP miss would scan every cell of every commit). The plan
+    // carries `PartitionFilters: [cell IN (...)]` per branch — guarded
+    // by PlanAuditSpec. Per-commit roots each carry their own cell=N
+    // partition tree — a multi-root partitioned read conflicts, so read
+    // per commit and union (same leaf files either way).
+    def postingsIn(cells: Seq[Long]): DataFrame =
+      livePosts(spark, dir, df => df.where(col("cell").isin(cells: _*)))
+        .getOrElse(throw new IllegalArgumentException(
+          s"no live posting commits in IVF index $dir"))
+    def scored(cands: DataFrame): DataFrame =
+      cands.where(col("q_id") =!= col("vec_id"))
+        .select(col("q_id"), col("vec_id").as("n_id"),
+          cosine(col("qv"), col("v")).as("cos"))
+    if (queries.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) {
+      val qs = queries.select(col("vec_id").cast("long"), col("v"), topCells).collect()
+        .filterNot(_.isNullAt(0)) // a null id matches no posting
+        .map(r => (r.getLong(0), r.getSeq[Double](1),
+          Option(r.getSeq[Long](2)).getOrElse(Nil))) // a null vector probes nothing
+      val byCell: Map[Long, Seq[(Long, Seq[Double])]] = qs.toSeq
+        .flatMap { case (q, v, cells) => cells.map(_ -> (q, v)) }
+        .groupMap(_._1)(_._2)
+      val hits = scored(postingsIn(byCell.keys.toSeq.sorted)
+        .withColumn("q", explode(element_at(typedLit(byCell), col("cell"))))
+        .select(col("vec_id"), col("v"),
+          col("q._1").cast(queries.schema("vec_id").dataType).as("q_id"),
+          col("q._2").as("qv")))
+      if (qs.length == 1) TopK(hits, k, col("cos").desc, col("n_id"))
+      else rankTopK(hits, k)
+    } else {
+      val probes = queries.select(
+        col("vec_id").as("q_id"), col("v").as("qv"), explode(topCells).as("cell"))
+      val probedCells = probes.select("cell").distinct()
+        .collect().map(_.getLong(0)).sorted.toSeq
+      rankTopK(scored(postingsIn(probedCells).join(broadcast(probes), Seq("cell"))), k)
+    }
   }
 
   /** INDEX OBSERVABILITY: cell-balance report for a persisted IVF

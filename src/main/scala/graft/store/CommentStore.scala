@@ -75,7 +75,10 @@ object CommentStore {
   /** Current comments, date-sorted. Plain externally-written tables
    *  (no `_seq` column) are served as-is; log-shaped tables are read
    *  with their pinned schema (no inference job), fold latest-per-id
-   *  and drop tombstones.
+   *  and drop tombstones — in ONE task: the log holds at most
+   *  [[CompactAfterParts]] parts past its broadcast-small base, so the
+   *  fold coalesces below its latest-per-id window (as the chart fold
+   *  does) and a read plans no exchange, one Spark job.
    */
   def load(spark: SparkSession, path: String): DataFrame =
     if (!StoreFs.exists(spark, path))
@@ -85,7 +88,7 @@ object CommentStore {
       spark.read.parquet(path).select(schema.fields.toIndexedSeq.map(f =>
         col(f.name).cast(f.dataType)): _*)
     else
-      spark.read.schema(logSchema).parquet(path)
+      spark.read.schema(logSchema).parquet(path).coalesce(1)
         .withColumn("_rn",
           row_number().over(Window.partitionBy("id").orderBy(col("_seq").desc)))
         .where(col("_rn") === 1 && !col("_del"))

@@ -682,6 +682,29 @@ object IndexCore {
     hit ++ got
   }
 
+  /** MEMO OF PER-ENTRY VALUES — a value folded from ONE published
+   *  entry alone (a raw commit's distinct series ids). An entry name is
+   *  never reused and its data never rewritten in place, so the value
+   *  stays exact for as long as the entry lives: it needs no live-set
+   *  stamp, and a new commit misses only for its own entry. `fetch`
+   *  folds the `missing` entries and returns a value for each. The
+   *  values share [[memo]]'s map, its [[MemoEntries]] bound and
+   *  [[vacuum]]'s drop.
+   */
+  def memoPerEntry[V](dir: String, part: String, entries: Seq[String])(
+      fetch: Seq[String] => Map[String, V]): Map[String, V] = {
+    def key(e: String) = (dir, s"$part/$e")
+    val hit = memoMap.synchronized {
+      entries.flatMap(e => Option(memoMap.get(key(e))).map(e -> _._2.asInstanceOf[V]))
+    }.toMap
+    val missing = entries.filterNot(hit.contains)
+    val got = if (missing.isEmpty) Map.empty[String, V] else fetch(missing)
+    memoMap.synchronized {
+      got.foreach { case (e, v) => memoMap.put(key(e), (Seq(e), v)) }
+    }
+    hit ++ got
+  }
+
   /** Forget every memoized value of `dir`. */
   def dropMemo(dir: String): Unit = memoMap.synchronized {
     memoMap.keySet.removeIf(_._1 == dir): Unit

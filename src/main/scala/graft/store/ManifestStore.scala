@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -929,9 +929,6 @@ object ManifestStore {
       key: Option[String], maxLiveCommits: Int,
       partialsOf: DataFrame => DataFrame): (WapOutcome, DataFrame) = {
     require(expectations.nonEmpty, "ingestBatchAudited without expectations")
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
     import spark.implicits._
     val conservationNames = Fidelity.aggLevels
       .map(f => s"rollup_cnt_conservation_${Tables.fidelityPart(f)}")
@@ -953,22 +950,18 @@ object ManifestStore {
     //    manifest_history checks post-hoc, moved pre-publish so an
     //    allLevelPartials writer bug never becomes visible data).
     // Cost of both ∝ batch, never ∝ table.
-    val countsF = Future {
-      spark.read.schema(rawCommitSchema).parquet(entryDir(root, rawName))
-        .select(Tables.rawSchema.fieldNames.map(col).toIndexedSeq: _*)
-        .agg(
-          count(lit(1)).as("__n"),
-          expectations.map { case (n, pred) =>
-            sum(when(pred.isNull || !pred, 1L).otherwise(0L)).as(n)
-          }: _*).head()
-    }
-    val perLevelF = Future {
-      readPartials(spark, root, rollName)
-        .groupBy("fidelity").agg(sum(col("cnt")).as("c"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
-    val counts = Await.result(countsF, Duration.Inf)
-    val perLevel = Await.result(perLevelF, Duration.Inf)
+    val Seq(Left(counts), Right(perLevel)) =
+      graft.util.Par.par[Either[Row, Map[String, Long]]](Seq(
+        () => Left(spark.read.schema(rawCommitSchema).parquet(entryDir(root, rawName))
+          .select(Tables.rawSchema.fieldNames.map(col).toIndexedSeq: _*)
+          .agg(
+            count(lit(1)).as("__n"),
+            expectations.map { case (n, pred) =>
+              sum(when(pred.isNull || !pred, 1L).otherwise(0L)).as(n)
+            }: _*).head()),
+        () => Right(readPartials(spark, root, rollName)
+          .groupBy("fidelity").agg(sum(col("cnt")).as("c"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)))
     val nRaw = counts.getLong(0)
     // violations for a conservation row = the absolute row-count
     // discrepancy at that level (an absent level counts all nRaw)
@@ -998,6 +991,31 @@ object ManifestStore {
    */
   def readRaw(spark: SparkSession, root: String): DataFrame =
     readRawDirs(spark, rawDirEntries(latest(spark, root)._2), root)
+
+  /** The distinct series ids of the live raw commits, sorted — the
+   *  catalog, served from the per-entry memo
+   *  ([[IndexCore.memoPerEntry]]): a raw commit is immutable, so its id
+   *  set is folded once, and a miss reads only the commits the memo
+   *  lacks, in one Spark job with no exchange (each task dedupes its
+   *  own rows, the driver merges the per-task sets). A warm catalog
+   *  starts no job. Ids are ASCII ([[graft.ingest.Melt.requireLegalId]]),
+   *  so the driver's sort is Spark's string order.
+   */
+  def datasetIds(spark: SparkSession, root: String): Seq[String] =
+    IndexCore.memoPerEntry(storeDir(root), "dataset_ids",
+        rawDirEntries(latest(spark, root)._2)) { missing =>
+      import spark.implicits._
+      val found = spark.read.schema(rawCommitSchema)
+        .parquet(missing.map(entryDir(root, _)): _*)
+        .select(col("_metadata.file_path"), col("dataset_id"))
+        .where(col("dataset_id").isNotNull)
+        .as[(String, String)]
+        .mapPartitions(_.toSet.iterator)
+        .collect()
+        // an r- commit is unpartitioned: a file's parent dir is its entry
+        .groupMap { case (f, _) => f.split('/').dropRight(1).last }(_._2)
+      missing.map(e => e -> found.getOrElse(e, Array.empty[String]).toSeq).toMap
+    }.values.flatten.toSeq.distinct.sorted
 
   /** Snapshot raw read AS OF a published version. Because
    *  [[ingestBatchAtomic]] publishes both tables in one version, the

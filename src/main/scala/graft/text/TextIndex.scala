@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.query.TopK
 import graft.store.{IndexCore, IndexLeg, WriteBatch}
 import IndexCore.{dataDir, isViol, legPath}
 
@@ -199,35 +200,6 @@ object TextIndex {
   private[graft] def bucketsOf(keys: DataFrame): Seq[Long] =
     keys.select(hashBucket(col("k"))).collect().map(_.getLong(0))
       .distinct.toSeq
-
-  /** BOUNDED TOP-K RANK: the first `k` rows of `df` in `order` (a
-   *  total order — every caller ends it with its unique key, so ties
-   *  keep their tie-breakers), with a leading 1-based `rank`.
-   *  `orderBy(...).limit(k)` plans as TakeOrderedAndProject: a top-k
-   *  per task, then one merge over at most k rows per task — never the
-   *  whole input through one task, as a partition-less
-   *  `row_number() OVER (ORDER BY ...)` straight over `df` would. The
-   *  rank window then sees at most k rows and sits on the limit's one
-   *  output partition, so it adds no exchange; it is a window and not a
-   *  row counter because the optimizer may drop a limit over an input
-   *  already known to hold ≤ k rows, and the global sort left in its
-   *  place spreads its output over several partitions. The window is
-   *  partitioned on [[oneRankGroup]], a constant: it holds the same
-   *  rows as a partition-less window, and the limit's one partition
-   *  already satisfies it, so it adds no exchange there.
-   */
-  private def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
-    df.orderBy(order: _*).limit(k)
-      .withColumn("rank", row_number()
-        .over(Window.partitionBy(oneRankGroup).orderBy(order: _*)).cast("long"))
-
-  /** The constant key of [[topK]]'s rank window. A UDF and not a
-   *  literal: the optimizer strips a literal partition key
-   *  (EliminateWindowPartitions), which leaves a partition-less window
-   *  that Spark warns about as a single-partition hazard on every
-   *  ranked query, although this one sees at most k rows.
-   */
-  private val oneRankGroup: Column = udf(() => 0).apply()
 
   /** The 16-way hash bucket every bucketed leg keys on — `post` and
    *  `pos` on the token, `del` on the deletion variant, `docs` on the
@@ -784,7 +756,7 @@ object TextIndex {
           .cast("long"))
       .groupBy("doc_id")
       .agg(sum("score_ppm").as("score_ppm"), count(lit(1)).as("n_terms"))
-    topK(scores, k, col("score_ppm").desc, col("doc_id"))
+    TopK(scores, k, col("score_ppm").desc, col("doc_id"))
       .select(col("rank"), col("doc_id"), col("score_ppm"), col("n_terms"))
   }
 
@@ -1043,7 +1015,7 @@ object TextIndex {
    *  vocabulary-grain (≪ corpus); the prefix cannot bucket-prune
    *  (buckets hash whole tokens) but pushes to the vocab scan as a
    *  StringStartsWith row-group filter, and the ranking is a
-   *  [[topK]] over the prefix matches — no global single-partition
+   *  [[TopK]] over the prefix matches — no global single-partition
    *  window over the full match set. Returns (rank, token, df).
    */
   def suggestPrefix(
@@ -1053,7 +1025,7 @@ object TextIndex {
       .where(col("token").startsWith(prefix))
       .groupBy("token").agg(sum("df").as("df"))
       .where(col("df") > 0) // fully-deleted tokens must stop suggesting
-    topK(top, k, col("df").desc, col("token"))
+    TopK(top, k, col("df").desc, col("token"))
       .select(col("rank"), col("token"), col("df"))
   }
 
@@ -1179,7 +1151,7 @@ object TextIndex {
           .where(col("df") > 0)
           .join(distDf, "token")
       }
-    topK(scored, k, col("dist").asc, col("df").desc, col("token"))
+    TopK(scored, k, col("dist").asc, col("df").desc, col("token"))
       .select(col("rank"), col("token"), col("dist"), col("df"))
   }
 
@@ -1227,7 +1199,7 @@ object TextIndex {
       .where(col("nmatch") === n)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_occurrences"))
-    topK(occurrences, k, col("n_occurrences").desc, col("doc_id"))
+    TopK(occurrences, k, col("n_occurrences").desc, col("doc_id"))
       .select(col("rank"), col("doc_id"), col("n_occurrences"))
   }
 
@@ -1299,7 +1271,7 @@ object TextIndex {
             }.reduce(_ && _))))
           .otherwise(lit(0)).cast("long"))
       .where(col("n_occurrences") > 0)
-    topK(occurrences, k, col("n_occurrences").desc, col("doc_id"))
+    TopK(occurrences, k, col("n_occurrences").desc, col("doc_id"))
       .select(col("rank"), col("doc_id"), col("n_occurrences"))
   }
 
@@ -1340,7 +1312,7 @@ object TextIndex {
         (col("pos") - col("lmin") + 1).cast("long").as("wl"))
       .groupBy("doc_id").agg(min(col("wl")).as("min_window"))
       .where(col("min_window") <= w)
-    topK(windows, k, col("min_window").asc, col("doc_id"))
+    TopK(windows, k, col("min_window").asc, col("doc_id"))
       .select(col("rank"), col("doc_id"), col("min_window"))
   }
 
@@ -1403,7 +1375,7 @@ object TextIndex {
         (col("pos") - col("chain_start") + 1).cast("long").as("wl"))
       .groupBy("doc_id").agg(min(col("wl")).as("min_window"))
       .where(col("min_window") <= w)
-    topK(windows, k, col("min_window").asc, col("doc_id"))
+    TopK(windows, k, col("min_window").asc, col("doc_id"))
       .select(col("rank"), col("doc_id"), col("min_window"))
   }
 

@@ -370,6 +370,46 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("histogram: a one-partition chart bins in its one task with no exchange or broadcast; the registered query's points never reach one partition") {
+    withPlainPlans {
+      import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+      import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+      import org.apache.spark.sql.execution.window.WindowExec
+      val root = TestSpark.tmpDir("hist_plan")
+      for (i <- 0 until 3)
+        graft.store.ManifestStore.ingestBatchAtomic(spark, root, TestSpark.longDF(Seq(
+          ("a", s"2024-01-01T00:00:0$i", i.toDouble), ("b", s"2024-01-01T00:00:0$i", 2.0))))
+      val chart = new graft.api.GraftApi(spark, root, s"$root-comments").getData("a",
+        TestSpark.isoUs("2024-01-01T00:00:00"), TestSpark.isoUs("2024-01-01T00:00:02"),
+        Some(graft.model.Fidelity.S1))
+      val one = graft.query.Histogram.histogram(chart, "mean_v", 30)
+      val onePlan = one.queryExecution.executedPlan
+      assert(shuffleCount(one) == 0 &&
+        onePlan.collectWithSubqueries { case b: BroadcastExchangeExec => b }.isEmpty,
+        s"the one-task histogram grew an exchange:\n${onePlan.toString.take(3000)}")
+      assert(one.collect().map(r => (r.getLong(0), r.getLong(3))).toSet ==
+        Set((0L, 1L), (1L, 1L), (2L, 1L)), "one-task histogram answer")
+
+      val many = SparkEntry.queries("histogram")(spark, sf)
+      val plan = many.queryExecution.executedPlan
+      val windows = plan.collectWithSubqueries { case w: WindowExec => w }
+      assert(windows.forall(_.partitionSpec.nonEmpty), "a single-partition window")
+      // an exchange to one partition may only gather a global aggregate's
+      // partial rows (one per task), never the points themselves
+      val toOne = plan.collectWithSubqueries {
+        case e: ShuffleExchangeExec if e.outputPartitioning.numPartitions == 1 => e
+      }
+      assert(toOne.forall(_.child match {
+        case org.apache.spark.sql.execution.WholeStageCodegenExec(a: BaseAggregateExec) =>
+          a.groupingExpressions.isEmpty
+        case a: BaseAggregateExec => a.groupingExpressions.isEmpty
+        case _ => false
+      }), s"the points are exchanged to one partition:\n${plan.toString.take(3000)}")
+      assert(plan.collectWithSubqueries { case b: BroadcastExchangeExec => b }.size == 1,
+        "the stats pass is no longer a one-row broadcast")
+    }
+  }
+
   test("grouped quantile sketch never plans an un-partitioned window") {
     withPlainPlans {
       import org.apache.spark.sql.functions.col

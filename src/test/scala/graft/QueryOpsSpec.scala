@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -88,6 +89,34 @@ class QueryOpsSpec extends AnyFunSuite {
     val const = Seq.fill(5)(("h", 0L, 42.0)).toDF("dataset_id", "ts_us", "value")
     val one = Histogram.histogram(const, "value", 30).collect()
     assert(one.length == 1 && one.head.getLong(0) == 0 && one.head.getLong(3) == 5)
+  }
+
+  test("histogram bins no null value, and its one-task and two-pass plan shapes answer the same") {
+    val s = spark
+    import s.implicits._
+    def bars(df: DataFrame): Seq[(Long, Double, Double, Long)] =
+      Histogram.histogram(df, "value", 30).collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getLong(3))).toSeq.sorted
+    def shapes(df: DataFrame): Seq[DataFrame] = {
+      val (one, many) = (df.coalesce(1), df.repartition(3))
+      assert(Histogram.onePartition(one) && !Histogram.onePartition(many))
+      Seq(one, many)
+    }
+    // min, max and the distinct count skip nulls, and so do the bars:
+    // 1, 2, 3, null, null is one value per bar
+    val withNulls = Seq(Some(1.0), Some(2.0), Some(3.0), None, None)
+      .map(v => ("h", 0L, v)).toDF("dataset_id", "ts_us", "value")
+    for (df <- shapes(withNulls))
+      assert(bars(df).map(b => (b._1, b._4)) == Seq((0L, 1L), (1L, 1L), (2L, 1L)))
+    val empty = withNulls.limit(0)
+    for (df <- shapes(Seq(("h", 0L, Option.empty[Double])).toDF("dataset_id", "ts_us", "value")) ++
+        Seq(empty.coalesce(1), empty.repartition(3)))
+      assert(bars(df).isEmpty, "an input with no value has no bar")
+    val r = new scala.util.Random(7)
+    val many = Seq.fill(500)(("h", 0L, math.round(r.nextGaussian() * 1000) / 10.0))
+      .toDF("dataset_id", "ts_us", "value")
+    val Seq(one, two) = shapes(many).map(bars)
+    assert(one == two && one.size <= 30 && one.map(_._4).sum == 500)
   }
 
   test("visible-range min/max (axes.js:118-164)") {

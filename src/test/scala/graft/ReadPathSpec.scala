@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.GraftApi
 import graft.model.Fidelity
+import graft.query.{Histogram, Search}
 import graft.sim.Similarity
 import graft.store.{IndexCore, ManifestStore}
 import graft.text.TextIndex
@@ -147,6 +149,127 @@ class ReadPathSpec extends AnyFunSuite {
     assert(writeJobs == 1, s"an annotation write started $writeJobs jobs")
     val (got, readJobs) = TestSpark.countJobs(api.comments(0L, 10L).collect())
     assert(got.map(_.getLong(1)).toSeq == Seq(1L, 2L))
-    assert(readJobs <= 2, s"a comments read started $readJobs jobs")
+    assert(readJobs == 1, s"a comments read started $readJobs jobs")
+  }
+
+  private def ids(df: DataFrame): Seq[String] = df.collect().map(_.getString(0)).toSeq
+
+  test("dashboard read-op job budget: chart 1, its histogram 1, comments 1, catalog 0 warm and 1 after an ingest, one-vector ANN <= 2, warm BM25 3") {
+    val root = TestSpark.tmpDir("jobs_dash")
+    for (i <- 0 until 3)
+      ManifestStore.ingestBatchAtomic(spark, root, TestSpark.longDF(Seq(
+        ("a", s"2024-01-01T00:00:0$i", i.toDouble), ("b", s"2024-01-01T00:00:0$i", 9.0))))
+    val api = new GraftApi(spark, root, TestSpark.tmpDir("jobs_dash_comments") + "/c")
+    // three live level dirs: the chart folds in one task
+    def chart(): DataFrame = api.getData("a",
+      TestSpark.isoUs("2024-01-01T00:00:00"), TestSpark.isoUs("2024-01-01T00:00:02"),
+      Some(Fidelity.S1))
+    val (rows, chartJobs) = TestSpark.countJobs(chart().collect())
+    assert(rows.length == 3 && chartJobs == 1, s"a chart read started $chartJobs jobs")
+    val (bars, histJobs) =
+      TestSpark.countJobs(Histogram.histogram(chart(), "mean_v", 30).collect())
+    assert(bars.map(_.getLong(3)).sum == 3 && histJobs == 1,
+      s"the histogram of a one-task chart started $histJobs jobs")
+
+    api.createComment(1L, "first", Seq("t"))
+    api.createComment(2L, "second", Seq("t"))
+    val (got, commentJobs) = TestSpark.countJobs(api.comments(0L, 10L).collect())
+    assert(got.length == 2 && commentJobs == 1, s"a comments read started $commentJobs jobs")
+
+    api.datasets("")
+    val (warm, warmJobs) = TestSpark.countJobs(ids(api.datasets("")))
+    assert(warm == Seq("a", "b") && warmJobs == 0, s"a warm catalog search started $warmJobs jobs")
+    ManifestStore.ingestBatchAtomic(spark, root,
+      TestSpark.longDF(Seq(("c", "2024-01-01T00:00:05", 1.0))))
+    val (fresh, freshJobs) = TestSpark.countJobs(ids(api.datasets("")))
+    assert(fresh == Seq("a", "b", "c") && freshJobs == 1,
+      s"a catalog search after an ingest started $freshJobs jobs")
+
+    val ann = TestSpark.tmpDir("jobs_ann")
+    val vecs = (0 until 40).map(i =>
+      (i.toLong, Array(math.cos(i * 0.3), math.sin(i * 0.3), (i % 5).toDouble)))
+    Similarity.ivfIndexBuild(spark, ann, vecs.toDF("vec_id", "v"), 7L)
+    val q = Seq((-1L, Array(1.0, 0.2, 3.0))).toDF("vec_id", "v")
+    api.annQuery(ann, q, 5, 2).collect() // folds the centroid memo
+    val (nn, annJobs) = TestSpark.countJobs(api.annQuery(ann, q, 5, 2).collect())
+    assert(nn.length == 5 && annJobs <= 2, s"a one-vector ANN query started $annJobs jobs")
+
+    val idx = TestSpark.tmpDir("jobs_dash_bm25")
+    TextIndex.ingestShard(spark, idx,
+      docs((0L, "spark merge sort merge"), (1L, "window scan window window")),
+      "doc_id", "text")
+    search(idx)
+    val (_, bm25Jobs) = TestSpark.countJobs(search(idx))
+    assert(bm25Jobs == 3, s"a warm BM25 search started $bm25Jobs jobs")
+  }
+
+  test("the memoized catalog equals a scan of the live raw table across ingest, forget, fold, vacuum, an empty store and a branch") {
+    def check(root: String, what: String): Seq[String] = {
+      val api = new GraftApi(spark, root, s"$root-comments")
+      for (q <- Seq("", "s", "A", "zz")) {
+        val got = api.datasets(q)
+        val want = Search.datasets(ManifestStore.readRaw(spark, root), q)
+        assert(got.schema.map(f => (f.name, f.dataType)) ==
+          want.schema.map(f => (f.name, f.dataType)), s"$what: schema")
+        assert(ids(got) == ids(want), s"$what: datasets('$q')")
+      }
+      ids(api.datasets(""))
+    }
+    def put(root: String, series: String*): Unit =
+      ManifestStore.ingestBatchAtomic(spark, root, TestSpark.longDF(
+        series.map(s => (s, "2024-01-01T00:00:00", 1.0))))
+    val root = TestSpark.tmpDir("catalog_memo")
+    put(root, "sA")
+    assert(check(root, "after series A") == Seq("sA"))
+    put(root, "sB")
+    assert(check(root, "after series B") == Seq("sA", "sB"))
+    ManifestStore.forgetDataset(spark, root, "sA")
+    assert(check(root, "after forgetting A") == Seq("sB"))
+    put(root, "sC")
+    ManifestStore.compactRawTiered(spark, root)
+    assert(check(root, "after a raw fold") == Seq("sB", "sC"))
+    ManifestStore.vacuum(spark, root)
+    assert(check(root, "after vacuum") == Seq("sB", "sC"))
+    val empty = TestSpark.tmpDir("catalog_empty")
+    assert(check(empty, "an empty store").isEmpty)
+    val branch = TestSpark.tmpDir("catalog_branch") + "/b"
+    ManifestStore.cloneAsOf(spark, root, branch, ManifestStore.latest(spark, root)._1)
+    put(branch, "sD")
+    assert(check(branch, "a branch") == Seq("sB", "sC", "sD"))
+    assert(check(root, "the branch's source") == Seq("sB", "sC"))
+  }
+
+  test("ANN answers do not depend on the query frame: local and parquet-read queries, 1 and 3 vectors, tombstones scoped") {
+    val idx = TestSpark.tmpDir("ann_frames")
+    val vecs = (0 until 60).map(i =>
+      (i.toLong, Array(math.cos(i * 0.3), math.sin(i * 0.3), (i % 5).toDouble)))
+    Similarity.ivfIndexBuild(spark, idx, vecs.toDF("vec_id", "v"), 7L)
+    // the third query is an indexed vector: it must not find itself
+    val qs = Seq((-1L, Array(1.0, 0.2, 3.0)), (-2L, Array(-0.5, 0.9, 1.0)), (5L, vecs(5)._2))
+    val qDir = TestSpark.tmpDir("ann_frames_q")
+    def both(n: Int): Seq[(Long, Long, Double, Long)] = {
+      val local = qs.take(n).toDF("vec_id", "v")
+      local.write.mode("overwrite").parquet(s"$qDir/$n")
+      val read = spark.read.parquet(s"$qDir/$n")
+      def isLocal(df: DataFrame) = df.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      assert(isLocal(local) && !isLocal(read))
+      val Seq(a, b) = Seq(local, read).map { q =>
+        val df = Similarity.ivfIndexQuery(spark, idx, q, 5, 2)
+        assert(df.schema.map(f => (f.name, f.dataType)) == Seq("q_id" -> LongType,
+          "n_id" -> LongType, "cos" -> DoubleType, "rank" -> LongType))
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+          .toSeq.sorted
+      }
+      assert(a == b, s"$n vectors: a local query frame answered\n$a\na parquet-read one\n$b")
+      assert(a.map(_._1).distinct.size == n && a.forall(r => r._1 != r._2) &&
+        a.groupBy(_._1).values.forall(r => r.map(_._4).sorted == (1L to r.size.toLong)))
+      a
+    }
+    both(3)
+    val top = both(1).find(_._4 == 1L).get._2
+    Similarity.ivfIndexForget(spark, idx, Seq(top))
+    for (n <- Seq(1, 3))
+      assert(!both(n).exists(_._2 == top), s"$n vectors: the tombstoned vector $top was returned")
   }
 }

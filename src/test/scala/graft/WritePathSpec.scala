@@ -211,4 +211,30 @@ class WritePathSpec extends AnyFunSuite {
     assert(ManifestStore.latest(spark, root)._2.count(_.startsWith("r-")) == 1)
     assert(ManifestStore.readRaw(spark, root).collect().map(_.toString).sorted.toSeq == before)
   }
+
+  test("an audited ingest runs its audit reads in the caller's job group: countJobs sees every job") {
+    val root = TestSpark.tmpDir("wp_audit_jobs")
+    val pts = (0 until 200).map(i =>
+      (s"s${i % 5}", f"2024-01-01T00:${i / 60}%02d:${i % 60}%02d", i.toDouble))
+    ManifestStore.ingestBatchAtomic(spark, root, TestSpark.longDF(pts.take(100)))
+    val sc = spark.sparkContext
+    val all = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        all.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    val ((outcome, _), grouped) = try TestSpark.countJobs(
+      ManifestStore.ingestBatchAuditedOutcome(spark, root,
+        TestSpark.longDF(pts.drop(100)), Seq("finite" -> !isnan(col("value")))))
+    finally {
+      org.apache.spark.TestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(outcome == ManifestStore.WapOutcome.Published)
+    // staging 3, the two audit reads 2 each under adaptive execution
+    assert(grouped == all.get && grouped == 7,
+      s"an audited 100-point batch started ${all.get} jobs, $grouped in the caller's group")
+  }
 }

@@ -11,9 +11,10 @@ load hits both sides alike. Each checkout runs its own
 perfbench/run.py, which builds that checkout's sources; one unrecorded
 1-second run per side builds them before the first pair.
 
-For every end-to-end metric of BENCHMARK.json (and with --trace 1 every
-per-layer metric too) it prints the base and head medians, the head's
-change in percent, the base quartiles (statistics.quantiles, n=4), the
+For every end-to-end metric of BENCHMARK.json (with --trace 1 every
+per-layer metric instead: a traced run reports only those) it prints
+the base and head medians, the head's change in percent, the base
+quartiles (statistics.quantiles, n=4), the
 quartile spread (q3 - q1) / median of each side against the metric's
 bound, and the pairs the head won (better in the metric's direction).
 `gain` marks a metric whose head won at least 9 of every 10 pairs and
@@ -73,9 +74,11 @@ def main():
     with open(os.path.join(head, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
     seconds = args.seconds if args.seconds is not None else spec["run_seconds"]
-    metrics = {m["name"]: m for m in spec["end_to_end"]}
-    if args.trace:
-        metrics.update({m["name"]: m for m in spec["per_layer"]})
+    # a traced run reports the per-layer metrics in place of the
+    # end-to-end ones (its timings carry the tracer's overhead)
+    metrics = {m["name"]: m for m in spec["per_layer" if args.trace else "end_to_end"]}
+    shown_names = (["spark.jobs_per_op", "query.page_ms_p50"] if args.trace
+                   else [e["name"] for e in spec["end_to_end"]])
     log_path = os.path.join(head, ".bench_build", "perfbench", "pairs.jsonl")
     os.makedirs(os.path.dirname(log_path), exist_ok=True)
 
@@ -98,8 +101,8 @@ def main():
             bad |= not res["correct"] or res["failed"] > 0
             for m in metrics:
                 vals[name][m].append(res["metrics"][m]["value"])
-            shown = " ".join(f"{e['name']}={res['metrics'][e['name']]['value']:.4g}"
-                             for e in spec["end_to_end"])
+            shown = " ".join(f"{m}={res['metrics'][m]['value']:.4g}"
+                             for m in shown_names if m in res["metrics"])
             print(f"pair {k} seed {seed} {name}: {wall:.0f} s, load {l0} -> {l1}, "
                   f"correct={res['correct']} failed={res['failed']} {shown}",
                   flush=True)
