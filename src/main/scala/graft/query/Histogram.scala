@@ -21,7 +21,12 @@ import org.apache.spark.sql.functions._
  *  - a ONE-PARTITION input (a chart whose merge-on-read fold runs in
  *    one task) is read once: one aggregate collects min, max, the
  *    distinct count and the values, and the bars group the exploded
- *    values in that same task — no exchange, no broadcast, one job;
+ *    values in that same task — no exchange, no broadcast, one job.
+ *    The values sit in one in-memory aggregate buffer, which cannot
+ *    spill, so a one-partition input must be bounded, as a one-task
+ *    chart is (≤ 4 level dirs, one row per bucket per dir); a large
+ *    `coalesce(1)`'d frame belongs in the two-pass shape, so
+ *    repartition it first;
  *  - any other input keeps two distributed aggregations — a 1-row
  *    stats pass (min/max/distinct), cross-joined as a 1-row broadcast
  *    rather than collected so the whole thing stays one lazy plan,

@@ -648,17 +648,16 @@ object Similarity {
    *  nProbe nearest cells; the per-commit cell partitioning prunes the
    *  scan to those directories.
    *
-   *  A LOCAL query frame (one whose optimized plan is a LocalRelation,
-   *  e.g. an API caller's few vectors: `Dataset.isLocal` misses the
-   *  renaming Project of a `toDF(names)`) plans its probes on the
+   *  A ONE-VECTOR LOCAL query frame (an API caller's single vector,
+   *  whose optimized plan is a LocalRelation: `Dataset.isLocal` misses
+   *  the renaming Project of a `toDF(names)`) plans its probe on the
    *  driver: the TopCentroids Project over a LocalRelation folds to a
-   *  local relation, so collecting it starts no job, and the postings
-   *  are scored against that driver-known probe set, carried as a
-   *  literal cell → queries map — no probed-cell job, no probe
-   *  broadcast. One query vector ranks with the bounded [[TopK]], so a
-   *  warm one-vector probe with no live tombstone is one Spark job. A
-   *  distributed query frame collects its probed cells and joins the
-   *  broadcast probes. Both shapes return the same rows.
+   *  local relation, so collecting it starts no job, and the probed
+   *  cells' postings are scored against that one vector as a literal
+   *  and ranked with the bounded [[TopK]] — no probed-cell job, no
+   *  probe broadcast, so a warm probe with no live tombstone is one
+   *  Spark job. Every other frame collects its probed cells and joins
+   *  the broadcast probes. Both shapes return the same rows.
    */
   def ivfIndexQuery(
       spark: org.apache.spark.sql.SparkSession, dir: String, queries: DataFrame,
@@ -685,27 +684,26 @@ object Similarity {
       cands.where(col("q_id") =!= col("vec_id"))
         .select(col("q_id"), col("vec_id").as("n_id"),
           cosine(col("qv"), col("v")).as("cos"))
-    if (queries.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) {
-      val qs = queries.select(col("vec_id").cast("long"), col("v"), topCells).collect()
-        .filterNot(_.isNullAt(0)) // a null id matches no posting
-        .map(r => (r.getLong(0), r.getSeq[Double](1),
-          Option(r.getSeq[Long](2)).getOrElse(Nil))) // a null vector probes nothing
-      val byCell: Map[Long, Seq[(Long, Seq[Double])]] = qs.toSeq
-        .flatMap { case (q, v, cells) => cells.map(_ -> (q, v)) }
-        .groupMap(_._1)(_._2)
-      val hits = scored(postingsIn(byCell.keys.toSeq.sorted)
-        .withColumn("q", explode(element_at(typedLit(byCell), col("cell"))))
-        .select(col("vec_id"), col("v"),
-          col("q._1").cast(queries.schema("vec_id").dataType).as("q_id"),
-          col("q._2").as("qv")))
-      if (qs.length == 1) TopK(hits, k, col("cos").desc, col("n_id"))
-      else rankTopK(hits, k)
-    } else {
-      val probes = queries.select(
-        col("vec_id").as("q_id"), col("v").as("qv"), explode(topCells).as("cell"))
-      val probedCells = probes.select("cell").distinct()
-        .collect().map(_.getLong(0)).sorted.toSeq
-      rankTopK(scored(postingsIn(probedCells).join(broadcast(probes), Seq("cell"))), k)
+    val one =
+      if (!queries.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) None
+      else queries.select(col("vec_id"), col("v"), topCells).collect() match {
+        // a null id matches no posting: the join path yields no rows too
+        case Array(r) if !r.isNullAt(0) => Some(r)
+        case _ => None
+      }
+    one match {
+      case Some(r) =>
+        val cells = Option(r.getSeq[Long](2)).getOrElse(Nil) // a null vector probes nothing
+        TopK(scored(postingsIn(cells.sorted).select(col("vec_id"), col("v"),
+            lit(r.get(0)).cast(queries.schema("vec_id").dataType).as("q_id"),
+            typedLit(r.getSeq[Double](1)).as("qv"))),
+          k, col("cos").desc, col("n_id"))
+      case None =>
+        val probes = queries.select(
+          col("vec_id").as("q_id"), col("v").as("qv"), explode(topCells).as("cell"))
+        val probedCells = probes.select("cell").distinct()
+          .collect().map(_.getLong(0)).sorted.toSeq
+        rankTopK(scored(postingsIn(probedCells).join(broadcast(probes), Seq("cell"))), k)
     }
   }
 

@@ -992,14 +992,14 @@ object ManifestStore {
   def readRaw(spark: SparkSession, root: String): DataFrame =
     readRawDirs(spark, rawDirEntries(latest(spark, root)._2), root)
 
-  /** The distinct series ids of the live raw commits, sorted — the
+  /** The distinct series ids of the live raw commits, unordered — the
    *  catalog, served from the per-entry memo
    *  ([[IndexCore.memoPerEntry]]): a raw commit is immutable, so its id
    *  set is folded once, and a miss reads only the commits the memo
    *  lacks, in one Spark job with no exchange (each task dedupes its
    *  own rows, the driver merges the per-task sets). A warm catalog
    *  starts no job. Ids are ASCII ([[graft.ingest.Melt.requireLegalId]]),
-   *  so the driver's sort is Spark's string order.
+   *  so a driver-side sort of them is Spark's string order.
    */
   def datasetIds(spark: SparkSession, root: String): Seq[String] =
     IndexCore.memoPerEntry(storeDir(root), "dataset_ids",
@@ -1015,7 +1015,7 @@ object ManifestStore {
         // an r- commit is unpartitioned: a file's parent dir is its entry
         .groupMap { case (f, _) => f.split('/').dropRight(1).last }(_._2)
       missing.map(e => e -> found.getOrElse(e, Array.empty[String]).toSeq).toMap
-    }.values.flatten.toSeq.distinct.sorted
+    }.values.flatten.toSeq.distinct
 
   /** Snapshot raw read AS OF a published version. Because
    *  [[ingestBatchAtomic]] publishes both tables in one version, the
