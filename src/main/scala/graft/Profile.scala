@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local profiling aid: run one registered query N times in a warm JVM
   * and print per-rep wall times — separates JVM/codegen first-touch
   * from steady-state cost when chasing a bench outlier.
@@ -12,15 +10,7 @@ object Profile {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session(SessionTuning.cores)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     // job/task accounting: when per-query seconds are mostly fixed
     // overhead (tiny fixtures), the lever is job COUNT and scheduling

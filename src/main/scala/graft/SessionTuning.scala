@@ -3,56 +3,49 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /**
- * Engine session tuning shared by every driver entry point (Bench,
- * Verify, Profile) so the measured session IS the shipped session.
+ * The one session builder: Bench, Verify, Profile, the tools and the
+ * test suite all run the session built by [[session]], so the session
+ * the gates run is the one that is benchmarked.
  *
- * Every value is env-overridable and the defaults are SCALE-ADAPTIVE
- * policies, not local-machine constants (optimization guide §2.2/§3.1):
- *
- *  - AQE partition coalescing stays at Spark's `parallelismFirst=true`
- *    default, exposed as a knob: A/B-measured this round (see
- *    OPTIMIZATION_r15.md), `false` consistently regressed the
- *    store-writer probes 25-45% (ingest_incremental_1s, rollup_repair,
- *    store_compact) because collapsing a tiny shuffle to one partition
- *    also serializes the partitioned fixture WRITE behind it — file
- *    opens dominate at this scale. At 100 TB the advisory size, not
- *    the local core count, already governs (partitions are byte-bound
- *    well above parallelism), so the default loses nothing there.
- *  - join strategy: Spark defaults (`preferSortMergeJoin=true`, AQE
- *    SHJ rewrite off). Round 15 shipped `preferSortMergeJoin=false`
- *    + a 64m AQE shuffled-hash threshold; the round-16 A/B on the
- *    join-heavy tier (14 queries: dedup/graph/shingle/cluster) at
- *    sf0.1 measured SMJ ~11-26% faster in AGGREGATE at local[32]
- *    (72.2 s vs 81.1/98.0 s over two SHJ runs; per-query deltas in
- *    plans/r16/join_policy_ab.md) and no query where SHJ won by >10%.
- *    With 32 concurrent tasks the per-partition SHJ build maps add
- *    allocation/GC pressure that the sort path avoids (guide §3.1's
- *    "fits comfortably" caveat + §5); at 8 cores the two policies
- *    tie. Sort-merge also spills gracefully at 100 TB partition
- *    sizes, so the scale-safe default and the measured-fast local
- *    default agree. Both knobs stay env-overridable.
- *  - a parallel-listing threshold of 128 paths: file-source listing
- *    below that runs inline on the driver (a local/POSIX listing is a
- *    few syscalls; spawning a Spark job to list 33 directories costs
- *    more than the listing). Object-store deployments with
- *    thousand-partition tables still get distributed listing past the
- *    threshold, and the env knob restores the default where listing
- *    itself is remote-slow.
+ * AQE partition coalescing and the join policy are Spark's defaults
+ * (AQE on, `parallelismFirst`, 64 MB advisory partitions, sort-merge
+ * joins, no AQE shuffled-hash rewrite); the A/Bs that kept them are in
+ * OPTIMIZATION_r15.md and plans/r16/join_policy_ab.md. SessionSpec
+ * fails if a Spark upgrade moves one of them.
  */
 object SessionTuning {
-  def env(name: String, default: String): String =
-    sys.env.getOrElse(name, default)
+  /** Local worker threads: `SPARK_GRAFT_CPUS`, else the host's cores. */
+  def cores: Int =
+    parseCores(sys.env.get("SPARK_GRAFT_CPUS"),
+      Runtime.getRuntime.availableProcessors)
 
-  def apply(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      env("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      env("SPARK_GRAFT_ADVISORY_PART", "64m"))
-    .config("spark.sql.join.preferSortMergeJoin",
-      env("SPARK_GRAFT_PREFER_SMJ", "true"))
-    .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      env("SPARK_GRAFT_SHJ_LOCAL_MAP", "0b"))
-    .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-      env("SPARK_GRAFT_LISTING_THRESHOLD", "128"))
+  /** `SPARK_GRAFT_CPUS` as a core count; unset means `hostCores`. */
+  def parseCores(value: Option[String], hostCores: Int): Int =
+    value.fold(hostCores) { v =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
+  /** The shipped session on `local[cores]`. */
+  def session(cores: Int): SparkSession = {
+    val spark = apply(SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      // direct task commits + no _SUCCESS markers: the stores write many
+      // small partition dirs per batch, and v1's sequential driver-side
+      // renames dominate at that file count
+      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** File-source listing below 128 paths runs inline on the driver: a
+   *  local/POSIX listing is a few syscalls, cheaper than a listing job.
+   */
+  def apply(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
 }

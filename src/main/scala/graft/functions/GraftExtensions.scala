@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  * Session extension registering the native vector functions for SQL use
  * (`SELECT vec_cosine(a.embedding, b.embedding) ...`). Install with
  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
- * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
+ * or a session builder's `.withExtensions(new GraftExtensions)`.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

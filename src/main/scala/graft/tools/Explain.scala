@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Plan auditor: prints `explain("formatted")` for selected registered
  * queries so scan pushdown (`PushedFilters`/`ReadSchema`), broadcast
@@ -16,15 +14,8 @@ object Explain {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("range_full", "rollup_1s", "q3_join", "dedup_minhash",
         "ann_cosine_topk", "user_sessions", "histogram")
-    // same session config as Bench/Verify so the dumped plan is the
-    // shipped plan (join policy, AQE advisory size, listing threshold)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // the shipped session, so the dumped plan is the shipped plan
+    val spark = graft.SessionTuning.session(graft.SessionTuning.cores)
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       println(s"\n========== $n ==========")

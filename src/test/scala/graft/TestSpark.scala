@@ -2,19 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One shared local SparkSession for the whole test run. */
+/** One shared shipped session on 4 cores for the whole test run. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SessionTuning.session(4)
 
   /** ISO-8601 (no zone, interpreted as UTC) → epoch microseconds. */
   def isoUs(iso: String): Long = {
